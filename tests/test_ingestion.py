@@ -149,3 +149,69 @@ def test_streaming_incremental_new_file(spark, xml_dir, tmp_path):
     state = {r.pmid: r for r in pipe.articles.read().collect()}
     assert "2101" in state and "2002" not in state
     assert state["2001"].title == "Updated-once title 2001"
+
+
+def _write_xml(path, inner: str) -> None:
+    import gzip
+
+    with gzip.open(path, "wb") as fh:
+        fh.write(f"<PubmedArticleSet>{inner}</PubmedArticleSet>".encode())
+
+
+def _cit(pmid: str, title: str) -> str:
+    return (
+        f'<MedlineCitation Status="MEDLINE"><PMID>{pmid}</PMID><Article>'
+        f"<ArticleTitle>{title}</ArticleTitle></Article></MedlineCitation>"
+    )
+
+
+def _del(*pmids: str) -> str:
+    return (
+        "<DeleteCitation>"
+        + "".join(f"<PMID>{p}</PMID>" for p in pmids)
+        + "</DeleteCitation>"
+    )
+
+
+def test_single_pass_reader_streaming_matches_batch(spark, tmp_path):
+    """The one-pass reader fills the other kind's columns with nulls.
+    Files holding only articles, only DeleteCitations, or both must read
+    the same streamed one file per micro-batch as in one batch, including
+    a pmid deleted in one file and re-inserted in a later one."""
+    src = tmp_path / "src"
+    src.mkdir()
+    files = {
+        "pubmed26n0001.xml.gz": _cit("1", "one") + _cit("2", "two") + _cit("3", "three"),
+        "pubmed26n0002.xml.gz": _del("2", "3"),
+        "pubmed26n0003.xml.gz": _cit("3", "three reborn") + _del("1") + _cit("4", "four"),
+    }
+    for name, inner in files.items():
+        _write_xml(src / name, inner)
+
+    only_deletes = pubmed_xml.read_records(spark, str(src / "pubmed26n0002.xml.gz"))
+    rows = only_deletes.collect()
+    assert {(r.kind, r.pmid) for r in rows} == {("delete", "2"), ("delete", "3")}
+    assert all(r.title is None and r.authors is None and r.mesh is None for r in rows)
+    only_articles = str(src / "pubmed26n0001.xml.gz")
+    assert pubmed_xml.read_deletes(spark, only_articles).count() == 0
+    assert pubmed_xml.read_articles(spark, only_articles).count() == 3
+
+    def state(pipe):
+        return sorted(
+            tuple(r) for r in pipe.articles.read().drop("source_filename").collect()
+        )
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    stream = PubmedPipeline(spark, str(tmp_path / "wh_stream"))
+    for name in files:
+        shutil.copy(src / name, landing / name)
+        stream.run_stream(str(landing), str(tmp_path / "ckpt"))
+    batch = PubmedPipeline(spark, str(tmp_path / "wh_batch"))
+    batch.run_batch(str(src / "*.xml.gz"))
+
+    assert state(stream) == state(batch)
+    titles = {r.pmid: r.title for r in batch.articles.read().collect()}
+    assert titles == {"3": "three reborn", "4": "four"}
+    logged = {r.source_filename for r in stream.audit.read().collect()}
+    assert {os.path.basename(f) for f in logged} == set(files)

@@ -56,6 +56,80 @@ def test_update_pubmed_end_to_end(spark, xml_dir, tmp_path):
     )
 
 
+def _land(xml_dir: str, landing: str, *names: str) -> None:
+    os.makedirs(landing, exist_ok=True)
+    for name in names:
+        shutil.copy(os.path.join(xml_dir, name), landing)
+
+
+def test_update_pubmed_parses_each_landed_file_once(spark, xml_dir, tmp_path):
+    """Every job of a micro-batch reads the one persisted parse, so the
+    stream's input rows over a run equal the number of landed files."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    names = sorted(os.listdir(xml_dir))
+    landing = str(tmp_path / "landing")
+    _land(xml_dir, landing, *names)
+    rows, done = [], threading.Event()
+
+    class Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            rows.append(event.progress.numInputRows)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            done.set()
+
+    listener = Listener()
+    spark.streams.addListener(listener)
+    try:
+        update.update_pubmed(spark, landing, str(tmp_path / "wh"))
+        # listener events arrive asynchronously, termination last
+        assert done.wait(60)
+    finally:
+        spark.streams.removeListener(listener)
+    assert sum(rows) == len(names)
+
+
+def test_update_pubmed_annotates_each_new_pmid_once(spark, xml_dir, tmp_path):
+    """The annotator sees each new pmid exactly once per run: no probe
+    pass, no second pass for the commit, nothing already annotated."""
+    from trialstreamer_spark.functions.annotate import DeterministicStubAnnotator
+
+    log = str(tmp_path / "annotated.txt")
+
+    class Recording(DeterministicStubAnnotator):
+        def annotate_pico(self, pdf):
+            with open(log, "a") as f:
+                f.write("".join(f"{p}\n" for p in pdf["pmid"]))
+            return super().annotate_pico(pdf)
+
+    def run_and_read(*names):
+        _land(xml_dir, landing, *names)
+        open(log, "w").close()
+        update.update_pubmed(spark, landing, wh, annotator=Recording())
+        with open(log) as f:
+            return f.read().split()
+
+    landing, wh = str(tmp_path / "landing"), str(tmp_path / "wh")
+    first = run_and_read("pubmed26n0001.xml.gz")
+    articles = ParquetTable(spark, os.path.join(wh, "pubmed_raw")).read()
+    assert sorted(first) == sorted(r.pmid for r in articles.collect())
+    # 2101 is the only pmid the update files add; 2003's re-insert was
+    # annotated in the first run and is not annotated again
+    second = run_and_read("pubmed26n0002.xml.gz", "pubmed26n0003.xml.gz")
+    assert second == ["2101"]
+    ann = ParquetTable(spark, os.path.join(wh, "pubmed_annotations")).read()
+    assert sorted(r.pmid for r in ann.collect()) == sorted(first + second)
+
+
 def test_update_medrxiv(spark, tmp_path):
     feed = tmp_path / "collection.json"
     feed.write_text(

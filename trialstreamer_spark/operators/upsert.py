@@ -10,8 +10,8 @@ table storage (write-new-then-swap, last-committed pointer).
 
 Semantics preserved (SURVEY §7 hard part 1):
 - batch-internal dedupe is keep-LAST (reference reverses the batch and
-  keeps first occurrence, pubmed.py:492-504) — expressed as a
-  row_number window over an explicit ordering column;
+  keeps first occurrence, pubmed.py:492-504) — the caller's row_number
+  window (streaming/pipeline.py) over an explicit ordering column;
 - deletes apply FIRST, then upserts (pubmed.py:534-543 ordering), so a
   pmid that is both deleted and re-inserted in one batch survives.
 
@@ -19,7 +19,15 @@ Scale: MERGE here is one left_anti (old rows whose key is replaced) +
 union. Both shuffle on the key — at 100 TB target tables are bucketed by
 the key so the anti-join co-locates; with Delta the same plan runs as a
 file-pruned MERGE. The swap keeps history dirs for time-travel-ish
-debugging and idempotent replay."""
+debugging and idempotent replay.
+
+``ParquetTable.append`` is the insert-only commit (keys known to be new,
+audit rows): the new version is hard links to the current version's
+data files plus files holding only the new rows, so an append writes
+the new rows, never re-reads or rewrites the old ones, and versions
+share the untouched files. Every version is still one complete parquet
+directory, readable on its own by any parquet reader; deleting an old
+version only drops its links."""
 
 from __future__ import annotations
 
@@ -27,18 +35,11 @@ import os
 import shutil
 import time
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def dedupe_keep_last(batch: DataFrame, key: str, order_col: str) -> DataFrame:
-    """Last-writer-wins within a batch (ref pubmed.py:492-504)."""
-    w = W.partitionBy(key).orderBy(F.col(order_col).desc())
-    return (
-        batch.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+# written into a version dir once the pointer has been flipped to it
+_COMMITTED = "_COMMITTED"
 
 
 def merge_upsert(
@@ -62,8 +63,9 @@ def merge_upsert(
 class ParquetTable:
     """Minimal transactional keyed table: versioned parquet dirs + a
     `_current` pointer file. Readers always see a fully-written version;
-    writers write a new dir then flip the pointer (atomic rename of a
-    tmp pointer). Stands in for Delta in this environment.
+    writers (``overwrite``, ``merge``, ``append``, ``compact``) fill a
+    new dir then flip the pointer (atomic rename of a tmp pointer).
+    Stands in for Delta in this environment.
 
     ``gc_min_age_s`` is the concurrent-reader grace period: a version
     directory is only eligible for GC once it is BOTH beyond the keep
@@ -122,7 +124,9 @@ class ParquetTable:
                 out.append((n, d))
         return sorted(out)
 
-    def overwrite(self, df: DataFrame) -> None:
+    def _commit(self, write) -> None:
+        """Claim the next version dir, let ``write(dir)`` fill it, then
+        flip the pointer to it. The one commit path of every writer."""
         # Version ids are a monotonic counter seeded from the existing
         # dirs (never wall-clock: two overwrites in the same millisecond
         # must not reuse an id and silently clobber a committed
@@ -130,7 +134,9 @@ class ParquetTable:
         # The id is CLAIMED by mkdir(exist_ok=False) — atomic at the
         # filesystem — so two concurrent writer processes that list the
         # same dirs cannot both write into the same version and silently
-        # lose one update; the loser advances to the next id.
+        # lose one update; the loser advances to the next id. Writers
+        # fill the claimed dir in append mode, so the claim is never
+        # released mid-write.
         dirs = self._all_version_dirs()
         n = (dirs[-1][0] + 1) if dirs else 1
         while True:
@@ -141,11 +147,8 @@ class ParquetTable:
                 break
             except FileExistsError:
                 n += 1
-        df.write.mode("overwrite").parquet(out)
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(v)
-        os.replace(tmp, self._pointer)
+        write(out)
+        self._flip(v)
         self._gc(keep=3)
         # Version bump = cache lifecycle boundary: unpersist/evict every
         # per-corpus sidecar (shingle postings, IVF centroids, cached
@@ -154,6 +157,52 @@ class ParquetTable:
         from trialstreamer_spark.util import evict_caches
 
         evict_caches(self.path)
+
+    def _flip(self, version: str) -> None:
+        """Point readers at ``version``, then mark it committed (the
+        marker ``versions()`` keys on; a crash between the two leaves the
+        version current, which counts as committed on its own)."""
+        tmp = self._pointer + ".tmp"
+        with open(tmp, "w") as f:
+            f.write(version)
+        os.replace(tmp, self._pointer)
+        open(os.path.join(self.path, version, _COMMITTED), "w").close()
+
+    def overwrite(self, df: DataFrame) -> None:
+        self._commit(lambda out: df.write.mode("append").parquet(out))
+
+    def append(self, df: DataFrame) -> None:
+        """Commit the current rows plus ``df``'s without rewriting the
+        current rows. ``df`` must have the table's columns and types (in
+        any order); the caller guarantees its keys are new, as nothing
+        here dedupes. The new version hard-links the current version's
+        data files (and their checksums) and writes only ``df``; the
+        links and the write both finish before the pointer flips."""
+        cur = self.current_version()
+        if cur is None:
+            self.overwrite(df)
+            return
+        src = os.path.join(self.path, cur)
+        want = self.spark.read.parquet(src).schema
+
+        def types(schema) -> dict:
+            return {f.name: f.dataType.simpleString() for f in schema}
+
+        if types(df.schema) != types(want):
+            raise ValueError(
+                f"append to {self.path}: rows {types(df.schema)} do not match "
+                f"the table's {types(want)}"
+            )
+        df = df.select(*want.names)
+
+        def write(out: str) -> None:
+            for name in os.listdir(src):
+                # data files and their .crc; no _SUCCESS, _COMMITTED
+                if not name.lstrip(".").startswith("_"):
+                    os.link(os.path.join(src, name), os.path.join(out, name))
+            df.write.mode("append").parquet(out)
+
+        self._commit(write)
 
     def merge(
         self, batch: DataFrame, key: str, deletes: DataFrame | None = None
@@ -173,11 +222,14 @@ class ParquetTable:
         time-travel surface. Retention = the `_gc(keep=3)` horizon plus
         the concurrent-reader grace period.
 
-        Committed means id <= the current pointer: the pointer only ever
-        moves forward (monotonic ids), so a dir numerically beyond it is
-        residue from a crashed overwrite whose pointer flip never
-        happened — a partial, uncommitted snapshot that must not be
-        readable via time travel nor consume a retention slot."""
+        Committed means the pointer was flipped to it: the current
+        version, and every version ``_flip`` marked. A dir without the
+        mark is residue from a crashed commit whose pointer flip never
+        happened — or a concurrent writer's claimed, unfinished dir —
+        and must not be readable via time travel nor consume a
+        retention slot. That holds below the pointer too: a crashed
+        commit's dir, complete but never flipped, stays uncommitted after
+        a later commit claims the next id."""
         cur = self.current_version()
         if cur is None:
             return []
@@ -190,15 +242,11 @@ class ParquetTable:
                 f"corrupt _current pointer {cur!r} in {self.path}: "
                 "not a version dir name"
             )
-        # id <= pointer is necessary but not sufficient: a CONCURRENT
-        # writer's claimed-but-uncommitted dir (mkdir done, parquet write
-        # not) can sit below the pointer. Committed additionally means
-        # the write finished — the committer's _SUCCESS marker exists.
         return [
             d
             for n, d in self._all_version_dirs()
             if n <= cur_n
-            and os.path.exists(os.path.join(self.path, d, "_SUCCESS"))
+            and (d == cur or os.path.exists(os.path.join(self.path, d, _COMMITTED)))
         ]
 
     def read_version(self, version: str) -> DataFrame:
@@ -272,8 +320,9 @@ class ParquetTable:
 
     def _gc(self, keep: int) -> None:
         # Eligible for removal: committed versions beyond the keep
-        # horizon, plus uncommitted residue dirs beyond the pointer
-        # (crashed overwrites) — residue must not consume a keep slot.
+        # horizon, plus uncommitted residue dirs (crashed commits, on
+        # either side of the pointer) — residue must not consume a keep
+        # slot.
         committed = self.versions()
         doomed = [d for d in committed[:-keep]] + [
             d for _, d in self._all_version_dirs() if d not in committed

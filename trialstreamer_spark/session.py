@@ -24,6 +24,12 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def default_driver_memory() -> str:
+    """A quarter of physical memory, clamped to [1 GiB, 8 GiB]."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{max(1024, min(phys_mb // 4, 8192))}m"
+
+
 def get_spark(app_name: str = "trialstreamer-spark") -> SparkSession:
     cpus = default_parallelism()
     builder = (
@@ -99,8 +105,12 @@ def get_spark(app_name: str = "trialstreamer-spark") -> SparkSession:
         # single-JVM local mode: the driver heap IS the executor heap for
         # all $SPARK_GRAFT_CPUS task threads — size it to the machine,
         # not to a driver-only footprint (GC pressure on a small heap
-        # showed up as 2x run-to-run variance in bench hot queries)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # showed up as 2x run-to-run variance in bench hot queries), and
+        # never past it: SPARK_DRIVER_MEM is the one override
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -11,6 +11,13 @@ also the right 100 TB shape: .gz is not splittable, so file-granular
 parallelism is the physical maximum regardless of reader; thousands of
 files saturate thousands of cores.
 
+Each file is parsed ONCE: ``parse_files`` emits both record kinds in one
+``mapInPandas`` pass, tagged by ``kind`` ('article' or 'delete'), and
+``read_articles``/``read_deletes``, the batch pipeline and the streaming
+pipeline all split that one tagged frame. A delete row fills every
+article column with ``None`` explicitly: pandas would fill the gaps with
+NaN, which Arrow cannot convert into an array column.
+
 Extraction fidelity notes (pmreader.py line refs):
 - title falls back to VernacularTitle (73-84);
 - structured abstracts keep (header, text) sections and a plaintext
@@ -31,11 +38,12 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _YEAR_RE = re.compile(r"\b(19|20)\d{2}\b")
 
-ARTICLE_SCHEMA = (
-    "pmid string, status string, indexing_method string, title string, "
+RECORD_SCHEMA = (
+    "kind string, pmid string, status string, indexing_method string, title string, "
     "abstract_plaintext string, abstract array<struct<header:string,text:string>>, "
     "authors array<struct<Initials:string,LastName:string,ForeName:string,Affiliation:string>>, "
     "journal string, journal_abbrv string, year int, mesh array<string>, "
@@ -44,7 +52,8 @@ ARTICLE_SCHEMA = (
     "record_idx int"
 )
 
-DELETE_SCHEMA = "pmid string, source_filename string"
+# nested types carry no ", ", so this splits top-level fields only
+_RECORD_COLUMNS = [f.split(" ", 1)[0] for f in RECORD_SCHEMA.split(", ")]
 
 
 def _expand_pages(medline_pgn: str | None) -> dict | None:
@@ -130,49 +139,66 @@ def _parse_article(elem, source_filename: str) -> dict:
     }
 
 
-def _iter_file(content: bytes, path: str, want: str) -> Iterator[dict]:
+def _iter_file(content: bytes, path: str) -> Iterator[dict]:
     import xml.etree.ElementTree as ET
 
     raw = gzip.decompress(content) if path.endswith(".gz") else content
     idx = 0
     for _, elem in ET.iterparse(io.BytesIO(raw), events=("end",)):
-        if want == "articles" and elem.tag == "MedlineCitation":
+        if elem.tag == "MedlineCitation":
             # record_idx: position within the file, so in-file duplicate
             # pmids resolve deterministically to the LAST occurrence —
             # the reference's reversed-batch first-hit (pubmed.py:492-504)
             row = _parse_article(elem, path)
+            row["kind"] = "article"
             row["record_idx"] = idx
             idx += 1
             yield row
             elem.clear()
-        elif want == "deletes" and elem.tag == "DeleteCitation":
+        elif elem.tag == "DeleteCitation":
             for p in elem.findall("PMID"):
-                yield {"pmid": p.text, "source_filename": path}
+                yield {"kind": "delete", "pmid": p.text, "source_filename": path}
             elem.clear()
 
 
-def _reader(want: str):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                rows.extend(_iter_file(bytes(r["content"]), r["path"], want))
-            yield pd.DataFrame(rows) if rows else pd.DataFrame()
+def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        rows = []
+        for path, content in zip(pdf["path"], pdf["content"]):
+            rows.extend(_iter_file(bytes(content), path))
+        # column-wise with explicit None: a missing dict key must not
+        # become NaN (see the module docstring)
+        yield pd.DataFrame({c: [r.get(c) for r in rows] for c in _RECORD_COLUMNS})
 
-    return fn
+
+def parse_files(files: DataFrame) -> DataFrame:
+    """Tagged records of a ``binaryFile`` frame (batch or one streaming
+    micro-batch) in one parse: ``kind`` says whether a row is an
+    article upsert or a DeleteCitation pmid."""
+    return files.select("path", "content").mapInPandas(
+        _parse_batches, schema=RECORD_SCHEMA
+    )
+
+
+def articles_of(records: DataFrame) -> DataFrame:
+    """Upsert rows of a ``parse_files`` frame (ref pubmed.py:302-314)."""
+    return records.filter(F.col("kind") == "article").drop("kind")
+
+
+def deletes_of(records: DataFrame) -> DataFrame:
+    """CDC delete list of a ``parse_files`` frame (ref pubmed.py:316-317)."""
+    return records.filter(F.col("kind") == "delete").select(
+        "pmid", "source_filename"
+    )
+
+
+def read_records(spark: SparkSession, glob_path: str) -> DataFrame:
+    return parse_files(spark.read.format("binaryFile").load(glob_path))
 
 
 def read_articles(spark: SparkSession, glob_path: str) -> DataFrame:
-    """Upsert rows from MedlineCitation elements (ref pubmed.py:302-314)."""
-    files = spark.read.format("binaryFile").load(glob_path)
-    return files.select("path", "content").mapInPandas(
-        _reader("articles"), schema=ARTICLE_SCHEMA
-    )
+    return articles_of(read_records(spark, glob_path))
 
 
 def read_deletes(spark: SparkSession, glob_path: str) -> DataFrame:
-    """CDC delete list from DeleteCitation elements (ref pubmed.py:316-317)."""
-    files = spark.read.format("binaryFile").load(glob_path)
-    return files.select("path", "content").mapInPandas(
-        _reader("deletes"), schema=DELETE_SCHEMA
-    )
+    return deletes_of(read_records(spark, glob_path))

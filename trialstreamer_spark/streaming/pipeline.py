@@ -13,7 +13,18 @@ Reference behavior carried over (SURVEY §2.9):
   (pubmed.py:534-543).
 - audit log row per processed batch (dbutil.py:245-247) — kept as a
   queryable table even though the checkpoint already guarantees progress,
-  because /meta reads it (cnxapp.py:117-118).
+  because /meta reads it (cnxapp.py:117-118). It is append-only: each
+  batch commits its own rows with ``ParquetTable.append``, never
+  re-reading or rewriting the log.
+
+Parse once: a batch's files go through ONE ``pubmed_xml.parse_files``
+pass, persisted for the duration of the batch and unpersisted in a
+``finally``. The deduped upserts, the delete keys, the last-delete file
+per pmid and the audit rows are all derived from that persisted frame,
+so each landed file is decompressed and parsed once however many jobs
+the MERGE and the audit run. Exactly-once still comes from the
+checkpoint plus the idempotent MERGE (Structured Streaming, SIGMOD
+2018), not from recomputing the micro-batch per sink write.
 
 At 100 TB: one .gz update file = one task (gz is unsplittable); the
 MERGE shuffles on pmid which is the target's bucket key; derived count
@@ -34,7 +45,8 @@ from trialstreamer_spark.sources import pubmed_xml
 
 class PubmedPipeline:
     """Landing-dir → typed tables with CDC. Batch and streaming entry
-    points share one _apply_batch, so replay semantics are identical."""
+    points share one _apply_records (one parse, then _apply_batch), so
+    replay semantics are identical."""
 
     def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
@@ -47,6 +59,19 @@ class PubmedPipeline:
         )
 
     # -- core batch application (used by both batch & foreachBatch) -------
+
+    def _apply_records(self, records: DataFrame, streaming: bool = False) -> None:
+        """Apply one ``pubmed_xml.parse_files`` frame, parsed once: every
+        job of the batch reads the persisted records."""
+        records = records.persist()
+        try:
+            self._apply_batch(
+                pubmed_xml.articles_of(records),
+                pubmed_xml.deletes_of(records),
+                streaming=streaming,
+            )
+        finally:
+            records.unpersist()
 
     def _apply_batch(
         self, articles: DataFrame, deletes: DataFrame, streaming: bool = False
@@ -146,19 +171,14 @@ class PubmedPipeline:
         self._append_audit(row)
 
     def _append_audit(self, rows: DataFrame) -> None:
-        prev = None
-        if self.audit.current_version() is not None:
-            prev = self.audit.read()
-        new = rows if prev is None else prev.unionByName(rows)
-        self.audit.overwrite(new)
+        # a few rows per commit: one file each, so the append-only log
+        # grows by one file per commit
+        self.audit.append(rows.coalesce(1))
 
     # -- batch mode --------------------------------------------------------
 
     def run_batch(self, glob_path: str) -> None:
-        self._apply_batch(
-            pubmed_xml.read_articles(self.spark, glob_path),
-            pubmed_xml.read_deletes(self.spark, glob_path),
-        )
+        self._apply_records(pubmed_xml.read_records(self.spark, glob_path))
 
     # -- streaming mode ----------------------------------------------------
 
@@ -177,15 +197,7 @@ class PubmedPipeline:
         )
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            import pandas as pd  # noqa: F401
-
-            arts = batch_df.select("path", "content").mapInPandas(
-                pubmed_xml._reader("articles"), schema=pubmed_xml.ARTICLE_SCHEMA
-            )
-            dels = batch_df.select("path", "content").mapInPandas(
-                pubmed_xml._reader("deletes"), schema=pubmed_xml.DELETE_SCHEMA
-            )
-            self._apply_batch(arts, dels, streaming=True)
+            self._apply_records(pubmed_xml.parse_files(batch_df), streaming=True)
 
         # A8 streaming leg: per-micro-batch file counts surface in
         # StreamingQueryProgress.observedMetrics

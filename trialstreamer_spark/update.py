@@ -10,6 +10,14 @@ parse), then incrementally annotate articles missing annotations, then
 refresh counts — the reference's download → annotate_rcts →
 update_counts sequence (update.py:27-36).
 
+One run touches each input once: the stream parses each landed file once
+(streaming/pipeline.py), and the annotator sees each new pmid once — the
+to-do rows are annotated into a persisted frame, counted, and committed
+from it with ``ParquetTable.append``. Append is exact here because the
+to-do set is anti-joined against the annotated pmids, so its keys are
+disjoint from the table's by construction; the commit writes only the
+new annotations and shares the old files with the previous version.
+
 medrxiv: rebuild the covid table from the landed feed + manual extras
 (medrxiv_cov.update()).
 """
@@ -45,9 +53,12 @@ def update_pubmed(spark, landing: str, warehouse: str, annotator=None) -> None:
         if ann_table.current_version() is not None
         else spark.createDataFrame([], "pmid string")
     )
-    new_ann = incremental_annotate(articles, done, annotator, pico=True)
-    if new_ann.limit(1).count():
-        ann_table.merge(new_ann, "pmid")
+    new_ann = incremental_annotate(articles, done, annotator, pico=True).persist()
+    try:
+        if new_ann.count():
+            ann_table.append(new_ann)
+    finally:
+        new_ann.unpersist()
     # end-of-run watermark row (ref update.py:34) — what /meta reads
     pipe.log_run("fullcheck")
 

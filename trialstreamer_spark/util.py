@@ -1,26 +1,19 @@
-"""Worker-import bootstrap.
+"""Small plan helpers and the session-scoped plan cache.
 
-Arrow-batched operators (mapInPandas / pandas UDFs) pickle their Python
-functions BY REFERENCE — executors must be able to import
-``trialstreamer_spark`` themselves. When the driver process was launched
-from outside the repo (the driver harness, a notebook, spark-submit
-without --py-files), workers would fail with ModuleNotFoundError.
+- ``inline_rows``: a literal dimension as a pure JVM plan;
+- ``ordered_small``: total order for a dimension-sized frame without a
+  range exchange;
+- ``cached_plan`` / ``materialize_plan``: persisted plan subtrees shared
+  across queries, with ``evict_caches`` as the lifecycle hook that every
+  ParquetTable version bump calls (module caches join it through
+  ``register_cache_evictor`` / ``evict_dict_cache``).
 
-``ensure_worker_imports`` zips the package and registers it via
-``SparkContext.addPyFile`` — callable at runtime, idempotent per session,
-and equivalent to shipping a wheel with --py-files on a real cluster.
-Every Python-on-worker entry point calls it first.
+Shipping the package to Python workers is ``dist.ship_package``.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-import zipfile
-
 from pyspark.sql import SparkSession
-
-_FLAG = "_trialstreamer_pyfile_added"
 
 
 def inline_rows(
@@ -178,31 +171,3 @@ def materialize_plan(spark: SparkSession, key: tuple) -> None:
     df = _PLAN_CACHE.get(_plan_key(spark, key))
     if df is not None:
         df.count()
-
-
-def ensure_worker_imports(spark: SparkSession) -> None:
-    sc = spark.sparkContext
-    if getattr(sc, _FLAG, False):
-        return
-    import trialstreamer_spark
-
-    pkg_dir = os.path.dirname(os.path.abspath(trialstreamer_spark.__file__))
-    zpath = os.path.join(
-        tempfile.gettempdir(),
-        f"trialstreamer_spark_pkg_{abs(hash(pkg_dir))}.zip",
-    )
-    if not os.path.exists(zpath):
-        tmp = zpath + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as z:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.join(
-                            "trialstreamer_spark",
-                            os.path.relpath(full, pkg_dir),
-                        )
-                        z.write(full, rel)
-        os.replace(tmp, zpath)
-    sc.addPyFile(zpath)
-    setattr(sc, _FLAG, True)
