@@ -8,7 +8,7 @@ from __future__ import annotations
 import re
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from trialstreamer_spark.functions.text import extract_abbreviation_pairs
@@ -95,19 +95,20 @@ OPS = st.lists(
 def _python_replay(ops):
     """Reference semantics (pubmed.py:534-543): files applied in order;
     within a file deletes run before upserts. Here each op carries its
-    file ordinal; replay sequentially."""
+    file ordinal, and optionally a payload after it (default: the file
+    ordinal); replay sequentially, so a file's last upsert of a key wins."""
     state: dict = {}
     # group ops by file ordinal, apply files in order
     by_file: dict[int, list] = {}
-    for kind, key, f in ops:
-        by_file.setdefault(f, []).append((kind, key, f))
+    for op in ops:
+        by_file.setdefault(op[2], []).append(op)
     for f in sorted(by_file):
-        for kind, key, _ in by_file[f]:
+        for kind, key, *_ in by_file[f]:
             if kind == "delete":
                 state.pop(key, None)
-        for kind, key, _ in by_file[f]:
+        for kind, key, _, *payload in by_file[f]:
             if kind == "upsert":
-                state[key] = f
+                state[key] = payload[0] if payload else f
     return state
 
 
@@ -159,3 +160,71 @@ def test_merge_replay_matches_reference_semantics(spark, tmp_path, seed_ops):
         .collect()
     }
     assert got == _python_replay(seed_ops)
+
+
+# few files, so one file often holds a key twice (the record_idx tie)
+# or deletes and re-inserts it
+FILE_OPS = st.lists(
+    st.tuples(
+        st.sampled_from(["upsert", "delete"]),
+        KEYS,
+        st.integers(min_value=0, max_value=3),
+    ),
+    max_size=10,
+)
+
+
+def _records(spark, ops, first_op: int):
+    """One batch in the parser's record shape: an upsert's title names
+    its op (``t<n>``), and ``record_idx`` is its position among the
+    file's articles. Every batch also holds a record without a pmid,
+    which the resolver drops."""
+    from trialstreamer_spark.util import inline_rows
+
+    rows, in_file = [("article", None, "x", "pubmed26n0000.xml.gz", 0)], {}
+    for n, (kind, key, f) in enumerate(ops, first_op):
+        name = f"pubmed26n{f:04d}.xml.gz"
+        if kind == "upsert":
+            rows.append(("article", key, f"t{n}", name, in_file.get(f, 0)))
+            in_file[f] = in_file.get(f, 0) + 1
+        else:
+            rows.append(("delete", key, None, name, None))
+    return inline_rows(spark, rows, [
+        ("kind", "string"), ("pmid", "string"), ("title", "string"),
+        ("source_filename", "string"), ("record_idx", "int"),
+    ])
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(FILE_OPS, FILE_OPS)
+@example(  # the same file upserts k1 twice: its last occurrence wins
+    [("upsert", "k1", 1), ("upsert", "k1", 1)], [("upsert", "k2", 0)]
+)
+@example(  # deleted and re-inserted in one file, over a target holding it
+    [("upsert", "k1", 0), ("upsert", "k2", 0)],
+    [("upsert", "k1", 1), ("delete", "k1", 1), ("upsert", "k1", 1),
+     ("delete", "k2", 2), ("upsert", "k2", 1)],
+)
+def test_latest_events_match_replay_property(spark, first, second):
+    """MERGEing two resolved batches, the second's files after the
+    first's, leaves the rows the sequential replay of every op leaves."""
+    from trialstreamer_spark.operators.upsert import merge_upsert
+    from trialstreamer_spark.streaming.pipeline import latest_events
+
+    second = [(kind, key, f + 10) for kind, key, f in second]
+    ops = first + second
+    table = spark.createDataFrame(
+        [], "pmid string, title string, source_filename string, record_idx int"
+    )
+    for batch, first_op in ((first, 0), (second, len(first))):
+        upserts, deletes = latest_events(_records(spark, batch, first_op))
+        table = merge_upsert(table, upserts, "pmid", deletes=deletes)
+    got = {r.pmid: r.title for r in table.collect()}
+    want = _python_replay(
+        [(kind, key, f, f"t{n}") for n, (kind, key, f) in enumerate(ops)]
+    )
+    assert got == want

@@ -355,3 +355,58 @@ def test_parquet_table_append_crash_before_flip_replays(spark, tmp_path, monkeyp
     rebuilt.overwrite(_kv(spark, 0, 10, "a").union(_kv(spark, 10, 15, "b")))
     assert _rows(t.read()) == _rows(rebuilt.read())
     assert residue[0] not in t.versions()
+
+
+def _assert_schema_parity(spark, t) -> None:
+    """Every retained version reads, through the table and on its own,
+    with the schema Spark infers from the version dir."""
+    for v in t.versions():
+        want = spark.read.parquet(os.path.join(t.path, v)).schema
+        assert t.read_version(v).schema == want, (t.path, v)
+        if v == t.current_version():
+            assert t.read().schema == want, t.path
+
+
+def test_parquet_table_schema_matches_inference_for_update_tables(spark, tmp_path):
+    """Every table the daily update commits reads with Spark's own
+    inferred schema."""
+    from fixtures.pubmed_xml import generate_xml_fixtures
+    from trialstreamer_spark import update
+    from trialstreamer_spark.operators.upsert import ParquetTable
+
+    landing, wh = str(tmp_path / "landing"), str(tmp_path / "wh")
+    generate_xml_fixtures(landing)
+    update.update_pubmed(spark, landing, wh)
+    tables = ("pubmed_raw", "pubmed_annotations", "update_log", "pubmed_year_counts")
+    for name in tables:
+        _assert_schema_parity(spark, ParquetTable(spark, os.path.join(wh, name)))
+
+
+def test_parquet_table_schema_matches_inference_across_writes(spark, tmp_path):
+    """Timestamp, nested array/struct and map columns keep their types
+    through an empty commit and several appends, whose files come from
+    separate writes."""
+    from trialstreamer_spark.operators.upsert import ParquetTable
+
+    schema = (
+        "id long, ts timestamp, "
+        "authors array<struct<name:string,rank:int>>, "
+        "pages struct<page_from:string,tags:array<string>>, "
+        "counts map<string,int>, price decimal(10,2)"
+    )
+    t = ParquetTable(spark, str(tmp_path / "nested"), gc_min_age_s=0.0)
+    t.overwrite(spark.createDataFrame([], schema))  # an empty commit
+    _assert_schema_parity(spark, t)
+    for lo in (0, 3, 7):
+        t.append(
+            spark.range(lo, lo + 3, numPartitions=2).selectExpr(
+                "id",
+                "timestamp'2021-03-04 05:06:07' + make_interval(0, 0, 0, id) AS ts",
+                "array(named_struct('name', CAST(id AS string), 'rank', CAST(id AS int))) AS authors",
+                "named_struct('page_from', 'p', 'tags', array('a', 'b')) AS pages",
+                "map('n', CAST(id AS int)) AS counts",
+                "CAST(id / 4 AS decimal(10,2)) AS price",
+            )
+        )
+        _assert_schema_parity(spark, t)
+    assert t.read().count() == 9

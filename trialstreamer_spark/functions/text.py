@@ -143,45 +143,6 @@ def normalize_concept_string(c: Column) -> Column:
     return F.trim(F.regexp_replace(s, r"\s+", " "))
 
 
-def normalize_concept_string_py(s: str) -> str:
-    """Driver-side twin of normalize_concept_string for LITERAL lexicons
-    (match_concepts' dict-rows fast path): same chain, same regexes, in
-    Python. Pinned to the column version by a property test
-    (test_round12_opt_shapes) so the two can never drift."""
-    s = s.lower()
-    s = re.sub(r"^\([^)]*\)\s*", "", s)
-    s = re.sub(r"\s*\([^)]*\)\s*$", "", s)
-    s = s.replace("-", " ")
-    s = re.sub(r"'s\b", "", s)
-    s = re.sub(r",? nos$", "", s)
-    m = re.match(r"^([^,]+), ([^,]+)$", s)
-    if m:
-        head, mod = m.group(1), m.group(2)
-        preps = set(_PREPOSITIONS)
-        if not (set(head.split(" ")) & preps or set(mod.split(" ")) & preps):
-            s = f"{mod} {head}"
-    return re.sub(r"\s+", " ", s).strip()
-
-
-def prepare_lexicon_rows(
-    rows, max_cuis: int = 15, min_term_chars: int = 3
-) -> dict[str, list[str]]:
-    """prepare_lexicon's hygiene filters over LITERAL (term, cui) rows,
-    driver-side: normalize terms, drop strings mapping to more than
-    ``max_cuis`` DISTINCT CUIs and strings shorter than
-    ``min_term_chars``. Returns term → cui list preserving row
-    multiplicity (the broadcast-join path emits one candidate per
-    lexicon ROW), sorted for plan determinism."""
-    by_term: dict[str, list[str]] = {}
-    for term, cui in rows:
-        by_term.setdefault(normalize_concept_string_py(term), []).append(cui)
-    return {
-        t: sorted(cuis)
-        for t, cuis in by_term.items()
-        if len(t) >= min_term_chars and len(set(cuis)) <= max_cuis
-    }
-
-
 # ---------------------------------------------------------------------------
 # dictionary NER (concept matcher)
 # ---------------------------------------------------------------------------
@@ -257,11 +218,11 @@ def prepare_lexicon(
 
 def match_concepts(
     docs: DataFrame,
-    lexicon: "DataFrame | Sequence[tuple[str, str]]",
+    lexicon: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_ngram: int = 4,
-    lemma_table: "DataFrame | Sequence[tuple[str, str]] | None" = None,
+    lemma_table: DataFrame | None = None,
     ignore_terms: DataFrame | None = None,
     stopwords: frozenset[str] = DEFAULT_STOPWORDS,
     max_cuis: int = 15,

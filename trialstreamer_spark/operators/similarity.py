@@ -201,13 +201,6 @@ def norm_sq_fp(a: Column) -> Column:
     return dot_fp(a, a)
 
 
-def cosine_fp(a: Column, b: Column) -> Column:
-    """Cosine as a pure column expression (interpreted; tiny inputs only)."""
-    return dot_fp(a, b) / F.sqrt(
-        norm_sq_fp(a).cast("double") * norm_sq_fp(b).cast("double")
-    )
-
-
 # (sf_dir, id) → query vector. Fetching the probe vector is query PREP
 # (the reference's API receives its query vector from the encoder, it
 # never scans for it) — memoized so repeated searches skip the lookup job.
@@ -227,50 +220,6 @@ def _query_vector(
     if cache_key is not None:
         _QVEC_CACHE[key] = qv
     return qv
-
-
-def brute_force_topk(
-    vectors: DataFrame,
-    query_df: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k of every query row against the vector table.
-    query_df is broadcast (queries ≪ corpus); corpus norms are computed
-    once per row scan-side, query norms once per query row; the top-k is
-    per query via window row_number."""
-    from pyspark.sql import Window as W
-
-    q = query_df.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        nsq_fp_pd(F.col(vec_col)).alias("qnsq"),
-    )
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        nsq_fp_pd(F.col(vec_col)).alias("nsq"),
-    )
-    scored = (
-        v.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("dot", dot_fp_pd(F.col("vec"), F.col("qvec")))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_from_fp(
-                F.col("dot"), F.col("nsq"), F.col("qnsq")
-            ).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
 
 
 def sign_lsh_bucket(vec: Column, n_planes: int = 12) -> Column:

@@ -43,53 +43,6 @@ def profile_hits(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: F.lower(t).isin(*words)))
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Adds token/quality/lang-id/fingerprint columns to any document
-    DataFrame. All array higher-order functions — narrow, no shuffle."""
-    toks = tokens_col(F.col(text_col))
-    n_tokens = F.size(toks)
-    n_chars_tok = F.aggregate(
-        F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda a, x: a + x
-    )
-    n_stop = profile_hits(toks, STOPWORDS)
-    n_distinct = F.size(F.array_distinct(toks))
-    scores = [
-        profile_hits(toks, words).alias(f"score_{lang}")
-        for lang, words in LANG_PROFILES.items()
-    ]
-    # argmax with deterministic tie-break: language order as listed
-    best = F.greatest(*[F.col(f"score_{lang}") for lang in LANG_PROFILES])
-    lang_pred = F.when(best == 0, F.lit("unknown"))
-    for lang in LANG_PROFILES:
-        lang_pred = lang_pred.when(F.col(f"score_{lang}") == best, F.lit(lang))
-    normalized = F.regexp_replace(
-        F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9 ]", " "), " +", " "
-    )
-    return (
-        df.withColumns(
-            {
-                "n_tokens": n_tokens,
-                "n_token_chars": n_chars_tok,
-                "n_stopwords": n_stop,
-                "n_distinct_tokens": n_distinct,
-            }
-        )
-        .select("*", *scores)
-        .withColumns(
-            {
-                "avg_token_len": F.col("n_token_chars")
-                / F.greatest(F.col("n_tokens"), F.lit(1)),
-                "stopword_ratio": F.col("n_stopwords")
-                / F.greatest(F.col("n_tokens"), F.lit(1)),
-                "distinct_ratio": F.col("n_distinct_tokens")
-                / F.greatest(F.col("n_tokens"), F.lit(1)),
-                "lang_pred": lang_pred.otherwise(F.lit("unknown")),
-                "fingerprint": F.md5(F.trim(normalized)),
-            }
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # queries()/oracle_sql() registrations
 # ---------------------------------------------------------------------------

@@ -10,8 +10,8 @@ table storage (write-new-then-swap, last-committed pointer).
 
 Semantics preserved (SURVEY §7 hard part 1):
 - batch-internal dedupe is keep-LAST (reference reverses the batch and
-  keeps first occurrence, pubmed.py:492-504) — the caller's row_number
-  window (streaming/pipeline.py) over an explicit ordering column;
+  keeps first occurrence, pubmed.py:492-504) — the caller resolves the
+  batch to one row per key first (``streaming/pipeline.latest_events``);
 - deletes apply FIRST, then upserts (pubmed.py:534-543 ordering), so a
   pmid that is both deleted and re-inserted in one batch survives.
 
@@ -27,19 +27,36 @@ data files plus files holding only the new rows, so an append writes
 the new rows, never re-reads or rewrites the old ones, and versions
 share the untouched files. Every version is still one complete parquet
 directory, readable on its own by any parquet reader; deleting an old
-version only drops its links."""
+version only drops its links.
+
+Reading a version starts no Spark job. A plain ``spark.read.parquet``
+of a directory runs a job to read one file's footer and infer the
+schema. Every data file Spark writes carries its own schema string in
+its footer, under ``org.apache.spark.sql.parquet.row.metadata``, and
+that string is what the inference reads. ``_read_dir`` reads it from
+one data file with pyarrow on the driver and hands it to
+``spark.read.schema``. All files of a version share one schema:
+``overwrite`` writes them in one write, and ``append`` checks the new
+rows against it. A directory with no such footer falls back to the
+plain read."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
 
+import pyarrow.parquet as pq
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # written into a version dir once the pointer has been flipped to it
 _COMMITTED = "_COMMITTED"
+# the footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def merge_upsert(
@@ -104,7 +121,20 @@ class ParquetTable:
             if self.schema is None:
                 raise ValueError(f"empty table {self.path} and no schema")
             return self.spark.createDataFrame([], self.schema)
-        return self.spark.read.parquet(os.path.join(self.path, v))
+        return self._read_dir(os.path.join(self.path, v))
+
+    def _read_dir(self, d: str) -> DataFrame:
+        """Read one version dir with the schema Spark wrote into a data
+        file's footer, so no job infers it (see the module docstring)."""
+        for name in sorted(os.listdir(d)):
+            # data files only: no _SUCCESS, _COMMITTED or .crc
+            if name.startswith(("_", ".")) or not name.endswith(".parquet"):
+                continue
+            meta = pq.read_metadata(os.path.join(d, name)).metadata or {}
+            if _SPARK_SCHEMA_KEY in meta:
+                schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+                return self.spark.read.schema(schema).parquet(d)
+        return self.spark.read.parquet(d)
 
     @staticmethod
     def _vnum(d: str) -> int | None:
@@ -183,7 +213,7 @@ class ParquetTable:
             self.overwrite(df)
             return
         src = os.path.join(self.path, cur)
-        want = self.spark.read.parquet(src).schema
+        want = self._read_dir(src).schema
 
         def types(schema) -> dict:
             return {f.name: f.dataType.simpleString() for f in schema}
@@ -259,7 +289,7 @@ class ParquetTable:
             raise ValueError(
                 f"version {version!r} not retained (have {self.versions()})"
             )
-        return self.spark.read.parquet(os.path.join(self.path, version))
+        return self._read_dir(os.path.join(self.path, version))
 
     def diff(self, from_version: str, to_version: str, key: str) -> DataFrame:
         """Snapshot diff between two retained versions (Delta CDF /

@@ -121,34 +121,6 @@ def transitive_closure(
     return closure
 
 
-def build_cui_closure(
-    spark: SparkSession, tree_path: str, term_to_cui: DataFrame | None = None
-) -> DataFrame:
-    """End-to-end G4: tree file → term closure, optionally re-keyed to
-    CUIs via a (term, cui) mapping (minimap's str_to_cui); without a
-    mapping the terms themselves key the closure."""
-    closure = transitive_closure(tree_edges(parse_mesh_tree(spark, tree_path)))
-    if term_to_cui is None:
-        return closure
-    anc = term_to_cui.select(
-        F.col("term").alias("ancestor_cui"), F.col("cui").alias("anc_cui")
-    )
-    desc = term_to_cui.select(
-        F.col("term").alias("descendant_cui"), F.col("cui").alias("desc_cui")
-    )
-    return (
-        closure.join(F.broadcast(anc), "ancestor_cui")
-        .join(F.broadcast(desc), "descendant_cui")
-        .select(
-            F.col("anc_cui").alias("ancestor_cui"),
-            F.col("desc_cui").alias("descendant_cui"),
-            "depth",
-        )
-        .groupBy("ancestor_cui", "descendant_cui")
-        .agg(F.min("depth").alias("depth"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # G5 — pharmacological-action maps
 # ---------------------------------------------------------------------------

@@ -12,9 +12,10 @@ parallelism is the physical maximum regardless of reader; thousands of
 files saturate thousands of cores.
 
 Each file is parsed ONCE: ``parse_files`` emits both record kinds in one
-``mapInPandas`` pass, tagged by ``kind`` ('article' or 'delete'), and
-``read_articles``/``read_deletes``, the batch pipeline and the streaming
-pipeline all split that one tagged frame. A delete row fills every
+``mapInPandas`` pass, tagged by ``kind`` ('article' or 'delete').
+``read_articles``/``read_deletes`` filter that one tagged frame, and the
+batch and streaming pipelines resolve it whole
+(``streaming.pipeline.latest_events``). A delete row fills every
 article column with ``None`` explicitly: pandas would fill the gaps with
 NaN, which Arrow cannot convert into an array column.
 
@@ -180,25 +181,17 @@ def parse_files(files: DataFrame) -> DataFrame:
     )
 
 
-def articles_of(records: DataFrame) -> DataFrame:
-    """Upsert rows of a ``parse_files`` frame (ref pubmed.py:302-314)."""
-    return records.filter(F.col("kind") == "article").drop("kind")
-
-
-def deletes_of(records: DataFrame) -> DataFrame:
-    """CDC delete list of a ``parse_files`` frame (ref pubmed.py:316-317)."""
-    return records.filter(F.col("kind") == "delete").select(
-        "pmid", "source_filename"
-    )
-
-
 def read_records(spark: SparkSession, glob_path: str) -> DataFrame:
     return parse_files(spark.read.format("binaryFile").load(glob_path))
 
 
 def read_articles(spark: SparkSession, glob_path: str) -> DataFrame:
-    return articles_of(read_records(spark, glob_path))
+    """Upsert rows of the files (ref pubmed.py:302-314)."""
+    records = read_records(spark, glob_path)
+    return records.filter(F.col("kind") == "article").drop("kind")
 
 
 def read_deletes(spark: SparkSession, glob_path: str) -> DataFrame:
-    return deletes_of(read_records(spark, glob_path))
+    """CDC delete list of the files (ref pubmed.py:316-317)."""
+    records = read_records(spark, glob_path)
+    return records.filter(F.col("kind") == "delete").select("pmid", "source_filename")

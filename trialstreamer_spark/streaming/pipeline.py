@@ -6,11 +6,9 @@ Reference behavior carried over (SURVEY §2.9):
 - file-arrival micro-batching with exactly-once bookkeeping
   (update_log + skip sets, pubmed.py:88-117,461-468) → Structured
   Streaming file source + checkpointing; Trigger.AvailableNow = cron run.
-- update files applied in filename order (pubmed.py:64) → batch sorts by
-  source_filename before keep-last dedupe, so the LAST file wins a pmid.
-- in-batch dedupe keep-last (pubmed.py:492-504) → row_number window.
-- DeleteCitation CDC removes from all targets, deletes before upserts
-  (pubmed.py:534-543).
+- update files applied in filename order (pubmed.py:64), deletes before
+  upserts within a file (pubmed.py:534-543), in-batch keep-last
+  (pubmed.py:492-504) → ``latest_events``, one resolver per batch (below).
 - audit log row per processed batch (dbutil.py:245-247) — kept as a
   queryable table even though the checkpoint already guarantees progress,
   because /meta reads it (cnxapp.py:117-118). It is append-only: each
@@ -19,12 +17,23 @@ Reference behavior carried over (SURVEY §2.9):
 
 Parse once: a batch's files go through ONE ``pubmed_xml.parse_files``
 pass, persisted for the duration of the batch and unpersisted in a
-``finally``. The deduped upserts, the delete keys, the last-delete file
-per pmid and the audit rows are all derived from that persisted frame,
-so each landed file is decompressed and parsed once however many jobs
-the MERGE and the audit run. Exactly-once still comes from the
-checkpoint plus the idempotent MERGE (Structured Streaming, SIGMOD
-2018), not from recomputing the micro-batch per sink write.
+``finally``. The MERGE input and the audit rows are both derived from
+that persisted frame, so each landed file is decompressed and parsed
+once however many jobs the MERGE and the audit run. Exactly-once still
+comes from the checkpoint plus the idempotent MERGE (Structured
+Streaming, SIGMOD 2018), not from recomputing the micro-batch per sink
+write.
+
+One resolver per batch: replaying the reference's files one by one
+leaves each pmid in the state of its LATEST event, ordered by file
+name, then delete before article within a file, then position in the
+file (``record_idx``). ``latest_events`` finds that event with one
+``row_number`` window partitioned by pmid: a pmid whose latest event is
+an article is upserted with that row, one whose latest event is a
+delete is a delete key. Both go to ``ParquetTable.merge``. The one
+window is one pass over the persisted records, where separate dedupe,
+last-delete and delete-key steps would each schedule passes of their
+own.
 
 At 100 TB: one .gz update file = one task (gz is unsplittable); the
 MERGE shuffles on pmid which is the target's bucket key; derived count
@@ -43,10 +52,32 @@ from trialstreamer_spark.operators.upsert import ParquetTable
 from trialstreamer_spark.sources import pubmed_xml
 
 
+def latest_events(records: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Resolve one batch of ``parse_files`` records into the MERGE's
+    upserts (article rows, without ``kind``) and delete keys (``pmid``)
+    by each pmid's latest event (see the module docstring). Records
+    without a pmid are dropped."""
+    w = W.partitionBy("pmid").orderBy(
+        F.col("source_filename").desc(),
+        (F.col("kind") == "article").desc(),
+        F.col("record_idx").desc(),
+    )
+    latest = (
+        records.filter(F.col("pmid").isNotNull())
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+    return (
+        latest.filter(F.col("kind") == "article").drop("kind"),
+        latest.filter(F.col("kind") == "delete").select("pmid"),
+    )
+
+
 class PubmedPipeline:
     """Landing-dir → typed tables with CDC. Batch and streaming entry
-    points share one _apply_records (one parse, then _apply_batch), so
-    replay semantics are identical."""
+    points share one _apply_records (one parse, then _apply), so replay
+    semantics are identical."""
 
     def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
@@ -65,52 +96,25 @@ class PubmedPipeline:
         job of the batch reads the persisted records."""
         records = records.persist()
         try:
-            self._apply_batch(
-                pubmed_xml.articles_of(records),
-                pubmed_xml.deletes_of(records),
-                streaming=streaming,
-            )
+            self._apply(records, streaming=streaming)
         finally:
             records.unpersist()
 
     def _apply_batch(
         self, articles: DataFrame, deletes: DataFrame, streaming: bool = False
     ) -> None:
-        # deterministic file order then keep-last per pmid
-        # (pubmed.py:64 sort + 492-504 last-wins); record_idx breaks
-        # in-file duplicate ties toward the file's LAST occurrence (the
-        # reference's reversed-batch first-hit). Batches from sources
-        # without a record index (tests, ad-hoc frames) tie-break on a
-        # constant, preserving the old file-order-only behavior.
-        idx = (
-            F.col("record_idx")
-            if "record_idx" in articles.columns
-            else F.lit(0)
+        """Apply frames already split by kind (tests, ad-hoc frames): tag
+        them back into the record shape and resolve. Articles without a
+        ``record_idx`` tie-break in-file duplicates on a constant."""
+        if "record_idx" not in articles.columns:
+            articles = articles.withColumn("record_idx", F.lit(0))
+        records = articles.withColumn("kind", F.lit("article")).unionByName(
+            deletes.withColumn("kind", F.lit("delete")), allowMissingColumns=True
         )
-        w = W.partitionBy("pmid").orderBy(
-            F.col("source_filename").desc(), idx.desc()
-        )
-        deduped = (
-            articles.filter(F.col("pmid").isNotNull())
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        # The reference applies files sequentially (per file: deletes then
-        # upserts, pubmed.py:534-543). Replaying that inside one batch:
-        # an upsert survives unless a STRICTLY LATER file deletes the pmid
-        # (same-file delete+reinsert survives because deletes run first).
-        last_del = deletes.groupBy("pmid").agg(
-            F.max("source_filename").alias("__del_file")
-        )
-        deduped = (
-            deduped.join(F.broadcast(last_del), "pmid", "left")
-            .filter(
-                F.col("__del_file").isNull()
-                | (F.col("__del_file") <= F.col("source_filename"))
-            )
-            .drop("__del_file")
-        )
+        self._apply(records, streaming=streaming)
+
+    def _apply(self, records: DataFrame, streaming: bool = False) -> None:
+        upserts, deletes = latest_events(records)
         # run statistics (SURVEY A8 — the reference's Counter telemetry at
         # pubmed.py:458,480,550): an Observation rides the merge action,
         # so counting costs no extra job. Observation.get blocks on a
@@ -122,13 +126,12 @@ class PubmedPipeline:
             from pyspark.sql import Observation
 
             obs = Observation()
-            deduped = deduped.observe(obs, F.count(F.lit(1)).alias("n_upserts"))
-        del_keys = deletes.select("pmid").distinct()
-        self.articles.merge(deduped, "pmid", deletes=del_keys)
+            upserts = upserts.observe(obs, F.count(F.lit(1)).alias("n_upserts"))
+        self.articles.merge(upserts, "pmid", deletes=deletes)
         if obs is not None:
             self.last_batch_stats = obs.get
         self._refresh_counts()
-        self._log_update(articles, deletes)
+        self._log_update(records)
 
     def _refresh_counts(self) -> None:
         """Matview refresh analog (ref pubmed.py:163-167 + dbutil.py:179-186)."""
@@ -139,13 +142,12 @@ class PubmedPipeline:
             .agg(F.count("*").alias("n_articles"))
         )
 
-    def _log_update(self, articles: DataFrame, deletes: DataFrame) -> None:
+    def _log_update(self, records: DataFrame) -> None:
         """Per-file audit rows in the full update_log schema (ref
         dbutil.py:156-163,240-247: update_type, source_filename,
         source_date, download_date, update_date)."""
         files = (
-            articles.select("source_filename")
-            .union(deletes.select("source_filename"))
+            records.select("source_filename")
             .distinct()
             .select(
                 F.lit("pubmed_update").alias("update_type"),
