@@ -60,27 +60,9 @@ def main() -> None:
     # not per query: register+materialize the sf tables (catalog/buffer
     # pool) and build the ANN sidecar indexes (the reference builds its
     # Annoy indexes offline too — PICO_search.py:18-85).
-    from trialstreamer_spark.io import prepare_buckets, warm_cache
-    from trialstreamer_spark.operators.clustering import prepare_pq, prepare_semdedup
-    from trialstreamer_spark.operators.dedup import prepare_dedup
-    from trialstreamer_spark.operators.quality import prepare_curation
-    from trialstreamer_spark.operators.retrieval import prepare_stats
-    from trialstreamer_spark.operators.similarity import prepare_indexes
-    from trialstreamer_spark.operators.temporal import prepare_temporal
-    from trialstreamer_spark.streaming.parity import prepare_parity
+    from trialstreamer_spark.sidecars import prepare_hooks
 
-    for prep in (
-        warm_cache,
-        prepare_buckets,
-        prepare_indexes,
-        prepare_dedup,
-        prepare_stats,
-        prepare_pq,
-        prepare_semdedup,
-        prepare_curation,
-        prepare_temporal,
-        prepare_parity,
-    ):
+    for prep in prepare_hooks():
         # Dedup stage-1 featurization (shared shingle postings) and the
         # BM25 lexicon/per-doc index: one corpus-version build each,
         # consumed by minhash/jaccard/CC and bm25_topk respectively. A

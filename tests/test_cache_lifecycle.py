@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from trialstreamer_spark import util
+from tests.conftest import SF_DIR
 from trialstreamer_spark.operators.upsert import ParquetTable
 
 
@@ -45,32 +46,28 @@ def test_version_bump_evicts_cached_plan_and_releases_storage(spark, table):
 
 
 def test_version_bump_evicts_module_caches(spark, table):
-    from trialstreamer_spark.operators import dedup, similarity
+    from trialstreamer_spark.operators import dedup
 
     corpus_dir = os.path.dirname(table.path)
-    jvm = id(spark._jsparkSession)
     docs = spark.range(4).select(
         F.col("id").alias("doc_id"), F.lit("alpha beta gamma delta").alias("text")
     )
-    from trialstreamer_spark.sidecars import catalog_base
 
     post = dedup.shingle_postings(docs, cache_key=corpus_dir)
-    assert (jvm, ("catalog", catalog_base()), corpus_dir) in dedup._POSTINGS_CACHE
-    similarity._IVF_CENTROIDS[corpus_dir] = []
-    similarity._IVF_CENTROIDS["/unrelated/dir"] = []
+    post_key = util._plan_key(spark, ("shingle_postings", corpus_dir))
+    assert post_key in util._PLAN_CACHE
+    # IVF centroids are util.memo entries keyed by corpus dir
+    util.memo(("ivf_centroids", corpus_dir), list)
+    util.memo(("ivf_centroids", "/unrelated/dir"), list)
 
     table.overwrite(docs)
 
-    assert (
-        jvm,
-        ("catalog", catalog_base()),
-        corpus_dir,
-    ) not in dedup._POSTINGS_CACHE
+    assert post_key not in util._PLAN_CACHE
     assert not post.storageLevel.useMemory
-    assert corpus_dir not in similarity._IVF_CENTROIDS
+    assert ("ivf_centroids", corpus_dir) not in util._PLAN_CACHE
     # unrelated corpus versions are untouched
-    assert "/unrelated/dir" in similarity._IVF_CENTROIDS
-    del similarity._IVF_CENTROIDS["/unrelated/dir"]
+    assert ("ivf_centroids", "/unrelated/dir") in util._PLAN_CACHE
+    del util._PLAN_CACHE[("ivf_centroids", "/unrelated/dir")]
 
 
 def test_version_ids_are_monotonic_and_unique(spark, table):
@@ -143,11 +140,14 @@ def test_warm_cache_respreads_unsplittable_row_groups(spark, monkeypatch):
     # warm_cache silently skips tables already cached for this
     # (session, sf_dir) — evict any entry an EARLIER test warmed, or
     # the patched threshold never applies (order-dependent failure).
-    jvm = id(spark._jsparkSession)
-    for name in ("orders", "region"):
-        stale = io._TABLE_CACHE.pop((jvm, sf_dir, name), None)
-        if stale is not None:
-            stale.unpersist()
+    def drop_warmed():
+        for name in ("orders", "region"):
+            key = util._plan_key(spark, ("table", sf_dir, name))
+            stale = util._PLAN_CACHE.pop(key, None)
+            if stale is not None:
+                stale[0].unpersist()
+
+    drop_warmed()
     try:
         io.warm_cache(spark, sf_dir, ("orders", "region"))
         orders = io.load(spark, sf_dir, "orders")
@@ -161,8 +161,116 @@ def test_warm_cache_respreads_unsplittable_row_groups(spark, monkeypatch):
         region = io.load(spark, sf_dir, "region")
         assert region.rdd.getNumPartitions() == 1, "tiny dim must not fan out"
     finally:
-        jvm = id(spark._jsparkSession)
-        for name in ("orders", "region"):
-            df = io._TABLE_CACHE.pop((jvm, sf_dir, name), None)
-            if df is not None:
-                df.unpersist()
+        drop_warmed()
+
+
+SF = SF_DIR
+
+
+def _corpus_copy(dst: str, tables: tuple[str, ...]) -> str:
+    """Writable copy of some sf0.001 tables (the source files are
+    read-only)."""
+    import shutil
+
+    os.makedirs(dst)
+    for t in tables:
+        shutil.copyfile(
+            os.path.join(SF, f"{t}.parquet"), os.path.join(dst, f"{t}.parquet")
+        )
+    return dst
+
+
+def test_nation_rewrite_refreshes_nation_names(spark, tmp_path):
+    """Evicting a corpus's nation.parquet must drop the memoized
+    nation/region rows too: a nation-chain query rerun after the rewrite
+    serves the NEW nation name, never the stale one."""
+    import pyarrow.parquet as pq
+
+    from trialstreamer_spark.plans.all_queries import QUERIES
+
+    sf = _corpus_copy(
+        str(tmp_path / "sf"), ("customer", "orders", "nation", "region")
+    )
+    query = QUERIES["dormant_rich_customers"]
+    old = query(spark, sf).collect()[0]["nation"]
+
+    path = os.path.join(sf, "nation.parquet")
+    t = pq.read_table(path)
+    names = ["ATLANTIS" if n == old else n for n in t.column("n_name").to_pylist()]
+    t = t.set_column(
+        t.schema.get_field_index("n_name"), "n_name", [names]
+    )
+    os.remove(path)
+    pq.write_table(t, path)
+    util.evict_caches(path)
+
+    nations = {r["nation"] for r in query(spark, sf).collect()}
+    assert "ATLANTIS" in nations and old not in nations, nations
+
+
+def test_evict_caches_releases_every_kind_of_entry(spark, tmp_path, monkeypatch):
+    """One corpus, one entry of each cached kind — a persisted plan, a
+    warmed table, a disk-backed sidecar, in-process values, the bucket
+    projection and a parity replay — and one eviction: nothing keyed by
+    the corpus survives, persisted frames release their storage, the
+    replay's cleanup removes its checkpoint, another corpus's entries
+    stay, and a sidecar commit under the catalog root evicts nothing."""
+    from trialstreamer_spark import io, sidecars
+    from trialstreamer_spark.operators import dedup, similarity
+    from trialstreamer_spark.plans.all_queries import QUERIES
+
+    monkeypatch.setenv("SPARK_GRAFT_SIDECAR_DIR", str(tmp_path / "sc"))
+    monkeypatch.setenv("SPARK_GRAFT_BUCKET_DIR", str(tmp_path / "bkt"))
+    corpus = _corpus_copy(
+        str(tmp_path / "a"), ("documents", "embeddings", "events", "orders")
+    )
+    other = str(tmp_path / "b")
+
+    frames = [
+        util.cached_plan(spark, ("probe", corpus), lambda: spark.range(5)),
+        sidecars.disk_cached_plan(
+            spark, corpus, "probe", lambda: spark.range(3).toDF("v")
+        ),
+    ]
+    io.warm_cache(spark, corpus, ("orders",))
+    frames.append(io.load(spark, corpus, "orders"))
+    for df in frames:
+        df.count()
+        assert df.storageLevel.useMemory
+    similarity.ivf_centroids(spark, corpus)
+    dedup.bloom_build(spark, corpus)
+    io.prepare_buckets(spark, corpus, variants=("orders_by_orderkey",))
+    QUERIES["topk_stream_parity"](spark, corpus)
+    (replay,) = [
+        v for k, (v, _) in util._PLAN_CACHE.items()
+        if k[2:] == ("replay", "topk", corpus)
+    ]
+    assert os.path.isdir(replay["ckpt"])
+    survivor = util.cached_plan(spark, ("probe", other), lambda: spark.range(2))
+    util.memo(("probe_value", other), lambda: 1)
+
+    try:
+        before = set(util._PLAN_CACHE)
+        sidecars.disk_sidecar(
+            spark, other, "probe_commit", lambda: spark.range(1).toDF("v")
+        )
+        assert set(util._PLAN_CACHE) == before
+
+        util.evict_caches(corpus)
+
+        assert not [
+            k for k in util._PLAN_CACHE if util._key_references(k, corpus)
+        ]
+        for df in frames:
+            assert not df.storageLevel.useMemory
+        assert not os.path.exists(replay["ckpt"])
+        assert not spark.catalog.tableExists(replay["view"])
+        assert util._plan_key(spark, ("probe", other)) in util._PLAN_CACHE
+        assert ("probe_value", other) in util._PLAN_CACHE
+        assert survivor.storageLevel.useMemory
+    finally:
+        util.evict_caches(other)
+        spark.sql(
+            "DROP TABLE IF EXISTS "
+            + io._bucket_table_name(corpus, "orders_by_orderkey")
+        )

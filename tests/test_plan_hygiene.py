@@ -351,7 +351,7 @@ def test_erasure_manifest_reads_materialized_featurizations(spark, sf_dir):
     assert p.count("InMemoryTableScan") >= 2, p
 
 
-# every parity query and its _REPLAY_CACHE tag — single-batch memory
+# every parity query and its replay tag in the util.memo store — single-batch memory
 # sinks, the production upsert sink, and the multi-batch staged replays
 # all ride the ONE shared registry, so the reuse contract is testable
 # uniformly across the full family.
@@ -379,19 +379,19 @@ def test_parity_second_call_reuses_completed_replay(spark, sf_dir, qname):
     without starting a new streaming query or a new checkpoint —
     asserted for EVERY parity query, so no operator can quietly grow
     its own bespoke uncached sink path again."""
-    from trialstreamer_spark.streaming import parity
+    from trialstreamer_spark import util
 
     tag = PARITY_TAGS[qname]
     first = QUERIES[qname](spark, sf_dir)
     keys_after_first = {
-        k for k in parity._REPLAY_CACHE if k[1] == tag and k[2] == sf_dir
+        k for k in util._PLAN_CACHE if k[2:] == ("replay", tag, sf_dir)
     }
     assert len(keys_after_first) == 1
     (key,) = keys_after_first
-    payload = parity._REPLAY_CACHE[key][0]
+    payload = util._PLAN_CACHE[key][0]
     second = QUERIES[qname](spark, sf_dir)
-    assert set(parity._REPLAY_CACHE) >= keys_after_first  # entry survived
-    assert payload is parity._REPLAY_CACHE[key][0]  # same payload, no re-run
+    assert set(util._PLAN_CACHE) >= keys_after_first  # entry survived
+    assert payload is util._PLAN_CACHE[key][0]  # same payload, no re-run
     # and the two invocations agree row-for-row
     assert sorted(map(tuple, first.collect())) == sorted(
         map(tuple, second.collect())

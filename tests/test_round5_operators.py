@@ -230,17 +230,17 @@ def test_nprobe_recall_curve_is_monotone_and_consistent(spark, sf_dir):
 def test_upsert_sink_parity_reuses_completed_replay(spark, sf_dir):
     """Second call serves from the merged table without re-running the
     stream, and agrees row-for-row."""
-    from trialstreamer_spark.streaming import parity
+    from trialstreamer_spark import util
 
     first = QUERIES["upsert_sink_stream_parity"](spark, sf_dir).collect()
     # round-6: the upsert sink rides the SAME shared replay registry as
     # every memory-sink parity query (one mechanism owns all stream
     # sinks)
-    key = (id(spark._jsparkSession), "upsert_sink", sf_dir)
-    assert key in parity._REPLAY_CACHE
-    tbl_dir = parity._REPLAY_CACHE[key][0]["tbl_dir"]
+    key = util._plan_key(spark, ("replay", "upsert_sink", sf_dir))
+    assert key in util._PLAN_CACHE
+    tbl_dir = util._PLAN_CACHE[key][0]["tbl_dir"]
     second = QUERIES["upsert_sink_stream_parity"](spark, sf_dir).collect()
-    assert parity._REPLAY_CACHE[key][0]["tbl_dir"] == tbl_dir
+    assert util._PLAN_CACHE[key][0]["tbl_dir"] == tbl_dir
     assert sorted(map(tuple, first)) == sorted(map(tuple, second))
 
 

@@ -62,7 +62,10 @@ def test_pair_sidecar_survives_restart(spark, sidecar_dir, monkeypatch):
 
     s2 = spark.newSession()
     util.evict_caches(SF)
-    assert not [k for k in dedup._PAIR_CACHE if SF in str(k)]
+    assert not [
+        k for k in util._PLAN_CACHE
+        if "minhash_pairs_doc_id_text" in k and SF in str(k)
+    ]
 
     def boom(*a, **k):
         raise AssertionError("re-banding: banded_keys ran after restart")
@@ -130,18 +133,22 @@ def test_version_bump_evicts_bucket_and_pair_caches(spark, monkeypatch, tmp_path
     monkeypatch.setenv("SPARK_GRAFT_BUCKET_DIR", str(tmp_path / "bkt"))
     monkeypatch.setenv("SPARK_GRAFT_SIDECAR_DIR", str(tmp_path / "sc"))
     io.prepare_buckets(spark, SF, variants=("orders_by_orderkey",))
-    assert [k for k in io._BUCKET_CACHE if SF in str(k)]
+
+    def entries(tag):
+        return [k for k in util._PLAN_CACHE if tag in k and SF in str(k)]
+
+    assert entries("bucket")
     d = (
         spark.range(4)
         .select(F.col("id").alias("doc_id"),
                 F.lit("alpha beta gamma delta epsilon").alias("text"))
     )
     pairs = dedup.minhash_candidates(d, cache_key=SF)
-    assert [k for k in dedup._PAIR_CACHE if SF in str(k)]
+    assert entries("minhash_pairs_doc_id_text")
 
     util.evict_caches(SF)
-    assert not [k for k in io._BUCKET_CACHE if SF in str(k)]
-    assert not [k for k in dedup._PAIR_CACHE if SF in str(k)]
+    assert not entries("bucket")
+    assert not entries("minhash_pairs_doc_id_text")
     assert not pairs.storageLevel.useMemory
     spark.sql(
         f"DROP TABLE IF EXISTS {io._bucket_table_name(SF, 'orders_by_orderkey')}"

@@ -76,13 +76,16 @@ def test_restart_serves_minhash_lsh_from_disk(spark, sidecar_dir, monkeypatch):
     sig_dir = sidecars.sidecar_path(SF, "minhash_sigs_doc_id_text")
     assert os.path.exists(os.path.join(sig_dir, "_current"))
     # "restart": fresh SparkSession + evict every in-memory sidecar the
-    # first run registered (the registered evictors clear the dedup
-    # postings/signature caches too)
+    # first run registered (the one cache holds the dedup
+    # postings/signature entries too)
     s2 = spark.newSession()
     util.evict_caches(SF)
     # only THIS corpus's entries must be gone — other corpora cached by
     # earlier tests in the session are intentionally untouched
-    assert not [k for k in dedup._SIG_CACHE if SF in str(k)]
+    assert not [
+        k for k in util._PLAN_CACHE
+        if "minhash_sigs_doc_id_text" in k and SF in str(k)
+    ]
 
     def boom(*a, **k):
         raise AssertionError(
@@ -101,14 +104,16 @@ def test_simhash_table_is_disk_backed(spark, sidecar_dir):
     corpus re-tokenization: the plan reads the sidecar scan, not an
     Aggregate over exploded tokens), with identical rows."""
     from trialstreamer_spark import util
-    from trialstreamer_spark.operators import dedup
 
     first = QUERIES["dedup_simhash"](spark, SF).collect()
     sdir = sidecars.sidecar_path(SF, "simhash_doc_id_text_16")
     assert os.path.exists(os.path.join(sdir, "_current"))
     s2 = spark.newSession()
     util.evict_caches(SF)
-    assert not [k for k in dedup._SIMHASH_CACHE if SF in str(k)]
+    assert not [
+        k for k in util._PLAN_CACHE
+        if "simhash_doc_id_text_16" in k and SF in str(k)
+    ]
     df = QUERIES["dedup_simhash"](s2, SF)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     # served from the committed (doc_id, simhash) scan: no tokenize

@@ -56,20 +56,10 @@ def best_of(f, n: int = 3) -> float:
 
 def rehearse(spark, sf_dir: str, names=None, oracle_reuse: dict | None = None,
              preps: set[str] | None = None, no_oracle: bool = False) -> dict:
-    from trialstreamer_spark.io import prepare_buckets, warm_cache
-    from trialstreamer_spark.operators.clustering import prepare_pq, prepare_semdedup
-    from trialstreamer_spark.operators.dedup import prepare_dedup
-    from trialstreamer_spark.operators.quality import prepare_curation
-    from trialstreamer_spark.operators.retrieval import prepare_stats
-    from trialstreamer_spark.operators.similarity import prepare_indexes
-    from trialstreamer_spark.operators.temporal import prepare_temporal
-    from trialstreamer_spark.streaming.parity import prepare_parity
+    from trialstreamer_spark.sidecars import prepare_hooks
 
     t0 = time.perf_counter()
-    for prep in (warm_cache, prepare_buckets, prepare_indexes,
-                 prepare_dedup, prepare_stats, prepare_curation,
-                 prepare_pq, prepare_semdedup, prepare_temporal,
-                 prepare_parity):
+    for prep in prepare_hooks():
         # --preps restricts the offline builds (sf10: the dedup pair
         # featurizations are structurally quadratic on the synthetic
         # corpus's FIXED 30-word vocabulary — shingle df grows linearly

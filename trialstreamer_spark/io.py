@@ -32,16 +32,6 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# (session JVM id, sf_dir, table) → persisted DataFrame. Populated only by
-# warm_cache(); plain load() stays uncached so unit tests see real parquet
-# scans (PushedFilters / ReadSchema assertions in test_plan_hygiene.py).
-# On a long-lived cluster this is the table-catalog / buffer-pool analog:
-# re-reading footers + rebuilding scan plans per query is pure fixed cost.
-_TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-util.register_cache_evictor(lambda token: util.evict_dict_cache(_TABLE_CACHE, token))
-
-
 # Minimum rows per cached partition. The corpus parquet is written with
 # ~1M-row row groups, which Spark cannot split: at sf0.1 EVERY table scans
 # as ONE partition and at sf1 lineitem lands 6M rows in 6 of 28 splits
@@ -71,7 +61,7 @@ _WARM_ROWS_OVERRIDE = {"documents": 1024}
 # label_source_affinity's one-join-one-rollup plan dropped 0.46→0.19 s
 # at sf1 on this alone). On a real cluster this is simply columnar
 # projection — fewer bytes, fewer splits; the second cached relation is
-# the local-mode stand-in. Keyed as "<table>__meta" in _TABLE_CACHE.
+# the local-mode stand-in. Keyed as ("table", sf_dir, "<table>__meta").
 _META_COLS: dict[str, tuple[str, ...]] = {
     "documents": ("doc_id", "lang", "source", "n_chars"),
 }
@@ -85,8 +75,14 @@ def warm_cache(
     calls reuse the cached plan — cutting the per-query footer-read +
     scan-build fixed cost that dominates a multi-query bench run — and
     re-spread giant unsplittable row groups across the cores (see
-    _WARM_ROWS_PER_PARTITION)."""
-    key_session = id(spark._jsparkSession)
+    _WARM_ROWS_PER_PARTITION).
+
+    Each table is a util.cached_plan entry ("table", sf_dir, name),
+    registered only here: load() of an unwarmed table stays uncached so
+    unit tests see real parquet scans (PushedFilters / ReadSchema
+    assertions in test_plan_hygiene.py). On a long-lived cluster this is
+    the table-catalog / buffer-pool analog: re-reading footers +
+    rebuilding scan plans per query is pure fixed cost."""
     par = spark.sparkContext.defaultParallelism
     skipped = []
     for name in tables:
@@ -97,20 +93,18 @@ def warm_cache(
         if not os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
             skipped.append(name)
             continue
-        key = (key_session, sf_dir, name)
-        if key not in _TABLE_CACHE:
+        key = ("table", sf_dir, name)
+        if util.peek(spark, key) is None:
             raw = load(spark, sf_dir, name)
             n = raw.count()
             rpp = _WARM_ROWS_OVERRIDE.get(name, _WARM_ROWS_PER_PARTITION)
             target = max(1, min(par, n // rpp))
             if target > 1:
                 raw = raw.repartition(target)
-            df = raw.persist()
-            df.count()
-            _TABLE_CACHE[key] = df
+            util.cached_plan(spark, key, lambda: raw).count()
         if name in _META_COLS:
-            mkey = (key_session, sf_dir, f"{name}__meta")
-            if mkey not in _TABLE_CACHE:
+            mkey = ("table", sf_dir, f"{name}__meta")
+            if util.peek(spark, mkey) is None:
                 narrow = load(spark, sf_dir, name).select(*_META_COLS[name])
                 n = narrow.count()
                 target = max(1, min(par, n // _WARM_ROWS_PER_PARTITION))
@@ -121,9 +115,7 @@ def warm_cache(
                 # dispatch tax load_meta exists to avoid at small-corpus
                 # sizes (r9 ADVICE).
                 narrow = narrow.repartition(target)
-                mdf = narrow.persist()
-                mdf.count()
-                _TABLE_CACHE[mkey] = mdf
+                util.cached_plan(spark, mkey, lambda: narrow).count()
     if skipped:
         if len(skipped) == len(tables):
             raise FileNotFoundError(
@@ -145,9 +137,7 @@ def load_meta(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Falls back to the projected full table when nothing is warmed (cold
     path: the projection still prunes at the parquet scan)."""
     cols = _META_COLS[name]
-    cached = _TABLE_CACHE.get(
-        (id(spark._jsparkSession), sf_dir, f"{name}__meta")
-    )
+    cached = util.peek(spark, ("table", sf_dir, f"{name}__meta"))
     if cached is not None:
         return cached
     return load(spark, sf_dir, name).select(*cols)
@@ -165,7 +155,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     comparisons stay exact. (A float division here would silently lose
     precision: 1.7e18 ns exceeds double's 53-bit mantissa.)
     """
-    cached = _TABLE_CACHE.get((id(spark._jsparkSession), sf_dir, name))
+    cached = util.peek(spark, ("table", sf_dir, name))
     if cached is not None:
         return cached
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -286,17 +276,6 @@ def _bucket_table_name(sf_dir: str, variant: str) -> str:
     return f"ts_bkt_{h}_{variant}"
 
 
-# (session JVM id, sf_dir, variant) → persisted bucket projection. The
-# in-memory layer of the bucket layout (same buffer-pool analog as
-# _TABLE_CACHE): InMemoryRelation preserves the scan's
-# HashPartitioning(key, N_FACT_BUCKETS), so cached reads keep their
-# co-located (exchange-free) joins while skipping the per-query
-# footer-read + disk scan. Evicted on corpus version bumps.
-_BUCKET_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-util.register_cache_evictor(lambda token: util.evict_dict_cache(_BUCKET_CACHE, token))
-
-
 def prepare_buckets(
     spark: SparkSession, sf_dir: str, variants: tuple[str, ...] | None = None
 ) -> None:
@@ -308,17 +287,14 @@ def prepare_buckets(
     Exchange (and their Sort). Idempotent per (session, corpus): the
     catalog registration is checked first.
 
-    Each projection is also persisted in memory (deserialized columnar,
-    spill-to-disk) and materialized — the narrow projections are a small
-    fraction of the corpus, and the cached relation keeps the bucket
-    HashPartitioning, so every fact-fact plan still joins without an
-    exchange but stops paying a cold parquet scan per query."""
+    Each projection's table handle is a session-scoped ``util.memo``
+    entry, evicted with its corpus, and is deliberately NOT persisted
+    (see below)."""
     base = os.environ.get(
         "SPARK_GRAFT_BUCKET_DIR",
         os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                      "spark-warehouse", "buckets"),
     )
-    key_session = id(spark._jsparkSession)
     for variant in variants or tuple(BUCKET_SPECS):
         spec = BUCKET_SPECS[variant]
         src, key, cols = spec[0], spec[1], spec[2]
@@ -345,9 +321,11 @@ def prepare_buckets(
         # nation_market_share 4.2→2.7 s from un-persisting alone; even
         # at sf0.1 the no-persist set measured faster (4.93→4.44 s over
         # the 12 TPC-H analogs) — the OS page cache covers the re-read.
-        ck = (key_session, sf_dir, os.path.abspath(base), variant)
-        if ck not in _BUCKET_CACHE:
-            _BUCKET_CACHE[ck] = spark.table(name)
+        util.memo(
+            ("bucket", sf_dir, os.path.abspath(base), variant),
+            lambda: spark.table(name),
+            spark=spark,
+        )
 
 
 def bucketed_table(

@@ -41,8 +41,6 @@ _ASSIGN_TYPE = StructType(
     [StructField("cluster", IntegerType()), StructField("dist_fp", LongType())]
 )
 
-_centroid_cache: dict[tuple[str, int], np.ndarray] = {}
-
 
 def seed_centroids(
     e: DataFrame, k: int = K_CLUSTERS, cache_key: str | None = None
@@ -54,18 +52,19 @@ def seed_centroids(
     (corpus dir, k) — k is part of the key so callers requesting
     different cluster counts against the same corpus never share a
     wrong-sized matrix."""
-    if cache_key is not None and (cache_key, k) in _centroid_cache:
-        return _centroid_cache[(cache_key, k)]
-    rows = (
-        e.filter(F.col("vec_id") < k)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    )
-    c = np.stack([np.asarray(r.embedding, dtype=np.float64) for r in rows])
-    if cache_key is not None:
-        _centroid_cache[(cache_key, k)] = c
-    return c
+
+    def build() -> np.ndarray:
+        rows = (
+            e.filter(F.col("vec_id") < k)
+            .select("vec_id", "embedding")
+            .orderBy("vec_id")
+            .collect()
+        )
+        return np.stack([np.asarray(r.embedding, dtype=np.float64) for r in rows])
+
+    if cache_key is None:
+        return build()
+    return util.memo(("seed_centroids", cache_key, k), build)
 
 
 def assign_udf(centroids: np.ndarray):
@@ -145,7 +144,6 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is the classic persisted clustering artifact — a per-corpus
     sidecar (prepare_semdedup) read by the balance audit and any
     cluster-routed downstream job."""
-    from trialstreamer_spark.util import cached_plan
 
     def build() -> DataFrame:
         e = load(spark, sf_dir, "embeddings")
@@ -237,7 +235,6 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers stragglers. Output is the per-cluster prune accounting a
     curation run logs."""
     from trialstreamer_spark.operators.similarity import cosine_pairs_pd
-    from trialstreamer_spark.util import cached_plan
 
     e = load(spark, sf_dir, "embeddings")
 
@@ -416,38 +413,24 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVFPQ search (ADC)
 # ---------------------------------------------------------------------------
 
-# (session JVM id, sf_dir) → persisted PQ-codes table. Codes are encoded
-# ONCE per corpus version (the offline stage of every PQ system); the
-# search below touches only codes + the 32-entry distance LUT.
-_PQ_CODES_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-util.register_cache_evictor(
-    lambda token: [
-        util.evict_dict_cache(c, token)
-        for c in (_centroid_cache, _PQ_CODES_CACHE)
-    ]
-)
-
-
 def pq_codes_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, label, code_0..code_{M-1}) — the compressed corpus
     representation, built once and persisted (sidecar, like
-    similarity.ivf_centroids and dedup.prepare_dedup)."""
-    key = (id(spark._jsparkSession), sf_dir)
-    cached = _PQ_CODES_CACHE.get(key)
-    if cached is None:
+    similarity.ivf_centroids and dedup.prepare_dedup). Codes are encoded
+    ONCE per corpus version (the offline stage of every PQ system); the
+    search below touches only codes + the 32-entry distance LUT."""
+
+    def build() -> DataFrame:
         e = load(spark, sf_dir, "embeddings")
         a = pq_assign_udf(seed_centroids(e, k=PQ_K, cache_key=sf_dir))
         code_cols = [
             F.col(f"a.code_{s}").alias(f"code_{s}") for s in range(PQ_M)
         ]
-        cached = (
-            e.select("vec_id", "label", a(F.col("embedding")).alias("a"))
-            .select("vec_id", "label", *code_cols)
-            .persist()
+        return e.select("vec_id", "label", a(F.col("embedding")).alias("a")).select(
+            "vec_id", "label", *code_cols
         )
-        _PQ_CODES_CACHE[key] = cached
-    return cached
+
+    return util.cached_plan(spark, ("pq_codes", sf_dir), build)
 
 
 def prepare_pq(spark: SparkSession, sf_dir: str) -> None:

@@ -30,61 +30,13 @@ from pyspark.sql import functions as F
 
 from trialstreamer_spark import util
 from trialstreamer_spark.io import load
-from trialstreamer_spark.sidecars import catalog_base as _catalog_base
+from trialstreamer_spark.sidecars import disk_cached_plan
 from trialstreamer_spark.operators.textstats import tokens_col
 from trialstreamer_spark.plans.registry import query
 
 N_HASHES = 8  # minhash signature length
 N_BANDS = 4  # bands of 2 rows each
 SHINGLE = 3  # word-shingle width
-
-# (session JVM id, cache_key) → persisted postings DataFrame. The shingle
-# featurization is stage 1 of the dedup pipeline and is shared verbatim by
-# MinHash signatures, both Jaccard variants, and connected components — a
-# production dedup run materializes it ONCE per corpus version and fans
-# the candidate/verify stages out from it. prepare_dedup() is that offline
-# stage; per-call use without a cache_key recomputes (unit tests assert on
-# the raw scan plan).
-_POSTINGS_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-# (session JVM id, cache_key, id_col, text_col) → persisted minhash
-# signature table (one 8-column row per document). Stage 2 of the dedup
-# pipeline: like the postings, a production run computes signatures ONCE
-# per corpus version; the per-query LSH path is then band-explode +
-# equi-join over k·|docs| tiny rows, with no md5 recompute over the
-# (much larger) postings. Built by prepare_dedup().
-_SIG_CACHE: dict[tuple[int, str, str, str], DataFrame] = {}
-
-# (session JVM id, catalog, cache_key, id_col, text_col) → persisted
-# candidate-pair table (doc_a < doc_b). Stage 2.5 of the dedup
-# pipeline: the band self-join + distinct behind EVERY pair consumer
-# (LSH dedup, CC labeling, the degree histogram, the source matrix) is
-# itself a per-corpus-version artifact — recomputing the join per query
-# multiplied its cost by the consumer fan-out. Built by prepare_dedup(),
-# disk-backed like the signatures.
-_PAIR_CACHE: dict[tuple, DataFrame] = {}
-
-# (session JVM id, catalog, cache_key, id_col, text_col, bits) →
-# persisted SimHash signature table (one (doc_id, simhash) row per
-# document). Same once-per-corpus-version contract as the minhash
-# signatures: both simhash consumers (the signature query itself and
-# the hamming cross-validation histogram) re-tokenized the corpus per
-# run before r11. Built by prepare_dedup().
-_SIMHASH_CACHE: dict[tuple, DataFrame] = {}
-
-util.register_cache_evictor(
-    lambda token: [
-        util.evict_dict_cache(c, token)
-        for c in (
-            _POSTINGS_CACHE,
-            _SIG_CACHE,
-            _BLOOM_CACHE,
-            _PAIR_CACHE,
-            _SIMHASH_CACHE,
-        )
-    ]
-)
-
 
 def normalized_fp(text: Column) -> Column:
     """Content fingerprint: lowercase → strip non-alnum → collapse
@@ -160,66 +112,57 @@ def shingle_postings(
     repartition. shingles_col is never empty for non-null text, so outer
     + a cheap pushable text-not-null guard is equivalent.
     """
-    key = (
-        (
-            id(docs.sparkSession._jsparkSession),
-            ("catalog", _catalog_base()),
-            cache_key,
-        )
-        if cache_key is not None
-        else None
-    )
-    if key is not None:
-        hit = _POSTINGS_CACHE.get(key)
-        if hit is not None:
-            return hit
     n_parts = docs.sparkSession.sparkContext.defaultParallelism
-    out = (
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-        .where(F.col("text").isNotNull())
-        .repartition(n_parts, F.col("doc_id"))
-        .select("doc_id", shingles_col(F.col("text")).alias("shingles"))
-        .select(
-            "doc_id",
-            F.size("shingles").alias("n_sh"),
-            F.explode_outer("shingles").alias("shingle"),
-        )
-    )
-    if key is not None:
-        # The materialized postings carry the shingle's document
-        # frequency, like any real postings/feature table: df is a
-        # build-time statistic (one extra exchange here, where skew is a
-        # batch concern), so the capped-Jaccard hot-shingle prune becomes
-        # a NARROW filter at query time instead of a per-query
-        # aggregation. The table is DISK-BACKED (sidecars.disk_sidecar):
-        # built+written once per corpus version, read straight from
-        # parquet by any later session — a restart re-featurizes nothing
-        # (round-5 gap #1). The repartition restores doc_id partitioning
-        # so downstream per-document windows/groupBys stay exchange-free.
-        from trialstreamer_spark.sidecars import disk_sidecar
 
-        def build() -> DataFrame:
-            from pyspark.sql import Window as W
-
-            sh_w = W.partitionBy("shingle")
-            # df AND the first-occurrence doc ride the same shingle
-            # window (one exchange computes both): df powers the
-            # hot-shingle prune, first_doc the novelty census — both
-            # index-build statistics, free to carry once materialized.
-            return out.withColumn("df", F.count("*").over(sh_w)).withColumn(
-                "first_doc", F.min("doc_id").over(sh_w)
-            )
-
-        out = (
-            disk_sidecar(
-                docs.sparkSession, cache_key, "shingle_postings", build
-            )
+    def postings() -> DataFrame:
+        return (
+            docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+            .where(F.col("text").isNotNull())
             .repartition(n_parts, F.col("doc_id"))
-            .persist()
+            .select("doc_id", shingles_col(F.col("text")).alias("shingles"))
+            .select(
+                "doc_id",
+                F.size("shingles").alias("n_sh"),
+                F.explode_outer("shingles").alias("shingle"),
+            )
         )
-        out.count()
-        _POSTINGS_CACHE[key] = out
-    return out
+
+    if cache_key is None:
+        return postings()  # unit tests assert on this raw scan plan
+    # With a cache_key the postings are stage 1 of the dedup pipeline,
+    # shared verbatim by MinHash signatures, both Jaccard variants and
+    # connected components: materialized ONCE per corpus version
+    # (prepare_dedup) and fanned out from. The materialized postings
+    # carry the shingle's document frequency, like any real
+    # postings/feature table: df is a build-time statistic (one extra
+    # exchange here, where skew is a batch concern), so the
+    # capped-Jaccard hot-shingle prune becomes a NARROW filter at query
+    # time instead of a per-query aggregation. The table is DISK-BACKED
+    # (sidecars.disk_cached_plan): built+written once per corpus
+    # version, read straight from parquet by any later session — a
+    # restart re-featurizes nothing (round-5 gap #1). ``post`` restores
+    # doc_id partitioning so downstream per-document windows/groupBys
+    # stay exchange-free.
+
+    def build() -> DataFrame:
+        from pyspark.sql import Window as W
+
+        sh_w = W.partitionBy("shingle")
+        # df AND the first-occurrence doc ride the same shingle
+        # window (one exchange computes both): df powers the
+        # hot-shingle prune, first_doc the novelty census — both
+        # index-build statistics, free to carry once materialized.
+        return postings().withColumn("df", F.count("*").over(sh_w)).withColumn(
+            "first_doc", F.min("doc_id").over(sh_w)
+        )
+
+    return disk_cached_plan(
+        docs.sparkSession,
+        cache_key,
+        "shingle_postings",
+        build,
+        post=lambda df: df.repartition(n_parts, F.col("doc_id")),
+    )
 
 
 def prepare_dedup(spark: SparkSession, sf_dir: str) -> None:
@@ -229,10 +172,18 @@ def prepare_dedup(spark: SparkSession, sf_dir: str) -> None:
     run shingles the corpus exactly once (persisted here; a parquet/
     bucketed table on a real cluster) and never re-tokenizes per stage."""
     from trialstreamer_spark.io import load
+    from trialstreamer_spark.util import materialize_plan
 
-    shingle_postings(load(spark, sf_dir, "documents"), cache_key=sf_dir)
-    minhash_signatures(load(spark, sf_dir, "documents"), cache_key=sf_dir)
-    simhash_table(load(spark, sf_dir, "documents"), cache_key=sf_dir)
+    # stages 1-2.5: postings, minhash and simhash signatures, and the
+    # candidate-pair table, each materialized as it is built
+    for build, name in (
+        (shingle_postings, "shingle_postings"),
+        (minhash_signatures, "minhash_sigs_doc_id_text"),
+        (simhash_table, "simhash_doc_id_text_16"),
+        (minhash_candidates, "minhash_pairs_doc_id_text"),
+    ):
+        build(load(spark, sf_dir, "documents"), cache_key=sf_dir)
+        materialize_plan(spark, (name, sf_dir))
     # stage 3: the cluster-label mapping (iterative union-find) — the
     # most expensive dedup artifact, shared by the CC view, the size
     # histogram, and canonical application
@@ -240,8 +191,6 @@ def prepare_dedup(spark: SparkSession, sf_dir: str) -> None:
     # stage 4: the exact-fingerprint census (dedup_exact + cross-signal
     # joins) and the capped-Jaccard shared-shingle lists (the registered
     # df_cap=5 configuration)
-    from trialstreamer_spark.util import materialize_plan
-
     exact_fp_census(spark, sf_dir)
     materialize_plan(spark, ("exact_fp_census", sf_dir))
     jaccard_pairs(
@@ -275,21 +224,6 @@ def minhash_signatures(
     that re-built the shingle array per hash and fell off whole-stage
     codegen (~100× slower at sf0.1).
     """
-    key = (
-        (
-            id(docs.sparkSession._jsparkSession),
-            ("catalog", _catalog_base()),
-            cache_key,
-            id_col,
-            text_col,
-        )
-        if cache_key is not None
-        else None
-    )
-    if key is not None:
-        hit = _SIG_CACHE.get(key)
-        if hit is not None:
-            return hit
     def build() -> DataFrame:
         sh = shingle_postings(
             docs, id_col, text_col, cache_key=cache_key
@@ -305,21 +239,16 @@ def minhash_signatures(
         ]
         return sh.groupBy("doc_id").agg(*mins)
 
-    if key is None:
+    if cache_key is None:
         return build()
-    # disk-backed (one row per doc): a restarted session reads the
-    # committed signatures without touching the shingle postings at all
-    from trialstreamer_spark.sidecars import disk_sidecar
-
-    out = disk_sidecar(
-        docs.sparkSession,
-        cache_key,
-        f"minhash_sigs_{id_col}_{text_col}",
-        build,
-    ).persist()
-    out.count()
-    _SIG_CACHE[key] = out
-    return out
+    # stage 2 of the dedup pipeline, built once per corpus version
+    # (prepare_dedup): the per-query LSH path is then band-explode +
+    # equi-join over k·|docs| tiny rows, with no md5 recompute over the
+    # postings. Disk-backed (one row per doc): a restarted session reads
+    # the committed signatures without touching the shingle postings
+    return disk_cached_plan(
+        docs.sparkSession, cache_key, f"minhash_sigs_{id_col}_{text_col}", build
+    )
 
 
 def banded_keys(sig: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
@@ -387,27 +316,9 @@ def minhash_candidates(
 
     if cache_key is None:
         return build()
-    key = (
-        id(docs.sparkSession._jsparkSession),
-        ("catalog", _catalog_base()),
-        cache_key,
-        id_col,
-        text_col,
+    return disk_cached_plan(
+        docs.sparkSession, cache_key, f"minhash_pairs_{id_col}_{text_col}", build
     )
-    hit = _PAIR_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from trialstreamer_spark.sidecars import disk_sidecar
-
-    out = disk_sidecar(
-        docs.sparkSession,
-        cache_key,
-        f"minhash_pairs_{id_col}_{text_col}",
-        build,
-    ).persist()
-    out.count()
-    _PAIR_CACHE[key] = out
-    return out
 
 
 def _pairs_from_lists(lists: DataFrame) -> DataFrame:
@@ -462,7 +373,6 @@ def jaccard_pairs(
       explode (codegen Generate, no Python). collect_list is safe here
       precisely because the cap bounds every list; this halves the
       dominant shuffle in the configuration a 100 TB dedup run uses."""
-    from pyspark.sql import Window as W
 
     sh = shingle_postings(docs, id_col, text_col, cache_key=cache_key)
     if df_cap is not None:
@@ -549,8 +459,6 @@ def capped_doc_lists(
         )
 
     if cache_key is not None:
-        from trialstreamer_spark.sidecars import disk_cached_plan
-
         return disk_cached_plan(
             docs.sparkSession,
             cache_key,
@@ -587,23 +495,6 @@ def simhash_table(
     the minhash signatures (disk-backed, session-persisted, built by
     prepare_dedup — r11): before that, both simhash consumers paid the
     corpus tokenize + 16-sum aggregate on every run."""
-    key = (
-        (
-            id(docs.sparkSession._jsparkSession),
-            ("catalog", _catalog_base()),
-            cache_key,
-            id_col,
-            text_col,
-            bits,
-        )
-        if cache_key is not None
-        else None
-    )
-    if key is not None:
-        hit = _SIMHASH_CACHE.get(key)
-        if hit is not None:
-            return hit
-
     def build() -> DataFrame:
         from trialstreamer_spark.operators.textstats import (
             tokens_col as _tokens,
@@ -630,19 +521,11 @@ def simhash_table(
             sim = term if sim is None else sim + term
         return g.select("doc_id", sim.cast("long").alias("simhash"))
 
-    if key is None:
+    if cache_key is None:
         return build()
-    from trialstreamer_spark.sidecars import disk_sidecar
-
-    out = disk_sidecar(
-        docs.sparkSession,
-        cache_key,
-        f"simhash_{id_col}_{text_col}_{bits}",
-        build,
-    ).persist()
-    out.count()
-    _SIMHASH_CACHE[key] = out
-    return out
+    return disk_cached_plan(
+        docs.sparkSession, cache_key, f"simhash_{id_col}_{text_col}_{bits}", build
+    )
 
 
 def simhash_col(text: Column, bits: int = 16) -> Column:
@@ -702,8 +585,6 @@ def exact_fp_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-hashing the corpus."""
     from pyspark.sql import Window as W
 
-    from trialstreamer_spark.util import cached_plan
-
     def build() -> DataFrame:
         d = load(spark, sf_dir, "documents")
         w = W.partitionBy("fingerprint")
@@ -714,8 +595,6 @@ def exact_fp_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("n_copies", F.count("*").over(w))
             .withColumn("canonical_id", F.min("doc_id").over(w))
         )
-
-    from trialstreamer_spark.sidecars import disk_cached_plan
 
     return disk_cached_plan(spark, sf_dir, "exact_fp_census", build)
 
@@ -1351,15 +1230,13 @@ def cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     sidecar (prepare_dedup materializes it): the iterative union-find
     runs ONCE per corpus version; every consumer (per-doc view, size
     histogram, canonical apply) reads the labels. Disk-backed
-    (sidecars.disk_sidecar): the most expensive dedup artifact survives
+    (sidecars.disk_cached_plan): the most expensive dedup artifact survives
     a session restart as committed parquet. (r11 measured-and-rejected:
     pinning HashPartitioning(doc_id) on the session copy — the
     chunk_hashes treatment — buys nothing here, because every bench-
     scale consumer join broadcasts the labels and the window exchanges
     key on component, not doc_id; the post-repartition only added a
     prep-time exchange.)"""
-    from trialstreamer_spark.sidecars import disk_sidecar
-    from trialstreamer_spark.util import cached_plan
 
     def build() -> DataFrame:
         d = load(spark, sf_dir, "documents")
@@ -1367,11 +1244,7 @@ def cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             d.select("doc_id"), minhash_candidates(d, cache_key=sf_dir)
         )
 
-    return cached_plan(
-        spark,
-        ("cc_labels", sf_dir),
-        lambda: disk_sidecar(spark, sf_dir, "cc_labels", build),
-    )
+    return disk_cached_plan(spark, sf_dir, "cc_labels", build)
 
 
 @query(
@@ -1577,9 +1450,6 @@ BLOOM_K = 3
 #: stands in for the held-out benchmark, as in decontaminate_overlap).
 BLOOM_EVAL_CUT = 50
 
-# sf_dir → sorted list of set bit positions (the serialized filter).
-_BLOOM_CACHE: dict[str, list[int]] = {}
-
 
 def _bloom_pos_col(fp: Column, i: int) -> Column:
     """Hash position i of a fingerprint: first 8 md5 hex chars of the
@@ -1596,9 +1466,10 @@ def bloom_build(spark: SparkSession, sf_dir: str) -> list[int]:
     """Build (once per corpus version) the eval-set Bloom filter: the
     sorted set of bit positions lit by the eval fingerprints. BLOOM_M
     bits regardless of eval size — the artifact a 100 TB run ships to
-    every executor instead of joining against the eval set."""
-    cached = _BLOOM_CACHE.get(sf_dir)
-    if cached is None:
+    every executor instead of joining against the eval set. Memoized
+    per corpus for every session."""
+
+    def build() -> list[int]:
         d = load(spark, sf_dir, "documents")
         evalfp = (
             d.where(F.col("doc_id") < BLOOM_EVAL_CUT)
@@ -1612,9 +1483,9 @@ def bloom_build(spark: SparkSession, sf_dir: str) -> list[int]:
                 )
             ).alias("p")
         ).distinct()
-        cached = sorted(r.p for r in pos.collect())
-        _BLOOM_CACHE[sf_dir] = cached
-    return cached
+        return sorted(r.p for r in pos.collect())
+
+    return util.memo(("bloom", sf_dir), build)
 
 
 def _bloom_oracle() -> str:

@@ -476,8 +476,6 @@ def multimodal_phash_dedup(spark, sf_dir: str) -> DataFrame:
     metadata-only operation."""
     from trialstreamer_spark.io import load
 
-    from trialstreamer_spark.util import cached_plan
-
     def build_bands() -> DataFrame:
         media = synthesize_media(load(spark, sf_dir, "documents"))
         # "decode" the blob: normalize the decoded bytes and DOWNSAMPLE
@@ -526,13 +524,9 @@ def multimodal_phash_dedup(spark, sf_dir: str) -> DataFrame:
             )
         )
 
-    from trialstreamer_spark.sidecars import disk_sidecar
+    from trialstreamer_spark.sidecars import disk_cached_plan
 
-    bands = cached_plan(
-        spark,
-        ("media_phash_bands", sf_dir),
-        lambda: disk_sidecar(spark, sf_dir, "media_phash_bands", build_bands),
-    )
+    bands = disk_cached_plan(spark, sf_dir, "media_phash_bands", build_bands)
     a, b = bands.alias("a"), bands.alias("b")
     hamming = F.expr("bit_count(pa ^ pb)")
     return (

@@ -164,7 +164,6 @@ def quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     bare split() would count an empty text as one token); the mean is
     guarded so a zero-token doc yields NULL, not an ANSI-mode
     divide-by-zero."""
-    from trialstreamer_spark.util import cached_plan
 
     def build() -> DataFrame:
         d = load(spark, sf_dir, "documents")
@@ -720,8 +719,6 @@ def winnowing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and equi-join on sel_key — same candidate-generation shape as
     minhash_candidates."""
     from pyspark.sql import Window as W
-
-    from trialstreamer_spark.util import cached_plan
 
     def build_stats() -> DataFrame:
         d = load(spark, sf_dir, "documents")
@@ -1553,24 +1550,16 @@ def quality_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# sf_dir → ((source, n_spans), …): per-source span totals, n_sources
-# rows. Evicted on ParquetTable version bump like every corpus sidecar.
-_SPAN_TOT_CACHE: dict[str, tuple] = {}
-
-util.register_cache_evictor(
-    lambda token: util.evict_dict_cache(_SPAN_TOT_CACHE, token)
-)
-
-
 def _span_source_totals(
     spark: SparkSession, sf_dir: str, census: DataFrame
 ) -> Column:
     """source → total distinct spans, as a literal map column. The
     collect is bounded by the corpus's source count (never its row
-    count), so it lives driver-side like the other sidecar statistics."""
-    rows = _SPAN_TOT_CACHE.get(sf_dir)
-    if rows is None:
-        rows = tuple(
+    count), so it lives driver-side like the other sidecar statistics,
+    memoized per corpus as ((source, n_spans), …)."""
+
+    def build() -> tuple:
+        return tuple(
             sorted(
                 (r["source"], r["n_spans"])
                 for r in census.select(
@@ -1581,7 +1570,8 @@ def _span_source_totals(
                 .collect()
             )
         )
-        _SPAN_TOT_CACHE[sf_dir] = rows
+
+    rows = util.memo(("span_source_totals", sf_dir), build)
     # explicit long cast: a small literal would otherwise type as int32
     # and break schema parity with the oracle's BIGINT totals
     return F.create_map(

@@ -48,21 +48,6 @@ QUERY_TERMS: tuple[str, ...] = ("table", "merge", "spark")
 _QUERY_TERMS_IN = ", ".join(f"'{t}'" for t in QUERY_TERMS)
 
 
-_stats_cache: dict = {}
-# (session JVM id, cache_key, terms) → persisted per-doc (doc_id, dl, tf…)
-# projection. Like the lexicon stats below, this is the index side of a
-# search engine: the tokenize/tf pass over the corpus happens once per
-# corpus version, not once per query. prepare_stats() is the offline
-# build; without a cache_key every call recomputes from the scan.
-_perdoc_cache: dict = {}
-
-util.register_cache_evictor(
-    lambda token: [
-        util.evict_dict_cache(c, token) for c in (_stats_cache, _perdoc_cache)
-    ]
-)
-
-
 def _per_doc(
     docs: DataFrame,
     terms: tuple[str, ...],
@@ -70,38 +55,38 @@ def _per_doc(
     text_col: str,
     cache_key: str | None,
 ) -> DataFrame:
-    key = (
-        (id(docs.sparkSession._jsparkSession), cache_key, terms)
-        if cache_key is not None
-        else None
+    """Per-doc (doc_id, dl, tf…) projection. With a ``cache_key`` it is
+    a session-persisted plan: like the lexicon stats, this is the index
+    side of a search engine — the tokenize/tf pass over the corpus
+    happens once per corpus version, not once per query. prepare_stats()
+    is the offline build; without a cache_key every call recomputes from
+    the scan."""
+
+    def build() -> DataFrame:
+        alternation = "|".join(terms)
+        m = F.regexp_extract_all(
+            F.col(text_col), F.lit(rf"(?:^|\s)({alternation})(?=\s|$)"), 1
+        )
+        return docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.regexp_count(F.col(text_col), F.lit(r"\S+")).alias("dl"),
+            m.alias("m"),
+        ).select(
+            "doc_id",
+            "dl",
+            *[
+                F.size(F.filter(F.col("m"), lambda x: x == F.lit(t))).alias(
+                    f"tf_{i}"
+                )
+                for i, t in enumerate(terms)
+            ],
+        )
+
+    if cache_key is None:
+        return build()
+    return util.cached_plan(
+        docs.sparkSession, ("bm25_per_doc", cache_key, terms), build
     )
-    if key is not None:
-        hit = _perdoc_cache.get(key)
-        if hit is not None:
-            return hit
-    alternation = "|".join(terms)
-    m = F.regexp_extract_all(
-        F.col(text_col), F.lit(rf"(?:^|\s)({alternation})(?=\s|$)"), 1
-    )
-    out = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.regexp_count(F.col(text_col), F.lit(r"\S+")).alias("dl"),
-        m.alias("m"),
-    ).select(
-        "doc_id",
-        "dl",
-        *[
-            F.size(F.filter(F.col("m"), lambda x: x == F.lit(t))).alias(
-                f"tf_{i}"
-            )
-            for i, t in enumerate(terms)
-        ],
-    )
-    if key is not None:
-        out = out.persist()
-        out.count()
-        _perdoc_cache[key] = out
-    return out
 
 
 def prepare_stats(
@@ -116,7 +101,8 @@ def prepare_stats(
     from trialstreamer_spark.util import materialize_plan
 
     per_doc = _per_doc(load(spark, sf_dir, "documents"), terms, "doc_id", "text", sf_dir)
-    _corpus_stats(per_doc, terms, (sf_dir, terms))
+    materialize_plan(spark, ("bm25_per_doc", sf_dir, terms))
+    _corpus_stats(per_doc, terms, sf_dir)
     # keyword-extraction index: register + materialize the (doc_id, tok,
     # tf, df, n) sidecar so doc_keywords_topk measures ranking only
     doc_tf_stats(spark, sf_dir)
@@ -126,10 +112,9 @@ def prepare_stats(
     doc_token_postings(spark, sf_dir)
 
 
-def _corpus_stats(per_doc: DataFrame, terms: tuple[str, ...], ck):
-    row = _stats_cache.get(ck) if ck else None
-    if row is None:
-        row = per_doc.agg(
+def _corpus_stats(per_doc: DataFrame, terms: tuple[str, ...], cache_key):
+    def build():
+        return per_doc.agg(
             F.count("*").alias("n_docs"),
             (F.sum("dl").cast("double") / F.count("*").cast("double")).alias(
                 "avgdl"
@@ -141,9 +126,10 @@ def _corpus_stats(per_doc: DataFrame, terms: tuple[str, ...], ck):
                 for i in range(len(terms))
             ],
         ).collect()[0]
-        if ck:
-            _stats_cache[ck] = row
-    return row
+
+    if cache_key is None:
+        return build()
+    return util.memo(("bm25_stats", cache_key, terms), build)
 
 
 def bm25_scores(
@@ -169,7 +155,7 @@ def bm25_scores(
     #         the text (one JVM regex pass instead of one per term).
     # The corpus never leaves its scan stage; only the narrow
     # (doc_id, dl, tf...) projection flows on — and with a cache_key the
-    # projection itself is the persisted index side (see _perdoc_cache),
+    # projection itself is the persisted index side (see _per_doc),
     # so scoring re-reads 4 narrow columns, not the text.
     per_doc = _per_doc(docs, terms, id_col, text_col, cache_key)
     # Globals (N, avgdl) and per-term document frequencies: ONE 1-row
@@ -182,8 +168,7 @@ def bm25_scores(
     # stats), so like similarity.prepare_indexes they are memoized per
     # corpus version when ``cache_key`` is given — a deployed engine
     # computes them once per corpus build, not per query.
-    ck = (cache_key, terms) if cache_key is not None else None
-    row = _corpus_stats(per_doc, terms, ck)
+    row = _corpus_stats(per_doc, terms, cache_key)
     n_docs = row["n_docs"]
     avgdl = row["avgdl"] if row["avgdl"] is not None else 1.0
     # Per-term fixed-point score columns (operand order mirrors the SQL
@@ -283,7 +268,6 @@ def doc_tf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from trialstreamer_spark.operators.textstats import tokens_col
-    from trialstreamer_spark.util import cached_plan
 
     def build() -> DataFrame:
         d = load(spark, sf_dir, "documents")

@@ -201,25 +201,23 @@ def norm_sq_fp(a: Column) -> Column:
     return dot_fp(a, a)
 
 
-# (sf_dir, id) → query vector. Fetching the probe vector is query PREP
-# (the reference's API receives its query vector from the encoder, it
-# never scans for it) — memoized so repeated searches skip the lookup job.
-_QVEC_CACHE: dict[tuple[str, object], np.ndarray] = {}
-
-
 def _query_vector(
     df: DataFrame, id_val, id_col: str, vec_col: str, cache_key: str | None = None
 ) -> np.ndarray:
-    key = (cache_key, id_val)
-    if cache_key is not None and key in _QVEC_CACHE:
-        return _QVEC_CACHE[key]
-    row = df.filter(F.col(id_col) == id_val).select(vec_col).head()
-    if row is None:
-        raise ValueError(f"query vector {id_col}={id_val!r} not found")
-    qv = np.asarray(row[0], dtype=np.float64)
-    if cache_key is not None:
-        _QVEC_CACHE[key] = qv
-    return qv
+    """The probe vector ``id_val``. Fetching it is query PREP (the
+    reference's API receives its query vector from the encoder, it never
+    scans for it) — memoized per (corpus, id) with a ``cache_key`` so
+    repeated searches skip the lookup job."""
+
+    def build() -> np.ndarray:
+        row = df.filter(F.col(id_col) == id_val).select(vec_col).head()
+        if row is None:
+            raise ValueError(f"query vector {id_col}={id_val!r} not found")
+        return np.asarray(row[0], dtype=np.float64)
+
+    if cache_key is None:
+        return build()
+    return util.memo(("query_vector", cache_key, id_val), build)
 
 
 def sign_lsh_bucket(vec: Column, n_planes: int = 12) -> Column:
@@ -281,20 +279,6 @@ def lsh_candidate_pairs(
 # IVF coarse-quantizer sidecar
 # ---------------------------------------------------------------------------
 
-# corpus-version (sf_dir) → [(label, centroid_vector)] — the offline-built
-# index, mirroring the reference's Annoy files on disk (PICO_search.py:18-85
-# builds offline, queries online). Centroids are broadcast-sized (cells ×
-# dim doubles), so they live driver-side and the SEARCH query contains no
-# full-corpus aggregation.
-_IVF_CENTROIDS: dict[str, list[tuple[int, np.ndarray]]] = {}
-
-util.register_cache_evictor(
-    lambda token: [
-        util.evict_dict_cache(c, token) for c in (_QVEC_CACHE, _IVF_CENTROIDS)
-    ]
-)
-
-
 def centroids_df(e: DataFrame) -> DataFrame:
     """Per-label centroid vectors via fixed-point means (deterministic
     across engines): posexplode → int64 partial sums per (label, dim) —
@@ -323,18 +307,21 @@ def centroids_df(e: DataFrame) -> DataFrame:
 
 def ivf_centroids(spark: SparkSession, sf_dir: str) -> list[tuple[int, np.ndarray]]:
     """Build (first call per corpus version) or fetch the IVF coarse
-    quantizer. The build is the one full-corpus pass; every subsequent
-    search reads the sidecar only."""
-    cached = _IVF_CENTROIDS.get(sf_dir)
-    if cached is None:
-        e = load(spark, sf_dir, "embeddings")
-        rows = centroids_df(e).collect()
-        cached = sorted(
+    quantizer: [(label, centroid_vector)], the offline-built index,
+    mirroring the reference's Annoy files on disk (PICO_search.py:18-85
+    builds offline, queries online). The build is the one full-corpus
+    pass; every subsequent search reads the sidecar only. Centroids are
+    broadcast-sized (cells × dim doubles), so they live driver-side and
+    the SEARCH query contains no full-corpus aggregation."""
+
+    def build() -> list[tuple[int, np.ndarray]]:
+        rows = centroids_df(load(spark, sf_dir, "embeddings")).collect()
+        return sorted(
             (int(r["label"]), np.asarray(r["cvec"], dtype=np.float64))
             for r in rows
         )
-        _IVF_CENTROIDS[sf_dir] = cached
-    return cached
+
+    return util.memo(("ivf_centroids", sf_dir), build)
 
 
 def ivf_probe_cells(
@@ -353,20 +340,14 @@ def ivf_probe_cells(
     return [label for _, label in scored[:nprobe]]
 
 
-# corpus-version (sf_dir) → (M2_fp, {label: caug}) — the MIPS
+# mips_aug_cells(sf_dir) → (M2_fp, {label: caug}) — the MIPS
 # augmentation statistics for the IVF cells: M2_fp is the corpus max
 # fixed-point squared norm, caug the per-cell mean of the augmentation
-# coordinate sqrt(M² − |v|²). Together with _IVF_CENTROIDS this is the
+# coordinate sqrt(M² − |v|²). Together with ivf_centroids this is the
 # classic MIPS→NNS reduction index (Bachrach et al., RecSys'14): append
 # sqrt(M² − |v|²) to each vector and 0 to the query, and unit-norm /
 # cosine search recovers inner-product order because every augmented
 # corpus vector has norm exactly M.
-_MIPS_AUG: dict[str, tuple[int, dict[int, float]]] = {}
-
-util.register_cache_evictor(
-    lambda token: util.evict_dict_cache(_MIPS_AUG, token)
-)
-
 #: Spark-SQL twin of _DD_DOT_FP (same per-term floor at 1e-7, same
 #: associative int64 sum) for expression-engine dots over array columns.
 _SPARK_DOT_FP = (
@@ -385,8 +366,8 @@ def mips_aug_cells(
     per-cell integer-summed means of floor(sqrt(M² − |v|²)·1e6) — the
     same determinism discipline as centroids_df, so DuckDB reproduces
     every double bit-for-bit."""
-    cached = _MIPS_AUG.get(sf_dir)
-    if cached is None:
+
+    def build() -> tuple[int, dict[int, float]]:
         e = load(spark, sf_dir, "embeddings")
         nsq = F.expr(_SPARK_DOT_FP.format(a="embedding", b="embedding"))
         base = e.select("label", nsq.alias("nsq"))
@@ -407,9 +388,9 @@ def mips_aug_cells(
             )
             .collect()
         )
-        cached = (m2, {int(r["label"]): float(r["caug"]) for r in rows})
-        _MIPS_AUG[sf_dir] = cached
-    return cached
+        return (m2, {int(r["label"]): float(r["caug"]) for r in rows})
+
+    return util.memo(("mips_aug", sf_dir), build)
 
 
 def mips_probe_cells(
@@ -1039,7 +1020,6 @@ def knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: bucket equi-join (never corpus × corpus) → one window
     partitioned by src_id → two vec_id-keyed label joins. On a cluster
     this lands as a parquet/Delta sidecar bucketed by src_id."""
-    from trialstreamer_spark.util import cached_plan
 
     def build() -> DataFrame:
         from pyspark.sql import Window as W

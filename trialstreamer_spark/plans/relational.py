@@ -60,23 +60,12 @@ def _conf_bytes(v: str) -> int:
     return int(v)
 
 
-#: (session id, expr-id-normalized optimized plan) → measured leg rows.
-#: The expr-id strip makes the SAME leg built twice hash to one key, so
-#: the count job runs once per session per corpus version (the plan
-#: string embeds the parquet paths, versioning the entry for free).
-_DIM_LEG_ROWS: dict[tuple, int] = {}
+#: Measured dim-leg rows are memoized per (session, expr-id-normalized
+#: optimized plan). The expr-id strip makes the SAME leg built twice hash
+#: to one key, so the count job runs once per session per corpus version
+#: (a warmed table's plan string embeds its parquet path, so a version
+#: bump under that path evicts the entry — util._key_references).
 _EXPR_ID_RE = re.compile(r"#\d+L?")
-
-# a corpus-version bump under `token` must drop any measured leg count
-# whose plan scans that path (substring match: the key's second element
-# is a plan string, not a bare path)
-util.register_cache_evictor(
-    lambda token: [
-        _DIM_LEG_ROWS.pop(k)
-        for k in list(_DIM_LEG_ROWS)
-        if token.rstrip("/") in k[1]
-    ]
-)
 
 
 def _leaf_scan_bytes(df: DataFrame) -> int:
@@ -137,16 +126,10 @@ def _sf_dim(df: DataFrame) -> DataFrame:
         # — and hint by measured rows × estimated row width. Estimates
         # stay size-conditional: at sf100+ the measured leg outgrows the
         # cap and the hint correctly disappears.
-        key = (
-            id(spark._jsparkSession),
-            _EXPR_ID_RE.sub(
-                "", df._jdf.queryExecution().optimizedPlan().toString()
-            ),
+        plan = _EXPR_ID_RE.sub(
+            "", df._jdf.queryExecution().optimizedPlan().toString()
         )
-        rows = _DIM_LEG_ROWS.get(key)
-        if rows is None:
-            rows = df.count()
-            _DIM_LEG_ROWS[key] = rows
+        rows = util.memo(("dim_leg_rows", plan), df.count, spark=spark)
         # Measured legs get 4× the session threshold: the 10 MB cap
         # exists to stop the PLANNER's unreliable estimates from
         # broadcasting fact projections, but a counted dim leg is a
@@ -163,27 +146,16 @@ def _sf_dim(df: DataFrame) -> DataFrame:
     return df
 
 
-#: (session id, sf_dir) → [(n_nationkey, n_name, r_name)]. nation is
-#: SPEC-FIXED at 25 rows and region at 5 at EVERY scale factor (TPC-H
-#: dbgen — they do not grow with SF, so this holds at 100 TB), making
-#: the nation⋈region chain a dimension-bounded driver lookup like the
-#: ontology closure: ONE tiny collect per (session, corpus), then a
-#: plan-literal map for every later nation-chain query in the session.
-#: Replacing the per-query nation/region broadcast joins removes 1-3
-#: broadcast-build scheduler jobs from EVERY query that labels keys
-#: with a nation or region (r11; guide §2.4 / §3.1 — the cheapest
-#: exchange is the one that never enters the plan).
-_NATION_REGION_ROWS: dict[tuple, list] = {}
-
-util.register_cache_evictor(
-    lambda token: [
-        _NATION_REGION_ROWS.pop(k)
-        for k in list(_NATION_REGION_ROWS)
-        if token.rstrip("/") == str(k[1]).rstrip("/")
-    ]
-)
-
-
+# Memoized per (session, sf_dir): [(n_nationkey, n_name, r_name)]. nation is
+# SPEC-FIXED at 25 rows and region at 5 at EVERY scale factor (TPC-H
+# dbgen — they do not grow with SF, so this holds at 100 TB), making
+# the nation⋈region chain a dimension-bounded driver lookup like the
+# ontology closure: ONE tiny collect per (session, corpus), then a
+# plan-literal map for every later nation-chain query in the session.
+# Replacing the per-query nation/region broadcast joins removes 1-3
+# broadcast-build scheduler jobs from EVERY query that labels keys
+# with a nation or region (r11; guide §2.4 / §3.1 — the cheapest
+# exchange is the one that never enters the plan).
 def _nation_region_rows(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, str, str | None]]:
@@ -193,9 +165,7 @@ def _nation_region_rows(
     is-not-null guard)."""
     from pyspark.errors.exceptions.captured import AnalysisException
 
-    key = (id(spark._jsparkSession), sf_dir)
-    rows = _NATION_REGION_ROWS.get(key)
-    if rows is None:
+    def build() -> list[tuple[int, str, str | None]]:
         n = load(spark, sf_dir, "nation")
         try:
             r = load(spark, sf_dir, "region")
@@ -226,12 +196,12 @@ def _nation_region_rows(
                 "n_name",
                 F.lit(None).cast("string").alias("r_name"),
             )
-        rows = [
+        return [
             (x["n_nationkey"], x["n_name"], x["r_name"])
             for x in sel.collect()
         ]
-        _NATION_REGION_ROWS[key] = rows
-    return rows
+
+    return util.memo(("nation_region_rows", sf_dir), build, spark=spark)
 
 
 def _nation_name_of(spark: SparkSession, sf_dir: str, key_col) -> Column:

@@ -1,13 +1,13 @@
-"""Disk-backed sidecar catalog: per-corpus featurizations that survive a
-session restart.
+"""The per-corpus sidecar catalog: disk-backed featurizations that
+survive a session restart, and the one ordered list of prepare hooks
+that builds the catalog (``prepare_hooks``).
 
-The in-memory ``util.cached_plan`` sidecars (shingle postings, minhash
-signatures, cc_labels, phash bands, …) are session-lifetime: a deployed
-engine restart recomputed every featurization (round-5 gap #1). This
+In-memory caching is ``util.memo`` / ``util.cached_plan`` alone; this
 module promotes a sidecar to a VERSIONED PARQUET table
 (operators/upsert.ParquetTable — write-new-then-swap, committed-pointer
 reads) stamped with a fingerprint of the corpus tables it was built
-from:
+from, and fronts it with a session-persisted ``util.cached_plan`` entry
+(``disk_cached_plan``):
 
 - build path: compute once, write, stamp — the Delta/Iceberg "derived
   table" a real cluster would maintain;
@@ -17,7 +17,8 @@ from:
   replacement) changes the fingerprint, so the stale sidecar is
   rebuilt on next access instead of silently served (the same
   stamp-check contract as api.engine.choose_search_path's postings
-  stamp).
+  stamp); the version bump also evicts the in-memory entry
+  (util.evict_caches).
 
 Layout: $SPARK_GRAFT_SIDECAR_DIR (default <repo>/spark-warehouse/
 sidecars)/<md5(corpus dir)[:8]>_<name>/ as a ParquetTable, with a
@@ -144,3 +145,32 @@ def disk_sidecar(
         f.write(fp)
     os.replace(tmp, stamp)
     return table.read()
+
+
+def prepare_hooks() -> list:
+    """Every offline ``hook(spark, sf_dir)`` that builds a corpus
+    version's sidecars, in run order: register+materialize the corpus
+    tables and bucket layouts first, then each operator family's
+    sidecars. Imported here, not at module level, because dedup imports
+    this module."""
+    from trialstreamer_spark.io import prepare_buckets, warm_cache
+    from trialstreamer_spark.operators.clustering import prepare_pq, prepare_semdedup
+    from trialstreamer_spark.operators.dedup import prepare_dedup
+    from trialstreamer_spark.operators.quality import prepare_curation
+    from trialstreamer_spark.operators.retrieval import prepare_stats
+    from trialstreamer_spark.operators.similarity import prepare_indexes
+    from trialstreamer_spark.operators.temporal import prepare_temporal
+    from trialstreamer_spark.streaming.parity import prepare_parity
+
+    return [
+        warm_cache,
+        prepare_buckets,
+        prepare_indexes,
+        prepare_dedup,
+        prepare_stats,
+        prepare_pq,
+        prepare_semdedup,
+        prepare_curation,
+        prepare_temporal,
+        prepare_parity,
+    ]

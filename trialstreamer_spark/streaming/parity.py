@@ -83,15 +83,14 @@ _STATE_PARTITIONS = "8"
 
 # THE shared replay registry — one mechanism owns every completed
 # stream-sink replay, memory sinks and the production upsert sink alike:
-# (session JVM id, tag, corpus dir) → (payload, cleanup). The replay of
-# an immutable corpus version is deterministic, so one run per
-# (operator, corpus) serves every subsequent invocation from its sink —
-# repeated calls (bench warmup rungs, test sweeps) neither re-run the
-# stream nor leak a checkpoint per run. prepare_parity() is the offline
-# hook; entries are evicted (cleanup(payload): views dropped, dirs
-# removed) on ParquetTable version bumps like every other corpus
-# sidecar.
-_REPLAY_CACHE: dict[tuple[int, str, str], tuple[dict, object]] = {}
+# a session-scoped util.memo entry ("replay", tag, corpus dir) → payload.
+# The replay of an immutable corpus version is deterministic, so one run
+# per (operator, corpus) serves every subsequent invocation from its
+# sink — repeated calls (bench warmup rungs, test sweeps) neither re-run
+# the stream nor leak a checkpoint per run. prepare_parity() is the
+# offline hook; on a ParquetTable version bump the entry is evicted like
+# every other corpus sidecar and its cleanup releases the payload (views
+# dropped, dirs removed).
 
 # tag → (spark, sink view) of the last UNCACHED ad-hoc replay; the next
 # ad-hoc run of the same tag drops its predecessor's view so repeated
@@ -99,32 +98,16 @@ _REPLAY_CACHE: dict[tuple[int, str, str], tuple[dict, object]] = {}
 _LAST_ADHOC: dict[str, tuple[SparkSession, str]] = {}
 
 
-def _replay_get(spark: SparkSession, tag: str, corpus: str) -> dict | None:
-    hit = _REPLAY_CACHE.get((id(spark._jsparkSession), tag, corpus))
-    return hit[0] if hit is not None else None
-
-
-def _replay_put(
-    spark: SparkSession, tag: str, corpus: str, payload: dict, cleanup
-) -> None:
-    _REPLAY_CACHE[(id(spark._jsparkSession), tag, corpus)] = (
-        payload,
-        cleanup,
+def _replay(spark: SparkSession, tag: str, corpus: str, run, cleanup=None) -> dict:
+    """The memoized payload of replay ``tag`` over ``corpus``; ``run()``
+    produces it on a miss, ``cleanup(payload)`` releases it on eviction
+    (default: the memory-sink cleanup)."""
+    return util.memo(
+        ("replay", tag, corpus),
+        run,
+        spark=spark,
+        release=cleanup or _memory_sink_cleanup,
     )
-
-
-def _evict_replays(token: str) -> None:
-    from trialstreamer_spark.util import _path_related
-
-    for k in [k for k in _REPLAY_CACHE if _path_related(k[2], token)]:
-        payload, cleanup = _REPLAY_CACHE.pop(k)
-        try:
-            cleanup(payload)
-        except Exception:
-            pass
-
-
-util.register_cache_evictor(_evict_replays)
 
 
 def _memory_sink_cleanup(payload: dict) -> None:
@@ -142,31 +125,48 @@ def _run_stream_to_table(
     output_mode: str = "append",
     cache_key: str | None = None,
 ) -> DataFrame:
-    """Start ``out`` (a streaming DataFrame) into a uniquely-named memory
-    sink with AvailableNow, wait for completion, return the sink table.
-    With a ``cache_key`` (the corpus dir), a completed replay is reused
-    — the single-batch replay of an immutable corpus is deterministic,
-    so the sink table IS the result for every later call.
+    """Run ``out`` (a streaming DataFrame) to a memory sink and return
+    the sink table. With a ``cache_key`` (the corpus dir), a completed
+    replay is reused — the single-batch replay of an immutable corpus is
+    deterministic, so the sink table IS the result for every later
+    call."""
+    if cache_key is not None:
+        payload = _replay(
+            spark,
+            tag,
+            cache_key,
+            lambda: _run_to_memory_sink(spark, out, tag, output_mode),
+        )
+        return spark.table(payload["view"])
+    # reclaim the PREVIOUS uncached ad-hoc sink for this tag — its
+    # memory-sink rows live in driver memory for the session otherwise
+    # (nothing else ever drops an uncached view)
+    prev_run = _LAST_ADHOC.pop(tag, None)
+    if prev_run is not None:
+        try:
+            prev_run[0].catalog.dropTempView(prev_run[1])
+        except Exception:
+            pass
+    payload = _run_to_memory_sink(spark, out, tag, output_mode)
+    # uncached ad-hoc run: drop the checkpoint now and register the
+    # view so the NEXT ad-hoc run of this tag reclaims it
+    shutil.rmtree(payload["ckpt"], ignore_errors=True)
+    _LAST_ADHOC[tag] = (spark, payload["view"])
+    return spark.table(payload["view"])
+
+
+def _run_to_memory_sink(
+    spark: SparkSession, out: DataFrame, tag: str, output_mode: str
+) -> dict:
+    """Start ``out`` into a uniquely-named memory sink with AvailableNow,
+    wait for completion, and return the replay payload (session, sink
+    view, checkpoint dir).
 
     no-data micro-batches are disabled only for the DURATION of this run
     (see module docstring: the trailing empty batch would fire event-time
     timeouts non-deterministically) and restored afterwards — other
     streaming consumers on the same session may rely on them to advance
     the watermark."""
-    if cache_key is not None:
-        hit = _replay_get(spark, tag, cache_key)
-        if hit is not None:
-            return spark.table(hit["view"])
-    if cache_key is None:
-        # reclaim the PREVIOUS uncached ad-hoc sink for this tag — its
-        # memory-sink rows live in driver memory for the session
-        # otherwise (nothing else ever drops an uncached view)
-        prev_run = _LAST_ADHOC.pop(tag, None)
-        if prev_run is not None:
-            try:
-                prev_run[0].catalog.dropTempView(prev_run[1])
-            except Exception:
-                pass
     name = f"parity_{tag}_{os.getpid()}_{next(_RUN_IDS)}"
     # Offset/commit logs are many tiny fsync'd files; for this
     # throwaway single-batch replay a tmpfs checkpoint skips the disk
@@ -191,20 +191,7 @@ def _run_stream_to_table(
     finally:
         spark.conf.set(_NO_DATA_BATCHES, prev)
         spark.conf.set(_SHUFFLE_PARTITIONS, prev_parts)
-    if cache_key is not None:
-        _replay_put(
-            spark,
-            tag,
-            cache_key,
-            {"spark": spark, "view": name, "ckpt": ckpt},
-            _memory_sink_cleanup,
-        )
-    else:
-        # uncached ad-hoc run: drop the checkpoint now and register the
-        # view so the NEXT ad-hoc run of this tag reclaims it
-        shutil.rmtree(ckpt, ignore_errors=True)
-        _LAST_ADHOC[tag] = (spark, name)
-    return spark.table(name)
+    return {"spark": spark, "view": name, "ckpt": ckpt}
 
 
 def prepare_parity(spark: SparkSession, sf_dir: str) -> None:
@@ -550,7 +537,7 @@ def hopping_rollup_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _upsert_sink_cleanup(payload: dict) -> None:
-    """Cleanup half of the upsert-sink replay's _REPLAY_CACHE entry: the
+    """Cleanup half of the upsert-sink replay's memo entry: the
     throwaway warehouse and checkpoint dirs, and the persisted final
     state."""
     res = payload.get("result")
@@ -602,8 +589,7 @@ def upsert_sink_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from trialstreamer_spark.operators.upsert import ParquetTable
 
-    hit = _replay_get(spark, "upsert_sink", sf_dir)
-    if hit is None:
+    def run() -> dict:
         tbl_dir = tempfile.mkdtemp(prefix="upsert_sink_")
         ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
         ckpt = tempfile.mkdtemp(prefix="ckpt_upsert_", dir=ckpt_base)
@@ -658,20 +644,9 @@ def upsert_sink_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist()
         )
         result.count()
-        _replay_put(
-            spark,
-            "upsert_sink",
-            sf_dir,
-            {
-                "spark": spark,
-                "tbl_dir": tbl_dir,
-                "ckpt": ckpt,
-                "result": result,
-            },
-            _upsert_sink_cleanup,
-        )
-        return result
-    return hit["result"]
+        return {"spark": spark, "tbl_dir": tbl_dir, "ckpt": ckpt, "result": result}
+
+    return _replay(spark, "upsert_sink", sf_dir, run, _upsert_sink_cleanup)["result"]
 
 
 @query(
@@ -739,37 +714,35 @@ def _staged_replay(
     parity query): stage the events table as N deterministic arrival
     files — one per slice predicate, arrival order pinned by mtime —
     stream them back one file per trigger through ``build(stream)``,
-    and run to the memoized sink via _run_stream_to_table (so repeat
-    calls reuse the completed replay like every single-batch parity).
+    and run to a memoized memory sink (so repeat calls reuse the
+    completed replay like every single-batch parity).
 
     ``slices`` is a callable ``events_df -> [Column, ...]`` so a replay
     can derive its cut points from the corpus (e.g. dedup_expiry's
     max-ts time slicing); ``build`` maps the staged stream to the
     streaming result frame. The staging dir is throwaway — the sink is
     the materialized artifact — so it is removed even on failure."""
-    hit = _replay_get(spark, tag, sf_dir)
-    if hit is not None:
-        return spark.table(hit["view"])
     from trialstreamer_spark.io import load
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    src = tempfile.mkdtemp(prefix=f"parity_{tag}_src_")
-    try:
-        ev = load(spark, sf_dir, "events")
-        for i, pred in enumerate(slices(ev)):
-            _write_single_parquet(
-                ev.where(pred), src, f"b{i}.parquet", (i + 1) * 1_000_000
+    def run() -> dict:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        src = tempfile.mkdtemp(prefix=f"parity_{tag}_src_")
+        try:
+            ev = load(spark, sf_dir, "events")
+            for i, pred in enumerate(slices(ev)):
+                _write_single_parquet(
+                    ev.where(pred), src, f"b{i}.parquet", (i + 1) * 1_000_000
+                )
+            stream = (
+                spark.readStream.schema(EVENTS_SCHEMA)
+                .option("maxFilesPerTrigger", "1")
+                .parquet(src)
             )
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        return _run_stream_to_table(
-            spark, build(stream), tag, output_mode=output_mode, cache_key=sf_dir
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+            return _run_to_memory_sink(spark, build(stream), tag, output_mode)
+        finally:
+            shutil.rmtree(src, ignore_errors=True)
+
+    return spark.table(_replay(spark, tag, sf_dir, run)["view"])
 
 
 def _even_odd_slices(ev: DataFrame) -> list:

@@ -1,17 +1,24 @@
-"""Small plan helpers and the session-scoped plan cache.
+"""Small plan helpers and the one in-memory cache.
 
 - ``inline_rows``: a literal dimension as a pure JVM plan;
 - ``ordered_small``: total order for a dimension-sized frame without a
   range exchange;
-- ``cached_plan`` / ``materialize_plan``: persisted plan subtrees shared
-  across queries, with ``evict_caches`` as the lifecycle hook that every
-  ParquetTable version bump calls (module caches join it through
-  ``register_cache_evictor`` / ``evict_dict_cache``).
+- ``memo`` / ``cached_plan`` / ``materialize_plan``: the only in-memory
+  cache. ``memo`` stores any per-corpus artifact (in-process
+  statistics, completed stream replays, table handles); ``cached_plan``
+  is ``memo`` with a session-scoped key and a lazily persisted
+  DataFrame. One store, one key shape (``_plan_key``), one eviction
+  rule: ``evict_caches(path)``, which every ParquetTable version bump
+  calls, drops and releases every entry whose key names that path.
+  Disk-backed sidecars front this cache through
+  ``sidecars.disk_cached_plan``.
 
 Shipping the package to Python workers is ``dist.ship_package``.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import SparkSession
 
@@ -52,10 +59,6 @@ def inline_rows(
     )
 
 
-# (session JVM id, *key) → lazily-persisted DataFrame. See cached_plan.
-_PLAN_CACHE: dict[tuple, "DataFrame"] = {}
-
-
 def ordered_small(df, *cols):
     """Deterministic total order for a DIMENSION-SIZED final frame
     without a range exchange: coalesce to one partition (narrow — no
@@ -77,6 +80,36 @@ def ordered_small(df, *cols):
     return df.coalesce(1).sortWithinPartitions(*cols)
 
 
+# key → (value, release): THE in-memory cache. Persisted plan subtrees,
+# in-process corpus statistics and completed stream replays are all
+# entries here, so evict_caches is the one invalidation path.
+_PLAN_CACHE: dict[tuple, tuple] = {}
+
+
+def memo(key: tuple, build, *, spark: SparkSession | None = None, release=None):
+    """The value cached under ``key``; on a miss, ``build()`` runs once
+    and its result is stored as is.
+
+    With ``spark`` the entry is session-scoped (see _plan_key); without
+    it, it is shared by every session. Any string element of the key
+    that names a path ties the entry to that path's lifecycle
+    (evict_caches). On eviction ``release(value)`` runs, or, with no
+    ``release``, ``value.unpersist()`` when the value has one."""
+    if spark is not None:
+        key = _plan_key(spark, key)
+    hit = _PLAN_CACHE.get(key)
+    if hit is None:
+        hit = _PLAN_CACHE[key] = (build(), release)
+    return hit[0]
+
+
+def peek(spark: SparkSession, key: tuple):
+    """The session-scoped value cached under ``key`` (as cached_plan
+    registers it), or None on a miss; nothing is built."""
+    hit = _PLAN_CACHE.get(_plan_key(spark, key))
+    return hit[0] if hit is not None else None
+
+
 def cached_plan(spark: SparkSession, key: tuple, builder):
     """Session-scoped persisted sidecar for a plan subtree referenced by
     multiple downstream branches (self-joins, census-join-back rollups).
@@ -90,18 +123,11 @@ def cached_plan(spark: SparkSession, key: tuple, builder):
     same once-per-corpus-version pattern as dedup's shingle postings and
     the IVF centroid sidecar; on a cluster these would be materialized
     tables/Delta sidecars instead of StorageLevel caches."""
-    from pyspark.sql import DataFrame  # noqa: F401  (type only)
-
-    k = _plan_key(spark, key)
-    df = _PLAN_CACHE.get(k)
-    if df is None:
-        df = builder().persist()
-        _PLAN_CACHE[k] = df
-    return df
+    return memo(key, lambda: builder().persist(), spark=spark)
 
 
 def _plan_key(spark: SparkSession, key: tuple) -> tuple:
-    # The sidecar catalog root participates in every plan key: some
+    # The sidecar catalog root participates in every session key: some
     # cached plans front disk sidecars (sidecars.disk_sidecar), and a
     # memory hit built while SPARK_GRAFT_SIDECAR_DIR pointed elsewhere
     # must not mask the current catalog's build/read path. Nested in a
@@ -118,56 +144,41 @@ def _path_related(a: str, b: str) -> bool:
 
 
 def _key_references(key: tuple, token: str) -> bool:
-    """True when any string element of ``key`` is path-related to
-    ``token`` (equal, or one under the other at a path boundary) — a
+    """True when a top-level string element of ``key`` is path-related
+    to ``token`` (equal, or one under the other at a path boundary) — a
     table under a corpus dir invalidates caches keyed by that dir, and
-    vice versa."""
+    vice versa — or names ``token`` inside it at path boundaries (a plan
+    string whose scans read that path). Nested tuples never match."""
+    inside = re.compile(
+        r"(?<![\w.-])" + re.escape(token.rstrip("/")) + r"(?![\w.-])"
+    )
     return any(
-        isinstance(el, str) and _path_related(el, token) for el in key
+        isinstance(el, str) and (_path_related(el, token) or inside.search(el))
+        for el in key
     )
 
 
-# Module caches (shingle postings, IVF centroids, …) register an evictor
-# so ParquetTable version bumps can invalidate them without util knowing
-# their shapes. Each evictor is fn(token: str) -> None.
-_CACHE_EVICTORS: list = []
-
-
-def register_cache_evictor(fn) -> None:
-    _CACHE_EVICTORS.append(fn)
-
-
-def evict_dict_cache(cache: dict, token: str) -> None:
-    """Drop (and unpersist, when the value is a persisted DataFrame)
-    every entry of ``cache`` whose key references ``token``. Keys may be
-    tuples or plain strings."""
-    for k in [k for k in cache if _key_references(
-        k if isinstance(k, tuple) else (k,), token
-    )]:
-        v = cache.pop(k)
-        unp = getattr(v, "unpersist", None)
-        if callable(unp):
-            try:
-                unp()
-            except Exception:
-                pass
-
-
 def evict_caches(token: str) -> None:
-    """Cache lifecycle hook: invalidate every per-corpus cache entry
-    whose key references ``token`` (a ParquetTable path or corpus dir).
+    """Cache lifecycle hook: drop every cache entry whose key references
+    ``token`` (a ParquetTable path or corpus dir), releasing its value.
     Called on every ParquetTable version bump so a long-lived engine
     crossing corpus versions doesn't accumulate pinned DataFrames —
     stale persisted plans are unpersisted (storage memory released) and
     the next query rebuilds from the new version."""
-    evict_dict_cache(_PLAN_CACHE, token)
-    for fn in list(_CACHE_EVICTORS):
-        fn(token)
+    for k in [k for k in _PLAN_CACHE if _key_references(k, token)]:
+        value, release = _PLAN_CACHE.pop(k)
+        try:
+            if release is not None:
+                release(value)
+            elif callable(getattr(value, "unpersist", None)):
+                value.unpersist()
+        except Exception:
+            pass
 
 
 def materialize_plan(spark: SparkSession, key: tuple) -> None:
     """Force a cached_plan entry to materialize now (offline-prep hook);
     no-op if the plan was never registered."""
-    df = _PLAN_CACHE.get(_plan_key(spark, key))
+    df = peek(spark, key)
     if df is not None:
         df.count()
