@@ -22,3 +22,27 @@ SF_DIR_MED = "/root/testdata/sf0.01"
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def jobs_during(spark, fn) -> int:
+    """Spark jobs started by any thread, the stream's included, while
+    ``fn`` runs: job ids are global and increasing, so these are the
+    ids between two marker jobs of one job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+
+    def marker():
+        sc.setJobGroup(group, "job budget marker")
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    marker()
+    fn()
+    marker()
+    first, last = sorted(sc.statusTracker().getJobIdsForGroup(group))
+    return last - first - 1

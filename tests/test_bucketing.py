@@ -5,9 +5,13 @@ and assert the plan has NO shuffle exchange on either join input."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
+
+from tests.conftest import SF_DIR
 
 
 @pytest.fixture()
@@ -87,6 +91,40 @@ def test_merge_upsert_bucketed_target_never_shuffles(spark, bucketed_tables):
     # and the semantics: deletes applied, batch upserted
     got = {r.pmid for r in out.select("pmid").collect()}
     assert "p990" not in got and "p0" in got and "p19" in got
+
+
+def test_prepared_layouts_have_one_bucket_per_task_thread(
+    spark, monkeypatch, tmp_path
+):
+    """io.prepare_buckets sizes every layout to the session: one bucket
+    per task thread, each bucket exactly one file."""
+    from trialstreamer_spark import io
+
+    monkeypatch.setenv("SPARK_GRAFT_BUCKET_DIR", str(tmp_path))
+    sf_dir = SF_DIR
+    names = [io._bucket_table_name(sf_dir, v) for v in io.BUCKET_SPECS]
+
+    def drop():
+        for name in names:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+    drop()
+    try:
+        io.prepare_buckets(spark, sf_dir)
+        n = spark.sparkContext.defaultParallelism
+        for name in names:
+            info = {
+                r.col_name: r.data_type
+                for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+            }
+            assert info["Num Buckets"] == str(n), name
+            files = [
+                f for f in os.listdir(tmp_path / name)
+                if not f.startswith(("_", "."))
+            ]
+            assert len(files) == n, (name, files)
+    finally:
+        drop()
 
 
 class TestFactBucketLayout:

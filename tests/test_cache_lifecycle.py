@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from trialstreamer_spark import util
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_during
 from trialstreamer_spark.operators.upsert import ParquetTable
 
 
@@ -164,6 +164,41 @@ def test_warm_cache_respreads_unsplittable_row_groups(spark, monkeypatch):
         drop_warmed()
 
 
+def test_footer_rows_match_spark_count(spark, tmp_path):
+    """warm_cache sizes its repartitions from parquet footers: for every
+    corpus table (events' TIMESTAMP(NANOS) column included) and for a
+    directory of part files, the footer row count is the row count a
+    Spark scan gives."""
+    from trialstreamer_spark import io
+
+    # events' nanosecond timestamps are readable only as longs (io.load)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    for name in io.TABLES:
+        path = os.path.join(SF_DIR, f"{name}.parquet")
+        assert io.footer_rows(path) == spark.read.parquet(path).count(), name
+    parts = str(tmp_path / "parts")
+    spark.range(1000).repartition(3).write.parquet(parts)
+    assert any(f.startswith(("_", ".")) for f in os.listdir(parts))
+    assert io.footer_rows(parts) == spark.read.parquet(parts).count() == 1000
+
+
+def test_warm_cache_job_budget(spark, tmp_path):
+    """Warming a whole corpus runs no count job per table: the
+    repartition targets come from the parquet footers, so the jobs left
+    are the eager materialization of each of the 11 cached relations
+    (the ten tables and documents' metadata projection). Measured on
+    sf0.001 at local[4]: 65 jobs with a count job per table, 43
+    without."""
+    from trialstreamer_spark import io
+
+    corpus = _corpus_copy(str(tmp_path / "sf"), io.TABLES)
+    try:
+        n_jobs = jobs_during(spark, lambda: io.warm_cache(spark, corpus))
+        assert len(io.TABLES) + 1 <= n_jobs <= 43, n_jobs
+    finally:
+        util.evict_caches(corpus)
+
+
 SF = SF_DIR
 
 
@@ -206,6 +241,38 @@ def test_nation_rewrite_refreshes_nation_names(spark, tmp_path):
 
     nations = {r["nation"] for r in query(spark, sf).collect()}
     assert "ATLANTIS" in nations and old not in nations, nations
+
+
+def test_corpus_without_region_labels_every_nation_null(spark, tmp_path):
+    """No region.parquet: the nation lookup still serves every nation,
+    each with a NULL region, and nation-keyed queries still run."""
+    import pyarrow.parquet as pq
+
+    from trialstreamer_spark.plans import relational
+    from trialstreamer_spark.plans.all_queries import QUERIES
+
+    sf = _corpus_copy(str(tmp_path / "sf"), ("customer", "orders", "nation"))
+    rows = relational._nation_region_rows(spark, sf)
+    nations = pq.read_table(os.path.join(sf, "nation.parquet")).to_pylist()
+    assert sorted((nk, name) for nk, name, _ in rows) == sorted(
+        (r["n_nationkey"], r["n_name"]) for r in nations
+    )
+    assert all(rname is None for _, _, rname in rows)
+    got = QUERIES["dormant_rich_customers"](spark, sf).collect()
+    assert got and all(r["nation"] is not None for r in got)
+
+
+def test_corrupt_region_table_raises(spark, tmp_path):
+    """A region.parquet that exists but is not parquet fails the
+    nation lookup loudly instead of reading as a corpus without
+    regions."""
+    from trialstreamer_spark.plans import relational
+
+    sf = _corpus_copy(str(tmp_path / "sf"), ("customer", "orders", "nation"))
+    with open(os.path.join(sf, "region.parquet"), "wb") as fh:
+        fh.write(b"not a parquet file" * 64)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        relational._nation_region_rows(spark, sf)
 
 
 def test_evict_caches_releases_every_kind_of_entry(spark, tmp_path, monkeypatch):

@@ -19,13 +19,15 @@ def optimized_of(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_jaccard_calibration_intersects_arrays_not_postings(spark, sf_dir):
-    """r12: exact |A∩B| comes from array_intersect over doc-keyed
-    shingle arrays riding the signature joins — no exploded
-    (doc, shingle) pair join and no tagged-union fold-back exchange."""
+def test_jaccard_calibration_intersects_postings_not_arrays(spark, sf_dir):
+    """Exact |A∩B| comes from the exploded (doc, shingle) postings
+    re-joined per candidate pair and folded back through the tagged
+    union — no per-doc shingle array is assembled or carried through the
+    pair joins, so no row's payload grows with document length."""
     p = optimized_of(QUERIES["dup_pair_jaccard_calibration"](spark, sf_dir))
-    assert "array_intersect" in p
-    assert "Union" not in p  # the est/exact tagged union is gone
+    assert "array_intersect" not in p
+    assert "collect_list" not in p
+    assert "Union" in p  # the est/exact tagged-union fold
 
 
 def test_ann_recall_windows_carry_only_row_number(spark, sf_dir):

@@ -10,6 +10,7 @@ import shutil
 import pytest
 
 from fixtures.pubmed_xml import generate_xml_fixtures
+from tests.conftest import jobs_during
 from trialstreamer_spark import update
 from trialstreamer_spark.operators.upsert import ParquetTable
 
@@ -130,30 +131,6 @@ def test_update_pubmed_annotates_each_new_pmid_once(spark, xml_dir, tmp_path):
     assert sorted(r.pmid for r in ann.collect()) == sorted(first + second)
 
 
-def _jobs_during(spark, fn) -> int:
-    """Spark jobs started by any thread, the stream's included, while
-    ``fn`` runs: job ids are global and increasing, so these are the
-    ids between two marker jobs of one job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"job-budget-{uuid.uuid4().hex}"
-
-    def marker():
-        sc.setJobGroup(group, "job budget marker")
-        try:
-            sc.parallelize([0], 1).count()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-
-    marker()
-    fn()
-    marker()
-    first, last = sorted(sc.statusTracker().getJobIdsForGroup(group))
-    return last - first - 1
-
-
 def test_update_pubmed_day_job_budget(spark, xml_dir, tmp_path):
     """One update day (stream, MERGE, counts, audit, annotation) runs at
     most 20 Spark jobs, and reading a committed table runs none."""
@@ -161,10 +138,10 @@ def test_update_pubmed_day_job_budget(spark, xml_dir, tmp_path):
     _land(xml_dir, landing, "pubmed26n0001.xml.gz")
     update.update_pubmed(spark, landing, wh)  # the baseline load
     _land(xml_dir, landing, "pubmed26n0002.xml.gz", "pubmed26n0003.xml.gz")
-    assert _jobs_during(spark, lambda: update.update_pubmed(spark, landing, wh)) <= 20
+    assert jobs_during(spark, lambda: update.update_pubmed(spark, landing, wh)) <= 20
     for name in ("pubmed_raw", "pubmed_annotations", "update_log", "pubmed_year_counts"):
         t = ParquetTable(spark, os.path.join(wh, name))
-        assert _jobs_during(spark, lambda: t.read().schema) == 0, name
+        assert jobs_during(spark, lambda: t.read().schema) == 0, name
 
 
 def test_update_medrxiv(spark, tmp_path):

@@ -77,6 +77,11 @@ def warm_cache(
     re-spread giant unsplittable row groups across the cores (see
     _WARM_ROWS_PER_PARTITION).
 
+    The repartition target comes from the parquet footers' row counts
+    (footer_rows, read on the driver), so picking it starts no Spark
+    job; the only jobs are the eager materialization of each cached
+    relation.
+
     Each table is a util.cached_plan entry ("table", sf_dir, name),
     registered only here: load() of an unwarmed table stays uncached so
     unit tests see real parquet scans (PushedFilters / ReadSchema
@@ -86,17 +91,18 @@ def warm_cache(
     par = spark.sparkContext.defaultParallelism
     skipped = []
     for name in tables:
+        path = os.path.join(sf_dir, f"{name}.parquet")
         # partial corpora (e.g. the documents-only heaps decade dirs
         # from tools/gen_scale.py only=...) warm what exists — but
         # loudly, so a typo'd sf_dir doesn't warm nothing in silence
         # (r10 ADVICE)
-        if not os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
+        if not os.path.exists(path):
             skipped.append(name)
             continue
+        n = footer_rows(path)
         key = ("table", sf_dir, name)
         if util.peek(spark, key) is None:
             raw = load(spark, sf_dir, name)
-            n = raw.count()
             rpp = _WARM_ROWS_OVERRIDE.get(name, _WARM_ROWS_PER_PARTITION)
             target = max(1, min(par, n // rpp))
             if target > 1:
@@ -106,7 +112,6 @@ def warm_cache(
             mkey = ("table", sf_dir, f"{name}__meta")
             if util.peek(spark, mkey) is None:
                 narrow = load(spark, sf_dir, name).select(*_META_COLS[name])
-                n = narrow.count()
                 target = max(1, min(par, n // _WARM_ROWS_PER_PARTITION))
                 # Repartition even when target == 1: load() above serves
                 # the just-cached FULL table, so without this the narrow
@@ -127,6 +132,27 @@ def warm_cache(
             "(partial corpus)",
             stacklevel=2,
         )
+
+
+def footer_rows(path: str) -> int:
+    """Row count of a parquet table — one file, or a directory of part
+    files — summed from the footers' num_rows on the driver. The files
+    Spark's reader skips (names starting with ``_`` or ``.``, e.g.
+    ``_SUCCESS`` and ``.crc`` checksums) are skipped here too, so the
+    sum equals ``spark.read.parquet(path).count()`` without its job."""
+    import pyarrow.parquet as pq
+
+    if os.path.isfile(path):
+        return pq.read_metadata(path).num_rows
+    n = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        n += sum(
+            pq.read_metadata(os.path.join(root, f)).num_rows
+            for f in files
+            if not f.startswith(("_", "."))
+        )
+    return n
 
 
 def load_meta(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -255,20 +281,6 @@ BUCKET_SPECS: dict[str, tuple[str, str, tuple[str, ...]]] = {
     ),
 }
 
-#: Bucket count for the prepared layouts. Both sides of a co-located
-#: join must match (or divide); at 100 TB this is sized so one bucket is
-#: a few GB per executor core, here so local[32] still parallelizes.
-# One bucket per core: bucketed scans cannot split a bucket, so a
-# bucket count below the executor-thread count leaves cores idle for
-# the whole fact-fact stage (sf10 measured: the TPC-H trio's fused
-# SMJ+probe+agg stage ran 16 tasks on 32 cores; 32 buckets cut
-# sole_late_supplier 6.5→4.3 s and product_profit 1.5→1.2 s). At
-# cluster scale the same rule holds: buckets ≈ target parallelism
-# (or an integer multiple — equal-width bucket joins need no exchange
-# either way).
-N_FACT_BUCKETS = 32
-
-
 def _bucket_table_name(sf_dir: str, variant: str) -> str:
     import hashlib
 
@@ -287,6 +299,19 @@ def prepare_buckets(
     Exchange (and their Sort). Idempotent per (session, corpus): the
     catalog registration is checked first.
 
+    Every variant gets ``defaultParallelism`` buckets: one per task
+    thread. Bucketed scans cannot split a bucket, so fewer buckets than
+    threads leave cores idle for the whole fact-fact stage (sf10,
+    local[32]: 16→32 buckets cut sole_late_supplier 6.5→4.3 s), while
+    more buckets than threads only add tiny files and per-task dispatch
+    to every scan (a 4-thread session writing 32 buckets paid 165 write
+    tasks for five layouts, and 34 tasks per call of
+    ship_latency_by_nation). At cluster scale the same rule holds:
+    buckets ≈ target parallelism. All layouts of one session share the
+    count, so bucket-to-bucket joins need no exchange; it also equals
+    the ``spark.sql.shuffle.partitions`` that session.get_spark sets, so
+    a shuffled side joins a layout at its bucket count.
+
     Each projection's table handle is a session-scoped ``util.memo``
     entry, evicted with its corpus, and is deliberately NOT persisted
     (see below)."""
@@ -295,6 +320,7 @@ def prepare_buckets(
         os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                      "spark-warehouse", "buckets"),
     )
+    n_buckets = spark.sparkContext.defaultParallelism
     for variant in variants or tuple(BUCKET_SPECS):
         spec = BUCKET_SPECS[variant]
         src, key, cols = spec[0], spec[1], spec[2]
@@ -303,9 +329,9 @@ def prepare_buckets(
         if not spark.catalog.tableExists(name):
             df = load(spark, sf_dir, src).select(*cols)
             (
-                df.repartition(N_FACT_BUCKETS, F.col(key))
+                df.repartition(n_buckets, F.col(key))
                 .write.mode("overwrite")
-                .bucketBy(N_FACT_BUCKETS, key)
+                .bucketBy(n_buckets, key)
                 .sortBy(*sort_cols)
                 .option("path", os.path.join(base, name))
                 .saveAsTable(name)

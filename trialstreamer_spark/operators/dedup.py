@@ -2617,45 +2617,70 @@ def dup_pair_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: all three inputs are prepare-time sidecars (pair
     table, signature table, shingle postings); pairs DRIVE every join —
-    the per-doc shingle SET (a distinct array by construction,
-    shingles_col) and its size attach to the signature table ONCE
-    doc-keyed, so exactly TWO doc-keyed lookups serve slots, sizes, AND
-    the exact intersection: |A∩B| = size(array_intersect(sh_a, sh_b))
-    per pair in whole-stage codegen (r12, guide §2.4/§2.3 — the old
-    shape re-joined exploded postings on (doc_b, shingle) and folded a
-    tagged union through one more pair-keyed exchange; 8→6 scheduler
-    jobs, plan Exchange 24→16 / scans 15→10, and the only rows that
-    ever shuffle are candidate pairs and the doc-keyed set frame, never
-    exploded pair×shingle rows). The
-    result collapses to a ≤9×11 matrix map-side; the bounded tail sorts
-    in one partition (util.ordered_small)."""
+    the per-doc shingle count attaches to the signature table ONCE
+    (doc-keyed, so it rides the same two pair lookups as the signature
+    slots instead of two extra pair-keyed joins — r11: 12→~7 scheduler
+    jobs), the exact intersection re-joins postings restricted to
+    candidate docs (never all-pairs — the minhash_band_tuning
+    discipline), and the result collapses to a ≤9×11 matrix map-side;
+    the bounded tail sorts in one partition (util.ordered_small).
+
+    Every row a join carries is a fixed-width (doc, shingle) posting or
+    a pair of ids and counts, so no per-row payload grows with document
+    length. Carrying each doc's shingle array through the two pair
+    joins instead copies one array per candidate pair (r12 measured
+    1.41→3.79 s at local[32], and the queries run after it slowed)."""
     d = load(spark, sf_dir, "documents")
     pairs = minhash_candidates(d, cache_key=sf_dir)
     sig = minhash_signatures(d, cache_key=sf_dir)
     posting = shingle_postings(d, cache_key=sf_dir)
-    # postings ride hashpartitioning(doc_id) (shingle_postings contract),
-    # so this groupBy re-assembles the per-doc set with NO exchange;
-    # n_sh is constant per doc (pre-explode array size) — max() = the set
-    # size.
-    docsets = posting.groupBy("doc_id").agg(
-        F.collect_list("shingle").alias("sh"),
-        F.max("n_sh").alias("n_sh"),
-    )
-    sigz = sig.join(docsets, "doc_id")
+    sizes = posting.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    sigz = sig.join(sizes, "doc_id")
     eq_col = sum(
         F.when(F.col(f"sa.h{i}") == F.col(f"sb.h{i}"), 1).otherwise(0)
         for i in range(N_HASHES)
     ).cast("long")
-    scored = (
+    eqz = (
         pairs.join(sigz.alias("sa"), pairs.doc_a == F.col("sa.doc_id"))
         .join(sigz.alias("sb"), pairs.doc_b == F.col("sb.doc_id"))
         .select(
+            "doc_a",
+            "doc_b",
             eq_col.alias("est_slots"),
             F.col("sa.n_sh").alias("sa_n"),
             F.col("sb.n_sh").alias("sb_n"),
-            F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh")))
-            .cast("long")
-            .alias("n_common"),
+        )
+    )
+    pa = posting.select(F.col("doc_id").alias("doc_a"), "shingle")
+    pb = posting.select(F.col("doc_id").alias("doc_b"), "shingle")
+    inter = (
+        pairs.join(pa, "doc_a")
+        .join(pb, ["doc_b", "shingle"])
+        .select(
+            "doc_a",
+            "doc_b",
+            F.lit(None).cast("long").alias("est_slots"),
+            F.lit(None).cast("long").alias("sa_n"),
+            F.lit(None).cast("long").alias("sb_n"),
+            F.lit(1).cast("long").alias("n_common"),
+        )
+    )
+    # Tagged union instead of eqz LEFT JOIN common: both legs are
+    # pair-keyed, so one groupBy folds them in a single exchange with
+    # map-side partial aggregation per leg (the embedding_coverage_audit
+    # trick) — the old shape paid two pair-keyed exchanges plus a
+    # sort-merge for the outer join. Every pair has exactly ONE eqz row
+    # (candidates are distinct), so max() recovers its attributes; a
+    # pair sharing no shingle simply sums n_common to 0.
+    scored = (
+        eqz.withColumn("n_common", F.lit(0).cast("long"))
+        .unionByName(inter)
+        .groupBy("doc_a", "doc_b")
+        .agg(
+            F.max("est_slots").alias("est_slots"),
+            F.max("sa_n").alias("sa_n"),
+            F.max("sb_n").alias("sb_n"),
+            F.sum("n_common").alias("n_common"),
         )
         .select(
             "est_slots",

@@ -35,6 +35,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import os
 import re
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
@@ -163,34 +164,27 @@ def _nation_region_rows(
     nation whose regionkey misses region carries r_name=None, so
     callers can reproduce inner-join drops exactly with an
     is-not-null guard)."""
-    from pyspark.errors.exceptions.captured import AnalysisException
 
     def build() -> list[tuple[int, str, str | None]]:
         n = load(spark, sf_dir, "nation")
-        try:
-            r = load(spark, sf_dir, "region")
+        # A corpus without region.parquet, or whose nation carries no
+        # n_regionkey, still serves nation-only consumers: the LEFT join
+        # against nothing is r_name=NULL for every nation, which is
+        # exactly what the is-not-null guards expect. The probe checks
+        # those two absences directly (a file test and the schema
+        # already read, no Spark job); anything else — a corrupted or
+        # mis-schemed region table — fails loudly instead of reading as
+        # empty regions.
+        if (
+            os.path.exists(os.path.join(sf_dir, "region.parquet"))
+            and "n_regionkey" in n.columns
+        ):
             sel = n.join(
-                r, F.col("n_regionkey") == F.col("r_regionkey"), "left"
+                load(spark, sf_dir, "region"),
+                F.col("n_regionkey") == F.col("r_regionkey"),
+                "left",
             ).select("n_nationkey", "n_name", "r_name")
-        except AnalysisException as exc:
-            # A corpus without region.parquet (or whose nation carries no
-            # n_regionkey) still serves nation-only consumers: the LEFT
-            # join against nothing is r_name=NULL for every nation, which
-            # is exactly what the is-not-null guards expect. Only those
-            # two absence shapes are masked — a corrupted or mis-schemed
-            # region table must fail loudly, not read as empty regions
-            # (r11 ADVICE).
-            cond = ""
-            for getter in ("getCondition", "getErrorClass"):
-                try:
-                    cond = getattr(exc, getter)() or ""
-                    break
-                except Exception:  # noqa: BLE001 — older exception shape
-                    continue
-            if not cond.startswith(
-                ("PATH_NOT_FOUND", "UNRESOLVED_COLUMN", "FIELD_NOT_FOUND")
-            ):
-                raise
+        else:
             sel = n.select(
                 "n_nationkey",
                 "n_name",
