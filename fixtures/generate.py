@@ -123,7 +123,7 @@ def generate(out_dir: str, n_pubmed: int = 1200, seed: int = 42) -> dict:
     import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -464,7 +464,12 @@ def from_spark(schema):  # pragma: no cover - helper for older pyspark
 
 
 if __name__ == "__main__":
+    import os
     import sys
 
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/fixtures/data"
+    out = (
+        sys.argv[1]
+        if len(sys.argv) > 1
+        else os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+    )
     print(generate(out))

@@ -1,10 +1,12 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from trialstreamer_spark.session import get_spark  # noqa: E402
 
@@ -25,24 +27,13 @@ def sf_dir() -> str:
 
 
 def jobs_during(spark, fn) -> int:
-    """Spark jobs started by any thread, the stream's included, while
-    ``fn`` runs: job ids are global and increasing, so these are the
-    ids between two marker jobs of one job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"job-budget-{uuid.uuid4().hex}"
-
-    def marker():
-        sc.setJobGroup(group, "job budget marker")
-        try:
-            sc.parallelize([0], 1).count()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-
-    marker()
+    """Spark jobs submitted by any thread, the stream's included, while
+    ``fn`` runs. The DAG scheduler numbers jobs in submission order, so
+    this is how far its next job id moves across ``fn``. That counter is
+    Spark-internal (package-private in Scala, public on the JVM); marker
+    jobs around ``fn`` count the same ids but each costs a scheduler
+    round trip and a Python worker task."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = dag.nextJobId()
     fn()
-    marker()
-    first, last = sorted(sc.statusTracker().getJobIdsForGroup(group))
-    return last - first - 1
+    return dag.nextJobId() - first

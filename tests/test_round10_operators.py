@@ -116,11 +116,11 @@ def test_repeat_rate_matches_naive_self_join(spark, sf_dir):
 
 
 def test_parity_doc_not_stale():
-    """PLANS/PARITY are generated artifacts; the r9 verdict caught them
-    regenerated two commits behind HEAD. This pins the cheap invariant:
-    the registry roll-call inside PARITY.md must state the CURRENT
-    registry size, so adding/removing a query without re-running
-    tools/gen_plans.py fails CI instead of shipping a stale doc."""
+    """PARITY.md's registry roll-call is generated; the r9 verdict caught
+    it regenerated two commits behind HEAD. This pins the cheap
+    invariant: the roll-call must state the CURRENT registry size, so
+    adding/removing a query without re-running tools/plan_budget.py
+    fails CI instead of shipping a stale doc."""
     import os
     import re
 
@@ -132,45 +132,9 @@ def test_parity_doc_not_stale():
 
     assert int(m.group(1)) == len(QUERIES), (
         f"PARITY.md says {m.group(1)} queries, registry has "
-        f"{len(QUERIES)} — rerun tools/gen_plans.py"
+        f"{len(QUERIES)} — rerun tools/plan_budget.py"
     )
     assert int(m.group(2)) == len(ORACLES)
-
-
-def test_plans_doc_generated_after_last_plan_commit():
-    """The count check above misses same-count plan REWRITES (r10: the
-    sole_late_supplier rewrite landed after the last regen and the doc
-    shipped stale). gen_plans.py now stamps its generation commit into
-    PLANS.md; this asserts the last COMMITTED change under plans/ or
-    operators/ is an ancestor of that stamp — i.e. the regen ran at or
-    after the final code-touching commit (r10 VERDICT #7)."""
-    import os
-    import re
-    import subprocess
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    head = open(os.path.join(repo, "PLANS.md")).read(400)
-    m = re.search(r"Generated at commit ([0-9a-f]{7,40})", head)
-    assert m, "PLANS.md is missing its generation-commit stamp — rerun tools/gen_plans.py"
-    gen_sha = m.group(1)
-
-    def _git(*args: str) -> subprocess.CompletedProcess:
-        return subprocess.run(
-            ["git", *args], cwd=repo, capture_output=True, text=True, timeout=60
-        )
-
-    last_code = _git(
-        "log", "-1", "--format=%H", "--",
-        "trialstreamer_spark/plans", "trialstreamer_spark/operators",
-    ).stdout.strip()
-    if not last_code:  # shallow/odd checkout: the stamp check above stands
-        return
-    anc = _git("merge-base", "--is-ancestor", last_code, gen_sha)
-    assert anc.returncode == 0, (
-        f"PLANS.md was generated at {gen_sha[:12]} but plans/operators "
-        f"changed later at {last_code[:12]} — rerun tools/gen_plans.py "
-        "as the final code-touching commit"
-    )
 
 
 def test_crosslingual_pairs_are_cross_language_and_normalized(spark, sf_dir):

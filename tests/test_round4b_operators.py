@@ -280,14 +280,12 @@ def test_frame_features_match_oracle_and_cover_all_videos(spark, sf_dir):
 
 
 def test_resize_images_byte_geometry_contract(spark, sf_dir):
-    from trialstreamer_spark.dist import ship_package
     from trialstreamer_spark.io import load
     from trialstreamer_spark.operators.multimodal import (
         resize_images,
         synthesize_media,
     )
 
-    ship_package(spark)
     media = synthesize_media(load(spark, sf_dir, "documents"))
     out = resize_images(media, width=32, height=16).collect()
     assert out

@@ -31,10 +31,7 @@ def run_preps(spark, sf_dir: str) -> None:
     from trialstreamer_spark.sidecars import prepare_hooks
 
     for prep in prepare_hooks():
-        try:
-            prep(spark, sf_dir)
-        except Exception as exc:  # noqa: BLE001
-            print(f"prep {prep.__name__}: {exc}", file=sys.stderr)
+        prep(spark, sf_dir)
 
 
 def probe(spark, name: str, sf_dir: str) -> dict:

@@ -7,8 +7,12 @@ those helpers BY REFERENCE: the worker must be able to import
 the workers' PYTHONPATH does not include this repo, so we ship the
 package the standard way: zip the source once per process and
 ``SparkContext.addPyFile`` it (the programmatic ``--py-files``).
-Self-contained closures (operators/similarity.py kernels) don't need
-this; call ``ship_package(spark)`` from any query that does.
+
+Two callers cover every session: ``session.get_spark`` ships to each
+session this package creates, and the query registry
+(``plans.registry.query``) ships before each registered query builds,
+for sessions handed in from outside (the driver contract's own
+session never passes through ``get_spark``).
 """
 
 from __future__ import annotations

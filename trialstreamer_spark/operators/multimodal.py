@@ -154,10 +154,8 @@ def multimodal_decode_stats(spark, sf_dir: str) -> DataFrame:
     the codec seam) → per-media feature projection. The oracle replays
     the fake decoder's first feature in SQL; the full 8-float feature
     vector is computed by the same plumbing production uses."""
-    from trialstreamer_spark.dist import ship_package
     from trialstreamer_spark.io import load
 
-    ship_package(spark)
     d = load(spark, sf_dir, "documents")
     media = synthesize_media(d).filter(F.col("meta.width") >= 100)
     feats = extract_features(media)
@@ -285,10 +283,8 @@ def multimodal_frame_features(spark, sf_dir: str) -> DataFrame:
     once per batch — the same batch-amortization a real video pipeline
     needs; no shuffle anywhere (narrow end-to-end until the final
     presentation sort)."""
-    from trialstreamer_spark.dist import ship_package
     from trialstreamer_spark.io import load
 
-    ship_package(spark)
     d = load(spark, sf_dir, "documents")
     frames = frame_sample(synthesize_media(d), every_ms=1000)
 

@@ -531,10 +531,7 @@ def concept_match_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref minimap.py:152-201). The DuckDB oracle replicates the greedy
     sweep with a recursive CTE (next kept match = first candidate in
     (start, -end, cui) order starting after the current right border)."""
-    from trialstreamer_spark.dist import ship_package
     from trialstreamer_spark.functions.text import match_concepts
-
-    ship_package(spark)
     from trialstreamer_spark.util import inline_rows
 
     d = load(spark, sf_dir, "documents")
@@ -584,10 +581,8 @@ def abbrev_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-linear in data — 0.73 s at sf1 -> 1.49 s at sf10 (10x data) —
     and the ratio shrinks 52.7x -> 9.6x -> 4.4x across the decades, the
     amortizing-seam curve, so no plan change is warranted."""
-    from trialstreamer_spark.dist import ship_package
     from trialstreamer_spark.functions.text import abbreviations_udf
 
-    ship_package(spark)
     d = load(spark, sf_dir, "documents")
     planted = F.regexp_replace(
         F.col("text"),

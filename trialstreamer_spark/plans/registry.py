@@ -20,17 +20,27 @@ Conventions that make the hash comparison robust (SURVEY.md §7 hard parts
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
+
+from trialstreamer_spark.dist import ship_package
 
 QUERIES: dict[str, Callable] = {}
 ORACLES: dict[str, str] = {}
 
 
 def query(name: str, oracle: str | None = None):
-    """Register a query plan and (optionally) its DuckDB oracle SQL."""
+    """Register a query plan and (optionally) its DuckDB oracle SQL. The
+    registered callable first ships the package to the session's Python
+    workers (``dist.ship_package``)."""
 
     def deco(fn: Callable) -> Callable:
-        QUERIES[name] = fn
+        @functools.wraps(fn)
+        def shipped(spark, sf_dir):
+            ship_package(spark)
+            return fn(spark, sf_dir)
+
+        QUERIES[name] = shipped
         if oracle is not None:
             ORACLES[name] = oracle
         return fn

@@ -19,6 +19,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from trialstreamer_spark.dist import ship_package
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -114,4 +116,5 @@ def get_spark(app_name: str = "trialstreamer-spark") -> SparkSession:
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ship_package(spark)
     return spark
