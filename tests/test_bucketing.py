@@ -127,6 +127,51 @@ def test_prepared_layouts_have_one_bucket_per_task_thread(
         drop()
 
 
+def test_source_rewrite_rebuilds_bucket_layout(spark, monkeypatch, tmp_path):
+    """A bucket layout follows its source table: after lineitem is
+    rewritten (only its even-orderkey rows kept) and the corpus
+    evicted, prepare_buckets rebuilds the layout, and the bucketed
+    query matches the DuckDB oracle on the NEW rows."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from tests.oracle_util import assert_matches
+    from trialstreamer_spark import io, util
+    from trialstreamer_spark.plans.all_queries import ORACLES, QUERIES
+
+    monkeypatch.setenv("SPARK_GRAFT_BUCKET_DIR", str(tmp_path / "bkt"))
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    for t in ("lineitem", "orders", "customer", "nation", "region"):
+        shutil.copyfile(
+            os.path.join(SF_DIR, f"{t}.parquet"), os.path.join(sf, f"{t}.parquet")
+        )
+    variants = ("lineitem_by_orderkey", "orders_by_orderkey")
+    try:
+        io.prepare_buckets(spark, sf, variants=variants)
+        df = QUERIES["regional_revenue"](spark, sf)
+        assert "ts_bkt_" in df._jdf.queryExecution().executedPlan().toString()
+        assert_matches(df, ORACLES["regional_revenue"], sf)
+
+        path = os.path.join(sf, "lineitem.parquet")
+        li = pq.read_table(path)
+        li = li.filter(pc.equal(pc.bit_wise_and(li["l_orderkey"], 1), 0))
+        os.remove(path)
+        pq.write_table(li, path)
+        util.evict_caches(path)
+        io.prepare_buckets(spark, sf, variants=variants)
+
+        df = QUERIES["regional_revenue"](spark, sf)
+        assert "ts_bkt_" in df._jdf.queryExecution().executedPlan().toString()
+        assert_matches(df, ORACLES["regional_revenue"], sf)
+    finally:
+        util.evict_caches(sf)
+        for v in variants:
+            spark.sql(f"DROP TABLE IF EXISTS {io._bucket_table_name(sf, v)}")
+
+
 class TestFactBucketLayout:
     """Round-6: the TPC-H fact-fact plans choose the prepared bucketed
     layout (io.prepare_buckets) and run their joins without any shuffle

@@ -145,7 +145,7 @@ def test_warm_cache_respreads_unsplittable_row_groups(spark, monkeypatch):
             key = util._plan_key(spark, ("table", sf_dir, name))
             stale = util._PLAN_CACHE.pop(key, None)
             if stale is not None:
-                stale[0].unpersist()
+                stale.unpersist()
 
     drop_warmed()
     try:
@@ -280,8 +280,9 @@ def test_evict_caches_releases_every_kind_of_entry(spark, tmp_path, monkeypatch)
     warmed table, a disk-backed sidecar, in-process values, the bucket
     projection and a parity replay — and one eviction: nothing keyed by
     the corpus survives, persisted frames release their storage, the
-    replay's cleanup removes its checkpoint, another corpus's entries
-    stay, and a sidecar commit under the catalog root evicts nothing."""
+    bucket layout and the replay's cached copy are no longer served,
+    another corpus's entries stay, and a sidecar commit under the
+    catalog root evicts nothing."""
     from trialstreamer_spark import io, sidecars
     from trialstreamer_spark.operators import dedup, similarity
     from trialstreamer_spark.plans.all_queries import QUERIES
@@ -301,18 +302,15 @@ def test_evict_caches_releases_every_kind_of_entry(spark, tmp_path, monkeypatch)
     ]
     io.warm_cache(spark, corpus, ("orders",))
     frames.append(io.load(spark, corpus, "orders"))
+    QUERIES["topk_stream_parity"](spark, corpus)
+    frames.append(util.peek(spark, ("replay_topk", corpus)))
     for df in frames:
         df.count()
         assert df.storageLevel.useMemory
     similarity.ivf_centroids(spark, corpus)
     dedup.bloom_build(spark, corpus)
     io.prepare_buckets(spark, corpus, variants=("orders_by_orderkey",))
-    QUERIES["topk_stream_parity"](spark, corpus)
-    (replay,) = [
-        v for k, (v, _) in util._PLAN_CACHE.items()
-        if k[2:] == ("replay", "topk", corpus)
-    ]
-    assert os.path.isdir(replay["ckpt"])
+    assert io.bucketed_table(spark, corpus, "orders_by_orderkey") is not None
     survivor = util.cached_plan(spark, ("probe", other), lambda: spark.range(2))
     util.memo(("probe_value", other), lambda: 1)
 
@@ -330,8 +328,8 @@ def test_evict_caches_releases_every_kind_of_entry(spark, tmp_path, monkeypatch)
         ]
         for df in frames:
             assert not df.storageLevel.useMemory
-        assert not os.path.exists(replay["ckpt"])
-        assert not spark.catalog.tableExists(replay["view"])
+        assert io.bucketed_table(spark, corpus, "orders_by_orderkey") is None
+        assert util.peek(spark, ("replay_topk", corpus)) is None
         assert util._plan_key(spark, ("probe", other)) in util._PLAN_CACHE
         assert ("probe_value", other) in util._PLAN_CACHE
         assert survivor.storageLevel.useMemory

@@ -16,6 +16,7 @@ These encode the 100 TB design decisions:
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -351,10 +352,10 @@ def test_erasure_manifest_reads_materialized_featurizations(spark, sf_dir):
     assert p.count("InMemoryTableScan") >= 2, p
 
 
-# every parity query and its replay tag in the util.memo store — single-batch memory
-# sinks, the production upsert sink, and the multi-batch staged replays
-# all ride the ONE shared registry, so the reuse contract is testable
-# uniformly across the full family.
+# every parity query and the tag of its replay sidecar ("replay_<tag>") —
+# single-batch memory sinks, the production upsert sink, and the
+# multi-batch staged replays all ride the one sidecar lifecycle, so the
+# reuse contract is testable uniformly across the full family.
 PARITY_TAGS = {
     "sessionize_stream_parity": "sessionize",
     "running_totals_stream_parity": "totals",
@@ -373,29 +374,28 @@ PARITY_TAGS = {
 
 
 @pytest.mark.parametrize("qname", sorted(PARITY_TAGS))
-def test_parity_second_call_reuses_completed_replay(spark, sf_dir, qname):
-    """A completed parity replay is memoized per (operator, corpus):
-    the second invocation must return the SAME sink/table payload
-    without starting a new streaming query or a new checkpoint —
-    asserted for EVERY parity query, so no operator can quietly grow
-    its own bespoke uncached sink path again."""
-    from trialstreamer_spark import util
+def test_parity_second_call_reuses_completed_replay(
+    spark, sf_dir, qname, monkeypatch
+):
+    """A completed parity replay is a sidecar per (operator, corpus
+    version): the second invocation starts no streaming query and
+    returns the same rows — asserted for EVERY parity query, so no
+    operator can quietly grow its own bespoke uncached sink path
+    again."""
+    from pyspark.sql.streaming import DataStreamWriter
 
-    tag = PARITY_TAGS[qname]
-    first = QUERIES[qname](spark, sf_dir)
-    keys_after_first = {
-        k for k in util._PLAN_CACHE if k[2:] == ("replay", tag, sf_dir)
-    }
-    assert len(keys_after_first) == 1
-    (key,) = keys_after_first
-    payload = util._PLAN_CACHE[key][0]
-    second = QUERIES[qname](spark, sf_dir)
-    assert set(util._PLAN_CACHE) >= keys_after_first  # entry survived
-    assert payload is util._PLAN_CACHE[key][0]  # same payload, no re-run
-    # and the two invocations agree row-for-row
-    assert sorted(map(tuple, first.collect())) == sorted(
-        map(tuple, second.collect())
-    )
+    from trialstreamer_spark import sidecars
+
+    first = QUERIES[qname](spark, sf_dir).collect()
+    replay = sidecars.sidecar_path(sf_dir, f"replay_{PARITY_TAGS[qname]}")
+    assert os.path.exists(os.path.join(replay, "_current"))
+
+    def no_stream(*a, **k):
+        raise AssertionError(f"{qname}: second call started a stream")
+
+    monkeypatch.setattr(DataStreamWriter, "start", no_stream)
+    second = QUERIES[qname](spark, sf_dir).collect()
+    assert sorted(map(tuple, first)) == sorted(map(tuple, second))
 
 
 def test_hhi_broadcasts_both_dims_single_fact_exchange(spark, sf_dir):

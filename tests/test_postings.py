@@ -9,6 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from trialstreamer_spark import sidecars
 from trialstreamer_spark.api import engine
 from trialstreamer_spark.plans import postings as P
 
@@ -198,7 +199,7 @@ def test_stale_postings_index_falls_back_to_scan(spark, tables):
         assert engine.choose_search_path(tables, min_bytes=0) == "postings"
         # an index with no stamp at all (pre-round-6 layout) is treated
         # as stale
-        os.remove(os.path.join(post_dir, engine._POSTINGS_STAMP))
+        os.remove(os.path.join(post_dir, sidecars.STAMP))
         assert engine.choose_search_path(tables, min_bytes=0) == "scan"
     finally:
         shutil.rmtree(post_dir, ignore_errors=True)

@@ -227,20 +227,32 @@ def test_nprobe_recall_curve_is_monotone_and_consistent(spark, sf_dir):
     assert {q: v[2] for q, v in by_q.items()} == fixed
 
 
-def test_upsert_sink_parity_reuses_completed_replay(spark, sf_dir):
-    """Second call serves from the merged table without re-running the
-    stream, and agrees row-for-row."""
-    from trialstreamer_spark import util
+def test_upsert_sink_parity_reuses_completed_replay(spark, sf_dir, monkeypatch):
+    """Second call serves from the committed replay sidecar without
+    re-running the stream or re-committing the table, and agrees
+    row-for-row."""
+    import os
+
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from trialstreamer_spark import sidecars
 
     first = QUERIES["upsert_sink_stream_parity"](spark, sf_dir).collect()
-    # round-6: the upsert sink rides the SAME shared replay registry as
-    # every memory-sink parity query (one mechanism owns all stream
-    # sinks)
-    key = util._plan_key(spark, ("replay", "upsert_sink", sf_dir))
-    assert key in util._PLAN_CACHE
-    tbl_dir = util._PLAN_CACHE[key][0]["tbl_dir"]
+    # the upsert sink rides the SAME replay sidecar lifecycle as every
+    # memory-sink parity query (one mechanism owns all stream sinks)
+    pointer = os.path.join(
+        sidecars.sidecar_path(sf_dir, "replay_upsert_sink"), "_current"
+    )
+    with open(pointer) as f:
+        version = f.read()
+
+    def no_stream(*a, **k):
+        raise AssertionError("second call started a stream")
+
+    monkeypatch.setattr(DataStreamWriter, "start", no_stream)
     second = QUERIES["upsert_sink_stream_parity"](spark, sf_dir).collect()
-    assert util._PLAN_CACHE[key][0]["tbl_dir"] == tbl_dir
+    with open(pointer) as f:
+        assert f.read() == version  # no new table version committed
     assert sorted(map(tuple, first)) == sorted(map(tuple, second))
 
 

@@ -13,13 +13,17 @@ stamped with a corpus fingerprint. Contracts tested here:
   (shingle_postings patched to fail loudly), hashes unchanged;
 - staleness: any corpus-table change flips the fingerprint and forces a
   rebuild (never a silently-stale read — same contract as the postings
-  index stamp in api.engine.choose_search_path).
+  index stamp in api.engine.choose_search_path);
+- stream replays (streaming.parity) are sidecars too: a build leaves no
+  checkpoint, staged input, sink table or memory-sink view behind, and a
+  restarted session serves every parity query without a stream.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import tempfile
 
 import pytest
 
@@ -177,3 +181,81 @@ def test_restart_serves_promoted_finals_from_disk(spark, sidecar_dir, monkeypatc
         == sorted(map(tuple, first_dsir))
     assert sorted(map(tuple, QUERIES["knn_graph_topk"](s2, SF).collect())) \
         == sorted(map(tuple, first_knn))
+
+
+PARITY = sorted(
+    name for name, fn in QUERIES.items()
+    if fn.__module__ == "trialstreamer_spark.streaming.parity"
+)
+
+
+@pytest.fixture(scope="module")
+def parity_builds(spark, tmp_path_factory):
+    """Every parity query's first call, each building its replay into a
+    fresh catalog, with the build's scratch locations (the checkpoint
+    tmpfs and the temp dir) redirected to empty dirs. Returns the
+    catalog dir and, per query, the scratch entries and memory-sink
+    views left after its call."""
+    from trialstreamer_spark.streaming import parity
+
+    root = tmp_path_factory.mktemp("parity")
+    shm, tmp = root / "shm", root / "tmp"
+    shm.mkdir()
+    tmp.mkdir()
+    left = {}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_SIDECAR_DIR", str(root / "sc"))
+        mp.setattr(parity, "_TMPFS", str(shm), raising=False)
+        mp.setattr(tempfile, "tempdir", str(tmp))
+        for name in PARITY:
+            QUERIES[name](spark, SF).collect()
+            left[name] = (
+                sorted(os.listdir(shm)) + sorted(os.listdir(tmp)),
+                [
+                    t.name for t in spark.catalog.listTables()
+                    if t.isTemporary and t.name.startswith("parity_")
+                ],
+            )
+    return str(root / "sc"), left
+
+
+def test_parity_builds_leave_nothing_behind(parity_builds):
+    """A replay build removes its checkpoint, staged input and sink
+    table, and drops its memory-sink view, before the query returns."""
+    _catalog, left = parity_builds
+    assert len(left) == 13
+    leaks = {
+        name: (dirs, views) for name, (dirs, views) in left.items()
+        if views or [
+            d for d in dirs
+            if d.startswith(("ckpt_", "upsert_sink_", "parity_"))
+        ]
+    }
+    assert not leaks
+
+
+def test_restart_serves_parity_replays_from_disk(
+    spark, parity_builds, monkeypatch
+):
+    """A restarted session (fresh SparkSession, no in-memory entry for
+    the corpus) serves all 13 parity queries from the committed replay
+    sidecars — no streaming query starts — and each matches its DuckDB
+    oracle."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from tests.oracle_util import assert_matches
+    from trialstreamer_spark import util
+    from trialstreamer_spark.plans.all_queries import ORACLES
+
+    catalog, _left = parity_builds
+    monkeypatch.setenv("SPARK_GRAFT_SIDECAR_DIR", catalog)
+    util.evict_caches(SF)
+    assert not [k for k in util._PLAN_CACHE if util._key_references(k, SF)]
+
+    def no_stream(*a, **k):
+        raise AssertionError("a parity query started a stream after restart")
+
+    monkeypatch.setattr(DataStreamWriter, "start", no_stream)
+    s2 = spark.newSession()
+    for name in PARITY:
+        assert_matches(QUERIES[name](s2, SF), ORACLES[name], SF)

@@ -149,54 +149,25 @@ def _table_bytes(tables: Tables, name: str) -> int:
     return total
 
 
-def _annotations_version(tables: Tables) -> str:
-    """Catalog-level identity of the annotations table's CURRENT
-    contents: the ParquetTable committed version id for a versioned
-    warehouse, else a (size, mtime) fingerprint of the plain parquet.
-    Used to stamp the postings index with the table state it was built
-    from — no data is scanned."""
-    versioned = os.path.join(tables.root, "pubmed_annotations")
-    if os.path.exists(os.path.join(versioned, "_current")):
-        from trialstreamer_spark.operators.upsert import ParquetTable
-
-        return ParquetTable(tables.spark, versioned).current_version() or ""
-    path = os.path.join(tables.root, "pubmed_annotations.parquet")
-    parts = []
-    for dirpath, _dirs, files in os.walk(path):
-        for f in sorted(files):
-            full = os.path.join(dirpath, f)
-            try:
-                st = os.stat(full)
-            except OSError:
-                continue
-            parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    if not parts:  # bare file, not a directory
-        try:
-            st = os.stat(path)
-            parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-        except OSError:
-            pass
-    import hashlib
-
-    return hashlib.md5("|".join(parts).encode()).hexdigest()
-
-
-_POSTINGS_STAMP = "_source_version"
-
-
 def prepare_postings(tables: Tables) -> str:
     """Offline index build: explode the annotations into the sharded
-    postings layout (plans/postings.write_postings), stamping the
-    annotations version it was built from so a later merge/overwrite
-    can't silently serve a stale index (choose_search_path checks the
-    stamp). Idempotent per warehouse; returns the postings path."""
+    postings layout (plans/postings.write_postings), stamped with the
+    annotations version it was built from (sidecars.write_stamp) so a
+    later merge/overwrite can't silently serve a stale index
+    (choose_search_path checks the stamp). A current index is kept, not
+    rebuilt; returns the postings path."""
     from trialstreamer_spark.plans import postings as P
+    from trialstreamer_spark.sidecars import (
+        corpus_fingerprint,
+        stamp_current,
+        write_stamp,
+    )
 
     out = os.path.join(tables.root, POSTINGS_DIR)
-    version = _annotations_version(tables)
-    P.write_postings(P.build_postings(tables.t("pubmed_annotations")), out)
-    with open(os.path.join(out, _POSTINGS_STAMP), "w") as f:
-        f.write(version)
+    fp = corpus_fingerprint(tables.root, ("pubmed_annotations",))
+    if not stamp_current(out, fp):
+        P.write_postings(P.build_postings(tables.t("pubmed_annotations")), out)
+        write_stamp(out, fp)
     return out
 
 
@@ -204,21 +175,16 @@ def choose_search_path(
     tables: Tables, min_bytes: int = POSTINGS_MIN_BYTES
 ) -> str:
     """'scan' or 'postings', decided from catalog stats: the postings
-    path is chosen iff the index exists, carries a version stamp
-    matching the CURRENT annotations table (an unstamped or
-    stale-stamped index — e.g. after a merge/overwrite without a
-    prepare_postings rebuild — falls back to the always-correct scan),
-    AND the annotations table has outgrown the scan crossover. Never
-    scans data to decide."""
+    path is chosen iff the index carries a stamp matching the CURRENT
+    annotations table (a missing, unstamped or stale-stamped index —
+    e.g. after a merge/overwrite without a prepare_postings rebuild —
+    falls back to the always-correct scan), AND the annotations table
+    has outgrown the scan crossover. Never scans data to decide."""
+    from trialstreamer_spark.sidecars import corpus_fingerprint, stamp_current
+
     post_dir = os.path.join(tables.root, POSTINGS_DIR)
-    if not os.path.isdir(post_dir):
-        return "scan"
-    try:
-        with open(os.path.join(post_dir, _POSTINGS_STAMP)) as f:
-            stamp = f.read().strip()
-    except OSError:
-        return "scan"
-    if stamp != _annotations_version(tables):
+    fp = corpus_fingerprint(tables.root, ("pubmed_annotations",))
+    if not stamp_current(post_dir, fp):
         return "scan"
     if _table_bytes(tables, "pubmed_annotations") < min_bytes:
         return "scan"

@@ -288,6 +288,27 @@ def _bucket_table_name(sf_dir: str, variant: str) -> str:
     return f"ts_bkt_{h}_{variant}"
 
 
+def _bucket_layout(sf_dir: str, variant: str) -> tuple[str, str, tuple]:
+    """(dir, source fingerprint, memo key) of a bucket layout. The key
+    of its table handle names the warehouse dir (a layout built under
+    another dir is another artifact) and the source fingerprint (a
+    rewritten source is never served its old layout, even before
+    evict_caches runs)."""
+    from trialstreamer_spark.sidecars import corpus_fingerprint
+
+    base = os.path.abspath(os.environ.get(
+        "SPARK_GRAFT_BUCKET_DIR",
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     "spark-warehouse", "buckets"),
+    ))
+    fp = corpus_fingerprint(sf_dir, (BUCKET_SPECS[variant][0],))
+    return (
+        os.path.join(base, _bucket_table_name(sf_dir, variant)),
+        fp,
+        ("bucket", sf_dir, base, variant, fp),
+    )
+
+
 def prepare_buckets(
     spark: SparkSession, sf_dir: str, variants: tuple[str, ...] | None = None
 ) -> None:
@@ -296,8 +317,9 @@ def prepare_buckets(
     buckets before the write so every bucket is exactly one file —
     Spark's reader then exposes both the hash partitioning AND the
     per-bucket sort, letting later joins/groupBys on the key skip their
-    Exchange (and their Sort). Idempotent per (session, corpus): the
-    catalog registration is checked first.
+    Exchange (and their Sort). A layout is stamped with its source
+    table's fingerprint (sidecars.write_stamp) and rebuilt when that
+    fingerprint changes or the session catalog lacks the table.
 
     Every variant gets ``defaultParallelism`` buckets: one per task
     thread. Bucketed scans cannot split a bucket, so fewer buckets than
@@ -312,32 +334,30 @@ def prepare_buckets(
     the ``spark.sql.shuffle.partitions`` that session.get_spark sets, so
     a shuffled side joins a layout at its bucket count.
 
-    Each projection's table handle is a session-scoped ``util.memo``
-    entry, evicted with its corpus, and is deliberately NOT persisted
-    (see below)."""
-    base = os.environ.get(
-        "SPARK_GRAFT_BUCKET_DIR",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                     "spark-warehouse", "buckets"),
-    )
+    Each projection's table handle is the session-scoped ``util.memo``
+    entry that ``bucketed_table`` serves, evicted with its corpus, and
+    is deliberately NOT persisted (see below)."""
+    from trialstreamer_spark.sidecars import stamp_current, write_stamp
+
     n_buckets = spark.sparkContext.defaultParallelism
     for variant in variants or tuple(BUCKET_SPECS):
         spec = BUCKET_SPECS[variant]
         src, key, cols = spec[0], spec[1], spec[2]
         sort_cols = spec[3] if len(spec) > 3 else (key,)
         name = _bucket_table_name(sf_dir, variant)
-        if not spark.catalog.tableExists(name):
-            df = load(spark, sf_dir, src).select(*cols)
+        path, fp, mkey = _bucket_layout(sf_dir, variant)
+        if not (spark.catalog.tableExists(name) and stamp_current(path, fp)):
             (
-                df.repartition(n_buckets, F.col(key))
+                load(spark, sf_dir, src)
+                .select(*cols)
+                .repartition(n_buckets, F.col(key))
                 .write.mode("overwrite")
                 .bucketBy(n_buckets, key)
                 .sortBy(*sort_cols)
-                .option("path", os.path.join(base, name))
+                .option("path", path)
                 .saveAsTable(name)
             )
-        # base rides the key so a layout rebuilt under a different
-        # warehouse dir (tests) is re-registered, not served stale.
+            write_stamp(path, fp)
         # NOT persisted (round-10 change, measured): InMemoryRelation
         # preserves the bucket HashPartitioning but DROPS the per-bucket
         # sort order, so every merge join over the cached copy re-sorted
@@ -347,24 +367,18 @@ def prepare_buckets(
         # nation_market_share 4.2→2.7 s from un-persisting alone; even
         # at sf0.1 the no-persist set measured faster (4.93→4.44 s over
         # the 12 TPC-H analogs) — the OS page cache covers the re-read.
-        util.memo(
-            ("bucket", sf_dir, os.path.abspath(base), variant),
-            lambda: spark.table(name),
-            spark=spark,
-        )
+        util.memo(mkey, lambda: spark.table(name), spark=spark)
 
 
 def bucketed_table(
     spark: SparkSession, sf_dir: str, variant: str
 ) -> DataFrame | None:
-    """The prepared bucket projection for this corpus, or None when the
-    layout hasn't been built in this session's catalog — callers fall
-    back to the plain parquet scan (identical rows either way; the same
-    catalog-driven path choice as api.engine.choose_search_path)."""
-    name = _bucket_table_name(sf_dir, variant)
-    if not spark.catalog.tableExists(name):
-        return None
-    return spark.table(name)
+    """The prepared bucket projection for this corpus version, or None
+    when prepare_buckets has not laid it out for this session since the
+    source last changed — callers fall back to the plain parquet scan
+    (identical rows either way; the same stamp-driven path choice as
+    api.engine.choose_search_path)."""
+    return util.peek(spark, _bucket_layout(sf_dir, variant)[2])
 
 
 def export_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -408,21 +408,19 @@ def doc_token_postings(spark: SparkSession, sf_dir: str) -> str:
     term lookup opens only its shard directories (PartitionFilters), one
     sorted file per shard. Stamped with the corpus fingerprint — same
     staleness contract as every disk sidecar."""
-    import os
-
     from trialstreamer_spark.operators.textstats import tokens_col
     from trialstreamer_spark.plans.postings import cui_shard_col
-    from trialstreamer_spark.sidecars import corpus_fingerprint, sidecar_path
+    from trialstreamer_spark.sidecars import (
+        corpus_fingerprint,
+        sidecar_path,
+        stamp_current,
+        write_stamp,
+    )
 
     path = sidecar_path(sf_dir, "doc_tok_postings")
-    stamp = os.path.join(path, "_corpus_fp")
     fp = corpus_fingerprint(sf_dir)
-    try:
-        with open(stamp) as f:
-            if f.read().strip() == fp:
-                return path
-    except OSError:
-        pass
+    if stamp_current(path, fp):
+        return path
     d = load(spark, sf_dir, "documents")
     post = (
         d.where(F.col("text").isNotNull())
@@ -440,10 +438,7 @@ def doc_token_postings(spark: SparkSession, sf_dir: str) -> str:
         .mode("overwrite")
         .parquet(path)
     )
-    tmp = stamp + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(fp)
-    os.replace(tmp, stamp)
+    write_stamp(path, fp)
     return path
 
 

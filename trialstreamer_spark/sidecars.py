@@ -1,28 +1,31 @@
-"""The per-corpus sidecar catalog: disk-backed featurizations that
-survive a session restart, and the one ordered list of prepare hooks
-that builds the catalog (``prepare_hooks``).
+"""The per-corpus artifact lifecycle: build once per source version,
+stamp, find by the stamp (in a later session too), rebuild when stale.
+One fingerprint (``corpus_fingerprint``) and one stamp
+(``stamp_current`` / ``write_stamp``) serve every artifact with an
+on-disk life: the catalog sidecars below (featurizations, stream
+replays, token postings), the PICO postings index
+(api.engine.prepare_postings) and the bucket layouts
+(io.prepare_buckets). ``prepare_hooks`` is the one ordered list of
+hooks that builds them.
 
-In-memory caching is ``util.memo`` / ``util.cached_plan`` alone; this
-module promotes a sidecar to a VERSIONED PARQUET table
+A catalog sidecar is a VERSIONED PARQUET table
 (operators/upsert.ParquetTable — write-new-then-swap, committed-pointer
-reads) stamped with a fingerprint of the corpus tables it was built
-from, and fronts it with a session-persisted ``util.cached_plan`` entry
+reads) fronted by a session-persisted ``util.cached_plan`` entry
 (``disk_cached_plan``):
 
 - build path: compute once, write, stamp — the Delta/Iceberg "derived
   table" a real cluster would maintain;
 - restart path: a fresh SparkSession whose stamp matches reads the
   parquet directly — NO re-featurization job touches the corpus;
-- staleness: any corpus rewrite (ParquetTable version bump, file
-  replacement) changes the fingerprint, so the stale sidecar is
-  rebuilt on next access instead of silently served (the same
-  stamp-check contract as api.engine.choose_search_path's postings
-  stamp); the version bump also evicts the in-memory entry
-  (util.evict_caches).
+- staleness: any source rewrite (ParquetTable version bump, file
+  replacement) changes the fingerprint, so the stale artifact is
+  rebuilt on next access instead of silently served; the version bump
+  also evicts the in-memory entry (util.evict_caches).
 
 Layout: $SPARK_GRAFT_SIDECAR_DIR (default <repo>/spark-warehouse/
-sidecars)/<md5(corpus dir)[:8]>_<name>/ as a ParquetTable, with a
-``_corpus_fp`` stamp file beside the version dirs.
+sidecars)/<md5(corpus dir)[:8]>_<name>/ as a ParquetTable. Every stamp
+is a ``_corpus_fp`` file inside its artifact's directory (a name
+Spark's file listing skips).
 """
 
 from __future__ import annotations
@@ -32,16 +35,30 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+#: Stamp file name inside every stamped artifact's directory.
+STAMP = "_corpus_fp"
+
 
 def corpus_fingerprint(
-    sf_dir: str, tables: tuple[str, ...] = ("documents",)
+    root: str, tables: tuple[str, ...] = ("documents",)
 ) -> str:
-    """Catalog-level identity of the source tables' current contents:
-    (name, size, mtime_ns) per data file, hashed. No data is scanned —
-    the same statistics a lakehouse catalog exposes as snapshot ids."""
+    """Catalog-level identity of the source tables' current contents,
+    hashed; no data is scanned — the same statistics a lakehouse
+    catalog exposes as snapshot ids. A table is a ParquetTable dir
+    ``<root>/<t>/`` (its committed version id and pointer mtime) or a
+    plain ``<root>/<t>.parquet`` file or dir (name, size, mtime_ns per
+    data file); a missing table contributes nothing."""
     parts: list[str] = []
     for t in tables:
-        path = os.path.join(sf_dir, f"{t}.parquet")
+        pointer = os.path.join(root, t, "_current")
+        try:
+            with open(pointer) as f:
+                version = f.read().strip()
+            parts.append(f"{t}@{version}:{os.stat(pointer).st_mtime_ns}")
+            continue
+        except OSError:
+            pass
+        path = os.path.join(root, f"{t}.parquet")
         if os.path.isfile(path):
             try:
                 st = os.stat(path)
@@ -57,6 +74,27 @@ def corpus_fingerprint(
                     continue
                 parts.append(f"{t}/{f}:{st.st_size}:{st.st_mtime_ns}")
     return hashlib.md5("|".join(parts).encode()).hexdigest()
+
+
+def stamp_current(path: str, fp: str) -> bool:
+    """True when the artifact at ``path`` carries the stamp ``fp``: it
+    was built, completely, from the source state ``fp`` names. An
+    unstamped artifact is stale."""
+    try:
+        with open(os.path.join(path, STAMP)) as f:
+            return f.read().strip() == fp
+    except OSError:
+        return False
+
+
+def write_stamp(path: str, fp: str) -> None:
+    """Stamp the artifact just built at ``path`` with ``fp``
+    (tmp-then-rename: a crash mid-build or mid-stamp leaves the old or
+    no stamp, so the next access rebuilds)."""
+    stamp = os.path.join(path, STAMP)
+    with open(stamp + ".tmp", "w") as f:
+        f.write(fp)
+    os.replace(stamp + ".tmp", stamp)
 
 
 def catalog_base() -> str:
@@ -128,22 +166,11 @@ def disk_sidecar(
     in-memory per session for hot paths)."""
     from trialstreamer_spark.operators.upsert import ParquetTable
 
-    d = sidecar_path(sf_dir, name)
-    table = ParquetTable(spark, d, gc_min_age_s=0.0)
+    table = ParquetTable(spark, sidecar_path(sf_dir, name), gc_min_age_s=0.0)
     fp = corpus_fingerprint(sf_dir, source_tables)
-    stamp = os.path.join(d, "_corpus_fp")
-    if table.current_version() is not None:
-        try:
-            with open(stamp) as f:
-                if f.read().strip() == fp:
-                    return table.read()
-        except OSError:
-            pass
-    table.overwrite(builder())
-    tmp = stamp + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(fp)
-    os.replace(tmp, stamp)
+    if not stamp_current(table.path, fp):
+        table.overwrite(builder())
+        write_stamp(table.path, fp)
     return table.read()
 
 

@@ -4,13 +4,15 @@
 - ``ordered_small``: total order for a dimension-sized frame without a
   range exchange;
 - ``memo`` / ``cached_plan`` / ``materialize_plan``: the only in-memory
-  cache. ``memo`` stores any per-corpus artifact (in-process
-  statistics, completed stream replays, table handles); ``cached_plan``
-  is ``memo`` with a session-scoped key and a lazily persisted
-  DataFrame. One store, one key shape (``_plan_key``), one eviction
-  rule: ``evict_caches(path)``, which every ParquetTable version bump
-  calls, drops and releases every entry whose key names that path.
-  Disk-backed sidecars front this cache through
+  cache. ``memo`` stores any per-corpus value (in-process statistics,
+  table handles); ``cached_plan`` is ``memo`` with a session-scoped key
+  and a lazily persisted DataFrame. One store, one key shape
+  (``_plan_key``), one eviction rule: ``evict_caches(path)``, which
+  every ParquetTable version bump calls, drops every entry whose key
+  names that path and unpersists the ones that are persisted. No entry
+  owns files or views: artifacts with an on-disk life (sidecars, stream
+  replays, postings, bucket layouts) follow the ``sidecars`` lifecycle,
+  and disk-backed sidecars front this cache through
   ``sidecars.disk_cached_plan``.
 
 Shipping the package to Python workers is ``dist.ship_package``.
@@ -80,34 +82,32 @@ def ordered_small(df, *cols):
     return df.coalesce(1).sortWithinPartitions(*cols)
 
 
-# key → (value, release): THE in-memory cache. Persisted plan subtrees,
-# in-process corpus statistics and completed stream replays are all
-# entries here, so evict_caches is the one invalidation path.
-_PLAN_CACHE: dict[tuple, tuple] = {}
+# key → value: THE in-memory cache. Persisted plan subtrees and
+# in-process corpus statistics are all entries here, so evict_caches is
+# the one invalidation path.
+_PLAN_CACHE: dict[tuple, object] = {}
 
 
-def memo(key: tuple, build, *, spark: SparkSession | None = None, release=None):
+def memo(key: tuple, build, *, spark: SparkSession | None = None):
     """The value cached under ``key``; on a miss, ``build()`` runs once
     and its result is stored as is.
 
     With ``spark`` the entry is session-scoped (see _plan_key); without
     it, it is shared by every session. Any string element of the key
     that names a path ties the entry to that path's lifecycle
-    (evict_caches). On eviction ``release(value)`` runs, or, with no
-    ``release``, ``value.unpersist()`` when the value has one."""
+    (evict_caches), which calls ``value.unpersist()`` when the value has
+    one."""
     if spark is not None:
         key = _plan_key(spark, key)
-    hit = _PLAN_CACHE.get(key)
-    if hit is None:
-        hit = _PLAN_CACHE[key] = (build(), release)
-    return hit[0]
+    if key not in _PLAN_CACHE:
+        _PLAN_CACHE[key] = build()
+    return _PLAN_CACHE[key]
 
 
 def peek(spark: SparkSession, key: tuple):
     """The session-scoped value cached under ``key`` (as cached_plan
     registers it), or None on a miss; nothing is built."""
-    hit = _PLAN_CACHE.get(_plan_key(spark, key))
-    return hit[0] if hit is not None else None
+    return _PLAN_CACHE.get(_plan_key(spark, key))
 
 
 def cached_plan(spark: SparkSession, key: tuple, builder):
@@ -160,17 +160,15 @@ def _key_references(key: tuple, token: str) -> bool:
 
 def evict_caches(token: str) -> None:
     """Cache lifecycle hook: drop every cache entry whose key references
-    ``token`` (a ParquetTable path or corpus dir), releasing its value.
-    Called on every ParquetTable version bump so a long-lived engine
+    ``token`` (a ParquetTable path or corpus dir), unpersisting its
+    value. Called on every ParquetTable version bump so a long-lived engine
     crossing corpus versions doesn't accumulate pinned DataFrames —
     stale persisted plans are unpersisted (storage memory released) and
     the next query rebuilds from the new version."""
     for k in [k for k in _PLAN_CACHE if _key_references(k, token)]:
-        value, release = _PLAN_CACHE.pop(k)
+        value = _PLAN_CACHE.pop(k)
         try:
-            if release is not None:
-                release(value)
-            elif callable(getattr(value, "unpersist", None)):
+            if callable(getattr(value, "unpersist", None)):
                 value.unpersist()
         except Exception:
             pass
