@@ -172,6 +172,59 @@ def test_source_rewrite_rebuilds_bucket_layout(spark, monkeypatch, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {io._bucket_table_name(sf, v)}")
 
 
+def test_current_layouts_are_registered_not_rewritten(
+    spark, monkeypatch, tmp_path
+):
+    """A new JVM starts with an empty session catalog while the layouts
+    on disk are still current (simulated here: DROP TABLE keeps an
+    external table's files, evict_caches drops the handles).
+    prepare_buckets registers the existing files in place instead of
+    rewriting them; the registered layouts serve the bucketed plan, join
+    bucket-to-bucket, and match the oracle."""
+    from tests.oracle_util import assert_matches
+    from trialstreamer_spark import io, util
+    from trialstreamer_spark.plans.all_queries import ORACLES, QUERIES
+
+    monkeypatch.setenv("SPARK_GRAFT_BUCKET_DIR", str(tmp_path))
+    names = [io._bucket_table_name(SF_DIR, v) for v in io.BUCKET_SPECS]
+
+    def layout_files():
+        return {
+            (name, f): os.stat(tmp_path / name / f).st_mtime_ns
+            for name in names
+            for f in os.listdir(tmp_path / name)
+        }
+
+    def drop():
+        for name in names:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+    drop()
+    try:
+        io.prepare_buckets(spark, SF_DIR)
+        written = layout_files()
+        drop()
+        util.evict_caches(SF_DIR)
+        assert io.bucketed_table(spark, SF_DIR, "orders_by_orderkey") is None
+        io.prepare_buckets(spark, SF_DIR)
+        assert layout_files() == written
+        for variant in io.BUCKET_SPECS:
+            assert io.bucketed_table(spark, SF_DIR, variant) is not None
+        df = QUERIES["regional_revenue"](spark, SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ts_bkt_" in plan
+        # bucket-to-bucket: the merge join's inputs are the two bucketed
+        # scans, with no shuffle and no sort on the key
+        assert "SortMergeJoin [l_orderkey" in plan, plan
+        for key in ("l_orderkey", "o_orderkey"):
+            assert f"hashpartitioning({key}" not in plan, plan
+            assert f"Sort [{key}" not in plan, plan
+        assert_matches(df, ORACLES["regional_revenue"], SF_DIR)
+    finally:
+        util.evict_caches(SF_DIR)
+        drop()
+
+
 class TestFactBucketLayout:
     """Round-6: the TPC-H fact-fact plans choose the prepared bucketed
     layout (io.prepare_buckets) and run their joins without any shuffle

@@ -45,15 +45,17 @@ def test_version_bump_evicts_cached_plan_and_releases_storage(spark, table):
     assert not df.storageLevel.useMemory, "storage memory not released"
 
 
-def test_version_bump_evicts_module_caches(spark, table):
+def test_version_bump_evicts_module_caches(spark, table, monkeypatch, tmp_path):
     from trialstreamer_spark.operators import dedup
 
+    monkeypatch.setenv("SPARK_GRAFT_SIDECAR_DIR", str(tmp_path / "sc"))
     corpus_dir = os.path.dirname(table.path)
     docs = spark.range(4).select(
         F.col("id").alias("doc_id"), F.lit("alpha beta gamma delta").alias("text")
     )
+    docs.write.parquet(os.path.join(corpus_dir, "documents.parquet"))
 
-    post = dedup.shingle_postings(docs, cache_key=corpus_dir)
+    post = dedup.shingle_postings(spark, corpus_dir)
     post_key = util._plan_key(spark, ("shingle_postings", corpus_dir))
     assert post_key in util._PLAN_CACHE
     # IVF centroids are util.memo entries keyed by corpus dir

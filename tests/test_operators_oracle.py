@@ -3,6 +3,8 @@ plus semantic sanity checks that don't depend on the oracle."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 import trialstreamer_spark.operators.dedup as dedup
@@ -46,19 +48,22 @@ def test_operator_matches_oracle(spark, sf_dir, name):
     assert_matches(QUERIES[name](spark, sf_dir), ORACLES[name], sf_dir)
 
 
-def test_jaccard_df_cap_bounds_hot_shingles(spark):
+def test_jaccard_df_cap_bounds_hot_shingles(spark, tmp_path, monkeypatch):
     """A boilerplate shingle shared by N documents emits C(N,2) join rows
-    uncapped; with df_cap the hot shingle is pruned before the self-join
-    so the pair count stays bounded regardless of N — the property that
-    keeps the postings join from going quadratic at 100 TB."""
+    uncapped; with df_cap the hot shingle is pruned before pairing (the
+    capped_doc_lists sidecar's df filter, the prune every capped query
+    runs) so the pair count stays bounded regardless of N — the property
+    that keeps the postings join from going quadratic at 100 TB."""
+    monkeypatch.setenv("SPARK_GRAFT_SIDECAR_DIR", str(tmp_path / "sc"))
+    corpus = str(tmp_path / "corpus")
     n = 200
-    docs = spark.createDataFrame(
+    spark.createDataFrame(
         [(i, f"alpha beta gamma u{i} v{i} w{i}") for i in range(n)],
         "doc_id long, text string",
-    )
-    uncapped = dedup.jaccard_pairs(docs).count()
+    ).coalesce(1).write.parquet(os.path.join(corpus, "documents.parquet"))
+    uncapped = dedup.jaccard_pairs(spark, corpus).count()
     assert uncapped == n * (n - 1) // 2  # every pair shares 'alpha beta gamma'
-    capped = dedup.jaccard_pairs(docs, df_cap=5).count()
+    capped = dedup.jaccard_pairs(spark, corpus, df_cap=5).count()
     assert capped == 0  # hot shingle pruned; remaining shingles are unique
 
 
@@ -67,13 +72,13 @@ def test_minhash_candidates_superset_of_high_jaccard(spark, sf_dir):
     with jaccard >= 0.9 must appear in the candidate set (probabilistic
     bound ~1-(1-.9^2)^4 = 99.97%; deterministic here since the corpus is
     fixed)."""
-    d = load(spark, sf_dir, "documents")
     high = {
         (r.doc_a, r.doc_b)
-        for r in dedup.jaccard_pairs(d, threshold=0.9).collect()
+        for r in dedup.jaccard_pairs(spark, sf_dir, threshold=0.9).collect()
     }
     cands = {
-        (r.doc_a, r.doc_b) for r in dedup.minhash_candidates(d).collect()
+        (r.doc_a, r.doc_b)
+        for r in dedup.minhash_candidates(spark, sf_dir).collect()
     }
     assert high <= cands
 

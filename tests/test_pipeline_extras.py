@@ -3,6 +3,8 @@ operators vs DuckDB oracle (sf0.001), plus handcrafted semantic checks."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 import trialstreamer_spark.operators.clustering  # noqa: F401
@@ -125,18 +127,22 @@ def test_sample_stratified_is_pure(spark, sf_dir):
         assert 0 < row.n_sampled < row.n_total  # cutoffs neither 0% nor 100%
 
 
-def test_bm25_tf_monotone(spark):
+def test_bm25_tf_monotone(spark, tmp_path):
     """With equal document length, more query-term occurrences ⇒ strictly
     higher score; a doc without any term is absent."""
-    docs = spark.createDataFrame(
+    corpus = str(tmp_path / "corpus")
+    spark.createDataFrame(
         [
             (1, "table x y z q w"),
             (2, "table table y z q w"),
             (3, "u v w x y z"),
         ],
         "doc_id long, text string",
-    )
-    got = {r.doc_id: r.score_fp for r in retrieval.bm25_scores(docs, ("table",)).collect()}
+    ).coalesce(1).write.parquet(os.path.join(corpus, "documents.parquet"))
+    got = {
+        r.doc_id: r.score_fp
+        for r in retrieval.bm25_scores(spark, corpus, ("table",)).collect()
+    }
     assert set(got) == {1, 2}
     assert got[2] > got[1]
 

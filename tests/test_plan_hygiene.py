@@ -198,9 +198,55 @@ def test_sf_dim_join_strategy_is_size_dependent(spark, sf_dir):
         conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
 
 
-def test_shingle_projection_above_exchange(spark, sf_dir):
-    sh = dedup.shingle_postings(load(spark, sf_dir, "documents"))
-    p = plan_of(sh)
+def test_sf_dim_leg_count_is_keyed_by_its_source(spark, tmp_path):
+    """The measured rows of an SF-scaled dim leg (relational._sf_dim's
+    counted branch) belong to the leg's input files: two same-schema
+    corpora whose customer tables differ in rows each get their own
+    count, although their unwarmed plan strings are identical."""
+    import pyarrow.parquet as pq
+
+    from tests.conftest import SF_DIR
+    from trialstreamer_spark import util
+    from trialstreamer_spark.plans.relational import _sf_dim
+
+    cust = pq.read_table(os.path.join(SF_DIR, "customer.parquet"))
+    corpora = {}
+    for name, n in (("small", 40), ("large", 80)):
+        corpus = tmp_path / name
+        corpus.mkdir()
+        pq.write_table(cust.slice(0, n), str(corpus / "customer.parquet"))
+        corpora[str(corpus)] = n
+    conf = spark.conf
+    old = conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        # a 16-byte cap: every leaf scan is over it, so each leg is counted
+        conf.set("spark.sql.autoBroadcastJoinThreshold", "16")
+        for corpus, n in corpora.items():
+            leg = load(spark, corpus, "customer").select("c_custkey", "c_nationkey")
+            _sf_dim(leg)
+            counts = [
+                v for k, v in util._PLAN_CACHE.items()
+                if "dim_leg_rows" in k and any(corpus in str(el) for el in k)
+            ]
+            assert counts == [n], (corpus, counts)
+    finally:
+        conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        for corpus in corpora:
+            util.evict_caches(corpus)
+
+
+def test_shingle_projection_above_exchange(spark, sf_dir, monkeypatch):
+    # the plan that builds the shingle_postings sidecar, captured before
+    # any write or cache
+    built = {}
+
+    def capture(spark, sf_dir, name, builder, **kw):
+        built[name] = builder()
+        return built[name]
+
+    monkeypatch.setattr(dedup, "disk_cached_plan", capture)
+    dedup.shingle_postings(spark, sf_dir)
+    p = plan_of(built["shingle_postings"])
     # the scan must NOT evaluate the shingle expression (the DataFilters
     # regression): regexp machinery appears only above the exchange
     scan_part = p.split("Exchange")[-1]  # text below/incl. last Exchange
@@ -347,7 +393,7 @@ def test_erasure_manifest_reads_materialized_featurizations(spark, sf_dir):
     # build both sidecars first (prepare_curation/prepare_dedup analog)
     from trialstreamer_spark.operators.dedup import shingle_postings
 
-    shingle_postings(load(spark, sf_dir, "documents"), cache_key=sf_dir)
+    shingle_postings(spark, sf_dir)
     p = plan_of(QUERIES["erasure_manifest"](spark, sf_dir))
     assert p.count("InMemoryTableScan") >= 2, p
 
@@ -505,7 +551,6 @@ def test_degree_histogram_reuses_candidate_pairs(spark, sf_dir):
     the cache is warm)."""
     from trialstreamer_spark.operators.dedup import minhash_candidates
 
-    d = load(spark, sf_dir, "documents")
-    minhash_candidates(d, cache_key=sf_dir).count()  # warm the cache
+    minhash_candidates(spark, sf_dir).count()  # warm the cache
     p = plan_of(QUERIES["dup_graph_degree_histogram"](spark, sf_dir))
     assert "InMemoryTableScan" in p or "TableCacheQueryStage" in p

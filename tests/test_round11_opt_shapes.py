@@ -58,7 +58,7 @@ def test_degree_histogram_conserves_docs_and_endpoints(spark):
 
     d = load(spark, SF, "documents")
     n_docs = d.count()
-    n_pairs = minhash_candidates(d, cache_key=SF).count()
+    n_pairs = minhash_candidates(spark, SF).count()
     rows = QUERIES["dup_graph_degree_histogram"](spark, SF).collect()
     assert sum(r.n_docs for r in rows) == n_docs
     assert sum(r.n_endpoints for r in rows) == 2 * n_pairs

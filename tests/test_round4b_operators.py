@@ -125,16 +125,14 @@ def test_ivfpq_adc_agrees_with_codes_and_lut(spark, sf_dir):
     numpy recomputation from pq_codes + the ADC LUT."""
     import numpy as np
 
-    from trialstreamer_spark.io import load
     from trialstreamer_spark.operators.clustering import (
         _adc_lut,
         seed_centroids,
     )
     from trialstreamer_spark.operators.similarity import _query_vector
 
-    e = load(spark, sf_dir, "embeddings")
-    qvec = _query_vector(e, 0, "vec_id", "embedding")
-    lut = _adc_lut(qvec, seed_centroids(e, k=PQ_K))
+    qvec = _query_vector(spark, sf_dir, 0)
+    lut = _adc_lut(qvec, seed_centroids(spark, sf_dir, k=PQ_K))
     codes = {
         r.vec_id: [r[f"code_{s}"] for s in range(PQ_M)]
         for r in QUERIES["pq_codes"](spark, sf_dir).collect()
@@ -154,15 +152,13 @@ def test_ivfpq_adc_agrees_with_codes_and_lut(spark, sf_dir):
 
 
 def test_ivfpq_candidates_come_only_from_probed_cells(spark, sf_dir):
-    from trialstreamer_spark.io import load
     from trialstreamer_spark.operators.similarity import (
         _query_vector,
         ivf_centroids,
         ivf_probe_cells,
     )
 
-    e = load(spark, sf_dir, "embeddings")
-    qvec = _query_vector(e, 0, "vec_id", "embedding")
+    qvec = _query_vector(spark, sf_dir, 0)
     cells = set(ivf_probe_cells(ivf_centroids(spark, sf_dir), qvec, nprobe=2))
     for r in QUERIES["ivfpq_topk"](spark, sf_dir).collect():
         assert r.label in cells
@@ -591,12 +587,10 @@ def test_ngram_novelty_score_invariants(spark, sf_dir):
         assert 0 <= r.n_novel <= r.n_shingles
         assert 0.0 <= r.novelty_frac <= 1.0
     # every shingle has exactly one first occurrence: totals agree
-    from trialstreamer_spark.io import load
     from trialstreamer_spark.operators.dedup import shingle_postings
 
     n_distinct_shingles = (
-        shingle_postings(load(spark, sf_dir, "documents"))
-        .select("shingle").distinct().count()
+        shingle_postings(spark, sf_dir).select("shingle").distinct().count()
     )
     assert sum(r.n_novel for r in rows) == n_distinct_shingles
 

@@ -17,8 +17,6 @@ import os
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from trialstreamer_spark import sidecars
 from trialstreamer_spark.plans.all_queries import QUERIES
 
@@ -138,12 +136,7 @@ def test_version_bump_evicts_bucket_and_pair_caches(spark, monkeypatch, tmp_path
         return [k for k in util._PLAN_CACHE if tag in k and SF in str(k)]
 
     assert io.bucketed_table(spark, SF, "orders_by_orderkey") is not None
-    d = (
-        spark.range(4)
-        .select(F.col("id").alias("doc_id"),
-                F.lit("alpha beta gamma delta epsilon").alias("text"))
-    )
-    pairs = dedup.minhash_candidates(d, cache_key=SF)
+    pairs = dedup.minhash_candidates(spark, SF)
     assert entries("minhash_pairs_doc_id_text")
 
     util.evict_caches(SF)

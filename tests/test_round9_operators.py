@@ -26,7 +26,7 @@ def test_mips_ivf_results_come_from_probed_cells_and_rank_exactly(
     e = load(spark, sf_dir, "embeddings")
     cents = similarity.ivf_centroids(spark, sf_dir)
     _m2, caugs = similarity.mips_aug_cells(spark, sf_dir)
-    qv = similarity._query_vector(e, 0, "vec_id", "embedding", cache_key=sf_dir)
+    qv = similarity._query_vector(spark, sf_dir, 0)
     cells = set(similarity.mips_probe_cells(cents, caugs, qv, nprobe=2))
     got = QUERIES["mips_ivf_topk"](spark, sf_dir).collect()
     assert len(got) == 10
@@ -83,7 +83,7 @@ def test_mips_recall_curve_is_monotone_and_reaches_exact_at_full_probe(
     e = load(spark, sf_dir, "embeddings")
     cents = similarity.ivf_centroids(spark, sf_dir)
     _m2, caugs = similarity.mips_aug_cells(spark, sf_dir)
-    qv = similarity._query_vector(e, 0, "vec_id", "embedding", cache_key=sf_dir)
+    qv = similarity._query_vector(spark, sf_dir, 0)
     all_cells = similarity.mips_probe_cells(cents, caugs, qv, nprobe=len(cents))
     assert sorted(all_cells) == sorted(lbl for lbl, _ in cents)
     exact = [

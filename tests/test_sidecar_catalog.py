@@ -183,6 +183,62 @@ def test_restart_serves_promoted_finals_from_disk(spark, sidecar_dir, monkeypatc
         == sorted(map(tuple, first_knn))
 
 
+def test_restart_rebuilds_nothing_current(spark, tmp_path, monkeypatch):
+    """A restart whose artifacts are all current builds none of them:
+    every prepare hook runs on a tmp corpus, then a fresh session with
+    the in-memory store cleared and the bucket tables dropped (a new
+    JVM's empty catalog) runs them again. The second run commits no
+    sidecar version and rewrites no sidecar or bucket file, and no
+    build-only intermediate is registered."""
+    from trialstreamer_spark import io, util
+    from trialstreamer_spark.io import TABLES
+
+    corpus = str(tmp_path / "corpus")
+    os.makedirs(corpus)
+    for t in TABLES:
+        shutil.copyfile(
+            os.path.join(SF, f"{t}.parquet"),
+            os.path.join(corpus, f"{t}.parquet"),
+        )
+    catalog, buckets = tmp_path / "sc", tmp_path / "bkt"
+    monkeypatch.setenv("SPARK_GRAFT_SIDECAR_DIR", str(catalog))
+    monkeypatch.setenv("SPARK_GRAFT_BUCKET_DIR", str(buckets))
+
+    def files(root):
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _dirs, names in os.walk(root)
+            for f in names
+        }
+
+    def drop_bucket_tables():
+        for v in io.BUCKET_SPECS:
+            spark.sql(f"DROP TABLE IF EXISTS {io._bucket_table_name(corpus, v)}")
+
+    try:
+        for hook in sidecars.prepare_hooks():
+            hook(spark, corpus)
+        built = files(catalog), files(buckets)
+        assert built[0] and built[1]
+
+        util.evict_caches(corpus)
+        drop_bucket_tables()
+        s2 = spark.newSession()
+        for hook in sidecars.prepare_hooks():
+            hook(s2, corpus)
+
+        assert files(catalog) == built[0]
+        assert files(buckets) == built[1]
+        intermediates = ("winnow_postings", "winnow_fp_lists", "span_source_sets")
+        assert not [
+            k for k in util._PLAN_CACHE
+            if any(name in k for name in intermediates)
+        ]
+    finally:
+        util.evict_caches(corpus)
+        drop_bucket_tables()
+
+
 PARITY = sorted(
     name for name, fn in QUERIES.items()
     if fn.__module__ == "trialstreamer_spark.streaming.parity"

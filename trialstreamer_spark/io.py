@@ -332,7 +332,15 @@ def prepare_buckets(
     buckets ≈ target parallelism. All layouts of one session share the
     count, so bucket-to-bucket joins need no exchange; it also equals
     the ``spark.sql.shuffle.partitions`` that session.get_spark sets, so
-    a shuffled side joins a layout at its bucket count.
+    a shuffled side joins a layout at its bucket count. The count is
+    part of the stamp: a session with another parallelism rewrites.
+
+    A layout whose stamp is current is never rewritten. The session
+    catalog lives in the JVM, so a new JVM (or a dropped table) finds
+    the files without their table: they are registered in place, as an
+    external table with the layout's columns, bucketing and sort
+    (metadata only, no job). Spark reads such a table exactly like the
+    one ``saveAsTable`` made, bucket-to-bucket joins included.
 
     Each projection's table handle is the session-scoped ``util.memo``
     entry that ``bucketed_table`` serves, evicted with its corpus, and
@@ -346,18 +354,31 @@ def prepare_buckets(
         sort_cols = spec[3] if len(spec) > 3 else (key,)
         name = _bucket_table_name(sf_dir, variant)
         path, fp, mkey = _bucket_layout(sf_dir, variant)
-        if not (spark.catalog.tableExists(name) and stamp_current(path, fp)):
+        stamp = f"{fp}:{n_buckets}"
+        layout = load(spark, sf_dir, src).select(*cols)
+        if not stamp_current(path, stamp):
             (
-                load(spark, sf_dir, src)
-                .select(*cols)
-                .repartition(n_buckets, F.col(key))
+                layout.repartition(n_buckets, F.col(key))
                 .write.mode("overwrite")
                 .bucketBy(n_buckets, key)
                 .sortBy(*sort_cols)
                 .option("path", path)
                 .saveAsTable(name)
             )
-            write_stamp(path, fp)
+            write_stamp(path, stamp)
+        elif util.peek(spark, mkey) is None or not spark.catalog.tableExists(
+            name
+        ):
+            ddl = ", ".join(
+                f"`{f.name}` {f.dataType.simpleString()}"
+                for f in layout.schema
+            )
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            spark.sql(
+                f"CREATE TABLE {name} ({ddl}) USING parquet"
+                f" CLUSTERED BY ({key}) SORTED BY ({', '.join(sort_cols)})"
+                f" INTO {n_buckets} BUCKETS LOCATION '{path}'"
+            )
         # NOT persisted (round-10 change, measured): InMemoryRelation
         # preserves the bucket HashPartitioning but DROPS the per-bucket
         # sort order, so every merge join over the cached copy re-sorted

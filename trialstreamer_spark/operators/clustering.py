@@ -43,7 +43,7 @@ _ASSIGN_TYPE = StructType(
 
 
 def seed_centroids(
-    e: DataFrame, k: int = K_CLUSTERS, cache_key: str | None = None
+    spark: SparkSession, sf_dir: str, k: int = K_CLUSTERS
 ) -> np.ndarray:
     """Deterministic init: the k vectors with the smallest vec_id (the
     k-means++ of a reproducible pipeline is any pure function of the
@@ -55,16 +55,15 @@ def seed_centroids(
 
     def build() -> np.ndarray:
         rows = (
-            e.filter(F.col("vec_id") < k)
+            load(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") < k)
             .select("vec_id", "embedding")
             .orderBy("vec_id")
             .collect()
         )
         return np.stack([np.asarray(r.embedding, dtype=np.float64) for r in rows])
 
-    if cache_key is None:
-        return build()
-    return util.memo(("seed_centroids", cache_key, k), build)
+    return util.memo(("seed_centroids", sf_dir, k), build)
 
 
 def assign_udf(centroids: np.ndarray):
@@ -113,6 +112,29 @@ _DOT = (
 )
 
 
+def kmeans_assign_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, cluster, dist_fp): the k-means assignment sidecar behind
+    kmeans_assign — one Arrow stage with the seed-centroid matrix in the
+    closure, built once per embeddings version (disk-backed)."""
+    from trialstreamer_spark.sidecars import disk_cached_plan
+
+    def build() -> DataFrame:
+        a = assign_udf(seed_centroids(spark, sf_dir))
+        return (
+            load(spark, sf_dir, "embeddings")
+            .select("vec_id", a(F.col("embedding")).alias("a"))
+            .select(
+                "vec_id",
+                F.col("a.cluster").alias("cluster"),
+                F.col("a.dist_fp").alias("dist_fp"),
+            )
+        )
+
+    return disk_cached_plan(
+        spark, sf_dir, "kmeans_assign", build, source_tables=("embeddings",)
+    )
+
+
 @query(
     "kmeans_assign",
     oracle=f"""
@@ -144,22 +166,7 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is the classic persisted clustering artifact — a per-corpus
     sidecar (prepare_semdedup) read by the balance audit and any
     cluster-routed downstream job."""
-
-    def build() -> DataFrame:
-        e = load(spark, sf_dir, "embeddings")
-        c = seed_centroids(e, cache_key=sf_dir)
-        a = assign_udf(c)
-        return e.select("vec_id", a(F.col("embedding")).alias("a")).select(
-            "vec_id",
-            F.col("a.cluster").alias("cluster"),
-            F.col("a.dist_fp").alias("dist_fp"),
-        )
-
-    from trialstreamer_spark.sidecars import disk_cached_plan
-
-    return disk_cached_plan(
-        spark, sf_dir, "kmeans_assign", build, source_tables=("embeddings",)
-    ).orderBy("vec_id")
+    return kmeans_assign_table(spark, sf_dir).orderBy("vec_id")
 
 
 #: SemDeDup cosine threshold: pairs at/above it within a cluster are
@@ -172,6 +179,27 @@ _COS = (
     f"CAST({{d}} AS BIGINT) / SQRT(CAST(CAST({{na}} AS BIGINT) AS DOUBLE)"
     f" * CAST(CAST({{nb}} AS BIGINT) AS DOUBLE))"
 )
+
+
+def semdedup_asn_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, embedding, cluster): SemDeDup's enriched k-means
+    assignment, a disk sidecar per embeddings version — the Arrow
+    assignment stage feeds three references of semantic_dedup (both
+    join sides + the size rollup), so it is built once, not per
+    reference."""
+    from trialstreamer_spark.sidecars import disk_cached_plan
+
+    def build() -> DataFrame:
+        a = assign_udf(seed_centroids(spark, sf_dir))
+        return load(spark, sf_dir, "embeddings").select(
+            "vec_id",
+            "embedding",
+            a(F.col("embedding")).getField("cluster").alias("cluster"),
+        )
+
+    return disk_cached_plan(
+        spark, sf_dir, "semdedup_asn", build, source_tables=("embeddings",)
+    )
 
 
 @query(
@@ -236,23 +264,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     curation run logs."""
     from trialstreamer_spark.operators.similarity import cosine_pairs_pd
 
-    e = load(spark, sf_dir, "embeddings")
-
-    def build_asn() -> DataFrame:
-        # the Arrow assignment stage feeds three references (both join
-        # sides + the size rollup); cache it once per corpus version
-        a = assign_udf(seed_centroids(e, cache_key=sf_dir))
-        return e.select(
-            "vec_id",
-            "embedding",
-            a(F.col("embedding")).getField("cluster").alias("cluster"),
-        )
-
-    from trialstreamer_spark.sidecars import disk_cached_plan
-
-    asn = disk_cached_plan(
-        spark, sf_dir, "semdedup_asn", build_asn, source_tables=("embeddings",)
-    )
+    asn = semdedup_asn_table(spark, sf_dir)
     l, r = asn.alias("l"), asn.alias("r")
     pairs = (
         l.join(
@@ -399,7 +411,7 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage, no join, no shuffle; the output is columnar codes ready to be
     written partition-aligned with the source vectors."""
     e = load(spark, sf_dir, "embeddings")
-    c = seed_centroids(e, k=PQ_K, cache_key=sf_dir)
+    c = seed_centroids(spark, sf_dir, k=PQ_K)
     a = pq_assign_udf(c)
     code_cols = [F.col(f"a.code_{s}").alias(f"code_{s}") for s in range(PQ_M)]
     return (
@@ -422,7 +434,7 @@ def pq_codes_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         e = load(spark, sf_dir, "embeddings")
-        a = pq_assign_udf(seed_centroids(e, k=PQ_K, cache_key=sf_dir))
+        a = pq_assign_udf(seed_centroids(spark, sf_dir, k=PQ_K))
         code_cols = [
             F.col(f"a.code_{s}").alias(f"code_{s}") for s in range(PQ_M)
         ]
@@ -547,10 +559,9 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_probe_cells,
     )
 
-    e = load(spark, sf_dir, "embeddings")
-    qvec = _query_vector(e, 0, "vec_id", "embedding", cache_key=sf_dir)
+    qvec = _query_vector(spark, sf_dir, 0)
     cells = ivf_probe_cells(ivf_centroids(spark, sf_dir), qvec, nprobe=2)
-    lut = _adc_lut(qvec, seed_centroids(e, k=PQ_K, cache_key=sf_dir))
+    lut = _adc_lut(qvec, seed_centroids(spark, sf_dir, k=PQ_K))
     codes = pq_codes_table(spark, sf_dir)
     adc = None
     for s in range(PQ_M):
@@ -570,14 +581,13 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def prepare_semdedup(spark: SparkSession, sf_dir: str) -> None:
-    """Materialize the cluster-assignment sidecars (SemDeDup's enriched
+    """Build the cluster-assignment sidecars (SemDeDup's enriched
     assignment and the plain k-means assignment table)."""
-    from trialstreamer_spark.util import materialize_plan
-
-    semantic_dedup(spark, sf_dir)
-    materialize_plan(spark, ("semdedup_asn", sf_dir))
-    kmeans_assign(spark, sf_dir)
-    materialize_plan(spark, ("kmeans_assign", sf_dir))
+    for sidecar in (
+        semdedup_asn_table(spark, sf_dir),
+        kmeans_assign_table(spark, sf_dir),
+    ):
+        sidecar.count()
 
 
 def _lloyd2_oracle() -> str:
@@ -651,7 +661,7 @@ def kmeans_lloyd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of corpus size; iterations materialize nothing but the
     tiny centroid matrix."""
     e = load(spark, sf_dir, "embeddings")
-    cent1 = seed_centroids(e, cache_key=sf_dir)
+    cent1 = seed_centroids(spark, sf_dir)
     a1 = assign_udf(cent1)
     asn1 = e.select(
         "vec_id",

@@ -77,27 +77,30 @@ def shingles_col(text: Column, k: int = SHINGLE) -> Column:
     )
 
 
-def shingle_postings(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    cache_key: str | None = None,
-) -> DataFrame:
-    """Exploded (doc_id, n_sh, shingle) postings, hash-partitioned by
-    doc_id BEFORE the shingle computation.
+def shingle_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exploded (doc_id, n_sh, shingle, df, first_doc) postings: stage 1
+    of the dedup pipeline, shared verbatim by MinHash signatures, both
+    Jaccard variants and connected components. A disk sidecar
+    (sidecars.disk_cached_plan): built and written once per corpus
+    version, read straight from parquet by any later session.
 
-    Two scale properties hang on the repartition placement:
+    The build hash-partitions by doc_id BEFORE the shingle computation.
+    Two scale properties hang on that placement:
 
     - **Parallelism guard**: a small/compacted parquet input can scan as
       very few splits; shingling (regex tokenize + slide + concat) is the
       CPU-heavy step, so it must run after the exchange, on the narrow
       (id, text) projection — never single-threaded on the scan side.
     - **Partitioning reuse**: explode is narrow, so the postings inherit
-      hashpartitioning(doc_id) and every downstream per-document groupBy
-      (signatures, sizes) needs NO further shuffle.
+      hashpartitioning(doc_id); ``post`` restores it after the parquet
+      read, so every downstream per-document groupBy (signatures,
+      sizes) needs NO further shuffle.
 
     n_sh rides along from the pre-explode array, so Jaccard needs no
-    separate sizes branch (and no re-join with them).
+    separate sizes branch (and no re-join with them). df (the shingle's
+    document frequency) and first_doc ride one shingle window: df is an
+    index-build statistic, so the capped-Jaccard hot-shingle prune is a
+    NARROW filter at query time; first_doc feeds the novelty census.
 
     The partition count is pinned explicitly: with a bare
     ``repartition(col)``, AQE sizes the exchange by BYTES and coalesces a
@@ -112,11 +115,15 @@ def shingle_postings(
     repartition. shingles_col is never empty for non-null text, so outer
     + a cheap pushable text-not-null guard is equivalent.
     """
-    n_parts = docs.sparkSession.sparkContext.defaultParallelism
+    n_parts = spark.sparkContext.defaultParallelism
 
-    def postings() -> DataFrame:
+    def build() -> DataFrame:
+        from pyspark.sql import Window as W
+
+        sh_w = W.partitionBy("shingle")
         return (
-            docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+            load(spark, sf_dir, "documents")
+            .select("doc_id", "text")
             .where(F.col("text").isNotNull())
             .repartition(n_parts, F.col("doc_id"))
             .select("doc_id", shingles_col(F.col("text")).alias("shingles"))
@@ -125,40 +132,13 @@ def shingle_postings(
                 F.size("shingles").alias("n_sh"),
                 F.explode_outer("shingles").alias("shingle"),
             )
-        )
-
-    if cache_key is None:
-        return postings()  # unit tests assert on this raw scan plan
-    # With a cache_key the postings are stage 1 of the dedup pipeline,
-    # shared verbatim by MinHash signatures, both Jaccard variants and
-    # connected components: materialized ONCE per corpus version
-    # (prepare_dedup) and fanned out from. The materialized postings
-    # carry the shingle's document frequency, like any real
-    # postings/feature table: df is a build-time statistic (one extra
-    # exchange here, where skew is a batch concern), so the
-    # capped-Jaccard hot-shingle prune becomes a NARROW filter at query
-    # time instead of a per-query aggregation. The table is DISK-BACKED
-    # (sidecars.disk_cached_plan): built+written once per corpus
-    # version, read straight from parquet by any later session — a
-    # restart re-featurizes nothing (round-5 gap #1). ``post`` restores
-    # doc_id partitioning so downstream per-document windows/groupBys
-    # stay exchange-free.
-
-    def build() -> DataFrame:
-        from pyspark.sql import Window as W
-
-        sh_w = W.partitionBy("shingle")
-        # df AND the first-occurrence doc ride the same shingle
-        # window (one exchange computes both): df powers the
-        # hot-shingle prune, first_doc the novelty census — both
-        # index-build statistics, free to carry once materialized.
-        return postings().withColumn("df", F.count("*").over(sh_w)).withColumn(
-            "first_doc", F.min("doc_id").over(sh_w)
+            .withColumn("df", F.count("*").over(sh_w))
+            .withColumn("first_doc", F.min("doc_id").over(sh_w))
         )
 
     return disk_cached_plan(
-        docs.sparkSession,
-        cache_key,
+        spark,
+        sf_dir,
         "shingle_postings",
         build,
         post=lambda df: df.repartition(n_parts, F.col("doc_id")),
@@ -166,54 +146,36 @@ def shingle_postings(
 
 
 def prepare_dedup(spark: SparkSession, sf_dir: str) -> None:
-    """Offline stage 1 of the dedup pipeline: materialize the shared
-    shingle-postings featurization for a corpus version. MinHash, both
-    Jaccard variants, and connected components all consume it; a 100 TB
-    run shingles the corpus exactly once (persisted here; a parquet/
-    bucketed table on a real cluster) and never re-tokenizes per stage."""
-    from trialstreamer_spark.io import load
-    from trialstreamer_spark.util import materialize_plan
+    """Offline build of the dedup pipeline's sidecars for a corpus
+    version, in stage order: postings, minhash and simhash signatures,
+    the candidate-pair table, the cluster-label mapping (iterative
+    union-find, the most expensive), the exact-fingerprint census, the
+    capped-Jaccard shared-shingle lists (the registered df_cap=5
+    configuration) and the media perceptual-hash band index. A 100 TB
+    run shingles the corpus exactly once and never re-tokenizes per
+    stage."""
+    from trialstreamer_spark.operators.multimodal import media_phash_bands
 
-    # stages 1-2.5: postings, minhash and simhash signatures, and the
-    # candidate-pair table, each materialized as it is built
-    for build, name in (
-        (shingle_postings, "shingle_postings"),
-        (minhash_signatures, "minhash_sigs_doc_id_text"),
-        (simhash_table, "simhash_doc_id_text_16"),
-        (minhash_candidates, "minhash_pairs_doc_id_text"),
+    for sidecar in (
+        shingle_postings(spark, sf_dir),
+        minhash_signatures(spark, sf_dir),
+        simhash_table(spark, sf_dir),
+        minhash_candidates(spark, sf_dir),
+        cc_labels(spark, sf_dir),
+        exact_fp_census(spark, sf_dir),
+        capped_doc_lists(spark, sf_dir, 5),
+        media_phash_bands(spark, sf_dir),
     ):
-        build(load(spark, sf_dir, "documents"), cache_key=sf_dir)
-        materialize_plan(spark, (name, sf_dir))
-    # stage 3: the cluster-label mapping (iterative union-find) — the
-    # most expensive dedup artifact, shared by the CC view, the size
-    # histogram, and canonical application
-    cc_labels(spark, sf_dir).count()
-    # stage 4: the exact-fingerprint census (dedup_exact + cross-signal
-    # joins) and the capped-Jaccard shared-shingle lists (the registered
-    # df_cap=5 configuration)
-    exact_fp_census(spark, sf_dir)
-    materialize_plan(spark, ("exact_fp_census", sf_dir))
-    jaccard_pairs(
-        load(spark, sf_dir, "documents"),
-        threshold=0.2,
-        df_cap=5,
-        cache_key=sf_dir,
-    )
-    materialize_plan(spark, ("jaccard_doc_lists", sf_dir, 5))
-    # stage 5: the media perceptual-hash band index (multimodal dedup)
-    from trialstreamer_spark.operators.multimodal import multimodal_phash_dedup
-
-    multimodal_phash_dedup(spark, sf_dir)
-    materialize_plan(spark, ("media_phash_bands", sf_dir))
+        sidecar.count()
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    cache_key: str | None = None,
-) -> DataFrame:
-    """MinHash signatures as one codegen-friendly pass.
+def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash signatures (doc_id, h0..h7) as one codegen-friendly pass,
+    stage 2 of the dedup pipeline: the per-query LSH path is then
+    band-explode + equi-join over k·|docs| tiny rows, with no md5
+    recompute over the postings. Disk-backed (one row per doc): a
+    restarted session reads the committed signatures without touching
+    the shingle postings.
 
     Shape chosen for scale: explode (doc, shingle) ONCE, compute exactly
     two md5s per shingle, and slice each 128-bit digest into four 8-hex
@@ -225,9 +187,7 @@ def minhash_signatures(
     codegen (~100× slower at sf0.1).
     """
     def build() -> DataFrame:
-        sh = shingle_postings(
-            docs, id_col, text_col, cache_key=cache_key
-        ).select(
+        sh = shingle_postings(spark, sf_dir).select(
             "doc_id",
             F.md5(F.col("shingle")).alias("m1"),
             F.md5(F.concat(F.lit("x"), F.col("shingle"))).alias("m2"),
@@ -239,16 +199,7 @@ def minhash_signatures(
         ]
         return sh.groupBy("doc_id").agg(*mins)
 
-    if cache_key is None:
-        return build()
-    # stage 2 of the dedup pipeline, built once per corpus version
-    # (prepare_dedup): the per-query LSH path is then band-explode +
-    # equi-join over k·|docs| tiny rows, with no md5 recompute over the
-    # postings. Disk-backed (one row per doc): a restarted session reads
-    # the committed signatures without touching the shingle postings
-    return disk_cached_plan(
-        docs.sparkSession, cache_key, f"minhash_sigs_{id_col}_{text_col}", build
-    )
+    return disk_cached_plan(spark, sf_dir, "minhash_sigs_doc_id_text", build)
 
 
 def banded_keys(sig: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
@@ -274,12 +225,7 @@ def banded_keys(sig: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
     )
 
 
-def minhash_candidates(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    cache_key: str | None = None,
-) -> DataFrame:
+def minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """shingle → minhash → band → bucket-join candidate pairs.
 
     Returns distinct (doc_a, doc_b) with doc_a < doc_b. The join is an
@@ -288,16 +234,14 @@ def minhash_candidates(
     skew-join; at 100 TB, band keys are near-uniform md5s so buckets are
     balanced by construction.
 
-    With ``cache_key``, the pair set is itself a per-corpus-version
-    artifact: every consumer (LSH dedup, CC labeling, the degree
-    histogram, the near-dup source matrix) reads ONE disk-backed,
-    session-persisted table instead of re-running the self-join —
-    the same once-per-version discipline as the signatures above."""
+    The pair set is itself a per-corpus-version artifact: every consumer
+    (LSH dedup, CC labeling, the degree histogram, the near-dup source
+    matrix) reads ONE disk-backed, session-persisted table instead of
+    re-running the self-join — the same once-per-version discipline as
+    the signatures above."""
 
     def build() -> DataFrame:
-        banded = banded_keys(
-            minhash_signatures(docs, id_col, text_col, cache_key=cache_key)
-        )
+        banded = banded_keys(minhash_signatures(spark, sf_dir))
         a = banded.alias("a")
         b = banded.alias("b")
         return (
@@ -314,11 +258,7 @@ def minhash_candidates(
             .distinct()
         )
 
-    if cache_key is None:
-        return build()
-    return disk_cached_plan(
-        docs.sparkSession, cache_key, f"minhash_pairs_{id_col}_{text_col}", build
-    )
+    return disk_cached_plan(spark, sf_dir, "minhash_pairs_doc_id_text", build)
 
 
 def _pairs_from_lists(lists: DataFrame) -> DataFrame:
@@ -334,14 +274,12 @@ def _pairs_from_lists(lists: DataFrame) -> DataFrame:
 
 
 def jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    spark: SparkSession,
+    sf_dir: str,
     threshold: float = 0.0,
     df_cap: int | None = None,
-    cache_key: str | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard over a shingle-postings self-join.
+    """Exact n-gram Jaccard over the shingle postings.
 
     jaccard = |A∩B| / (|A|+|B|-|A∩B|) — a single division of exact
     integers, so the value is bit-identical across engines. The postings
@@ -351,10 +289,10 @@ def jaccard_pairs(
     documents emits C(d,2) join rows, so one boilerplate phrase shared
     by 10⁶ documents would alone produce ~5·10¹¹ pairs. With a cap,
     shingles with document frequency > df_cap are dropped BEFORE the
-    self-join (standard postings pruning), bounding per-shingle fan-out
-    at C(df_cap,2); Jaccard is then computed over the PRUNED shingle
-    sets (sizes recomputed after the filter), i.e. it remains a true
-    Jaccard of the surviving feature space. df_cap=None keeps the exact
+    pairing (capped_doc_lists), bounding per-shingle fan-out at
+    C(df_cap,2); Jaccard is then computed over the PRUNED shingle sets
+    (sizes recomputed after the filter), i.e. it remains a true Jaccard
+    of the surviving feature space. df_cap=None keeps the exact
     semantics (used by the uncapped oracle query).
 
     Each posting carries its document's shingle count (n_sh), so set
@@ -367,18 +305,14 @@ def jaccard_pairs(
       join shuffles the postings twice, but a skewed (hot) shingle is
       split across reducers by AQE skew-join — the only formulation
       that stays memory-safe without a frequency bound.
-    - **capped**: per-shingle PAIR GENERATION — group the pruned
-      postings by shingle (ONE postings shuffle, not two), collect the
-      ≤ df_cap postings per shingle, and emit pairs with a double
-      explode (codegen Generate, no Python). collect_list is safe here
-      precisely because the cap bounds every list; this halves the
-      dominant shuffle in the configuration a 100 TB dedup run uses."""
+    - **capped**: per-shingle PAIR GENERATION from the capped_doc_lists
+      sidecar (the ≤ df_cap postings of each shared shingle), emitted
+      with a double explode (codegen Generate, no Python)."""
 
-    sh = shingle_postings(docs, id_col, text_col, cache_key=cache_key)
     if df_cap is not None:
-        lists = capped_doc_lists(docs, id_col, text_col, df_cap, cache_key)
-        paired = _pairs_from_lists(lists)
+        paired = _pairs_from_lists(capped_doc_lists(spark, sf_dir, df_cap))
     else:
+        sh = shingle_postings(spark, sf_dir)
         a, b = sh.alias("a"), sh.alias("b")
         paired = a.join(
             b,
@@ -406,77 +340,44 @@ def jaccard_pairs(
 
 
 def capped_doc_lists(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    df_cap: int = 5,
-    cache_key: str | None = None,
+    spark: SparkSession, sf_dir: str, df_cap: int = 5
 ) -> DataFrame:
     """The df-capped shared-shingle lists sidecar: (shingle,
     ds:[(doc_id, post-prune n_sh)]) for shingles with 2..df_cap
     postings — the bounded feature space every capped similarity
     variant (Jaccard, containment) pairs over. Disk-backed per
-    (corpus, df_cap)."""
+    (corpus, df_cap).
+
+    The hot-shingle prune is a narrow filter on the postings' df (an
+    index-build statistic), so no aggregation routes an ultra-hot
+    shingle's postings to one reducer. Post-prune set sizes come from a
+    window over doc_id, which reuses the partitioning shingle_postings
+    carries (sort within partitions, no new exchange); only SHARED
+    shingles are kept (singletons generate no pairs), with the
+    post-prune set size stamped in the structs — the same lists shape
+    as quality's winnowing fingerprint lists."""
     from pyspark.sql import Window as W
 
-    sh = shingle_postings(docs, id_col, text_col, cache_key=cache_key)
-    if "df" in sh.columns:
-        # Materialized postings carry df (index-build statistic):
-        # the hot-shingle prune is a narrow filter — no per-query
-        # aggregation at all. This is the 100 TB configuration.
-        kept = sh.filter(F.col("df") <= df_cap)
-    else:
-        # Ad-hoc path (no materialized postings): prune WITHOUT
-        # shuffling the postings by shingle — the set of shingles
-        # with df > cap is small by construction (≤ |postings| /
-        # cap), so aggregate just that set (map-side partial agg;
-        # only (shingle, count) partials shuffle) and
-        # broadcast-anti-join it away. An ultra-hot shingle never
-        # routes every posting to one reducer, which is exactly the
-        # skew the cap exists to prevent.
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > df_cap)
-            .select("shingle")
-        )
-        kept = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    # Post-prune set sizes via a window over doc_id, which reuses
-    # the partitioning shingle_postings established (sort within
-    # partitions, no new exchange).
-    sh = kept.withColumn(
-        "n_sh", F.count("*").over(W.partitionBy("doc_id"))
-    ).select("doc_id", "n_sh", "shingle")
-
-    def build_lists() -> DataFrame:
-        # SHARED shingles only (singletons generate no pairs), with
-        # the post-prune set size stamped in the structs — the same
-        # lists-sidecar shape as winnow_fp_lists
+    def build() -> DataFrame:
         return (
-            sh.groupBy("shingle")
+            shingle_postings(spark, sf_dir)
+            .filter(F.col("df") <= df_cap)
+            .withColumn("n_sh", F.count("*").over(W.partitionBy("doc_id")))
+            .select("doc_id", "n_sh", "shingle")
+            .groupBy("shingle")
             .agg(F.collect_list(F.struct("doc_id", "n_sh")).alias("ds"))
             .where(F.size("ds") > 1)
         )
 
-    if cache_key is not None:
-        return disk_cached_plan(
-            docs.sparkSession,
-            cache_key,
-            "jaccard_doc_lists",
-            build_lists,
-            key_extra=(df_cap,),
-        )
-    return build_lists()
+    return disk_cached_plan(
+        spark, sf_dir, "jaccard_doc_lists", build, key_extra=(df_cap,)
+    )
 
 
-def simhash_table(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 16,
-    cache_key: str | None = None,
-) -> DataFrame:
-    """Per-document SimHash via explode + ONE grouped aggregation.
+def simhash_table(spark: SparkSession, sf_dir: str, bits: int = 16) -> DataFrame:
+    """Per-document SimHash via explode + ONE grouped aggregation, a
+    per-corpus-version sidecar like the minhash signatures (disk-backed,
+    session-persisted, built by prepare_dedup).
 
     Each token contributes ±1 to every bit depending on the matching hex
     digit of its md5; the per-bit sums are `bits` conditional SUM
@@ -489,20 +390,10 @@ def simhash_table(
 
     explode_outer keeps zero-token documents (null token → contribution
     0 → all bit-sums 0 → simhash 0, matching aggregate-over-empty-list
-    semantics in the SQL oracle).
-
-    With ``cache_key``, the table is a per-corpus-version sidecar like
-    the minhash signatures (disk-backed, session-persisted, built by
-    prepare_dedup — r11): before that, both simhash consumers paid the
-    corpus tokenize + 16-sum aggregate on every run."""
+    semantics in the SQL oracle)."""
     def build() -> DataFrame:
-        from trialstreamer_spark.operators.textstats import (
-            tokens_col as _tokens,
-        )
-
-        toks = docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode_outer(_tokens(F.col(text_col))).alias("tok"),
+        toks = load(spark, sf_dir, "documents").select(
+            "doc_id", F.explode_outer(tokens_col(F.col("text"))).alias("tok")
         ).select("doc_id", F.md5("tok").alias("m"))
         aggs = [
             F.sum(
@@ -521,10 +412,8 @@ def simhash_table(
             sim = term if sim is None else sim + term
         return g.select("doc_id", sim.cast("long").alias("simhash"))
 
-    if cache_key is None:
-        return build()
     return disk_cached_plan(
-        docs.sparkSession, cache_key, f"simhash_{id_col}_{text_col}_{bits}", build
+        spark, sf_dir, f"simhash_doc_id_text_{bits}", build
     )
 
 
@@ -648,8 +537,7 @@ _DD_SHINGLES = """
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup candidates (k=8 hashes, 4 bands × 2 rows).
     See minhash_candidates for the scale argument."""
-    d = load(spark, sf_dir, "documents")
-    return minhash_candidates(d, cache_key=sf_dir).orderBy("doc_a", "doc_b")
+    return minhash_candidates(spark, sf_dir).orderBy("doc_a", "doc_b")
 
 
 @query(
@@ -714,11 +602,10 @@ def minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB corpus this runs on a sample partition; the counts are exact
     integer aggregates of the two (already scale-safe) pair pipelines,
     and the final row is three counts + two divisions."""
-    d = load(spark, sf_dir, "documents")
-    cand = minhash_candidates(d, cache_key=sf_dir).select(
+    cand = minhash_candidates(spark, sf_dir).select(
         "doc_a", "doc_b", F.lit(1).alias("in_cand"), F.lit(0).alias("in_true")
     )
-    truth = jaccard_pairs(d, threshold=0.2, cache_key=sf_dir).select(
+    truth = jaccard_pairs(spark, sf_dir, threshold=0.2).select(
         "doc_a", "doc_b", F.lit(0).alias("in_cand"), F.lit(1).alias("in_true")
     )
     # ONE aggregation computes all three counts: a tagged UNION of the
@@ -788,10 +675,9 @@ def decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     then counts (train_doc, eval_doc) pairs bounded by |eval shingles| x
     fan-out, not corpus size. Postings come from the shared
     prepare_dedup featurization (shingled once per corpus version)."""
-    d = load(spark, sf_dir, "documents")
     # postings are already distinct per doc (shingles_col array_distincts
     # before the explode) — no dedup shuffle needed here
-    p = shingle_postings(d, cache_key=sf_dir).select("doc_id", "shingle")
+    p = shingle_postings(spark, sf_dir).select("doc_id", "shingle")
     evalp = p.where(F.col("doc_id") < 5).select(
         F.col("doc_id").alias("eval_id"), "shingle"
     )
@@ -886,7 +772,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("new_id")
         .agg(F.min("doc_id").alias("exact_dup_of"))
     )
-    banded = banded_keys(minhash_signatures(d, cache_key=sf_dir))
+    banded = banded_keys(minhash_signatures(spark, sf_dir))
     near = (
         banded.where(~is_new)
         .join(
@@ -962,9 +848,8 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, independent of document length. (1/8-granular doubles are
     exact binary fractions, so no rounding is needed for oracle parity.)
     """
-    d = load(spark, sf_dir, "documents")
-    sig = minhash_signatures(d, cache_key=sf_dir)
-    cand = minhash_candidates(d, cache_key=sf_dir)
+    sig = minhash_signatures(spark, sf_dir)
+    cand = minhash_candidates(spark, sf_dir)
     sa, sb = sig.alias("sa"), sig.alias("sb")
     matches = sum(
         F.when(F.col(f"sa.h{i}") == F.col(f"sb.h{i}"), 1).otherwise(0)
@@ -1006,8 +891,7 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard pairs at threshold 0.2 via shingle-postings
     self-join (the verify stage of the MinHash pipeline)."""
-    d = load(spark, sf_dir, "documents")
-    return jaccard_pairs(d, threshold=0.2, cache_key=sf_dir).orderBy(
+    return jaccard_pairs(spark, sf_dir, threshold=0.2).orderBy(
         "doc_a", "doc_b"
     )
 
@@ -1045,8 +929,7 @@ def dedup_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-shingle pair fan-out at C(5,2) no matter how common a
     boilerplate phrase is. This is the configuration a 100 TB dedup run
     uses; the uncapped dedup_ngram_jaccard is the exact baseline."""
-    d = load(spark, sf_dir, "documents")
-    return jaccard_pairs(d, threshold=0.2, df_cap=5, cache_key=sf_dir).orderBy(
+    return jaccard_pairs(spark, sf_dir, threshold=0.2, df_cap=5).orderBy(
         "doc_a", "doc_b"
     )
 
@@ -1082,8 +965,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen (see simhash_table); served from the per-corpus-version
     signature sidecar like the minhash twin (r11 — prepare_dedup builds
     it once, both simhash consumers read it)."""
-    d = load(spark, sf_dir, "documents")
-    return simhash_table(d, cache_key=sf_dir).orderBy("doc_id")
+    return simhash_table(spark, sf_dir).orderBy("doc_id")
 
 
 def _local_union_find_labels(edges: DataFrame) -> DataFrame:
@@ -1241,7 +1123,7 @@ def cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         d = load(spark, sf_dir, "documents")
         return connected_components(
-            d.select("doc_id"), minhash_candidates(d, cache_key=sf_dir)
+            d.select("doc_id"), minhash_candidates(spark, sf_dir)
         )
 
     return disk_cached_plan(spark, sf_dir, "cc_labels", build)
@@ -1372,7 +1254,7 @@ def pagerank_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     count (the CC operator handles full closure; PageRank here is a
     fixed-sweep scoring pass)."""
     d = load(spark, sf_dir, "documents")
-    pairs = minhash_candidates(d, cache_key=sf_dir)
+    pairs = minhash_candidates(spark, sf_dir)
     sym = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionAll(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
@@ -1638,18 +1520,10 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     same shingle-keyed window that computes df, so the build pays no
     extra exchange), and the per-doc rollup reuses the postings' doc_id
     partitioning — the query path is a single exchange-free aggregation
-    over the materialized index. The ad-hoc fallback (postings built
-    without first_doc) computes it via the identical window inline."""
-    from pyspark.sql import Window as W
-
-    d = load(spark, sf_dir, "documents")
-    sh = shingle_postings(d, cache_key=sf_dir)
-    if "first_doc" not in sh.columns:
-        sh = sh.withColumn(
-            "first_doc", F.min("doc_id").over(W.partitionBy("shingle"))
-        )
+    over the materialized index."""
     return (
-        sh.groupBy("doc_id")
+        shingle_postings(spark, sf_dir)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_shingles"),
             F.sum(
@@ -1724,8 +1598,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     satisfies the (batch_doc, corpus_doc) clustering the distinct
     needs, so the old shape's second exchange (distinct on the pair
     key, then regroup on batch_doc) never enters the plan."""
-    d = load(spark, sf_dir, "documents")
-    banded = banded_keys(minhash_signatures(d, cache_key=sf_dir))
+    banded = banded_keys(minhash_signatures(spark, sf_dir))
     is_batch = F.col("doc_id") % INCR_BATCH_MOD == 0
     batch_b = banded.where(is_batch).select(
         F.col("doc_id").alias("batch_doc"), "band_id", "band_key"
@@ -1865,7 +1738,7 @@ def near_dup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     space is ≤ n_sources². The doc→source projection prunes to two
     columns at the scan."""
     d = load(spark, sf_dir, "documents")
-    pairs = minhash_candidates(d, cache_key=sf_dir)
+    pairs = minhash_candidates(spark, sf_dir)
     src = d.select("doc_id", "source")
     sa, sb = src.alias("sa"), src.alias("sb")
     return (
@@ -2023,8 +1896,7 @@ def shingle_df_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side; the share multiplies against a 1-row broadcast total.
     Bucketing by bit-length is integer-exact on both engines (bin() /
     length), no float log2."""
-    d = load(spark, sf_dir, "documents")
-    posting = shingle_postings(d, cache_key=sf_dir)
+    posting = shingle_postings(spark, sf_dir)
     df = posting.groupBy("shingle").agg(F.count("*").alias("df"))
     per = (
         df.select(
@@ -2124,7 +1996,7 @@ def dup_graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load(spark, sf_dir, "documents")
-    pairs = minhash_candidates(d, cache_key=sf_dir)
+    pairs = minhash_candidates(spark, sf_dir)
     ends = pairs.select(F.col("doc_a").alias("doc_id")).union(
         pairs.select(F.col("doc_b").alias("doc_id"))
     )
@@ -2244,8 +2116,7 @@ def triangle_count_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     list, never documents; wedges are one rollup over symmetrized
     endpoints. At 100 TB this is the standard distributed triangle
     count (edge orientation kills the high-degree hub blowup)."""
-    d = load(spark, sf_dir, "documents")
-    pairs = minhash_candidates(d, cache_key=sf_dir)
+    pairs = minhash_candidates(spark, sf_dir)
     p1 = pairs.alias("p1")
     p2 = pairs.alias("p2")
     p3 = pairs.alias("p3")
@@ -2366,9 +2237,8 @@ def simhash_hamming_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two signature references already collapse to one physical
     build via exchange/broadcast reuse, so the variant only added a
     pair-keyed exchange.)"""
-    d = load(spark, sf_dir, "documents")
-    pairs = minhash_candidates(d, cache_key=sf_dir)
-    sim = simhash_table(d, cache_key=sf_dir)
+    pairs = minhash_candidates(spark, sf_dir)
+    sim = simhash_table(spark, sf_dir)
     sa = sim.select(
         F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a")
     )
@@ -2630,10 +2500,9 @@ def dup_pair_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     length. Carrying each doc's shingle array through the two pair
     joins instead copies one array per candidate pair (r12 measured
     1.41→3.79 s at local[32], and the queries run after it slowed)."""
-    d = load(spark, sf_dir, "documents")
-    pairs = minhash_candidates(d, cache_key=sf_dir)
-    sig = minhash_signatures(d, cache_key=sf_dir)
-    posting = shingle_postings(d, cache_key=sf_dir)
+    pairs = minhash_candidates(spark, sf_dir)
+    sig = minhash_signatures(spark, sf_dir)
+    posting = shingle_postings(spark, sf_dir)
     sizes = posting.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     sigz = sig.join(sizes, "doc_id")
     eq_col = sum(
@@ -2863,18 +2732,12 @@ def jaccard_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical."""
     from pyspark.sql import Window as W
 
-    sh_full = shingle_postings(
-        load(spark, sf_dir, "documents"), cache_key=sf_dir
-    )
+    # the postings carry df (the same index-build statistic
+    # capped_doc_lists prunes on): the rarity rank needs NO per-query
+    # re-aggregation — just the doc_id window over columns at hand.
+    sh_full = shingle_postings(spark, sf_dir)
     sh = sh_full.select("doc_id", "n_sh", "shingle")
-    if "df" in sh_full.columns:
-        # Materialized postings carry df (the same index-build statistic
-        # capped_doc_lists reuses): the rarity rank needs NO per-query
-        # re-aggregation — just the doc_id window over columns at hand.
-        with_df = sh_full.select("doc_id", "n_sh", "shingle", "df")
-    else:
-        dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-        with_df = sh.join(dfreq, "shingle")
+    with_df = sh_full.select("doc_id", "n_sh", "shingle", "df")
     ranked = with_df.withColumn(
         "pos",
         F.row_number().over(
@@ -3028,9 +2891,7 @@ def containment_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuse does not span differing parent projections, the ENTIRE
     explode + grouped-count subtree (the expensive part) planned and
     ran twice."""
-    lists = capped_doc_lists(
-        load(spark, sf_dir, "documents"), df_cap=5, cache_key=sf_dir
-    )
+    lists = capped_doc_lists(spark, sf_dir, 5)
     pairs = (
         _pairs_from_lists(lists)
         .groupBy(

@@ -414,6 +414,63 @@ PHASH_MAX_HAMMING = 8
 PHASH_PREFIX_TOKENS = 12
 
 
+def media_phash_bands(spark, sf_dir: str) -> DataFrame:
+    """(media_id, phash, band_id, band_key): the persisted media index of
+    multimodal_phash_dedup — each blob decoded, hashed to its
+    perceptual fingerprint and banded once per corpus version (a disk
+    sidecar). Both sides of the candidate self-join read it; uncached,
+    each side would decode the whole media corpus independently."""
+    from trialstreamer_spark.io import load
+    from trialstreamer_spark.sidecars import disk_cached_plan
+
+    def build_bands() -> DataFrame:
+        media = synthesize_media(load(spark, sf_dir, "documents"))
+        # "decode" the blob: normalize the decoded bytes and DOWNSAMPLE
+        # to the canonical PHASH_PREFIX_TOKENS-token prefix (the
+        # thumbnail step a real perceptual hash performs on pixels),
+        # then hash.
+        norm = F.trim(
+            F.regexp_replace(
+                F.regexp_replace(
+                    F.lower(F.col("content").cast("string")),
+                    "[^a-z0-9 ]",
+                    " ",
+                ),
+                " +",
+                " ",
+            )
+        )
+        toks = F.filter(F.split(norm, r"\s+"), lambda t: t != "")
+        md5c = F.md5(
+            F.concat_ws(" ", F.slice(toks, 1, PHASH_PREFIX_TOKENS))
+        )
+        n_parts = spark.sparkContext.defaultParallelism
+        return (
+            media.repartition(n_parts, F.col("media_id"))
+            .select(
+                "media_id",
+                F.conv(F.substring(md5c, 1, PHASH_HEX), 16, 10)
+                .cast("long")
+                .alias("phash"),
+                F.substring(md5c, 1, 16).alias("hex16"),
+            )
+            .select(
+                "media_id",
+                "phash",
+                F.posexplode(
+                    F.array(
+                        *[
+                            F.substring("hex16", 1 + 4 * i, 4)
+                            for i in range(PHASH_BANDS)
+                        ]
+                    )
+                ).alias("band_id", "band_key"),
+            )
+        )
+
+    return disk_cached_plan(spark, sf_dir, "media_phash_bands", build_bands)
+
+
 @query(
     "multimodal_phash_dedup",
     oracle=f"""
@@ -470,59 +527,7 @@ def multimodal_phash_dedup(spark, sf_dir: str) -> DataFrame:
     two integer ops per candidate pair. At 100 TB the fingerprint table
     is the persisted sidecar and re-banding for a different radius is a
     metadata-only operation."""
-    from trialstreamer_spark.io import load
-
-    def build_bands() -> DataFrame:
-        media = synthesize_media(load(spark, sf_dir, "documents"))
-        # "decode" the blob: normalize the decoded bytes and DOWNSAMPLE
-        # to the canonical PHASH_PREFIX_TOKENS-token prefix (the
-        # thumbnail step a real perceptual hash performs on pixels),
-        # then hash. The fingerprint+band table is the persisted media
-        # index — built once per corpus version (both sides of the
-        # candidate self-join read it; uncached, each side would decode
-        # the whole media corpus independently).
-        norm = F.trim(
-            F.regexp_replace(
-                F.regexp_replace(
-                    F.lower(F.col("content").cast("string")),
-                    "[^a-z0-9 ]",
-                    " ",
-                ),
-                " +",
-                " ",
-            )
-        )
-        toks = F.filter(F.split(norm, r"\s+"), lambda t: t != "")
-        md5c = F.md5(
-            F.concat_ws(" ", F.slice(toks, 1, PHASH_PREFIX_TOKENS))
-        )
-        n_parts = spark.sparkContext.defaultParallelism
-        return (
-            media.repartition(n_parts, F.col("media_id"))
-            .select(
-                "media_id",
-                F.conv(F.substring(md5c, 1, PHASH_HEX), 16, 10)
-                .cast("long")
-                .alias("phash"),
-                F.substring(md5c, 1, 16).alias("hex16"),
-            )
-            .select(
-                "media_id",
-                "phash",
-                F.posexplode(
-                    F.array(
-                        *[
-                            F.substring("hex16", 1 + 4 * i, 4)
-                            for i in range(PHASH_BANDS)
-                        ]
-                    )
-                ).alias("band_id", "band_key"),
-            )
-        )
-
-    from trialstreamer_spark.sidecars import disk_cached_plan
-
-    bands = disk_cached_plan(spark, sf_dir, "media_phash_bands", build_bands)
+    bands = media_phash_bands(spark, sf_dir)
     a, b = bands.alias("a"), bands.alias("b")
     hamming = F.expr("bit_count(pa ^ pb)")
     return (

@@ -49,27 +49,21 @@ _QUERY_TERMS_IN = ", ".join(f"'{t}'" for t in QUERY_TERMS)
 
 
 def _per_doc(
-    docs: DataFrame,
-    terms: tuple[str, ...],
-    id_col: str,
-    text_col: str,
-    cache_key: str | None,
+    spark: SparkSession, sf_dir: str, terms: tuple[str, ...]
 ) -> DataFrame:
-    """Per-doc (doc_id, dl, tf…) projection. With a ``cache_key`` it is
-    a session-persisted plan: like the lexicon stats, this is the index
-    side of a search engine — the tokenize/tf pass over the corpus
-    happens once per corpus version, not once per query. prepare_stats()
-    is the offline build; without a cache_key every call recomputes from
-    the scan."""
+    """Per-doc (doc_id, dl, tf…) projection, a session-persisted plan:
+    like the lexicon stats, this is the index side of a search engine —
+    the tokenize/tf pass over the corpus happens once per corpus
+    version, not once per query (prepare_stats is the offline build)."""
 
     def build() -> DataFrame:
         alternation = "|".join(terms)
         m = F.regexp_extract_all(
-            F.col(text_col), F.lit(rf"(?:^|\s)({alternation})(?=\s|$)"), 1
+            F.col("text"), F.lit(rf"(?:^|\s)({alternation})(?=\s|$)"), 1
         )
-        return docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.regexp_count(F.col(text_col), F.lit(r"\S+")).alias("dl"),
+        return load(spark, sf_dir, "documents").select(
+            "doc_id",
+            F.regexp_count(F.col("text"), F.lit(r"\S+")).alias("dl"),
             m.alias("m"),
         ).select(
             "doc_id",
@@ -82,39 +76,30 @@ def _per_doc(
             ],
         )
 
-    if cache_key is None:
-        return build()
-    return util.cached_plan(
-        docs.sparkSession, ("bm25_per_doc", cache_key, terms), build
-    )
+    return util.cached_plan(spark, ("bm25_per_doc", sf_dir, terms), build)
 
 
 def prepare_stats(
     spark: SparkSession, sf_dir: str, terms: tuple[str, ...] = QUERY_TERMS
 ) -> None:
-    """Offline index build for ranked retrieval: materialize the per-doc
-    (dl, tf) projection and the lexicon statistics (N, avgdl, df) for a
-    corpus version. Queries then score from the narrow persisted rows —
-    the corpus text is never re-scanned per query, which is exactly how
-    an inverted-index engine serves BM25."""
-    from trialstreamer_spark.io import load
-    from trialstreamer_spark.util import materialize_plan
-
-    per_doc = _per_doc(load(spark, sf_dir, "documents"), terms, "doc_id", "text", sf_dir)
-    materialize_plan(spark, ("bm25_per_doc", sf_dir, terms))
-    _corpus_stats(per_doc, terms, sf_dir)
-    # keyword-extraction index: register + materialize the (doc_id, tok,
-    # tf, df, n) sidecar so doc_keywords_topk measures ranking only
-    doc_tf_stats(spark, sf_dir)
-    materialize_plan(spark, ("doc_tf_stats", sf_dir))
-    # the sharded on-disk token postings (postings_term_search serves
-    # from it; built once per corpus version like the BM25 lexicon)
+    """Offline index build for ranked retrieval: the per-doc (dl, tf)
+    projection and the lexicon statistics (N, avgdl, df) for a corpus
+    version, the keyword-extraction (doc_id, tok, tf, df, n) sidecar, and
+    the sharded on-disk token postings. Queries then score from the
+    narrow persisted rows — the corpus text is never re-scanned per
+    query, which is exactly how an inverted-index engine serves BM25."""
+    for sidecar in (_per_doc(spark, sf_dir, terms), doc_tf_stats(spark, sf_dir)):
+        sidecar.count()
+    _corpus_stats(spark, sf_dir, terms)
     doc_token_postings(spark, sf_dir)
 
 
-def _corpus_stats(per_doc: DataFrame, terms: tuple[str, ...], cache_key):
+def _corpus_stats(spark: SparkSession, sf_dir: str, terms: tuple[str, ...]):
+    """(n_docs, avgdl, df_0…) of the per-doc projection: one 1-row
+    aggregate collected to the driver, memoized per corpus version."""
+
     def build():
-        return per_doc.agg(
+        return _per_doc(spark, sf_dir, terms).agg(
             F.count("*").alias("n_docs"),
             (F.sum("dl").cast("double") / F.count("*").cast("double")).alias(
                 "avgdl"
@@ -127,17 +112,11 @@ def _corpus_stats(per_doc: DataFrame, terms: tuple[str, ...], cache_key):
             ],
         ).collect()[0]
 
-    if cache_key is None:
-        return build()
-    return util.memo(("bm25_stats", cache_key, terms), build)
+    return util.memo(("bm25_stats", sf_dir, terms), build)
 
 
 def bm25_scores(
-    docs: DataFrame,
-    terms: tuple[str, ...],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    cache_key: str | None = None,
+    spark: SparkSession, sf_dir: str, terms: tuple[str, ...] = QUERY_TERMS
 ) -> DataFrame:
     """Per-document fixed-point BM25(rational-idf) scores for ``terms``.
 
@@ -154,10 +133,10 @@ def bm25_scores(
     #         interpreted-HOF cost is proportional to the MATCHES, not
     #         the text (one JVM regex pass instead of one per term).
     # The corpus never leaves its scan stage; only the narrow
-    # (doc_id, dl, tf...) projection flows on — and with a cache_key the
-    # projection itself is the persisted index side (see _per_doc),
-    # so scoring re-reads 4 narrow columns, not the text.
-    per_doc = _per_doc(docs, terms, id_col, text_col, cache_key)
+    # (doc_id, dl, tf...) projection flows on — and that projection is
+    # itself the persisted index side (see _per_doc), so scoring
+    # re-reads 4 narrow columns, not the text.
+    per_doc = _per_doc(spark, sf_dir, terms)
     # Globals (N, avgdl) and per-term document frequencies: ONE 1-row
     # aggregate materialized to the driver and re-entered as literals —
     # the scalar-subquery pattern. A broadcast-join formulation was tried
@@ -166,9 +145,9 @@ def bm25_scores(
     # SINGLE scan-side projection with no join and no aggregation at all.
     # These are index-side corpus statistics (a search engine's lexicon
     # stats), so like similarity.prepare_indexes they are memoized per
-    # corpus version when ``cache_key`` is given — a deployed engine
-    # computes them once per corpus build, not per query.
-    row = _corpus_stats(per_doc, terms, cache_key)
+    # corpus version — a deployed engine computes them once per corpus
+    # build, not per query.
+    row = _corpus_stats(spark, sf_dir, terms)
     n_docs = row["n_docs"]
     avgdl = row["avgdl"] if row["avgdl"] is not None else 1.0
     # Per-term fixed-point score columns (operand order mirrors the SQL
@@ -245,9 +224,8 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-point rational-idf BM25, deterministic tiebreak on doc_id. The
     final ranking compiles to TakeOrderedAndProject — only 20 rows per
     partition survive to the driver-side merge."""
-    d = load(spark, sf_dir, "documents")
     return (
-        bm25_scores(d, QUERY_TERMS, cache_key=sf_dir)
+        bm25_scores(spark, sf_dir)
         .orderBy(F.col("score_fp").desc(), "doc_id")
         .limit(20)
     )
@@ -607,9 +585,8 @@ def rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         scores_vs_query_udf,
     )
 
-    d = load(spark, sf_dir, "documents")
     lex20 = (
-        bm25_scores(d, QUERY_TERMS, cache_key=sf_dir)
+        bm25_scores(spark, sf_dir)
         .orderBy(F.col("score_fp").desc(), "doc_id")
         .limit(RRF_DEPTH)
     )
@@ -621,7 +598,7 @@ def rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("lex_rank"),
     )
     e = load(spark, sf_dir, "embeddings")
-    qv = _query_vector(e, 0, "vec_id", "embedding", cache_key=sf_dir)
+    qv = _query_vector(spark, sf_dir, 0)
     qnsq = fp_dot_vec(qv, qv)
     s = scores_vs_query_udf(qv)
     sem20 = (

@@ -201,23 +201,24 @@ def norm_sq_fp(a: Column) -> Column:
     return dot_fp(a, a)
 
 
-def _query_vector(
-    df: DataFrame, id_val, id_col: str, vec_col: str, cache_key: str | None = None
-) -> np.ndarray:
-    """The probe vector ``id_val``. Fetching it is query PREP (the
-    reference's API receives its query vector from the encoder, it never
-    scans for it) — memoized per (corpus, id) with a ``cache_key`` so
-    repeated searches skip the lookup job."""
+def _query_vector(spark: SparkSession, sf_dir: str, id_val) -> np.ndarray:
+    """The probe vector ``vec_id == id_val``. Fetching it is query PREP
+    (the reference's API receives its query vector from the encoder, it
+    never scans for it) — memoized per (corpus, id) so repeated searches
+    skip the lookup job."""
 
     def build() -> np.ndarray:
-        row = df.filter(F.col(id_col) == id_val).select(vec_col).head()
+        row = (
+            load(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") == id_val)
+            .select("embedding")
+            .head()
+        )
         if row is None:
-            raise ValueError(f"query vector {id_col}={id_val!r} not found")
+            raise ValueError(f"query vector vec_id={id_val!r} not found")
         return np.asarray(row[0], dtype=np.float64)
 
-    if cache_key is None:
-        return build()
-    return util.memo(("query_vector", cache_key, id_val), build)
+    return util.memo(("query_vector", sf_dir, id_val), build)
 
 
 def sign_lsh_bucket(vec: Column, n_planes: int = 12) -> Column:
@@ -427,28 +428,22 @@ def mips_probe_cells(
 
 
 def prepare_indexes(spark: SparkSession, sf_dir: str) -> None:
-    """Offline index-build hook (bench/deploy): materialize sidecars so
-    query latency measures the search path only."""
-    from trialstreamer_spark.util import materialize_plan
-
+    """Offline index-build hook (bench/deploy): build the similarity
+    sidecars so query latency measures the search path only — the IVF
+    coarse quantizer, the probe vector and the MIPS cell statistics
+    (driver-side), then the panel-score table (one Arrow pass over the
+    corpus per version), the scored+ranked+labeled kNN edge table and
+    the cross-lingual candidate frame (one LSH join + Arrow cosine
+    pass)."""
     ivf_centroids(spark, sf_dir)
-    e = load(spark, sf_dir, "embeddings")
-    _query_vector(e, 0, "vec_id", "embedding", cache_key=sf_dir)
-    # the panel-score table (one Arrow pass over the corpus per version)
-    _multi_query_scores(e, sf_dir, 5)
-    materialize_plan(spark, ("panel_scores", sf_dir, 5, "v2"))
-    # MIPS augmented coarse quantizer (shares the IVF cells, adds the
-    # per-cell augmentation statistics)
+    _query_vector(spark, sf_dir, 0)
     mips_aug_cells(spark, sf_dir)
-    # the scored+ranked+labeled kNN edge table (shared by knn_graph_topk
-    # and knn_label_consistency)
-    knn_edges(spark, sf_dir)
-    materialize_plan(spark, ("knn_edges", sf_dir))
-    # the cross-lingual candidate frame (shared by crosslingual_pair_
-    # mining and xling_margin_topk — one LSH join + Arrow cosine pass
-    # per corpus version, built offline like the other index sidecars)
-    _xling_pairs_fp(spark, sf_dir)
-    materialize_plan(spark, ("xling_pairs_fp", sf_dir))
+    for sidecar in (
+        _multi_query_scores(spark, sf_dir, 5),
+        knn_edges(spark, sf_dir),
+        _xling_pairs_fp(spark, sf_dir),
+    ):
+        sidecar.count()
 
 
 # ---------------------------------------------------------------------------
@@ -487,7 +482,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined); the corpus is scanned once with a single Arrow pass
     computing (dot, norm); TakeOrderedAndProject takes the top-k."""
     e = load(spark, sf_dir, "embeddings")
-    qv = _query_vector(e, 0, "vec_id", "embedding", cache_key=sf_dir)
+    qv = _query_vector(spark, sf_dir, 0)
     qnsq = fp_dot_vec(qv, qv)
     s = scores_vs_query_udf(qv)
     return (
@@ -510,7 +505,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _multi_query_scores(e: DataFrame, sf_dir: str, n_q: int) -> DataFrame:
+def _multi_query_scores(spark: SparkSession, sf_dir: str, n_q: int) -> DataFrame:
     """(query_id, neighbor_id, label, cosine) for every (corpus vector,
     panel query) pair, self-matches excluded, in ONE corpus scan.
 
@@ -525,10 +520,10 @@ def _multi_query_scores(e: DataFrame, sf_dir: str, n_q: int) -> DataFrame:
     from trialstreamer_spark.sidecars import disk_cached_plan
 
     return disk_cached_plan(
-        e.sparkSession,
+        spark,
         sf_dir,
         "panel_scores",
-        lambda: _build_multi_query_scores(e, sf_dir, n_q),
+        lambda: _build_multi_query_scores(spark, sf_dir, n_q),
         source_tables=("embeddings",),
         # v2: the table also carries the raw fixed-point dot (dot_fp)
         # so the MIPS family shares the same one-Arrow-pass sidecar;
@@ -537,13 +532,12 @@ def _multi_query_scores(e: DataFrame, sf_dir: str, n_q: int) -> DataFrame:
     )
 
 
-def _build_multi_query_scores(e: DataFrame, sf_dir: str, n_q: int) -> DataFrame:
+def _build_multi_query_scores(
+    spark: SparkSession, sf_dir: str, n_q: int
+) -> DataFrame:
     from pyspark.sql.types import ArrayType
 
-    qvecs = [
-        _query_vector(e, qid, "vec_id", "embedding", cache_key=sf_dir)
-        for qid in range(n_q)
-    ]
+    qvecs = [_query_vector(spark, sf_dir, qid) for qid in range(n_q)]
     qmat = np.stack(qvecs)  # (n_q, dim)
     qnsq = [float(fp_dot_vec(v, v)) for v in qvecs]
     scale = float(SCALE)
@@ -577,7 +571,8 @@ def _build_multi_query_scores(e: DataFrame, sf_dir: str, n_q: int) -> DataFrame:
     )
     qnsq_arr = F.array(*[F.lit(x) for x in qnsq])
     scored = (
-        e.select(
+        load(spark, sf_dir, "embeddings")
+        .select(
             F.col("vec_id").alias("neighbor_id"),
             "label",
             ms(F.col("embedding")).alias("s"),
@@ -684,8 +679,7 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     n_q, k, nprobe = 5, 10, 2
-    e = load(spark, sf_dir, "embeddings")
-    scored = _multi_query_scores(e, sf_dir, n_q)
+    scored = _multi_query_scores(spark, sf_dir, n_q)
     # Both arms rank the SAME scored relation in the SAME (cosine DESC,
     # neighbor_id) order, so one sorted window pass serves both: brute
     # rank is row_number(); the IVF arm's rank among cell-restricted
@@ -699,7 +693,7 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         for qid in range(n_q)
         for lbl in ivf_probe_cells(
             cents,
-            _query_vector(e, qid, "vec_id", "embedding", cache_key=sf_dir),
+            _query_vector(spark, sf_dir, qid),
             nprobe,
         )
     }
@@ -808,7 +802,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(*[F.lit(q_labels[i]) for i in range(n_q)]),
         F.col("query_id").cast("int") + 1,
     )
-    scored = _multi_query_scores(e, sf_dir, n_q)
+    scored = _multi_query_scores(spark, sf_dir, n_q)
     w = W.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
@@ -981,7 +975,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     file level."""
     e = load(spark, sf_dir, "embeddings")
     cents = ivf_centroids(spark, sf_dir)
-    qv = _query_vector(e, 0, "vec_id", "embedding", cache_key=sf_dir)
+    qv = _query_vector(spark, sf_dir, 0)
     qnsq = fp_dot_vec(qv, qv)
     cells = ivf_probe_cells(cents, qv, nprobe=2)
     s = scores_vs_query_udf(qv)
@@ -1487,14 +1481,13 @@ def ann_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     n_q, k, max_probe = 5, 10, 3
-    e = load(spark, sf_dir, "embeddings")
-    scored = _multi_query_scores(e, sf_dir, n_q)
+    scored = _multi_query_scores(spark, sf_dir, n_q)
     cents = ivf_centroids(spark, sf_dir)
     rank_of = {}
     for qid in range(n_q):
         ordered = ivf_probe_cells(
             cents,
-            _query_vector(e, qid, "vec_id", "embedding", cache_key=sf_dir),
+            _query_vector(spark, sf_dir, qid),
             max_probe,
         )
         for pos, lbl in enumerate(ordered):
@@ -1597,7 +1590,7 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Identical fixed-point kernel as ann_cosine_topk, so the cosine is
     bit-identical across engines."""
     e = load(spark, sf_dir, "embeddings")
-    qv = _query_vector(e, 0, "vec_id", "embedding", cache_key=sf_dir)
+    qv = _query_vector(spark, sf_dir, 0)
     qrow = e.filter(F.col("vec_id") == 0).select("label").head()
     qlabel = qrow[0]
     qnsq = fp_dot_vec(qv, qv)
@@ -1704,7 +1697,7 @@ def embedding_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERDICT r8 #5), and both recall@10 overlaps fall out of a single
     1-row array_intersect unpivoted with stack()."""
     e = load(spark, sf_dir, "embeddings")
-    qv = _query_vector(e, 0, "vec_id", "embedding", cache_key=sf_dir)
+    qv = _query_vector(spark, sf_dir, 0)
 
     q64 = np.asarray(qv, dtype=np.float64)
     scale = float(SCALE)
@@ -1925,7 +1918,7 @@ def mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline: the query vector rides the Arrow-UDF closure (nothing
     joined), one corpus scan, TakeOrderedAndProject."""
     e = load(spark, sf_dir, "embeddings")
-    qv = _query_vector(e, 0, "vec_id", "embedding", cache_key=sf_dir)
+    qv = _query_vector(spark, sf_dir, 0)
     s = scores_vs_query_udf(qv)
     return (
         e.filter(F.col("vec_id") != 0)
@@ -2027,7 +2020,7 @@ def mips_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
     cents = ivf_centroids(spark, sf_dir)
     m2, caugs = mips_aug_cells(spark, sf_dir)
-    qv = _query_vector(e, 0, "vec_id", "embedding", cache_key=sf_dir)
+    qv = _query_vector(spark, sf_dir, 0)
     cells = mips_probe_cells(cents, caugs, qv, nprobe=2)
     s = scores_vs_query_udf(qv)
     return (
@@ -2115,8 +2108,7 @@ def mips_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     n_q, k, max_probe = 5, 10, 3
-    e = load(spark, sf_dir, "embeddings")
-    scored = _multi_query_scores(e, sf_dir, n_q)
+    scored = _multi_query_scores(spark, sf_dir, n_q)
     cents = ivf_centroids(spark, sf_dir)
     m2, caugs = mips_aug_cells(spark, sf_dir)
     rank_of = {}
@@ -2124,7 +2116,7 @@ def mips_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ordered = mips_probe_cells(
             cents,
             caugs,
-            _query_vector(e, qid, "vec_id", "embedding", cache_key=sf_dir),
+            _query_vector(spark, sf_dir, qid),
             max_probe,
         )
         for pos, lbl in enumerate(ordered):
@@ -2551,7 +2543,7 @@ def ann_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, no join back). posexplode of the 10-element result is the
     whole tail."""
     e = load(spark, sf_dir, "embeddings")
-    qv = _query_vector(e, 0, "vec_id", "embedding", cache_key=sf_dir)
+    qv = _query_vector(spark, sf_dir, 0)
 
     q64 = np.asarray(qv, dtype=np.float64)
     scale = float(SCALE)
@@ -2753,7 +2745,7 @@ def ann_rerank_pool_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     carried c_hi → slice k → intersect with the exact ids) — four
     integer-count rows from one row of arrays, unpivoted with stack."""
     e = load(spark, sf_dir, "embeddings")
-    qv = _query_vector(e, 0, "vec_id", "embedding", cache_key=sf_dir)
+    qv = _query_vector(spark, sf_dir, 0)
 
     q64 = np.asarray(qv, dtype=np.float64)
     scale = float(SCALE)

@@ -193,23 +193,17 @@ def user_type_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def prepare_temporal(spark: SparkSession, sf_dir: str) -> None:
-    """Offline featurization hook (bench/deploy): materialize the event
-    census sidecars for a corpus version — same once-per-corpus contract
-    as prepare_dedup / prepare_curation, so the audit queries measure
-    the serving read."""
-    from trialstreamer_spark.util import materialize_plan
-
-    minute_census(spark, sf_dir)
-    user_day_pairs(spark, sf_dir)
-    user_type_pairs(spark, sf_dir)
-    typed_gap_counts(spark, sf_dir)
-    for key in (
-        ("minute_census", sf_dir, "v2"),
-        ("user_day_pairs", sf_dir),
-        ("user_type_pairs", sf_dir),
-        ("gap_counts", sf_dir),
+    """Offline featurization hook (bench/deploy): build the event census
+    sidecars for a corpus version — same once-per-corpus contract as
+    prepare_dedup / prepare_curation, so the audit queries measure the
+    serving read."""
+    for sidecar in (
+        minute_census(spark, sf_dir),
+        user_day_pairs(spark, sf_dir),
+        user_type_pairs(spark, sf_dir),
+        typed_gap_counts(spark, sf_dir),
     ):
-        materialize_plan(spark, key)
+        sidecar.count()
 
 
 def asof_join(

@@ -858,6 +858,54 @@ MIN_SOURCE_TF = 5
 DISTINCTIVE_K = 5
 
 
+def source_token_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(source, rank, tok, n_st, lift_fp): each source's top
+    DISTINCTIVE_K tokens by integer lift, the scored-and-ranked
+    signature table behind source_distinctive_tokens — a per-corpus
+    statistic (|sources| × K rows), so a disk sidecar."""
+    from trialstreamer_spark.sidecars import disk_cached_plan
+
+    def build() -> DataFrame:
+        from pyspark.sql import Window as W
+
+        d = load(spark, sf_dir, "documents")
+        st = (
+            d.select(
+                "source",
+                F.explode(tokens_col(F.lower(F.col("text")))).alias("tok"),
+            )
+            .groupBy("source", "tok")
+            .agg(F.count("*").alias("n_st"))
+        )
+        tot = st.agg(F.sum("n_st").alias("n_total"))
+        w = (
+            st.withColumn("n_t", F.sum("n_st").over(W.partitionBy("tok")))
+            .withColumn("n_s", F.sum("n_st").over(W.partitionBy("source")))
+            .crossJoin(F.broadcast(tot))
+        )
+        scored = w.where(F.col("n_st") >= MIN_SOURCE_TF).withColumn(
+            "lift_fp",
+            F.expr(
+                "(1000000 * (n_st * (n_total - n_s)))"
+                " DIV (GREATEST(n_t - n_st, 1) * n_s)"
+            ),
+        )
+        rk = W.partitionBy("source").orderBy(F.col("lift_fp").desc(), "tok")
+        return (
+            scored.withColumn("rank", F.row_number().over(rk))
+            .where(F.col("rank") <= DISTINCTIVE_K)
+            .select(
+                "source",
+                F.col("rank").cast("int").alias("rank"),
+                "tok",
+                "n_st",
+                "lift_fp",
+            )
+        )
+
+    return disk_cached_plan(spark, sf_dir, "source_token_signatures", build)
+
+
 @query(
     "source_distinctive_tokens",
     oracle=f"""
@@ -917,50 +965,7 @@ def source_distinctive_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic (|sources| × K rows), so it is a prepare_curation sidecar
     — the query path is a read + sort (round-5 perf-weak fix)."""
 
-    def build() -> DataFrame:
-        from pyspark.sql import Window as W
-
-        d = load(spark, sf_dir, "documents")
-        st = (
-            d.select(
-                "source",
-                F.explode(tokens_col(F.lower(F.col("text")))).alias("tok"),
-            )
-            .groupBy("source", "tok")
-            .agg(F.count("*").alias("n_st"))
-        )
-        tot = st.agg(F.sum("n_st").alias("n_total"))
-        w = (
-            st.withColumn("n_t", F.sum("n_st").over(W.partitionBy("tok")))
-            .withColumn("n_s", F.sum("n_st").over(W.partitionBy("source")))
-            .crossJoin(F.broadcast(tot))
-        )
-        scored = w.where(F.col("n_st") >= MIN_SOURCE_TF).withColumn(
-            "lift_fp",
-            F.expr(
-                "(1000000 * (n_st * (n_total - n_s)))"
-                " DIV (GREATEST(n_t - n_st, 1) * n_s)"
-            ),
-        )
-        rk = W.partitionBy("source").orderBy(F.col("lift_fp").desc(), "tok")
-        return (
-            scored.withColumn("rank", F.row_number().over(rk))
-            .where(F.col("rank") <= DISTINCTIVE_K)
-            .select(
-                "source",
-                F.col("rank").cast("int").alias("rank"),
-                "tok",
-                "n_st",
-                "lift_fp",
-            )
-        )
-
-    from trialstreamer_spark.sidecars import disk_cached_plan
-
-    return (
-        disk_cached_plan(spark, sf_dir, "source_token_signatures", build)
-        .orderBy("source", "rank")
-    )
+    return source_token_signatures(spark, sf_dir).orderBy("source", "rank")
 
 
 @query(

@@ -62,10 +62,12 @@ def _conf_bytes(v: str) -> int:
 
 
 #: Measured dim-leg rows are memoized per (session, expr-id-normalized
-#: optimized plan). The expr-id strip makes the SAME leg built twice hash
-#: to one key, so the count job runs once per session per corpus version
-#: (a warmed table's plan string embeds its parquet path, so a version
-#: bump under that path evicts the entry — util._key_references).
+#: optimized plan, the leg's input files). The expr-id strip makes the
+#: SAME leg built twice hash to one key, so the count job runs once per
+#: session per corpus version; the files tell apart same-shaped legs of
+#: two corpora, whose unwarmed plan strings carry no path, and tie the
+#: entry to its corpus (a version bump under a file's dir evicts it —
+#: util._key_references).
 _EXPR_ID_RE = re.compile(r"#\d+L?")
 
 
@@ -130,7 +132,8 @@ def _sf_dim(df: DataFrame) -> DataFrame:
         plan = _EXPR_ID_RE.sub(
             "", df._jdf.queryExecution().optimizedPlan().toString()
         )
-        rows = util.memo(("dim_leg_rows", plan), df.count, spark=spark)
+        key = ("dim_leg_rows", plan, *sorted(df.inputFiles()))
+        rows = util.memo(key, df.count, spark=spark)
         # Measured legs get 4× the session threshold: the 10 MB cap
         # exists to stop the PLANNER's unreliable estimates from
         # broadcasting fact projections, but a counted dim leg is a

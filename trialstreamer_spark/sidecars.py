@@ -8,6 +8,15 @@ replays, token postings), the PICO postings index
 (io.prepare_buckets). ``prepare_hooks`` is the one ordered list of
 hooks that builds them.
 
+Every per-corpus artifact has ONE accessor, ``name(spark, sf_dir[,
+params])``, in the module that owns it (e.g. dedup.shingle_postings,
+quality.winnow_pair_stats, similarity.knn_edges). The accessor alone
+knows the artifact's key, its source tables and its build; queries and
+the ``prepare_*`` hooks both call it, and a hook is just the list of
+its family's accessor calls, each result counted to materialize it.
+An intermediate that only one artifact's build reads lives inside that
+build, so a restart whose artifacts are current builds none of them.
+
 A catalog sidecar is a VERSIONED PARQUET table
 (operators/upsert.ParquetTable — write-new-then-swap, committed-pointer
 reads) fronted by a session-persisted ``util.cached_plan`` entry

@@ -3,17 +3,18 @@
 - ``inline_rows``: a literal dimension as a pure JVM plan;
 - ``ordered_small``: total order for a dimension-sized frame without a
   range exchange;
-- ``memo`` / ``cached_plan`` / ``materialize_plan``: the only in-memory
-  cache. ``memo`` stores any per-corpus value (in-process statistics,
-  table handles); ``cached_plan`` is ``memo`` with a session-scoped key
-  and a lazily persisted DataFrame. One store, one key shape
-  (``_plan_key``), one eviction rule: ``evict_caches(path)``, which
-  every ParquetTable version bump calls, drops every entry whose key
-  names that path and unpersists the ones that are persisted. No entry
-  owns files or views: artifacts with an on-disk life (sidecars, stream
-  replays, postings, bucket layouts) follow the ``sidecars`` lifecycle,
-  and disk-backed sidecars front this cache through
-  ``sidecars.disk_cached_plan``.
+- ``memo`` / ``cached_plan``: the only in-memory cache. ``memo`` stores
+  any per-corpus value (in-process statistics, table handles);
+  ``cached_plan`` is ``memo`` with a session-scoped key and a lazily
+  persisted DataFrame. One store, one key shape (``_plan_key``), one
+  eviction rule: ``evict_caches(path)``, which every ParquetTable
+  version bump calls, drops every entry whose key names that path and
+  unpersists the ones that are persisted. No entry owns files or views:
+  artifacts with an on-disk life (sidecars, stream replays, postings,
+  bucket layouts) follow the ``sidecars`` lifecycle, and disk-backed
+  sidecars front this cache through ``sidecars.disk_cached_plan``. A
+  sidecar's key is written in one place only: its accessor (see
+  ``sidecars``).
 
 Shipping the package to Python workers is ``dist.ship_package``.
 """
@@ -173,10 +174,3 @@ def evict_caches(token: str) -> None:
         except Exception:
             pass
 
-
-def materialize_plan(spark: SparkSession, key: tuple) -> None:
-    """Force a cached_plan entry to materialize now (offline-prep hook);
-    no-op if the plan was never registered."""
-    df = peek(spark, key)
-    if df is not None:
-        df.count()
