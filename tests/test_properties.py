@@ -125,34 +125,31 @@ def test_merge_replay_matches_reference_semantics(spark, tmp_path, seed_ops):
     import os
     import uuid
 
-    from pyspark.sql import functions as F
     from trialstreamer_spark.operators.upsert import ParquetTable
     from trialstreamer_spark.streaming.pipeline import PubmedPipeline
 
     wh = str(tmp_path / f"wh_{uuid.uuid4().hex[:8]}")
     pipe = PubmedPipeline(spark, wh)
 
-    upserts = [
-        (k, f"title-{f}", 2020, f"pubmed26n{f:04d}.xml.gz")
-        for kind, k, f in seed_ops
-        if kind == "upsert"
-    ]
-    deletes = [
-        (k, f"pubmed26n{f:04d}.xml.gz")
-        for kind, k, f in seed_ops
-        if kind == "delete"
-    ]
-    art = spark.createDataFrame(
-        upserts or [("__none__", "x", 2020, "pubmed26n0000.xml.gz")],
-        "pmid string, title string, year int, source_filename string",
-    ).filter(F.col("pmid") != "__none__")
-    dels = spark.createDataFrame(
-        deletes or [("__none__", "pubmed26n0000.xml.gz")],
-        "pmid string, source_filename string",
-    ).filter(F.col("pmid") != "__none__")
+    # the parser's tagged record shape; articles of one file keep their
+    # order in ``record_idx``
+    in_file: dict = {}
+    rows = []
+    for kind, k, f in seed_ops:
+        name = f"pubmed26n{f:04d}.xml.gz"
+        if kind == "upsert":
+            rows.append(("article", k, f"title-{f}", 2020, name, in_file.get(f, 0)))
+            in_file[f] = in_file.get(f, 0) + 1
+        else:
+            rows.append(("delete", k, None, None, name, None))
+    records = spark.createDataFrame(
+        rows,
+        "kind string, pmid string, title string, year int, "
+        "source_filename string, record_idx int",
+    )
 
-    # run through the pipeline's batch-application core
-    pipe._apply_batch(art, dels)
+    # run through the pipeline's one micro-batch core
+    pipe._apply(records)
     got = {
         r.pmid: int(r.source_filename[9:13])
         for r in ParquetTable(spark, os.path.join(wh, "pubmed_raw"))

@@ -10,8 +10,6 @@ import json
 import os
 import time
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from trialstreamer_spark.streaming.pipeline import hourly_event_rollup
@@ -178,9 +176,9 @@ def test_dedup_stream_drops_redeliveries(spark, tmp_path):
 
 
 def test_running_totals_stream_accumulates_across_batches(spark, tmp_path):
-    """transformWithStateInPandas running totals: each micro-batch emits
-    one row per active user; totals accumulate exactly (integer cents)
-    across batches and keys never interfere."""
+    """applyInPandasWithState running totals (``running_totals_stream``):
+    each micro-batch emits one row per active user; totals accumulate
+    exactly (integer cents) across batches and keys never interfere."""
     from trialstreamer_spark.streaming.stateful import running_totals_stream
 
     batches = [
@@ -209,103 +207,6 @@ def test_running_totals_stream_accumulates_across_batches(spark, tmp_path):
     assert by_user[2] == [(1, 1, 500), (1, 2, 500), (1, 3, 1500)]
 
 
-def test_running_totals_tws_compiles_plan_and_state_spec(spark, tmp_path):
-    """Plan-level TWS assertion (always runs, protobuf or not): the
-    transformWithStateInPandas pipeline must COMPILE — analyzed output
-    schema, streaming-ness, and the StatefulProcessor's state spec
-    (init registers the typed ValueState with the declared schema and
-    TTL). Execution is covered by the sibling test on protobuf-capable
-    clusters; this one proves the operator is wired correctly up to the
-    runtime seam."""
-    from trialstreamer_spark.streaming.stateful import (
-        _make_running_total_processor,
-        running_totals_stream_tws,
-    )
-
-    empty_src = tmp_path / "empty_src"
-    empty_src.mkdir()
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(empty_src))
-    )
-    df = running_totals_stream_tws(stream, ttl_ms=3600_000)
-    assert df.isStreaming
-    assert [f.name for f in df.schema.fields] == [
-        "user_id",
-        "batch_events",
-        "total_events",
-        "total_cents",
-    ]
-
-    # drive the processor's init against a recording handle: the state
-    # spec (name, schema, TTL) is what the state store will be built
-    # from — assert it without needing the protobuf runner
-    registered = {}
-
-    class _Handle:
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            registered[name] = (schema, ttlDurationMs)
-
-            class _VS:
-                def exists(self):
-                    return False
-
-                def get(self):
-                    return None
-
-                def update(self, v):
-                    pass
-
-            return _VS()
-
-    proc = _make_running_total_processor(ttl_ms=3600_000)
-    proc.init(_Handle())
-    assert list(registered) == ["totals"]
-    schema, ttl = registered["totals"]
-    assert ttl == 3600_000
-    # DDL state schema: two long counters, the exact-cents discipline
-    assert schema == "n long, cents long"
-
-
-def test_running_totals_tws_requires_protobuf(spark, tmp_path):
-    """transformWithStateInPandas execution: its Python runner needs
-    protobuf, absent from this container (environment-final — see
-    SCALE.md). When protobuf IS present the TWS variant must produce the
-    same trajectories as the applyInPandasWithState one."""
-    import importlib.util
-
-    from trialstreamer_spark.streaming.stateful import running_totals_stream_tws
-
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-    if not has_protobuf:
-        # Round-9 negative result: installing/vendoring was attempted and
-        # is impossible here — the sandbox has no network (pip resolves
-        # zero protobuf versions) and a hand-rolled shim would have to
-        # reimplement the proto wire format the TWS state-server socket
-        # protocol speaks. Environment-final until the container ships
-        # protobuf; the plan/state-spec twin test above always runs.
-        pytest.skip("protobuf not available: TWS runtime cannot execute here")
-    batches = [[(1, 0, "view", 1.11)], [(1, 10, "view", 2.22)]]
-    src = str(tmp_path / "events_src")
-    _write_batches(src, batches)
-    got = _run_stream(
-        spark,
-        src,
-        str(tmp_path / "ckpt_tws"),
-        lambda s: running_totals_stream_tws(s),
-        "running_totals_tws_out",
-    ).collect()
-    traj = [
-        (r.batch_events, r.total_events, r.total_cents)
-        for r in sorted(got, key=lambda r: r.total_events)
-    ]
-    assert traj == [(1, 1, 111), (1, 2, 333)]
-
-
 def test_stream_batch_parity_queries_match_oracle(spark, sf_dir):
     """The driver-facing parity queries (streaming operators run to
     completion over a single-batch replay) must hash-match their DuckDB
@@ -316,6 +217,45 @@ def test_stream_batch_parity_queries_match_oracle(spark, sf_dir):
 
     for name in ("sessionize_stream_parity", "running_totals_stream_parity"):
         assert_matches(QUERIES[name](spark, sf_dir), ORACLES[name], sf_dir)
+
+
+def test_parity_replays_run_the_production_operators(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The staged parity replays check the operators production runs:
+    built into an empty sidecar catalog, each calls
+    ``pipeline.hourly_event_rollup`` or ``stateful.dedup_stream`` (not
+    a private copy) and still matches its DuckDB oracle."""
+    from tests.oracle_util import assert_matches
+    from trialstreamer_spark.plans.registry import ORACLES, QUERIES
+    from trialstreamer_spark.streaming import parity
+
+    calls = []
+
+    def recorder(name, fn):
+        def wrapped(*args, **kwargs):
+            calls.append((name, kwargs.get("keys")))
+            return fn(*args, **kwargs)
+
+        return wrapped
+
+    monkeypatch.setattr(
+        parity, "hourly_event_rollup",
+        recorder("hourly_event_rollup", parity.hourly_event_rollup),
+    )
+    monkeypatch.setattr(
+        parity, "dedup_stream", recorder("dedup_stream", parity.dedup_stream)
+    )
+    monkeypatch.setenv("SPARK_GRAFT_SIDECAR_DIR", str(tmp_path / "sidecars"))
+    for name, want in (
+        ("watermark_finalize_stream_parity", ("hourly_event_rollup", None)),
+        ("update_mode_rollup_stream_parity", ("hourly_event_rollup", None)),
+        ("dedup_expiry_stream_parity", ("dedup_stream", ["user_id", "event_type"])),
+    ):
+        calls.clear()
+        got = QUERIES[name](spark, sf_dir)
+        assert calls == [want], name
+        assert_matches(got, ORACLES[name], sf_dir)
 
 
 def test_topk_stream_state_survives_restart(spark, tmp_path):

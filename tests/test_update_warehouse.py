@@ -111,7 +111,7 @@ def test_meta_reads_pipeline_warehouse(spark, tmp_path, hybrid_warehouse):
     xml_dir = tmp_path / "xml"
     generate_xml_fixtures(str(xml_dir))
     pipe = PubmedPipeline(spark, hybrid_warehouse)
-    pipe.run_batch(os.path.join(str(xml_dir), "*.xml.gz"))
+    pipe.run_stream(str(xml_dir), str(tmp_path / "ckpt"))
     pipe.log_run("fullcheck")
 
     tables = engine.Tables(spark, hybrid_warehouse)

@@ -1,6 +1,7 @@
 """Per-query Spark JOB count + wall time — the r9 verdict's requested
 diagnostic (Next round #1): on this VM each job costs a ~70-85 ms
-scheduler round-trip (tools/bench_floor.py), so under AQE — which
+scheduler round-trip (measured by the since-deleted tools/bench_floor.py),
+so under AQE — which
 materializes every exchange as its own job — job count × floor is the
 lower bound a sub-second query can ever reach. A query can only get
 faster than that by REMOVING exchanges, not by tuning them.

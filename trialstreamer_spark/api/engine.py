@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 
 COVID_CUI = "TS-COV19"
 COVID_MESH_UI = "C000657245"
-PICO_FIELDS = ("population", "interventions", "outcomes")
 RESULT_CAP = 250  # per source leg (cnxapp.py:217-219,262,290)
 
 

@@ -28,8 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from trialstreamer_spark.functions.annotate import DeterministicStubAnnotator
-
-PICO_FIELDS = ("population", "interventions", "outcomes")
+from trialstreamer_spark.schemas import PICO_FIELDS
 
 
 def explode_pico_spans(annotations: DataFrame) -> DataFrame:

@@ -177,13 +177,15 @@ def cosine_from_fp(dot: Column, nsq_a: Column, nsq_b: Column) -> Column:
     return dot / F.sqrt(nsq_a.cast("double") * nsq_b.cast("double"))
 
 
-# Column-expression fallbacks (interpreted path — ONLY for tiny inputs
-# such as 1×1 probes or unit tests; the hot paths above use Arrow UDFs).
+# Column-expression forms (interpreted higher-order functions): one
+# norm per corpus row (mips_aug_cells, the norm-outlier table) or a tiny
+# probe. Pairwise hot paths use the Arrow UDFs above.
 
 
 def dot_fp(a: Column, b: Column) -> Column:
-    """Fixed-point dot product as a column expression. Interpreted
-    (nested higher-order functions) — do not use on large inputs."""
+    """Fixed-point dot product as a column expression: the same per-term
+    floor at 1e-7 and associative int64 sum as the Arrow kernels and the
+    DuckDB oracles, so every engine gets the same integer."""
     return F.aggregate(
         F.zip_with(
             a,
@@ -349,13 +351,6 @@ def ivf_probe_cells(
 # sqrt(M² − |v|²) to each vector and 0 to the query, and unit-norm /
 # cosine search recovers inner-product order because every augmented
 # corpus vector has norm exactly M.
-#: Spark-SQL twin of _DD_DOT_FP (same per-term floor at 1e-7, same
-#: associative int64 sum) for expression-engine dots over array columns.
-_SPARK_DOT_FP = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> "
-    "CAST(FLOOR(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) * 10000000) AS BIGINT)), "
-    "0L, (s, t) -> s + t)"
-)
 
 
 def mips_aug_cells(
@@ -370,7 +365,7 @@ def mips_aug_cells(
 
     def build() -> tuple[int, dict[int, float]]:
         e = load(spark, sf_dir, "embeddings")
-        nsq = F.expr(_SPARK_DOT_FP.format(a="embedding", b="embedding"))
+        nsq = norm_sq_fp(F.col("embedding"))
         base = e.select("label", nsq.alias("nsq"))
         m2 = int(base.agg(F.max("nsq")).collect()[0][0])
         rows = (

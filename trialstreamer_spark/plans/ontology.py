@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from trialstreamer_spark.schemas import PICO_FIELDS
+
 # ---------------------------------------------------------------------------
 # G4 — MeSH tree file → nodes, edges, closure
 # ---------------------------------------------------------------------------
@@ -211,8 +213,6 @@ def class_from_drug(pa_long: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # G6 — autocomplete suggestion table
 # ---------------------------------------------------------------------------
-
-PICO_FIELDS = ("population", "interventions", "outcomes")
 
 
 def build_autocomplete_suggestions(annotations: DataFrame) -> DataFrame:

@@ -31,7 +31,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-PICO_FIELDS = ("population", "interventions", "outcomes")
+from trialstreamer_spark.schemas import PICO_FIELDS
 
 #: Directory-level pruning granularity of the written postings table:
 #: cui hash-shards become hive partitions, so a term lookup opens only

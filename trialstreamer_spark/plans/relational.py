@@ -2943,9 +2943,9 @@ def product_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     part leg, un-persisted bucket projections, and sorted bucket scans
     (the cached copy was re-sorting both facts per merge join).
     Round-11 CLEAN certify (first measurement of the session, 100 ms/job
-    floor stamp, certify_r11_sf10.json): 1.32 s / 2.05x at sf10 — the
-    r10 committed 4.68x/6.57 s row was end-of-session heat, not plan
-    cost; the steady-state number is ~1.3-1.5 s.
+    floor stamp, certify_r11_sf10.json in git history): 1.32 s / 2.05x
+    at sf10 — the r10 committed 4.68x/6.57 s row was end-of-session
+    heat, not plan cost; the steady-state number is ~1.3-1.5 s.
 
     Scale shape: the LIKE filter prunes the part dim BEFORE broadcast
     (pattern filters don't reach parquet row-groups, but the dim is

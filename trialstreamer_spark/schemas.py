@@ -31,6 +31,10 @@ MESH = _s(_f("cui", S), _f("mesh_ui", S), _f("mesh_term", S), _f("cui_str", S))
 MESH_ARR = T.ArrayType(MESH)
 STR_ARR = T.ArrayType(S)
 
+# the three PICO fields: each is a span array plus a ``<field>_mesh``
+# concept array in the annotation tables below
+PICO_FIELDS = ("population", "interventions", "outcomes")
+
 # pm_data — typed replacement for the pubmed jsonb document
 # (ref readers/pmreader.py:158-177)
 PM_DATA = _s(

@@ -12,9 +12,8 @@ parallelism is the physical maximum regardless of reader; thousands of
 files saturate thousands of cores.
 
 Each file is parsed ONCE: ``parse_files`` emits both record kinds in one
-``mapInPandas`` pass, tagged by ``kind`` ('article' or 'delete').
-``read_articles``/``read_deletes`` filter that one tagged frame, and the
-batch and streaming pipelines resolve it whole
+``mapInPandas`` pass, tagged by ``kind`` ('article' or 'delete'), and
+the streaming pipeline resolves each micro-batch's frame whole
 (``streaming.pipeline.latest_events``). A delete row fills every
 article column with ``None`` explicitly: pandas would fill the gaps with
 NaN, which Arrow cannot convert into an array column.
@@ -38,8 +37,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 _YEAR_RE = re.compile(r"\b(19|20)\d{2}\b")
 
@@ -179,19 +177,3 @@ def parse_files(files: DataFrame) -> DataFrame:
     return files.select("path", "content").mapInPandas(
         _parse_batches, schema=RECORD_SCHEMA
     )
-
-
-def read_records(spark: SparkSession, glob_path: str) -> DataFrame:
-    return parse_files(spark.read.format("binaryFile").load(glob_path))
-
-
-def read_articles(spark: SparkSession, glob_path: str) -> DataFrame:
-    """Upsert rows of the files (ref pubmed.py:302-314)."""
-    records = read_records(spark, glob_path)
-    return records.filter(F.col("kind") == "article").drop("kind")
-
-
-def read_deletes(spark: SparkSession, glob_path: str) -> DataFrame:
-    """CDC delete list of the files (ref pubmed.py:316-317)."""
-    records = read_records(spark, glob_path)
-    return records.filter(F.col("kind") == "delete").select("pmid", "source_filename")

@@ -4,6 +4,12 @@
 ``Trigger.AvailableNow``, and return the sink contents as a batch
 DataFrame the driver can hash-compare against a DuckDB oracle.
 
+Every replay calls the operator production runs (``streaming.stateful``
+and ``streaming.pipeline``'s rollups), never a private copy of it:
+columns a query does not compare (a float sum, the unprojected event
+fields) are dropped by the query's final ``select``, not by a
+replay-only variant of the operator.
+
 Determinism contract (what makes a streaming run oracle-checkable):
 
 - the events table is ONE parquet file, and the file streaming source
@@ -51,6 +57,10 @@ from pyspark.sql.types import (
 
 from trialstreamer_spark.plans.registry import query
 from trialstreamer_spark.sidecars import disk_cached_plan
+from trialstreamer_spark.streaming.pipeline import (
+    hopping_event_rollup,
+    hourly_event_rollup,
+)
 from trialstreamer_spark.streaming.stateful import (
     TOPK_K,
     dedup_stream,
@@ -321,8 +331,6 @@ def windowed_rollup_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     parity compare (float sums are accumulation-order-dependent across
     engines); counts are exact. Append-mode watermark-close emission is
     covered by tests/test_streaming_ops.py with controlled batches."""
-    from trialstreamer_spark.streaming.pipeline import hourly_event_rollup
-
     t = _run_stream_to_table(
         spark, sf_dir, "rollup", hourly_event_rollup, output_mode="complete"
     )
@@ -510,8 +518,6 @@ def hopping_rollup_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     unnests both window starts per event and groups. Complete output
     mode emits every window after the single replay batch. Counts are
     exact; epoch arithmetic is pure int64 µs on both engines."""
-    from trialstreamer_spark.streaming.pipeline import hopping_event_rollup
-
     t = _run_stream_to_table(
         spark, sf_dir, "hopping", hopping_event_rollup, output_mode="complete"
     )
@@ -544,12 +550,15 @@ def hopping_rollup_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def upsert_sink_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end PRODUCTION-SINK parity: the events stream runs through
-    foreachBatch → keep-last dedupe → ParquetTable MERGE (the exact
-    S13–S16 ingest path the PubMed pipeline uses, on the driver-checkable
-    events table), and the resulting latest-state table must equal the
-    batch keep-last per (user_id, event_type). This closes the one
-    streaming seam the memory-sink parity queries don't exercise: the
-    keyed upsert sink itself, version pointer flip included.
+    foreachBatch → keep-last dedupe → ParquetTable MERGE, and the
+    resulting latest-state table must equal the batch keep-last per
+    (user_id, event_type). The MERGE is the one the PubMed pipeline
+    commits with (S13–S16); the keep-last window is this replay's own,
+    keyed on the events table's (user_id, event_type) where the
+    pipeline's ``latest_events`` resolves pmids by file order. This
+    closes the one streaming seam the memory-sink parity queries don't
+    exercise: the keyed upsert sink itself, version pointer flip
+    included.
 
     Determinism: single-batch replay (one file source), keep-last
     ordered by (ts DESC, event_id DESC) — a total order; money is
@@ -722,21 +731,6 @@ def _even_odd_slices(ev: DataFrame) -> list:
     return [F.col("event_id") % 2 == 0, F.col("event_id") % 2 == 1]
 
 
-def _hourly_window_rollup(stream: DataFrame) -> DataFrame:
-    """The production hourly rollup under a 1-hour watermark — the
-    streaming aggregate both output-mode replays drive."""
-    return (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type",
-            "n",
-        )
-    )
-
-
 @query(
     "watermark_finalize_stream_parity",
     oracle="""
@@ -774,14 +768,14 @@ def watermark_finalize_stream_parity(spark: SparkSession, sf_dir: str) -> DataFr
     emits exactly the finalized-window set, and merge-happens-before-
     evict within a batch.
 
-    Scale shape: identical to the production hourly rollup — state is
-    one row per open (window, type), the watermark bounds it, and the
-    only exchange is the streaming aggregation's own hash
-    partitioning. The two-file replay is the harness analog of a
-    backfill racing the live feed."""
+    The replay runs the production hourly rollup
+    (``pipeline.hourly_event_rollup``): state is one row per open
+    (window, type), the watermark bounds it, and the only exchange is
+    the streaming aggregation's own hash partitioning. The two-file
+    replay is the harness analog of a backfill racing the live feed."""
     t = _staged_replay(
         spark, sf_dir, "wm_finalize", _even_odd_slices,
-        _hourly_window_rollup, output_mode="append",
+        hourly_event_rollup, output_mode="append",
     )
     return (
         t.select(
@@ -844,11 +838,12 @@ def update_mode_rollup_stream_parity(spark: SparkSession, sf_dir: str) -> DataFr
     and MERGE idempotency (upsert_sink_stream_parity) absorbs the
     re-delivery.
 
-    Scale shape: identical to the production rollup — per-key state,
-    watermark-bounded, one streaming-aggregation exchange."""
+    Scale shape: the production rollup (``pipeline.hourly_event_rollup``)
+    itself — per-key state, watermark-bounded, one streaming-aggregation
+    exchange."""
     t = _staged_replay(
         spark, sf_dir, "upd_rollup", _even_odd_slices,
-        _hourly_window_rollup, output_mode="update",
+        hourly_event_rollup, output_mode="update",
     )
     return (
         t.select(
@@ -910,9 +905,11 @@ def dedup_expiry_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mid ∖ (recent∖old)), a pure set statement. Keys-only projection
     keeps which-row-won out of the compare.
 
-    Scale shape: per-key (expiresAt) state riding the dedup shuffle's
-    hash partitioning; eviction is the watermark predicate — state is
-    bounded by arrival-rate × delay, the contract this parity pins."""
+    The replay runs the production operator
+    (``stateful.dedup_stream``). Scale shape: per-key (expiresAt) state
+    riding the dedup shuffle's hash partitioning; eviction is the
+    watermark predicate — state is bounded by arrival-rate × delay, the
+    contract this parity pins."""
 
     def _time_slices(ev: DataFrame) -> list:
         tmax = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
@@ -924,18 +921,12 @@ def dedup_expiry_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             (tsu > tmax - 4 * h) & (tsu <= tmax - 2 * h),
         ]
 
-    def _bounded_dedup(stream: DataFrame) -> DataFrame:
-        return (
-            stream.withWatermark("ts", "1 hour")
-            .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-            .select("user_id", "event_type")
-        )
-
     t = _staged_replay(
-        spark, sf_dir, "dedup_expiry", _time_slices, _bounded_dedup,
+        spark, sf_dir, "dedup_expiry", _time_slices,
+        lambda ev: dedup_stream(ev, keys=["user_id", "event_type"]),
         output_mode="append",
     )
-    return t.orderBy("user_id", "event_type")
+    return t.select("user_id", "event_type").orderBy("user_id", "event_type")
 
 
 @query(

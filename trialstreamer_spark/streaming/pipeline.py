@@ -15,6 +15,12 @@ Reference behavior carried over (SURVEY §2.9):
   batch commits its own rows with ``ParquetTable.append``, never
   re-reading or rewriting the log.
 
+One path: ``run_stream`` → ``_apply_records`` → ``_apply`` is the only
+way files reach the tables. ``Trigger.AvailableNow`` is the run-once
+trigger that lets a periodic job be a stream (Structured Streaming,
+SIGMOD 2018), so a backfill or a test lands its files and runs the
+stream too; there is no second, batch entry point to keep in step.
+
 Parse once: a batch's files go through ONE ``pubmed_xml.parse_files``
 pass, persisted for the duration of the batch and unpersisted in a
 ``finally``. The MERGE input and the audit rows are both derived from
@@ -75,9 +81,10 @@ def latest_events(records: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 class PubmedPipeline:
-    """Landing-dir → typed tables with CDC. Batch and streaming entry
-    points share one _apply_records (one parse, then _apply), so replay
-    semantics are identical."""
+    """Landing-dir → typed tables with CDC. ``run_stream`` is the one
+    entry point: every micro-batch of landed files goes through
+    ``_apply_records`` (one parse) and ``_apply`` (resolve, MERGE,
+    counts, audit)."""
 
     def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
@@ -89,47 +96,20 @@ class PubmedPipeline:
             spark, os.path.join(warehouse, "pubmed_year_counts")
         )
 
-    # -- core batch application (used by both batch & foreachBatch) -------
+    # -- one micro-batch ---------------------------------------------------
 
-    def _apply_records(self, records: DataFrame, streaming: bool = False) -> None:
+    def _apply_records(self, records: DataFrame) -> None:
         """Apply one ``pubmed_xml.parse_files`` frame, parsed once: every
         job of the batch reads the persisted records."""
         records = records.persist()
         try:
-            self._apply(records, streaming=streaming)
+            self._apply(records)
         finally:
             records.unpersist()
 
-    def _apply_batch(
-        self, articles: DataFrame, deletes: DataFrame, streaming: bool = False
-    ) -> None:
-        """Apply frames already split by kind (tests, ad-hoc frames): tag
-        them back into the record shape and resolve. Articles without a
-        ``record_idx`` tie-break in-file duplicates on a constant."""
-        if "record_idx" not in articles.columns:
-            articles = articles.withColumn("record_idx", F.lit(0))
-        records = articles.withColumn("kind", F.lit("article")).unionByName(
-            deletes.withColumn("kind", F.lit("delete")), allowMissingColumns=True
-        )
-        self._apply(records, streaming=streaming)
-
-    def _apply(self, records: DataFrame, streaming: bool = False) -> None:
+    def _apply(self, records: DataFrame) -> None:
         upserts, deletes = latest_events(records)
-        # run statistics (SURVEY A8 — the reference's Counter telemetry at
-        # pubmed.py:458,480,550): an Observation rides the merge action,
-        # so counting costs no extra job. Observation.get blocks on a
-        # QueryExecutionListener that never fires for actions inside
-        # foreachBatch, so streaming mode observes on the stream instead
-        # (run_stream) and this stays batch-only.
-        obs = None
-        if not streaming:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            upserts = upserts.observe(obs, F.count(F.lit(1)).alias("n_upserts"))
         self.articles.merge(upserts, "pmid", deletes=deletes)
-        if obs is not None:
-            self.last_batch_stats = obs.get
         self._refresh_counts()
         self._log_update(records)
 
@@ -177,17 +157,19 @@ class PubmedPipeline:
         # grows by one file per commit
         self.audit.append(rows.coalesce(1))
 
-    # -- batch mode --------------------------------------------------------
-
-    def run_batch(self, glob_path: str) -> None:
-        self._apply_records(pubmed_xml.read_records(self.spark, glob_path))
-
-    # -- streaming mode ----------------------------------------------------
+    # -- the run -----------------------------------------------------------
 
     def run_stream(self, landing_dir: str, checkpoint_dir: str) -> None:
         """File-source stream over the landing dir; every micro-batch of
-        newly-arrived files goes through the same parse→dedupe→MERGE.
-        availableNow processes the backlog then stops (the cron run)."""
+        newly-arrived files goes through the same parse→resolve→MERGE.
+        availableNow processes the backlog then stops (the cron run).
+
+        Run statistics (SURVEY A8 — the reference's Counter telemetry at
+        pubmed.py:458,480,550) ride the stream as observed metrics, so
+        counting costs no extra job. ``last_batch_stats`` holds this
+        run's last micro-batch counts (``n_files``) as a dict, and is
+        empty after a run that found no new files."""
+        self.last_batch_stats = {}
         files = (
             self.spark.readStream.format("binaryFile")
             .schema(
@@ -199,10 +181,8 @@ class PubmedPipeline:
         )
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            self._apply_records(pubmed_xml.parse_files(batch_df), streaming=True)
+            self._apply_records(pubmed_xml.parse_files(batch_df))
 
-        # A8 streaming leg: per-micro-batch file counts surface in
-        # StreamingQueryProgress.observedMetrics
         observed = files.observe(
             "batch_stats", F.count(F.lit(1)).alias("n_files")
         )
@@ -214,8 +194,9 @@ class PubmedPipeline:
         )
         q.awaitTermination()
         prog = q.lastProgress
-        if prog and prog.get("observedMetrics", {}).get("batch_stats"):
-            self.last_batch_stats = prog["observedMetrics"]["batch_stats"]
+        stats = prog.observedMetrics.get("batch_stats") if prog else None
+        if stats:
+            self.last_batch_stats = stats.asDict()
 
 
 def hourly_event_rollup(events: DataFrame) -> DataFrame:

@@ -18,6 +18,12 @@ by the groupBy hash — the same partitioning the shuffle already did, so
 adding state costs no extra exchange. The batch analog (for replay /
 backfill parity) is plans.relational.sessionize, which computes the same
 sessions with a lag-window over a static table.
+
+Each operator here has one implementation, and the parity replays in
+``streaming.parity`` call these same functions: ``sessionize_stream``,
+``dedup_stream`` (built-in ``dropDuplicatesWithinWatermark``),
+``running_totals_stream`` and ``topk_stream`` (both
+``applyInPandasWithState``).
 """
 
 from __future__ import annotations
@@ -155,11 +161,8 @@ def dedup_stream(
 
 
 # ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 StatefulProcessor API): running
-# per-key accumulator with TTL'd state — the general-purpose stateful
-# primitive (applyInPandasWithState's successor: typed state variables,
-# per-state TTL, timers) shown here as the streaming analog of the batch
-# running aggregates.
+# Running per-key accumulator: the streaming analog of the batch running
+# aggregates, one (long, long) state tuple per user key
 # ---------------------------------------------------------------------------
 
 RUNNING_TOTAL_OUTPUT = StructType(
@@ -170,90 +173,6 @@ RUNNING_TOTAL_OUTPUT = StructType(
         StructField("total_cents", LongType()),
     ]
 )
-
-
-def _make_running_total_processor(ttl_ms: int | None):
-    """Built lazily inside the worker-safe closure: one ValueState
-    (n_events, cents) per user key. Integer cents keep the running sum
-    exact (same discipline as the batch plans); TTL bounds state for
-    keys that go quiet — the knob that keeps a years-long stream's state
-    finite without a watermark column in the value."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotalProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "n long, cents long", ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n, cents = (
-                self._state.get() if self._state.exists() else (0, 0)
-            )
-            batch_n = 0
-            for pdf in rows:
-                batch_n += len(pdf)
-                # per-row round THEN integer sum — identical to the batch
-                # plans' _cents discipline (a float sum rounded once can
-                # differ in the last cent)
-                cents += int(
-                    pdf["value"].astype(float).mul(100).round().astype("int64").sum()
-                )
-            n += batch_n
-            self._state.update((n, cents))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "batch_events": [batch_n],
-                    "total_events": [n],
-                    "total_cents": [cents],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return RunningTotalProcessor()
-
-
-def running_totals_stream_tws(
-    events: DataFrame,
-    watermark: str = "1 hour",
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """events(user_id, ts, value, ...) stream → one row per (user,
-    micro-batch) with the batch's event count and the exact running
-    totals, on the transformWithStateInPandas runtime. State is a single
-    (long, long) ValueState per key, co-partitioned with the groupBy
-    shuffle; TTL (processing-time) expires idle keys.
-
-    CAPABILITY SEAM: the TWS Python runner requires protobuf, which this
-    container does not ship — the test suite skips this path when
-    ``google.protobuf`` is missing and covers the identical semantics via
-    ``running_totals_stream`` (applyInPandasWithState) instead. On a real
-    cluster (protobuf present) this is the preferred implementation: typed
-    state variables, per-state TTL, and timers replace the single
-    state-tuple API.
-    """
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_make_running_total_processor(ttl_ms),
-            outputStructType=RUNNING_TOTAL_OUTPUT,
-            outputMode="append",
-            timeMode="ProcessingTime",
-        )
-    )
-
-
-# (user-key running totals as applyInPandasWithState — same semantics as
-# the TWS processor above, on the runtime this container can execute)
 
 RUNNING_TOTAL_STATE = StructType(
     [StructField("n", LongType()), StructField("cents", LongType())]
@@ -293,8 +212,7 @@ def running_totals_stream(
     micro-batch) with the batch's event count and exact running totals
     (integer cents). One (long, long) state tuple per key, riding the
     groupBy shuffle's partitioning — no extra exchange; NoTimeout keeps
-    totals for a key's whole lifetime (use running_totals_stream_tws's
-    TTL where idle-key state must expire)."""
+    totals for a key's whole lifetime."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy("user_id")
