@@ -34,7 +34,11 @@ def test_ann_recall_windows_carry_only_row_number(spark, sf_dir):
     """r12: the fused recall rank pass computes ONLY row_number (the
     in-cell running sums are implied for global top-k rows), and the
     rank filter group-limits per task before the exchange."""
-    for q in ("ann_recall_at_k", "ann_nprobe_recall_curve"):
+    for q in (
+        "ann_recall_at_k",
+        "ann_nprobe_recall_curve",
+        "mips_nprobe_recall_curve",
+    ):
         p = plan_of(QUERIES[q](spark, sf_dir))
         assert "WindowGroupLimit" in p, q
         # exactly one window expression: the row_number rank — no

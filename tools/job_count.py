@@ -8,8 +8,8 @@ faster than that by REMOVING exchanges, not by tuning them.
 
 Runs each named query with the standard offline preps applied (same
 contract as bench.py), twice warm, then reports the SECOND run's job
-count and best-of-2 wall time. Job attribution via job groups
-(setJobGroup around the action).
+count and best-of-2 wall time. Jobs are counted by
+tests/conftest.jobs_during, the counter tools/plan_budget.py uses.
 
 Usage: python tools/job_count.py <sf_dir> <query> [query ...]
        python tools/job_count.py /root/testdata/sf0.1 nation_market_share
@@ -24,6 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tests.conftest import jobs_during  # noqa: E402
 from trialstreamer_spark.plans.all_queries import QUERIES  # noqa: E402
 from trialstreamer_spark.session import get_spark  # noqa: E402
 
@@ -36,23 +37,18 @@ def run_preps(spark, sf_dir: str) -> None:
 
 
 def probe(spark, name: str, sf_dir: str) -> dict:
-    sc = spark.sparkContext
     QUERIES[name](spark, sf_dir).count()  # warm (codegen + caches)
     times = []
-    group = ""
-    for i in range(2):
-        group = f"probe-{name}-{i}"
-        sc.setJobGroup(group, name)
+    n_jobs = 0
+    for _ in range(2):
         t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).count()
+        n_jobs = jobs_during(spark, lambda: QUERIES[name](spark, sf_dir).count())
         times.append(time.perf_counter() - t0)
-        sc.setJobGroup(None, None)
-    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(group)
     return {
         "query": name,
-        "n_jobs": len(jobs),
+        "n_jobs": n_jobs,
         "best_s": round(min(times), 4),
-        "floor_bound_s": round(len(jobs) * 0.075, 3),
+        "floor_bound_s": round(n_jobs * 0.075, 3),
     }
 
 

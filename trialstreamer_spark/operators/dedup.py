@@ -507,13 +507,12 @@ _DD_SHINGLES = """
           FROM documents)
 """
 
-
-@query(
-    "dedup_minhash_lsh",
-    oracle=f"""
-    WITH sh AS ({_DD_SHINGLES}),
-    posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    hashes AS (SELECT doc_id, md5(shingle) AS m1, md5('x' || shingle) AS m2 FROM posting),
+#: DuckDB MinHash signature and LSH bands over a ``hashes(doc_id, m1,
+#: m2)`` CTE of two md5 hex digests per shingle: ``sig`` holds 8 minima
+#: (8-hex-char slices of m1 and m2), ``banded`` their 4 bands of 2 rows.
+#: The dedup oracles share this text only; each stays an independent
+#: DuckDB reference.
+_DD_MINHASH_BANDS = """
     sig AS (
       SELECT doc_id,
              MIN(substr(m1, 1, 8))  AS h0, MIN(substr(m1, 9, 8))  AS h1,
@@ -528,6 +527,16 @@ _DD_SHINGLES = """
       UNION ALL SELECT doc_id, 2, md5(h4 || '|' || h5) FROM sig
       UNION ALL SELECT doc_id, 3, md5(h6 || '|' || h7) FROM sig
     )
+"""
+
+
+@query(
+    "dedup_minhash_lsh",
+    oracle=f"""
+    WITH sh AS ({_DD_SHINGLES}),
+    posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
+    hashes AS (SELECT doc_id, md5(shingle) AS m1, md5('x' || shingle) AS m2 FROM posting),
+    {_DD_MINHASH_BANDS.strip()}
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM banded a JOIN banded b
       ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
@@ -559,20 +568,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE n_common / (sa.n_sh + sb.n_sh - n_common) >= 0.2
     ),
     hashes AS (SELECT doc_id, md5(shingle) AS m1, md5('x' || shingle) AS m2 FROM posting),
-    sig AS (
-      SELECT doc_id,
-             MIN(substr(m1, 1, 8))  AS h0, MIN(substr(m1, 9, 8))  AS h1,
-             MIN(substr(m1, 17, 8)) AS h2, MIN(substr(m1, 25, 8)) AS h3,
-             MIN(substr(m2, 1, 8))  AS h4, MIN(substr(m2, 9, 8))  AS h5,
-             MIN(substr(m2, 17, 8)) AS h6, MIN(substr(m2, 25, 8)) AS h7
-      FROM hashes GROUP BY doc_id
-    ),
-    banded AS (
-      SELECT doc_id, 0 AS band_id, md5(h0 || '|' || h1) AS band_key FROM sig
-      UNION ALL SELECT doc_id, 1, md5(h2 || '|' || h3) FROM sig
-      UNION ALL SELECT doc_id, 2, md5(h4 || '|' || h5) FROM sig
-      UNION ALL SELECT doc_id, 3, md5(h6 || '|' || h7) FROM sig
-    ),
+    {_DD_MINHASH_BANDS.strip()},
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM banded a JOIN banded b
@@ -710,20 +706,7 @@ def decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh AS ({_DD_SHINGLES}),
     posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     hashes AS (SELECT doc_id, md5(shingle) AS m1, md5('x' || shingle) AS m2 FROM posting),
-    sig AS (
-      SELECT doc_id,
-             MIN(substr(m1, 1, 8))  AS h0, MIN(substr(m1, 9, 8))  AS h1,
-             MIN(substr(m1, 17, 8)) AS h2, MIN(substr(m1, 25, 8)) AS h3,
-             MIN(substr(m2, 1, 8))  AS h4, MIN(substr(m2, 9, 8))  AS h5,
-             MIN(substr(m2, 17, 8)) AS h6, MIN(substr(m2, 25, 8)) AS h7
-      FROM hashes GROUP BY doc_id
-    ),
-    banded AS (
-      SELECT doc_id, 0 AS band_id, md5(h0 || '|' || h1) AS band_key FROM sig
-      UNION ALL SELECT doc_id, 1, md5(h2 || '|' || h3) FROM sig
-      UNION ALL SELECT doc_id, 2, md5(h4 || '|' || h5) FROM sig
-      UNION ALL SELECT doc_id, 3, md5(h6 || '|' || h7) FROM sig
-    ),
+    {_DD_MINHASH_BANDS.strip()},
     near AS (
       SELECT a.doc_id, CAST(COUNT(DISTINCT b.doc_id) AS BIGINT) AS n_near_dups
       FROM banded a JOIN banded b
@@ -807,20 +790,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH sh AS ({_DD_SHINGLES}),
     posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     hashes AS (SELECT doc_id, md5(shingle) AS m1, md5('x' || shingle) AS m2 FROM posting),
-    sig AS (
-      SELECT doc_id,
-             MIN(substr(m1, 1, 8))  AS h0, MIN(substr(m1, 9, 8))  AS h1,
-             MIN(substr(m1, 17, 8)) AS h2, MIN(substr(m1, 25, 8)) AS h3,
-             MIN(substr(m2, 1, 8))  AS h4, MIN(substr(m2, 9, 8))  AS h5,
-             MIN(substr(m2, 17, 8)) AS h6, MIN(substr(m2, 25, 8)) AS h7
-      FROM hashes GROUP BY doc_id
-    ),
-    banded AS (
-      SELECT doc_id, 0 AS band_id, md5(h0 || '|' || h1) AS band_key FROM sig
-      UNION ALL SELECT doc_id, 1, md5(h2 || '|' || h3) FROM sig
-      UNION ALL SELECT doc_id, 2, md5(h4 || '|' || h5) FROM sig
-      UNION ALL SELECT doc_id, 3, md5(h6 || '|' || h7) FROM sig
-    ),
+    {_DD_MINHASH_BANDS.strip()},
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM banded a JOIN banded b
@@ -1135,20 +1105,7 @@ def cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE sh AS ({_DD_SHINGLES}),
     posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     hashes AS (SELECT doc_id, md5(shingle) AS m1, md5('x' || shingle) AS m2 FROM posting),
-    sig AS (
-      SELECT doc_id,
-             MIN(substr(m1, 1, 8))  AS h0, MIN(substr(m1, 9, 8))  AS h1,
-             MIN(substr(m1, 17, 8)) AS h2, MIN(substr(m1, 25, 8)) AS h3,
-             MIN(substr(m2, 1, 8))  AS h4, MIN(substr(m2, 9, 8))  AS h5,
-             MIN(substr(m2, 17, 8)) AS h6, MIN(substr(m2, 25, 8)) AS h7
-      FROM hashes GROUP BY doc_id
-    ),
-    banded AS (
-      SELECT doc_id, 0 AS band_id, md5(h0 || '|' || h1) AS band_key FROM sig
-      UNION ALL SELECT doc_id, 1, md5(h2 || '|' || h3) FROM sig
-      UNION ALL SELECT doc_id, 2, md5(h4 || '|' || h5) FROM sig
-      UNION ALL SELECT doc_id, 3, md5(h6 || '|' || h7) FROM sig
-    ),
+    {_DD_MINHASH_BANDS.strip()},
     pairs AS ({_MINHASH_PAIRS_SQL}),
     edges AS (
       SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -1187,20 +1144,7 @@ _PR_SIG_CTES = f"""
     sh AS ({_DD_SHINGLES}),
     posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     hashes AS (SELECT doc_id, md5(shingle) AS m1, md5('x' || shingle) AS m2 FROM posting),
-    sig AS (
-      SELECT doc_id,
-             MIN(substr(m1, 1, 8))  AS h0, MIN(substr(m1, 9, 8))  AS h1,
-             MIN(substr(m1, 17, 8)) AS h2, MIN(substr(m1, 25, 8)) AS h3,
-             MIN(substr(m2, 1, 8))  AS h4, MIN(substr(m2, 9, 8))  AS h5,
-             MIN(substr(m2, 17, 8)) AS h6, MIN(substr(m2, 25, 8)) AS h7
-      FROM hashes GROUP BY doc_id
-    ),
-    banded AS (
-      SELECT doc_id, 0 AS band_id, md5(h0 || '|' || h1) AS band_key FROM sig
-      UNION ALL SELECT doc_id, 1, md5(h2 || '|' || h3) FROM sig
-      UNION ALL SELECT doc_id, 2, md5(h4 || '|' || h5) FROM sig
-      UNION ALL SELECT doc_id, 3, md5(h6 || '|' || h7) FROM sig
-    ),
+    {_DD_MINHASH_BANDS.strip()},
     pairs AS ({_MINHASH_PAIRS_SQL}),
     edges AS (
       SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -1553,20 +1497,7 @@ INCR_BATCH_MOD = 13
     WITH sh AS ({{_DD_SHINGLES}}),
     posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     hashes AS (SELECT doc_id, md5(shingle) AS m1, md5('x' || shingle) AS m2 FROM posting),
-    sig AS (
-      SELECT doc_id,
-             MIN(substr(m1, 1, 8))  AS h0, MIN(substr(m1, 9, 8))  AS h1,
-             MIN(substr(m1, 17, 8)) AS h2, MIN(substr(m1, 25, 8)) AS h3,
-             MIN(substr(m2, 1, 8))  AS h4, MIN(substr(m2, 9, 8))  AS h5,
-             MIN(substr(m2, 17, 8)) AS h6, MIN(substr(m2, 25, 8)) AS h7
-      FROM hashes GROUP BY doc_id
-    ),
-    banded AS (
-      SELECT doc_id, 0 AS band_id, md5(h0 || '|' || h1) AS band_key FROM sig
-      UNION ALL SELECT doc_id, 1, md5(h2 || '|' || h3) FROM sig
-      UNION ALL SELECT doc_id, 2, md5(h4 || '|' || h5) FROM sig
-      UNION ALL SELECT doc_id, 3, md5(h6 || '|' || h7) FROM sig
-    ),
+    {_DD_MINHASH_BANDS.strip()},
     cand AS (
       SELECT DISTINCT a.doc_id AS batch_doc, b.doc_id AS corpus_doc
       FROM banded a JOIN banded b
@@ -1626,20 +1557,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE sh AS ({{SH}}),
     posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     hashes AS (SELECT doc_id, md5(shingle) AS m1, md5('x' || shingle) AS m2 FROM posting),
-    sig AS (
-      SELECT doc_id,
-             MIN(substr(m1, 1, 8))  AS h0, MIN(substr(m1, 9, 8))  AS h1,
-             MIN(substr(m1, 17, 8)) AS h2, MIN(substr(m1, 25, 8)) AS h3,
-             MIN(substr(m2, 1, 8))  AS h4, MIN(substr(m2, 9, 8))  AS h5,
-             MIN(substr(m2, 17, 8)) AS h6, MIN(substr(m2, 25, 8)) AS h7
-      FROM hashes GROUP BY doc_id
-    ),
-    banded AS (
-      SELECT doc_id, 0 AS band_id, md5(h0 || '|' || h1) AS band_key FROM sig
-      UNION ALL SELECT doc_id, 1, md5(h2 || '|' || h3) FROM sig
-      UNION ALL SELECT doc_id, 2, md5(h4 || '|' || h5) FROM sig
-      UNION ALL SELECT doc_id, 3, md5(h6 || '|' || h7) FROM sig
-    ),
+    {_DD_MINHASH_BANDS.strip()},
     pairs AS ({{PAIRS}}),
     edges AS (
       SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -1698,20 +1616,7 @@ def dup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH sh AS ({{SH}}),
     posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     hashes AS (SELECT doc_id, md5(shingle) AS m1, md5('x' || shingle) AS m2 FROM posting),
-    sig AS (
-      SELECT doc_id,
-             MIN(substr(m1, 1, 8))  AS h0, MIN(substr(m1, 9, 8))  AS h1,
-             MIN(substr(m1, 17, 8)) AS h2, MIN(substr(m1, 25, 8)) AS h3,
-             MIN(substr(m2, 1, 8))  AS h4, MIN(substr(m2, 9, 8))  AS h5,
-             MIN(substr(m2, 17, 8)) AS h6, MIN(substr(m2, 25, 8)) AS h7
-      FROM hashes GROUP BY doc_id
-    ),
-    banded AS (
-      SELECT doc_id, 0 AS band_id, md5(h0 || '|' || h1) AS band_key FROM sig
-      UNION ALL SELECT doc_id, 1, md5(h2 || '|' || h3) FROM sig
-      UNION ALL SELECT doc_id, 2, md5(h4 || '|' || h5) FROM sig
-      UNION ALL SELECT doc_id, 3, md5(h6 || '|' || h7) FROM sig
-    ),
+    {_DD_MINHASH_BANDS.strip()},
     pairs AS ({{PAIRS}})
     SELECT LEAST(da.source, db.source) AS source_a,
            GREATEST(da.source, db.source) AS source_b,
@@ -1767,20 +1672,7 @@ def near_dup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE sh AS ({{SH}}),
     posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     hashes AS (SELECT doc_id, md5(shingle) AS m1, md5('x' || shingle) AS m2 FROM posting),
-    sig AS (
-      SELECT doc_id,
-             MIN(substr(m1, 1, 8))  AS h0, MIN(substr(m1, 9, 8))  AS h1,
-             MIN(substr(m1, 17, 8)) AS h2, MIN(substr(m1, 25, 8)) AS h3,
-             MIN(substr(m2, 1, 8))  AS h4, MIN(substr(m2, 9, 8))  AS h5,
-             MIN(substr(m2, 17, 8)) AS h6, MIN(substr(m2, 25, 8)) AS h7
-      FROM hashes GROUP BY doc_id
-    ),
-    banded AS (
-      SELECT doc_id, 0 AS band_id, md5(h0 || '|' || h1) AS band_key FROM sig
-      UNION ALL SELECT doc_id, 1, md5(h2 || '|' || h3) FROM sig
-      UNION ALL SELECT doc_id, 2, md5(h4 || '|' || h5) FROM sig
-      UNION ALL SELECT doc_id, 3, md5(h6 || '|' || h7) FROM sig
-    ),
+    {_DD_MINHASH_BANDS.strip()},
     pairs AS ({{PAIRS}}),
     edges AS (
       SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -1935,20 +1827,7 @@ def shingle_df_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH sh AS ({{_DD_SHINGLES}}),
     posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     hashes AS (SELECT doc_id, md5(shingle) AS m1, md5('x' || shingle) AS m2 FROM posting),
-    sig AS (
-      SELECT doc_id,
-             MIN(substr(m1, 1, 8))  AS h0, MIN(substr(m1, 9, 8))  AS h1,
-             MIN(substr(m1, 17, 8)) AS h2, MIN(substr(m1, 25, 8)) AS h3,
-             MIN(substr(m2, 1, 8))  AS h4, MIN(substr(m2, 9, 8))  AS h5,
-             MIN(substr(m2, 17, 8)) AS h6, MIN(substr(m2, 25, 8)) AS h7
-      FROM hashes GROUP BY doc_id
-    ),
-    banded AS (
-      SELECT doc_id, 0 AS band_id, md5(h0 || '|' || h1) AS band_key FROM sig
-      UNION ALL SELECT doc_id, 1, md5(h2 || '|' || h3) FROM sig
-      UNION ALL SELECT doc_id, 2, md5(h4 || '|' || h5) FROM sig
-      UNION ALL SELECT doc_id, 3, md5(h6 || '|' || h7) FROM sig
-    ),
+    {_DD_MINHASH_BANDS.strip()},
     pairs AS ({{_MINHASH_PAIRS_SQL}}),
     ends AS (
       SELECT doc_a AS doc_id FROM pairs
@@ -2050,20 +1929,7 @@ _MINHASH_BANDED_PRELUDE = f"""
     WITH sh AS ({_DD_SHINGLES}),
     posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     hashes AS (SELECT doc_id, md5(shingle) AS m1, md5('x' || shingle) AS m2 FROM posting),
-    sig AS (
-      SELECT doc_id,
-             MIN(substr(m1, 1, 8))  AS h0, MIN(substr(m1, 9, 8))  AS h1,
-             MIN(substr(m1, 17, 8)) AS h2, MIN(substr(m1, 25, 8)) AS h3,
-             MIN(substr(m2, 1, 8))  AS h4, MIN(substr(m2, 9, 8))  AS h5,
-             MIN(substr(m2, 17, 8)) AS h6, MIN(substr(m2, 25, 8)) AS h7
-      FROM hashes GROUP BY doc_id
-    ),
-    banded AS (
-      SELECT doc_id, 0 AS band_id, md5(h0 || '|' || h1) AS band_key FROM sig
-      UNION ALL SELECT doc_id, 1, md5(h2 || '|' || h3) FROM sig
-      UNION ALL SELECT doc_id, 2, md5(h4 || '|' || h5) FROM sig
-      UNION ALL SELECT doc_id, 3, md5(h6 || '|' || h7) FROM sig
-    ),
+    {_DD_MINHASH_BANDS.strip()},
     pairs AS ({_MINHASH_PAIRS_SQL})
 """
 

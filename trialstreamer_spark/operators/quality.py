@@ -659,46 +659,54 @@ WINNOW_W = 4
 _POS_MOD = 1 << 20
 
 
+def _winnow_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, pos, sel_key, n_grams) per valid winnowing window: the
+    shared selection steps of winnow_doc_stats and winnow_pair_stats.
+    3-word grams hash to 32 bits; ``sel_key`` = min over the forward
+    window of WINNOW_W grams of h·_POS_MOD + (_POS_MOD − 1 − pos), so
+    ``sel_key DIV _POS_MOD`` is the window's min hash and ties pick the
+    rightmost gram; only windows lying wholly inside a doc of
+    ≥ WINNOW_W grams are kept. Plain lineage inside each sidecar build,
+    never cached."""
+    from pyspark.sql import Window as W
+
+    grams = (
+        load(spark, sf_dir, "documents")
+        .where(F.col("text").isNotNull())
+        .select("doc_id", F.posexplode(grams_col(F.col("text"), 3)).alias("pos0", "g"))
+        .select(
+            "doc_id",
+            (F.col("pos0") + 1).alias("pos"),
+            F.conv(F.substring(F.md5("g"), 1, 8), 16, 10)
+            .cast("long")
+            .alias("h"),
+        )
+    )
+    w_fwd = W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, WINNOW_W - 1)
+    sel = grams.select(
+        "doc_id",
+        "pos",
+        F.min(F.col("h") * _POS_MOD + (F.lit(_POS_MOD - 1) - F.col("pos")))
+        .over(w_fwd)
+        .alias("sel_key"),
+        F.count("*").over(W.partitionBy("doc_id")).alias("n_grams"),
+    )
+    return sel.where(
+        (F.col("pos") <= F.col("n_grams") - (WINNOW_W - 1))
+        & (F.col("n_grams") >= WINNOW_W)
+    )
+
+
 def winnow_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_grams, n_windows, n_fingerprints): the per-doc
     winnowing fingerprint census behind winnowing_stats — a per-corpus
     featurization (the winnow analog of quality_signals), so a disk
     sidecar."""
-    from pyspark.sql import Window as W
-
     from trialstreamer_spark.sidecars import disk_cached_plan
 
     def build_stats() -> DataFrame:
-        d = load(spark, sf_dir, "documents")
-        grams = (
-            d.where(F.col("text").isNotNull())
-            .select("doc_id", F.posexplode(grams_col(F.col("text"), 3)).alias("pos0", "g"))
-            .select(
-                "doc_id",
-                (F.col("pos0") + 1).alias("pos"),
-                F.conv(F.substring(F.md5("g"), 1, 8), 16, 10)
-                .cast("long")
-                .alias("h"),
-            )
-        )
-        w_fwd = (
-            W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, WINNOW_W - 1)
-        )
-        sel = grams.select(
-            "doc_id",
-            "pos",
-            F.min(
-                F.col("h") * _POS_MOD + (F.lit(_POS_MOD - 1) - F.col("pos"))
-            )
-            .over(w_fwd)
-            .alias("sel_key"),
-            F.count("*").over(W.partitionBy("doc_id")).alias("n_grams"),
-        )
         return (
-            sel.where(
-                (F.col("pos") <= F.col("n_grams") - (WINNOW_W - 1))
-                & (F.col("n_grams") >= WINNOW_W)
-            )
+            _winnow_windows(spark, sf_dir)
             .groupBy("doc_id")
             .agg(
                 F.max("n_grams").alias("n_grams"),
@@ -1002,37 +1010,8 @@ def winnow_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from trialstreamer_spark.sidecars import disk_cached_plan
 
     def build() -> DataFrame:
-        d = load(spark, sf_dir, "documents")
-        grams = (
-            d.where(F.col("text").isNotNull())
-            .select(
-                "doc_id",
-                F.posexplode(grams_col(F.col("text"), 3)).alias("pos0", "g"),
-            )
-            .select(
-                "doc_id",
-                (F.col("pos0") + 1).alias("pos"),
-                F.conv(F.substring(F.md5("g"), 1, 8), 16, 10)
-                .cast("long")
-                .alias("h"),
-            )
-        )
-        w_fwd = (
-            W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, WINNOW_W - 1)
-        )
-        sel = grams.select(
-            "doc_id",
-            "pos",
-            F.min(F.col("h") * _POS_MOD + (F.lit(_POS_MOD - 1) - F.col("pos")))
-            .over(w_fwd)
-            .alias("sel_key"),
-            F.count("*").over(W.partitionBy("doc_id")).alias("n_grams"),
-        )
         fps = (
-            sel.where(
-                (F.col("pos") <= F.col("n_grams") - (WINNOW_W - 1))
-                & (F.col("n_grams") >= WINNOW_W)
-            )
+            _winnow_windows(spark, sf_dir)
             .select("doc_id", F.expr(f"sel_key DIV {_POS_MOD}").alias("fp"))
             .distinct()
         )

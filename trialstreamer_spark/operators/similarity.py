@@ -203,24 +203,28 @@ def norm_sq_fp(a: Column) -> Column:
     return dot_fp(a, a)
 
 
-def _query_vector(spark: SparkSession, sf_dir: str, id_val) -> np.ndarray:
-    """The probe vector ``vec_id == id_val``. Fetching it is query PREP
-    (the reference's API receives its query vector from the encoder, it
-    never scans for it) — memoized per (corpus, id) so repeated searches
-    skip the lookup job."""
+def _query_row(spark: SparkSession, sf_dir: str, id_val) -> tuple[np.ndarray, object]:
+    """(vector, label) of the probe ``vec_id == id_val``. Fetching it is
+    query PREP (the reference's API receives its query vector from the
+    encoder, it never scans for it) — memoized per (corpus, id) so
+    repeated searches skip the lookup job."""
 
-    def build() -> np.ndarray:
+    def build() -> tuple[np.ndarray, object]:
         row = (
             load(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id") == id_val)
-            .select("embedding")
+            .select("embedding", "label")
             .head()
         )
         if row is None:
             raise ValueError(f"query vector vec_id={id_val!r} not found")
-        return np.asarray(row[0], dtype=np.float64)
+        return np.asarray(row[0], dtype=np.float64), row[1]
 
     return util.memo(("query_vector", sf_dir, id_val), build)
+
+
+def _query_vector(spark: SparkSession, sf_dir: str, id_val) -> np.ndarray:
+    return _query_row(spark, sf_dir, id_val)[0]
 
 
 def sign_lsh_bucket(vec: Column, n_planes: int = 12) -> Column:
@@ -450,6 +454,20 @@ _DD_DOT_FP = (
     "p -> CAST(FLOOR(CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE) * 10000000) AS BIGINT)), 'sum')"
 )
 
+#: DuckDB IVF coarse quantizer: ``cent(label, cvec)``, the per-label
+#: centroids at 1e-6 fixed point (centroids_df's arithmetic).
+_DD_CENT_CTES = """
+    cc AS (
+      SELECT label, CAST(idx AS INTEGER) AS idx,
+             CAST(SUM(CAST(FLOOR(CAST(val AS DOUBLE) * 1000000) AS BIGINT)) AS BIGINT)
+               / 1000000.0 / COUNT(*) AS c
+      FROM (SELECT label, generate_subscripts(embedding, 1) AS idx,
+                   unnest(embedding) AS val
+            FROM embeddings)
+      GROUP BY label, idx
+    ),
+    cent AS (SELECT label, list(c ORDER BY idx) AS cvec FROM cc GROUP BY label)"""
+
 
 @query(
     "ann_cosine_topk",
@@ -472,16 +490,25 @@ _DD_DOT_FP = (
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 neighbors of vec_id=0 (ref
-    PICO_search.py:70-81 get_nns_by_vector, exact baseline). The query
-    vector and its norm ride in the UDF closure / a literal (nothing is
-    joined); the corpus is scanned once with a single Arrow pass
-    computing (dot, norm); TakeOrderedAndProject takes the top-k."""
-    e = load(spark, sf_dir, "embeddings")
+    PICO_search.py:70-81 get_nns_by_vector, exact baseline): the shared
+    search kernel _exact_topk over every vector but the query's own."""
+    return _exact_topk(spark, sf_dir, F.col("vec_id") != 0)
+
+
+def _exact_topk(spark: SparkSession, sf_dir: str, keep: Column) -> DataFrame:
+    """(neighbor_id, label, cosine): the exact cosine top-10 of vec 0
+    among the embeddings rows ``keep`` selects — the one search kernel
+    of ann_cosine_topk, ann_ivf_topk and ann_filtered_topk. The
+    predicate reaches the scan; the query vector and its norm ride in
+    the UDF closure / a literal (nothing is joined); one Arrow pass
+    computes (dot, norm) per kept row; TakeOrderedAndProject takes the
+    top-k."""
     qv = _query_vector(spark, sf_dir, 0)
     qnsq = fp_dot_vec(qv, qv)
     s = scores_vs_query_udf(qv)
     return (
-        e.filter(F.col("vec_id") != 0)
+        load(spark, sf_dir, "embeddings")
+        .filter(keep)
         .select(
             F.col("vec_id").alias("neighbor_id"),
             "label",
@@ -617,16 +644,7 @@ def _build_multi_query_scores(
                                   ORDER BY cosine DESC, neighbor_id) AS rn
         FROM scored) WHERE rn <= 10
     ),
-    cc AS (
-      SELECT label, CAST(idx AS INTEGER) AS idx,
-             CAST(SUM(CAST(FLOOR(CAST(val AS DOUBLE) * 1000000) AS BIGINT)) AS BIGINT)
-               / 1000000.0 / COUNT(*) AS c
-      FROM (SELECT label, generate_subscripts(embedding, 1) AS idx,
-                   unnest(embedding) AS val
-            FROM embeddings)
-      GROUP BY label, idx
-    ),
-    cent AS (SELECT label, list(c ORDER BY idx) AS cvec FROM cc GROUP BY label),
+    {_DD_CENT_CTES.strip()},
     cells AS (
       SELECT query_id, label FROM (
         SELECT q.query_id, cent.label,
@@ -928,16 +946,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ann_ivf_topk",
     oracle=f"""
-    WITH cc AS (
-      SELECT label, CAST(idx AS INTEGER) AS idx,
-             CAST(SUM(CAST(FLOOR(CAST(val AS DOUBLE) * 1000000) AS BIGINT)) AS BIGINT)
-               / 1000000.0 / COUNT(*) AS c
-      FROM (SELECT label, generate_subscripts(embedding, 1) AS idx,
-                   unnest(embedding) AS val
-            FROM embeddings)
-      GROUP BY label, idx
-    ),
-    cent AS (SELECT label, list(c ORDER BY idx) AS cvec FROM cc GROUP BY label),
+    WITH {_DD_CENT_CTES.strip()},
     q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
     cells AS (
       SELECT cent.label FROM cent, q
@@ -968,29 +977,11 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject: no join, no full-corpus aggregation; at 100 TB
     partition the vector table by cell id so the IN-filter prunes at the
     file level."""
-    e = load(spark, sf_dir, "embeddings")
-    cents = ivf_centroids(spark, sf_dir)
-    qv = _query_vector(spark, sf_dir, 0)
-    qnsq = fp_dot_vec(qv, qv)
-    cells = ivf_probe_cells(cents, qv, nprobe=2)
-    s = scores_vs_query_udf(qv)
-    return (
-        e.filter(F.col("label").isin(cells) & (F.col("vec_id") != 0))
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            "label",
-            s(F.col("embedding")).alias("s"),
-        )
-        .select(
-            "neighbor_id",
-            "label",
-            (
-                F.col("s.dot")
-                / F.sqrt(F.col("s.nsq").cast("double") * F.lit(float(qnsq)))
-            ).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-        .limit(10)
+    cells = ivf_probe_cells(
+        ivf_centroids(spark, sf_dir), _query_vector(spark, sf_dir, 0), nprobe=2
+    )
+    return _exact_topk(
+        spark, sf_dir, F.col("label").isin(cells) & (F.col("vec_id") != 0)
     )
 
 
@@ -1413,16 +1404,7 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   ORDER BY cosine DESC, neighbor_id) AS rn
         FROM scored) WHERE rn <= 10
     ),
-    cc AS (
-      SELECT label, CAST(idx AS INTEGER) AS idx,
-             CAST(SUM(CAST(FLOOR(CAST(val AS DOUBLE) * 1000000) AS BIGINT)) AS BIGINT)
-               / 1000000.0 / COUNT(*) AS c
-      FROM (SELECT label, generate_subscripts(embedding, 1) AS idx,
-                   unnest(embedding) AS val
-            FROM embeddings)
-      GROUP BY label, idx
-    ),
-    cent AS (SELECT label, list(c ORDER BY idx) AS cvec FROM cc GROUP BY label),
+    {_DD_CENT_CTES.strip()},
     cellrank AS (
       SELECT q.query_id, cent.label,
              ROW_NUMBER() OVER (
@@ -1466,25 +1448,36 @@ def ann_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the curve's knee is the budget decision).
 
     Scale shape: the fused one-pass design of ann_recall_at_k extended
-    to a CURVE for free — probe cells are nested (cells(1) ⊆ cells(2) ⊆
-    cells(3)), so the single top-k window pass carries one in-cell
-    membership flag PER nprobe (three booleans over the identical
-    frame, no extra scan, no extra shuffle, WindowGroupLimit pre-limits
-    per task); the per-nprobe rollup then unpivots driver-free with
-    stack(). The oracle spells the same semantics as three materialized
-    IVF arms."""
+    to a CURVE for free by the shared curve kernel _nprobe_recall_curve
+    (three in-cell booleans over the identical frame, no extra scan, no
+    extra shuffle, WindowGroupLimit pre-limits per task). The oracle
+    spells the same semantics as three materialized IVF arms."""
+    cents = ivf_centroids(spark, sf_dir)
+    return _nprobe_recall_curve(
+        spark, sf_dir, lambda qv, n: ivf_probe_cells(cents, qv, n), "cosine"
+    )
+
+
+def _nprobe_recall_curve(
+    spark: SparkSession, sf_dir: str, probe_cells, order_col: str
+) -> DataFrame:
+    """(nprobe, query_id, n_overlap, recall_at_10) for nprobe = 1, 2, 3
+    over the 5-query panel: the one curve kernel of
+    ann_nprobe_recall_curve and mips_nprobe_recall_curve.
+    ``probe_cells(qvec, n)`` lists a query's n nearest cells in probe
+    order; ``order_col`` of the panel-score sidecar (``cosine`` or
+    ``dot_fp``) orders the exact top-k.
+
+    Probe cells are nested (cells(1) ⊆ cells(2) ⊆ cells(3)), so one
+    top-k window pass carries one in-cell membership flag PER nprobe;
+    the per-nprobe rollup then unpivots driver-free with stack()."""
     from pyspark.sql import Window as W
 
     n_q, k, max_probe = 5, 10, 3
     scored = _multi_query_scores(spark, sf_dir, n_q)
-    cents = ivf_centroids(spark, sf_dir)
     rank_of = {}
     for qid in range(n_q):
-        ordered = ivf_probe_cells(
-            cents,
-            _query_vector(spark, sf_dir, qid),
-            max_probe,
-        )
+        ordered = probe_cells(_query_vector(spark, sf_dir, qid), max_probe)
         for pos, lbl in enumerate(ordered):
             rank_of[(qid, int(lbl))] = pos + 1
     packed = F.col("query_id").cast("long") * F.lit(1_000_000) + F.col(
@@ -1498,7 +1491,7 @@ def ann_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     # r12 (guide §2.4): no running in-cell counts — an in-cell row of
     # the brute top-k has in-cell rank ≤ its global rank ≤ k over the
-    # identical (cosine DESC, neighbor_id) order, so overlap@k per
+    # identical (order_col DESC, neighbor_id) order, so overlap@k per
     # nprobe is just the in-cell membership count within the global
     # top-k (same identity as ann_recall_at_k). The window then carries
     # ONLY row_number ≤ k, which Catalyst rewrites to WindowGroupLimit:
@@ -1507,7 +1500,7 @@ def ann_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the slowest bench row, and a real 100 TB hazard (5 sort tasks over
     # the whole corpus).
     w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
+        F.col(order_col).desc(), F.col("neighbor_id")
     )
     ranked = scored.select(
         "query_id",
@@ -1582,36 +1575,20 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one filtered corpus scan (predicate + column pruning
     reach the parquet reader), the query vector and its norm ride the
     UDF closure (nothing is joined), TakeOrderedAndProject keeps k.
-    Identical fixed-point kernel as ann_cosine_topk, so the cosine is
-    bit-identical across engines."""
-    e = load(spark, sf_dir, "embeddings")
-    qv = _query_vector(spark, sf_dir, 0)
-    qrow = e.filter(F.col("vec_id") == 0).select("label").head()
-    qlabel = qrow[0]
-    qnsq = fp_dot_vec(qv, qv)
-    s = scores_vs_query_udf(qv)
-    return (
-        e.filter((F.col("vec_id") != 0) & (F.col("label") == F.lit(qlabel)))
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            "label",
-            s(F.col("embedding")).alias("s"),
-        )
-        .select(
-            "neighbor_id",
-            "label",
-            (
-                F.col("s.dot")
-                / F.sqrt(F.col("s.nsq").cast("double") * F.lit(float(qnsq)))
-            ).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-        .limit(10)
+    The search kernel of ann_cosine_topk (_exact_topk), so the cosine is
+    bit-identical across engines; the query label comes from the same
+    memoized lookup as the query vector (_query_row), so a warm call
+    runs one job."""
+    _, qlabel = _query_row(spark, sf_dir, 0)
+    return _exact_topk(
+        spark,
+        sf_dir,
+        (F.col("vec_id") != 0) & (F.col("label") == F.lit(qlabel)),
     )
 
 
-def _trunc_rank_sql(dims: int) -> str:
-    """DuckDB: vec_ids of the exact cosine top-10 of vec 0 using only the
+def _sliced_cos_sql(dims: int) -> str:
+    """DuckDB: exact fixed-point cosine of e.embedding vs q.qvec on the
     first ``dims`` dimensions (the Matryoshka truncation)."""
     dot = _DD_DOT_FP.format(
         a=f"list_slice(e.embedding, 1, {dims})",
@@ -1625,13 +1602,21 @@ def _trunc_rank_sql(dims: int) -> str:
         a=f"list_slice(q.qvec, 1, {dims})",
         b=f"list_slice(q.qvec, 1, {dims})",
     )
+    return (
+        f"CAST({dot} AS BIGINT)"
+        f" / SQRT(CAST(CAST({na} AS BIGINT) AS DOUBLE)"
+        f"        * CAST(CAST({nb} AS BIGINT) AS DOUBLE))"
+    )
+
+
+def _trunc_rank_sql(dims: int) -> str:
+    """DuckDB: vec_ids of the exact cosine top-10 of vec 0 using only the
+    first ``dims`` dimensions."""
     return f"""
       SELECT e.vec_id
       FROM embeddings e, q
       WHERE e.vec_id <> 0
-      ORDER BY CAST({dot} AS BIGINT)
-               / SQRT(CAST(CAST({na} AS BIGINT) AS DOUBLE)
-                      * CAST(CAST({nb} AS BIGINT) AS DOUBLE)) DESC,
+      ORDER BY {_sliced_cos_sql(dims)} DESC,
                e.vec_id
       LIMIT 10
     """
@@ -1956,18 +1941,6 @@ _DD_MIPS_CELL_SCORE = (
     "        * CAST(CAST({dqq} AS BIGINT) AS DOUBLE))"
 )
 
-_DD_CENT_CTES = """
-    cc AS (
-      SELECT label, CAST(idx AS INTEGER) AS idx,
-             CAST(SUM(CAST(FLOOR(CAST(val AS DOUBLE) * 1000000) AS BIGINT)) AS BIGINT)
-               / 1000000.0 / COUNT(*) AS c
-      FROM (SELECT label, generate_subscripts(embedding, 1) AS idx,
-                   unnest(embedding) AS val
-            FROM embeddings)
-      GROUP BY label, idx
-    ),
-    cent AS (SELECT label, list(c ORDER BY idx) AS cvec FROM cc GROUP BY label)"""
-
 
 @query(
     "mips_ivf_topk",
@@ -2094,84 +2067,18 @@ def mips_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     here ORACLE-measured: DuckDB recomputes the augmented probe order
     and the exact-dot ground truth from scratch).
 
-    Identical fused one-pass shape as the cosine curve: probe cells are
-    nested across nprobe, so one window pass over the panel-score
-    sidecar (now carrying dot_fp) accumulates a running in-cell count
-    per nprobe; the per-nprobe rollup unpivots with stack(). Only the
-    ORDER key (raw fixed-point dot, no norm) and the probe ranking
-    (augmented geometry, mips_probe_cells) differ."""
-    from pyspark.sql import Window as W
-
-    n_q, k, max_probe = 5, 10, 3
-    scored = _multi_query_scores(spark, sf_dir, n_q)
+    The same curve kernel as the cosine curve (_nprobe_recall_curve):
+    one row_number-only window pass over the panel-score sidecar
+    counts in-cell members of the exact top-k per nprobe. Only the
+    ORDER key (dot_fp: raw fixed-point dot, no norm) and the probe
+    ranking (augmented geometry, mips_probe_cells) differ."""
     cents = ivf_centroids(spark, sf_dir)
-    m2, caugs = mips_aug_cells(spark, sf_dir)
-    rank_of = {}
-    for qid in range(n_q):
-        ordered = mips_probe_cells(
-            cents,
-            caugs,
-            _query_vector(spark, sf_dir, qid),
-            max_probe,
-        )
-        for pos, lbl in enumerate(ordered):
-            rank_of[(qid, int(lbl))] = pos + 1
-    packed = F.col("query_id").cast("long") * F.lit(1_000_000) + F.col(
-        "label"
-    ).cast("long")
-    in_p = {
-        p: packed.isin(
-            [q * 1_000_000 + c for (q, c), r in sorted(rank_of.items()) if r <= p]
-        )
-        for p in range(1, max_probe + 1)
-    }
-    w = W.partitionBy("query_id").orderBy(
-        F.col("dot_fp").desc(), F.col("neighbor_id")
-    )
-    run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-    ranked = scored.select(
-        "query_id",
-        F.row_number().over(w).alias("brute_rn"),
-        *[
-            c
-            for p in in_p
-            for c in (
-                F.sum(in_p[p].cast("int")).over(run).alias(f"ivf_rn_{p}"),
-                in_p[p].alias(f"in_cell_{p}"),
-            )
-        ],
-    )
-    agg = (
-        ranked.filter(F.col("brute_rn") <= k)
-        .groupBy("query_id")
-        .agg(
-            *[
-                F.sum(
-                    (
-                        F.col(f"in_cell_{p}") & (F.col(f"ivf_rn_{p}") <= k)
-                    ).cast("int")
-                )
-                .cast("long")
-                .alias(f"o_{p}")
-                for p in in_p
-            ]
-        )
-    )
-    stack_expr = "stack(3, " + ", ".join(
-        f"{p}, o_{p}" for p in sorted(in_p)
-    ) + ") as (nprobe, n_overlap)"
-    return (
-        agg.select("query_id", F.expr(stack_expr))
-        .select(
-            F.col("nprobe").cast("int").alias("nprobe"),
-            "query_id",
-            F.col("n_overlap").cast("long").alias("n_overlap"),
-            (F.col("n_overlap") / F.lit(10.0)).alias("recall_at_10"),
-        )
-        # dimension/calendar-bounded tail: single-partition sort,
-        # no range exchange / sampling job (r10 registry-wide sweep)
-        .coalesce(1)
-        .sortWithinPartitions("nprobe", "query_id")
+    _, caugs = mips_aug_cells(spark, sf_dir)
+    return _nprobe_recall_curve(
+        spark,
+        sf_dir,
+        lambda qv, n: mips_probe_cells(cents, caugs, qv, n),
+        "dot_fp",
     )
 
 
@@ -2459,84 +2366,21 @@ RERANK_POOL = 100
 RERANK_K = 10
 
 
-def _sliced_cos_sql(dims: int) -> str:
-    """DuckDB: exact fixed-point cosine of e.embedding vs q.qvec on the
-    first ``dims`` dimensions (same kernel as _trunc_rank_sql)."""
-    dot = _DD_DOT_FP.format(
-        a=f"list_slice(e.embedding, 1, {dims})",
-        b=f"list_slice(q.qvec, 1, {dims})",
-    )
-    na = _DD_DOT_FP.format(
-        a=f"list_slice(e.embedding, 1, {dims})",
-        b=f"list_slice(e.embedding, 1, {dims})",
-    )
-    nb = _DD_DOT_FP.format(
-        a=f"list_slice(q.qvec, 1, {dims})",
-        b=f"list_slice(q.qvec, 1, {dims})",
-    )
-    return (
-        f"CAST({dot} AS BIGINT)"
-        f" / SQRT(CAST(CAST({na} AS BIGINT) AS DOUBLE)"
-        f"        * CAST(CAST({nb} AS BIGINT) AS DOUBLE))"
-    )
+def _rerank_heads(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row (cand, exact_ids): the shared ONE-scan kernel of
+    ann_two_stage_rerank and ann_rerank_pool_curve. ``cand`` is the
+    global first-stage top-RERANK_POOL of vec 0 by cosine on the first
+    RERANK_DIMS dimensions, as (nl = −c_lo, vec_id, c_hi) structs in
+    c_lo order, each carrying its exact full-dim cosine; ``exact_ids``
+    are the vec_ids of the exact full-dim top-RERANK_K.
 
-
-@query(
-    "ann_two_stage_rerank",
-    oracle=f"""
-    WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-    scored AS (
-      SELECT e.vec_id,
-             {_sliced_cos_sql(RERANK_DIMS)} AS c_lo,
-             {_sliced_cos_sql(64)} AS c_hi
-      FROM embeddings e, q
-      WHERE e.vec_id <> 0
-    ),
-    cand AS (
-      SELECT vec_id, c_hi FROM scored
-      ORDER BY c_lo DESC, vec_id LIMIT {RERANK_POOL}
-    ),
-    exact AS (
-      SELECT vec_id FROM scored ORDER BY c_hi DESC, vec_id LIMIT {RERANK_K}
-    ),
-    rer AS (
-      SELECT ROW_NUMBER() OVER (ORDER BY c_hi DESC, vec_id) AS rank,
-             vec_id, c_hi
-      FROM cand
-      ORDER BY c_hi DESC, vec_id LIMIT {RERANK_K}
-    )
-    SELECT CAST(rank AS BIGINT) AS rank,
-           vec_id AS neighbor_id,
-           c_hi AS cosine,
-           CAST(CASE WHEN vec_id IN (SELECT vec_id FROM exact)
-                THEN 1 ELSE 0 END AS BIGINT) AS in_exact_topk
-    FROM rer
-    ORDER BY rank
-    """,
-)
-def ann_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-stage Matryoshka serving audit (Kusupati et al., MRL): a
-    cheap first stage ranks by cosine on the first RERANK_DIMS=16
-    dimensions and shortlists RERANK_POOL=100 candidates; the exact
-    full-dim (64) cosine reranks the shortlist to top-RERANK_K. Output:
-    the served top-10 with its rank, exact cosine, and a flag marking
-    whether the row is also in the EXACT full-dim top-10 — the
-    per-neighbor view of the aggregate recall embedding_truncation_recall
-    reports, and the query a serving team runs before cutting index
-    memory 4x by storing truncated vectors.
-
-    Scale shape: ONE corpus scan. The same prefix-sum trick as
-    embedding_truncation_recall (the sliced fixed-point dots at 16/64
-    share one per-element floored-term matrix) computes both cosines in
-    a single Arrow pass; the mapInPandas kernel folds each partition
-    into a running first-stage top-100 AND exact top-10, emitting ≤110
-    rows per partition. Because every global top-100/top-10 member must
-    be in its partition's head, merging the heads is exact. Both merges
-    and the rerank happen in ONE hash aggregation over the tiny head
-    frame (sorted-struct slices; the rerank is an array_sort of the
-    100-element candidate list by its carried exact cosine — no second
-    scan, no join back). posexplode of the 10-element result is the
-    whole tail."""
+    The sliced fixed-point dots at 16/64 share one per-element
+    floored-term matrix (embedding_truncation_recall's prefix-sum
+    trick), so one Arrow pass computes both cosines; the mapInPandas
+    kernel folds each partition into a running first-stage top-100 AND
+    exact top-10, emitting ≤110 rows per partition. Every global
+    top-100/top-10 member is in its partition's head, so merging the
+    heads in ONE hash aggregation (sorted-struct slices) is exact."""
     e = load(spark, sf_dir, "embeddings")
     qv = _query_vector(spark, sf_dir, 0)
 
@@ -2551,10 +2395,9 @@ def ann_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         import pandas as pd
 
         ids0 = np.empty(0, np.int64)
-        lo0 = np.empty(0, np.float64)
-        hi0 = np.empty(0, np.float64)
-        cand = (ids0, lo0, hi0)
-        exact = (ids0, hi0)
+        f0 = np.empty(0, np.float64)
+        cand = (ids0, f0, f0)
+        exact = (ids0, f0)
         seen = False
         for pdf in batches:
             if not len(pdf):
@@ -2613,7 +2456,7 @@ def ann_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # One aggregation: global candidate pool (c_lo order), reranked in
     # place by the carried exact cosine; global exact top-k for flags.
-    one = heads.agg(
+    return heads.agg(
         F.slice(
             F.array_sort(
                 F.collect_list(
@@ -2648,7 +2491,62 @@ def ann_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             lambda s: s["vec_id"],
         ).alias("exact_ids"),
-    ).select(
+    )
+
+
+@query(
+    "ann_two_stage_rerank",
+    oracle=f"""
+    WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
+    scored AS (
+      SELECT e.vec_id,
+             {_sliced_cos_sql(RERANK_DIMS)} AS c_lo,
+             {_sliced_cos_sql(64)} AS c_hi
+      FROM embeddings e, q
+      WHERE e.vec_id <> 0
+    ),
+    cand AS (
+      SELECT vec_id, c_hi FROM scored
+      ORDER BY c_lo DESC, vec_id LIMIT {RERANK_POOL}
+    ),
+    exact AS (
+      SELECT vec_id FROM scored ORDER BY c_hi DESC, vec_id LIMIT {RERANK_K}
+    ),
+    rer AS (
+      SELECT ROW_NUMBER() OVER (ORDER BY c_hi DESC, vec_id) AS rank,
+             vec_id, c_hi
+      FROM cand
+      ORDER BY c_hi DESC, vec_id LIMIT {RERANK_K}
+    )
+    SELECT CAST(rank AS BIGINT) AS rank,
+           vec_id AS neighbor_id,
+           c_hi AS cosine,
+           CAST(CASE WHEN vec_id IN (SELECT vec_id FROM exact)
+                THEN 1 ELSE 0 END AS BIGINT) AS in_exact_topk
+    FROM rer
+    ORDER BY rank
+    """,
+)
+def ann_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-stage Matryoshka serving audit (Kusupati et al., MRL): a
+    cheap first stage ranks by cosine on the first RERANK_DIMS=16
+    dimensions and shortlists RERANK_POOL=100 candidates; the exact
+    full-dim (64) cosine reranks the shortlist to top-RERANK_K. Output:
+    the served top-10 with its rank, exact cosine, and a flag marking
+    whether the row is also in the EXACT full-dim top-10 — the
+    per-neighbor view of the aggregate recall embedding_truncation_recall
+    reports, and the query a serving team runs before cutting index
+    memory 4x by storing truncated vectors.
+
+    Scale shape: ONE corpus scan, the heads kernel it shares with
+    ann_rerank_pool_curve (_rerank_heads): one Arrow pass computes both
+    cosines and keeps per-partition heads, and one hash aggregation
+    merges them. The rerank is an array_sort of the 100-element
+    candidate list by its carried exact cosine — no second scan, no
+    join back. posexplode of the 10-element result is the whole
+    tail."""
+    k = RERANK_K
+    one = _rerank_heads(spark, sf_dir).select(
         F.slice(
             F.array_sort(
                 F.transform(
@@ -2731,123 +2629,17 @@ def ann_rerank_pool_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ann_two_stage_rerank is the per-neighbor view at pool=100;
     ann_nprobe_recall_curve is the same curve for the IVF index).
 
-    Scale shape: identical ONE-scan kernel as ann_two_stage_rerank —
-    per-partition first-stage top-100 and exact top-10 heads (any
-    global top-p≤100 member is in its partition's top-100, so ONE head
-    size serves every curve point); the single merge aggregation sorts
-    the candidate list once by c_lo, and each curve point is an
+    Scale shape: the ONE-scan heads kernel it shares with
+    ann_two_stage_rerank (_rerank_heads): per-partition first-stage
+    top-100 and exact top-10 heads (any global top-p≤100 member is in
+    its partition's top-100, so ONE head size serves every curve
+    point); the single merge aggregation sorts the candidate list once
+    by c_lo, and each curve point is an
     array-slice + in-place rerank of that sorted list (slice → sort by
     carried c_hi → slice k → intersect with the exact ids) — four
     integer-count rows from one row of arrays, unpivoted with stack."""
-    e = load(spark, sf_dir, "embeddings")
-    qv = _query_vector(spark, sf_dir, 0)
-
-    q64 = np.asarray(qv, dtype=np.float64)
-    scale = float(SCALE)
-    d_lo, pool, k = RERANK_DIMS, RERANK_POOL, RERANK_K
-    qn_lo = float(fp_dot_vec(qv[:d_lo], qv[:d_lo]))
-    qn_hi = float(fp_dot_vec(qv, qv))
-
-    def partition_heads(batches):
-        import numpy as np
-        import pandas as pd
-
-        ids0 = np.empty(0, np.int64)
-        f0 = np.empty(0, np.float64)
-        cand = (ids0, f0, f0)
-        exact = (ids0, f0)
-        seen = False
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            seen = True
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            ids = pdf["vec_id"].to_numpy().astype(np.int64)
-            tq = np.floor(m * q64[None, :] * scale).astype(np.int64)
-            ts = np.floor(m * m * scale).astype(np.int64)
-            c_lo = tq[:, :d_lo].sum(axis=1) / np.sqrt(
-                ts[:, :d_lo].sum(axis=1).astype(np.float64) * qn_lo
-            )
-            c_hi = tq.sum(axis=1) / np.sqrt(
-                ts.sum(axis=1).astype(np.float64) * qn_hi
-            )
-            ai = np.concatenate([cand[0], ids])
-            al = np.concatenate([cand[1], c_lo])
-            ah = np.concatenate([cand[2], c_hi])
-            keep = np.lexsort((ai, -al))[:pool]
-            cand = (ai[keep], al[keep], ah[keep])
-            xi = np.concatenate([exact[0], ids])
-            xh = np.concatenate([exact[1], c_hi])
-            keep = np.lexsort((xi, -xh))[:k]
-            exact = (xi[keep], xh[keep])
-        if seen:
-            yield pd.DataFrame(
-                {
-                    "st": np.concatenate(
-                        [
-                            np.full(len(cand[0]), 0, np.int32),
-                            np.full(len(exact[0]), 1, np.int32),
-                        ]
-                    ),
-                    "vec_id": np.concatenate([cand[0], exact[0]]),
-                    "c_lo": np.concatenate(
-                        [cand[1], np.zeros(len(exact[0]))]
-                    ),
-                    "c_hi": np.concatenate([cand[2], exact[1]]),
-                }
-            )
-
-    heads = (
-        e.filter(F.col("vec_id") != 0)
-        .select("vec_id", "embedding")
-        .mapInPandas(
-            partition_heads,
-            StructType(
-                [
-                    StructField("st", IntegerType()),
-                    StructField("vec_id", LongType()),
-                    StructField("c_lo", DoubleType()),
-                    StructField("c_hi", DoubleType()),
-                ]
-            ),
-        )
-    )
-    one = heads.agg(
-        F.slice(
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("st") == 0,
-                        F.struct(
-                            (-F.col("c_lo")).alias("nl"),
-                            F.col("vec_id"),
-                            F.col("c_hi"),
-                        ),
-                    )
-                )
-            ),
-            1,
-            pool,
-        ).alias("cand"),
-        F.transform(
-            F.slice(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            F.col("st") == 1,
-                            F.struct(
-                                (-F.col("c_hi")).alias("nh"),
-                                F.col("vec_id"),
-                            ),
-                        )
-                    )
-                ),
-                1,
-                k,
-            ),
-            lambda s: s["vec_id"],
-        ).alias("exact_ids"),
-    )
+    k = RERANK_K
+    one = _rerank_heads(spark, sf_dir)
 
     def overlap_at(p: int) -> Column:
         reranked = F.slice(

@@ -745,10 +745,11 @@ def dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "event_rate_anomaly",
-    oracle="""
-    WITH m AS (
+#: DuckDB per-(type, minute) census ``m(event_type, minute, x)`` and its
+#: per-type moments ``s(event_type, n, sx, sxx)``: the shared head of the
+#: burst oracles (_census_moments' arithmetic).
+_DD_MINUTE_MOMENTS = """
+    m AS (
       SELECT event_type,
              date_trunc('minute', ts) AS minute,
              CAST(COUNT(*) AS BIGINT) AS x
@@ -760,7 +761,34 @@ def dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(SUM(x) AS BIGINT) AS sx,
              CAST(SUM(x * x) AS BIGINT) AS sxx
       FROM m GROUP BY 1
+    )"""
+
+
+def _census_moments(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Column]:
+    """The minute census joined to its per-type moments (n, sx, sxx),
+    and the ``is_burst`` predicate over that frame: the shared head of
+    event_rate_anomaly and event_burst_runs. The moment rollup is
+    |types| rows, broadcast back onto the census. A minute is a burst
+    when x > mean + 3 sigma, cross-multiplied to the exact int64 test
+    ``(x*n - sx) > 0 and (x*n - sx)^2 > 9*(n*sxx - sx^2)`` — no
+    division or sqrt, so both engines compare identical integers."""
+    m = minute_census(spark, sf_dir)
+    s = m.groupBy("event_type").agg(
+        F.count("*").alias("n"),
+        F.sum("x").alias("sx"),
+        F.sum(F.col("x") * F.col("x")).alias("sxx"),
     )
+    dev = F.col("x") * F.col("n") - F.col("sx")
+    is_burst = (dev > 0) & (
+        dev * dev > 9 * (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
+    )
+    return m.join(F.broadcast(s), "event_type"), is_burst
+
+
+@query(
+    "event_rate_anomaly",
+    oracle=f"""
+    WITH {_DD_MINUTE_MOMENTS.strip()}
     SELECT m.event_type,
            s.n AS n_minutes,
            CAST(SUM(CASE WHEN m.x * s.n > s.sx
@@ -792,19 +820,9 @@ def event_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus version), so the query itself is a |types|-row moment rollup
     of the census, broadcast back, flag + final |types| rollup — the
     fact is never rescanned on the query path."""
-    m = minute_census(spark, sf_dir)
-    s = m.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    dev = F.col("x") * F.col("n") - F.col("sx")
-    is_burst = (dev > 0) & (
-        dev * dev > 9 * (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-    )
+    census, is_burst = _census_moments(spark, sf_dir)
     return (
-        m.join(F.broadcast(s), "event_type")
-        .groupBy("event_type", F.col("n").alias("n_minutes"))
+        census.groupBy("event_type", F.col("n").alias("n_minutes"))
         .agg(
             F.sum(F.when(is_burst, 1).otherwise(0)).alias("n_burst_minutes"),
             F.max("x").alias("max_per_minute"),
@@ -818,20 +836,8 @@ def event_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "event_burst_runs",
-    oracle="""
-    WITH m AS (
-      SELECT event_type,
-             date_trunc('minute', ts) AS minute,
-             CAST(COUNT(*) AS BIGINT) AS x
-      FROM events GROUP BY 1, 2
-    ),
-    s AS (
-      SELECT event_type,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(x) AS BIGINT) AS sx,
-             CAST(SUM(x * x) AS BIGINT) AS sxx
-      FROM m GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_DD_MINUTE_MOMENTS.strip()},
     b AS (
       SELECT m.event_type,
              epoch_us(m.minute) // 60000000 AS mi
@@ -876,19 +882,9 @@ def event_burst_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sidecar rides its event_type clustering — the moment rollup, the
     broadcast join-back, the island window, and both rollups need NO
     exchange; the census itself is time-bounded, not corpus-bounded."""
-    m = minute_census(spark, sf_dir)
-    s = m.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    dev = F.col("x") * F.col("n") - F.col("sx")
-    is_burst = (dev > 0) & (
-        dev * dev > 9 * (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-    )
+    census, is_burst = _census_moments(spark, sf_dir)
     burst = (
-        m.join(F.broadcast(s), "event_type")
-        .where(is_burst)
+        census.where(is_burst)
         .select(
             "event_type",
             # census minutes are date_trunc('minute') values, so

@@ -3793,10 +3793,11 @@ def mktsegment_yearly_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).sortWithinPartitions("yr", "segment")
 
 
-@query(
-    "median_order_value_by_nation",
-    oracle="""
-    WITH oc AS (
+#: DuckDB orders collapsed to ``vc(nation, price_c, cnt)`` through
+#: ``oc(nation, price_c)``: the shared head of the per-nation order-value
+#: oracles (_nation_value_counts' result).
+_DD_NATION_VALUE_COUNTS = """
+    oc AS (
       SELECT n.n_name AS nation,
              CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS price_c
       FROM orders o
@@ -3806,7 +3807,38 @@ def mktsegment_yearly_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     vc AS (
       SELECT nation, price_c, CAST(COUNT(*) AS BIGINT) AS cnt
       FROM oc GROUP BY 1, 2
-    ),
+    )"""
+
+
+def _nation_value_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(nation, price_c, cnt): orders collapsed to one row per
+    (customer nation, order value in cents) — the shared first step of
+    median_order_value_by_nation and order_value_gini_by_nation, whose
+    windows then run over |distinct values per nation| rows, not
+    |orders|."""
+    o = load(spark, sf_dir, "orders").select(
+        "o_custkey", _cents(F.col("o_totalprice")).alias("price_c")
+    )
+    # nation inlined as a 25-entry literal map (_nation_region_rows,
+    # r11): no nation broadcast build; isNotNull = the old inner join.
+    c = (
+        load(spark, sf_dir, "customer")
+        .select(
+            "c_custkey",
+            _nation_name_of(spark, sf_dir, "c_nationkey").alias("nation"),
+        )
+        .where(F.col("nation").isNotNull())
+    )
+    oc = o.join(_sf_dim(c), o.o_custkey == c.c_custkey).select(
+        "nation", "price_c"
+    )
+    return oc.groupBy("nation", "price_c").agg(F.count("*").alias("cnt"))
+
+
+@query(
+    "median_order_value_by_nation",
+    oracle=f"""
+    WITH {_DD_NATION_VALUE_COUNTS.strip()},
     cum AS (
       SELECT nation, price_c, cnt,
              SUM(cnt) OVER (PARTITION BY nation ORDER BY price_c)
@@ -3838,23 +3870,7 @@ def median_order_value_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactness away — this plan is both exact and distributed). The
     median extraction is two conditional MINs over the cumulative
     frame, one |nations|-row rollup."""
-    o = load(spark, sf_dir, "orders").select(
-        "o_custkey", _cents(F.col("o_totalprice")).alias("price_c")
-    )
-    # nation inlined as a 25-entry literal map (_nation_region_rows,
-    # r11): no nation broadcast build; isNotNull = the old inner join.
-    c = (
-        load(spark, sf_dir, "customer")
-        .select(
-            "c_custkey",
-            _nation_name_of(spark, sf_dir, "c_nationkey").alias("nation"),
-        )
-        .where(F.col("nation").isNotNull())
-    )
-    oc = o.join(_sf_dim(c), o.o_custkey == c.c_custkey).select(
-        "nation", "price_c"
-    )
-    vc = oc.groupBy("nation", "price_c").agg(F.count("*").alias("cnt"))
+    vc = _nation_value_counts(spark, sf_dir)
     wcum = W.partitionBy("nation").orderBy("price_c")
     cum = vc.select(
         "nation",
@@ -3971,18 +3987,8 @@ def excess_shipped_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "order_value_gini_by_nation",
-    oracle="""
-    WITH oc AS (
-      SELECT n.n_name AS nation,
-             CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS price_c
-      FROM orders o
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN nation n   ON c.c_nationkey = n.n_nationkey
-    ),
-    vc AS (
-      SELECT nation, price_c, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM oc GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {_DD_NATION_VALUE_COUNTS.strip()},
     cum AS (
       SELECT nation, price_c, cnt,
              SUM(cnt) OVER (PARTITION BY nation ORDER BY price_c) AS r,
@@ -4025,23 +4031,7 @@ def order_value_gini_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     median_order_value_by_nation discipline), one |nations|-row
     rollup. -1 sentinel where the shrunk denominator underflows to 0
     (degenerate tiny groups)."""
-    o = load(spark, sf_dir, "orders").select(
-        "o_custkey", _cents(F.col("o_totalprice")).alias("price_c")
-    )
-    # nation inlined as a 25-entry literal map (_nation_region_rows,
-    # r11): no nation broadcast build; isNotNull = the old inner join.
-    c = (
-        load(spark, sf_dir, "customer")
-        .select(
-            "c_custkey",
-            _nation_name_of(spark, sf_dir, "c_nationkey").alias("nation"),
-        )
-        .where(F.col("nation").isNotNull())
-    )
-    oc = o.join(_sf_dim(c), o.o_custkey == c.c_custkey).select(
-        "nation", "price_c"
-    )
-    vc = oc.groupBy("nation", "price_c").agg(F.count("*").alias("cnt"))
+    vc = _nation_value_counts(spark, sf_dir)
     wn = W.partitionBy("nation")
     cum = vc.select(
         "nation",

@@ -232,6 +232,19 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _window_counts(t: DataFrame, *tiebreak: str) -> DataFrame:
+    """(window_start_us, event_type, n) rows of a window-rollup sink,
+    ordered by window and type (then ``tiebreak``): the shared parity
+    projection of the rollup replays. The float total_value column is
+    projected OUT (float sums are accumulation-order-dependent across
+    engines); counts are exact."""
+    return t.select(
+        F.unix_micros("window_start").alias("window_start_us"),
+        "event_type",
+        F.col("n").cast("long").alias("n"),
+    ).orderBy("window_start_us", "event_type", *tiebreak)
+
+
 @query(
     "sessionize_stream_parity",
     oracle="""
@@ -334,14 +347,7 @@ def windowed_rollup_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     t = _run_stream_to_table(
         spark, sf_dir, "rollup", hourly_event_rollup, output_mode="complete"
     )
-    return (
-        t.select(
-            F.unix_micros("window_start").alias("window_start_us"),
-            "event_type",
-            F.col("n").cast("long").alias("n"),
-        )
-        .orderBy("window_start_us", "event_type")
-    )
+    return _window_counts(t)
 
 
 @query(
@@ -521,14 +527,7 @@ def hopping_rollup_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _run_stream_to_table(
         spark, sf_dir, "hopping", hopping_event_rollup, output_mode="complete"
     )
-    return (
-        t.select(
-            F.unix_micros("window_start").alias("window_start_us"),
-            "event_type",
-            F.col("n").cast("long").alias("n"),
-        )
-        .orderBy("window_start_us", "event_type")
-    )
+    return _window_counts(t)
 
 
 @query(
@@ -777,14 +776,7 @@ def watermark_finalize_stream_parity(spark: SparkSession, sf_dir: str) -> DataFr
         spark, sf_dir, "wm_finalize", _even_odd_slices,
         hourly_event_rollup, output_mode="append",
     )
-    return (
-        t.select(
-            F.unix_micros("window_start").alias("window_start_us"),
-            "event_type",
-            F.col("n").cast("long").alias("n"),
-        )
-        .orderBy("window_start_us", "event_type")
-    )
+    return _window_counts(t)
 
 
 @query(
@@ -845,14 +837,7 @@ def update_mode_rollup_stream_parity(spark: SparkSession, sf_dir: str) -> DataFr
         spark, sf_dir, "upd_rollup", _even_odd_slices,
         hourly_event_rollup, output_mode="update",
     )
-    return (
-        t.select(
-            F.unix_micros("window_start").alias("window_start_us"),
-            "event_type",
-            F.col("n").cast("long").alias("n"),
-        )
-        .orderBy("window_start_us", "event_type", "n")
-    )
+    return _window_counts(t, "n")
 
 
 @query(
