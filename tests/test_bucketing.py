@@ -230,19 +230,6 @@ class TestFactBucketLayout:
     layout (io.prepare_buckets) and run their joins without any shuffle
     Exchange — the round-5 directive-#2 contract."""
 
-    @pytest.fixture()
-    def bucketed_sf(self, spark, monkeypatch, tmp_path):
-        from trialstreamer_spark import io
-
-        monkeypatch.setenv("SPARK_GRAFT_BUCKET_DIR", str(tmp_path))
-        sf_dir = "/root/testdata/sf0.001"
-        io.prepare_buckets(spark, sf_dir)
-        yield sf_dir
-        for variant in io.BUCKET_SPECS:
-            spark.sql(
-                f"DROP TABLE IF EXISTS {io._bucket_table_name(sf_dir, variant)}"
-            )
-
     def _join_subtree_exchange_free(self, plan: str) -> bool:
         # every Exchange must sit ABOVE the join (the rollup/sort ones);
         # an exchange below the join would mean the bucket layout failed

@@ -10,18 +10,10 @@ from trialstreamer_spark.api import engine
 
 from tests.oracle_util import assert_matches, run_oracle
 
-FIXTURE_DIR = "/tmp/ts_fixtures"
-
 
 @pytest.fixture(scope="session")
-def tables(spark):
-    import os
-
-    from fixtures.generate import generate
-
-    if not os.path.exists(os.path.join(FIXTURE_DIR, "pubmed.parquet")):
-        generate(FIXTURE_DIR)
-    return engine.Tables(spark, FIXTURE_DIR)
+def tables(spark, fixture_dir):
+    return engine.Tables(spark, fixture_dir)
 
 
 def _expansion_sql(cui: str) -> str:
@@ -32,10 +24,10 @@ def _expansion_sql(cui: str) -> str:
     """
 
 
-def test_subtree_expansion_matches_closure(tables):
+def test_subtree_expansion_matches_closure(tables, fixture_dir):
     cuis = engine.subtree_cuis(tables, "C0000001")
     want = {
-        r[0] for r in run_oracle(_expansion_sql("C0000001"), FIXTURE_DIR).itertuples(
+        r[0] for r in run_oracle(_expansion_sql("C0000001"), fixture_dir).itertuples(
             index=False
         )
     }
@@ -43,7 +35,7 @@ def test_subtree_expansion_matches_closure(tables):
     assert "C0000001" in cuis and len(cuis) > 1  # root has children
 
 
-def test_picosearch_pubmed_leg_matches_sql(tables):
+def test_picosearch_pubmed_leg_matches_sql(tables, fixture_dir):
     """Core picosearch semantics (cnxapp.py:188-219) vs DuckDB."""
     term_cui = "C0000001"
     df = (
@@ -51,7 +43,7 @@ def test_picosearch_pubmed_leg_matches_sql(tables):
         .filter("article_type = 'journal article'")
         .select("pmid", "year", "score")
     )
-    cuis = run_oracle(_expansion_sql(term_cui), FIXTURE_DIR)["cui"].tolist()
+    cuis = run_oracle(_expansion_sql(term_cui), fixture_dir)["cui"].tolist()
     in_list = ", ".join(f"'{c}'" for c in cuis)
     oracle = f"""
     SELECT pm.pmid, pm.year,
@@ -62,7 +54,7 @@ def test_picosearch_pubmed_leg_matches_sql(tables):
     ORDER BY score DESC NULLS LAST, pm.pmid
     LIMIT 250
     """
-    assert_matches(df, oracle, FIXTURE_DIR, float_tol=1e-9)
+    assert_matches(df, oracle, fixture_dir, float_tol=1e-9)
 
 
 def test_picosearch_terms_are_anded(tables):
@@ -107,7 +99,7 @@ def test_picosearch_empty_terms(tables):
     assert engine.picosearch(tables, []).count() == 0
 
 
-def test_covid19_matches_sql(tables):
+def test_covid19_matches_sql(tables, fixture_dir):
     df = engine.covid19(tables).select("id", "year", "result_set")
     oracle = """
     SELECT pm.pmid AS id, pm.year, 'trialstreamer_published' AS result_set
@@ -118,10 +110,10 @@ def test_covid19_matches_sql(tables):
     SELECT doi AS id, year, 'trialstreamer_preprint' AS result_set
     FROM medrxiv_covid19 WHERE is_rct_balanced
     """
-    assert_matches(df, oracle, FIXTURE_DIR)
+    assert_matches(df, oracle, fixture_dir)
 
 
-def test_meta_matches_sql(tables):
+def test_meta_matches_sql(tables, fixture_dir):
     df = engine.meta(tables)
     oracle = """
     SELECT strftime((SELECT MAX(download_date) FROM update_log
@@ -130,7 +122,7 @@ def test_meta_matches_sql(tables):
            format('{:,}', (SELECT COUNT(*) FROM pubmed WHERE is_rct_balanced))
                AS num_rcts
     """
-    assert_matches(df, oracle, FIXTURE_DIR)
+    assert_matches(df, oracle, fixture_dir)
 
 
 def test_autocomplete_ranked(tables):
@@ -159,7 +151,7 @@ def test_get_trial_fallback(tables):
     assert engine.get_trial(tables, "nonexistent-id").count() == 0
 
 
-def test_year_counts_matches_sql(tables):
+def test_year_counts_matches_sql(tables, fixture_dir):
     df = engine.year_counts(tables)
     oracle = """
     SELECT year,
@@ -172,18 +164,18 @@ def test_year_counts_matches_sql(tables):
     FROM pubmed WHERE year >= 1948
     GROUP BY year ORDER BY year
     """
-    assert_matches(df, oracle, FIXTURE_DIR)
+    assert_matches(df, oracle, fixture_dir)
 
 
-def test_rct_count(tables):
+def test_rct_count(tables, fixture_dir):
     n = engine.rct_count(tables).collect()[0].count_rct_balanced
     want = run_oracle(
-        "SELECT COUNT(*) FROM pubmed WHERE is_rct_balanced", FIXTURE_DIR
+        "SELECT COUNT(*) FROM pubmed WHERE is_rct_balanced", fixture_dir
     ).iloc[0, 0]
     assert n == want
 
 
-def test_registry_links_recoverable(tables):
+def test_registry_links_recoverable(tables, fixture_dir):
     """Pipeline J6: rebuilt links must cover every stored link whose
     regid appears in pm_data.registry_ids or the abstract regex."""
     built = engine.registry_links_build(tables)
@@ -196,4 +188,4 @@ def test_registry_links_recoverable(tables):
       FROM pubmed
     ) WHERE regid IS NOT NULL AND regid <> ''
     """
-    assert_matches(built.orderBy("regid", "pmid"), oracle + " ORDER BY regid, pmid", FIXTURE_DIR)
+    assert_matches(built.orderBy("regid", "pmid"), oracle + " ORDER BY regid, pmid", fixture_dir)

@@ -15,17 +15,11 @@ from pyspark.sql import functions as F
 from tests.oracle_util import run_oracle
 from trialstreamer_spark.sources import medrxiv, mendeley, upw
 
-FIXTURE_DIR = "/tmp/ts_fixtures"
-
 
 @pytest.fixture(scope="module")
-def fixture_tables(spark):
-    from fixtures.generate import generate
-
-    if not os.path.exists(os.path.join(FIXTURE_DIR, "pubmed.parquet")):
-        generate(FIXTURE_DIR)
+def fixture_tables(spark, fixture_dir):
     return {
-        name: spark.read.parquet(os.path.join(FIXTURE_DIR, f"{name}.parquet"))
+        name: spark.read.parquet(os.path.join(fixture_dir, f"{name}.parquet"))
         for name in ("pubmed", "pmid_dois")
     }
 
@@ -35,7 +29,7 @@ def fixture_tables(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_pmid_doi_lookup_precedence(spark, fixture_tables):
+def test_pmid_doi_lookup_precedence(spark, fixture_tables, fixture_dir):
     lookup = upw.pmid_doi_lookup(
         fixture_tables["pubmed"], fixture_tables["pmid_dois"]
     )
@@ -59,7 +53,7 @@ def test_pmid_doi_lookup_precedence(spark, fixture_tables):
                  row_number() OVER (PARTITION BY doi ORDER BY prio, pmid) rn
           FROM u) WHERE rn = 1
         """,
-        FIXTURE_DIR,
+        fixture_dir,
     )
     want = dict(zip(oracle["doi"], oracle["pmid"]))
     assert got == want and len(got) > 0
@@ -217,7 +211,7 @@ def test_doi_clean_cases(spark):
     assert got == [e for _, e in cases]
 
 
-def test_todo_pmids(spark, fixture_tables):
+def test_todo_pmids(spark, fixture_tables, fixture_dir):
     todo = mendeley.todo_pmids(
         fixture_tables["pubmed"], fixture_tables["pmid_dois"]
     )
@@ -228,6 +222,6 @@ def test_todo_pmids(spark, fixture_tables):
         WHERE is_rct_balanced AND len(pm_data.dois) = 0
           AND pmid NOT IN (SELECT pmid FROM pmid_dois)
         """,
-        FIXTURE_DIR,
+        fixture_dir,
     )
     assert got == set(oracle["pmid"])

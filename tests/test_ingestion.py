@@ -8,22 +8,10 @@ from __future__ import annotations
 import os
 import shutil
 
-import pytest
-
 from pyspark.sql import functions as F
 
-from fixtures.pubmed_xml import generate_xml_fixtures
 from trialstreamer_spark.sources import pubmed_xml
 from trialstreamer_spark.streaming.pipeline import PubmedPipeline
-
-XML_DIR = "/tmp/ts_xml_fixtures"
-
-
-@pytest.fixture(scope="module")
-def xml_dir():
-    shutil.rmtree(XML_DIR, ignore_errors=True)
-    generate_xml_fixtures(XML_DIR)
-    return XML_DIR
 
 
 def _records(spark, glob_path: str):

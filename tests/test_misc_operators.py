@@ -23,15 +23,10 @@ def test_export_csv_roundtrip(spark, sf_dir, tmp_path):
     assert set(back.columns) == {"n_nationkey", "n_name"}
 
 
-def test_mesh_key_exists_predicate(spark):
+def test_mesh_key_exists_predicate(spark, fixture_dir):
     """F5: (pm_data->'mesh' ? 'Humans') → array_contains on the typed
     struct column."""
-    import fixtures.generate as G
-
-    FIXTURE_DIR = "/tmp/ts_fixtures"
-    if not os.path.exists(os.path.join(FIXTURE_DIR, "pubmed.parquet")):
-        G.generate(FIXTURE_DIR)
-    pm = spark.read.parquet(os.path.join(FIXTURE_DIR, "pubmed.parquet"))
+    pm = spark.read.parquet(os.path.join(fixture_dir, "pubmed.parquet"))
     withh = pm.filter(F.array_contains(F.col("pm_data.mesh"), "Humans"))
     # equivalent to an exists() scan — same rows
     alt = pm.filter(F.exists(F.col("pm_data.mesh"), lambda m: m == "Humans"))

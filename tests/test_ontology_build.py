@@ -11,8 +11,6 @@ import pytest
 from tests.oracle_util import run_oracle
 from trialstreamer_spark.plans import ontology
 
-FIXTURE_DIR = "/tmp/ts_fixtures"
-
 MESH_TREE = """MeSH Tree Hierarchy
 generated test file
 ---
@@ -70,18 +68,14 @@ def test_transitive_closure_depths(spark, tree_path):
     assert ("Abdomen", "Body Regions") not in got
 
 
-def test_closure_matches_fixture_table(spark):
+def test_closure_matches_fixture_table(spark, fixture_dir):
     """The fixture generator builds cui_closure by Python BFS; rebuilding
     it from the generator's edge list through transitive_closure must
     reproduce it exactly (min-depth per pair)."""
     from pyspark.sql import functions as F
 
-    from fixtures.generate import generate
-
-    if not os.path.exists(os.path.join(FIXTURE_DIR, "pubmed.parquet")):
-        generate(FIXTURE_DIR)
     fixture = spark.read.parquet(
-        os.path.join(FIXTURE_DIR, "cui_closure.parquet")
+        os.path.join(fixture_dir, "cui_closure.parquet")
     )
     edges = fixture.filter(F.col("depth") == 1).select(
         F.col("ancestor_cui").alias("parent_term"),
@@ -137,21 +131,17 @@ def test_pharm_action_maps(spark, tmp_path):
     assert c["Aspirin"] == ["Anti-Inflammatory Agents"]
 
 
-def test_autocomplete_suggestions_match_fixture(spark):
+def test_autocomplete_suggestions_match_fixture(spark, fixture_dir):
     """Rebuilding the suggestion table from annotations must match the
     generator's Counter-based table (same keys, counts, display)."""
-    from fixtures.generate import generate
-
-    if not os.path.exists(os.path.join(FIXTURE_DIR, "pubmed.parquet")):
-        generate(FIXTURE_DIR)
     ann = spark.read.parquet(
-        os.path.join(FIXTURE_DIR, "pubmed_annotations.parquet")
+        os.path.join(fixture_dir, "pubmed_annotations.parquet")
     )
     built = ontology.build_autocomplete_suggestions(ann)
     oracle = run_oracle(
         "SELECT cui, cui_str, cui_pico_display, field, count "
         "FROM autocomplete_suggestions",
-        FIXTURE_DIR,
+        fixture_dir,
     )
     want = {
         (r.cui, r.cui_str, r.cui_pico_display, r.field): r.count

@@ -12,17 +12,11 @@ from pyspark.sql import functions as F
 from trialstreamer_spark.functions.annotate import DeterministicStubAnnotator
 from trialstreamer_spark.operators import pico_search
 
-FIXTURE_DIR = "/tmp/ts_fixtures"
-
 
 @pytest.fixture(scope="module")
-def ann(spark):
-    from fixtures.generate import generate
-
-    if not os.path.exists(os.path.join(FIXTURE_DIR, "pubmed.parquet")):
-        generate(FIXTURE_DIR)
+def ann(spark, fixture_dir):
     return spark.read.parquet(
-        os.path.join(FIXTURE_DIR, "pubmed_annotations.parquet")
+        os.path.join(fixture_dir, "pubmed_annotations.parquet")
     )
 
 

@@ -1,16 +1,22 @@
 """The plan budget (plan_budget.json, written by tools/plan_budget.py):
 no registered query gains an exchange, scan, join, Python-UDF node or
-Spark job unless the budget is rewritten on purpose."""
+Spark job unless the budget is rewritten on purpose. The same pass is
+the sf0.01 oracle gate: every query with an oracle is compared with it
+on the pass's warm-up run."""
 
 from __future__ import annotations
 
 import json
+import os
+import re
 import subprocess
 import sys
 
+import pytest
+
 from tests.conftest import ROOT
 from tools.plan_budget import BUDGET, budget_diff, measure
-from trialstreamer_spark.plans.all_queries import QUERIES
+from trialstreamer_spark.plans.all_queries import ORACLES, QUERIES
 
 
 def test_budget_has_one_entry_per_registered_query():
@@ -20,7 +26,8 @@ def test_budget_has_one_entry_per_registered_query():
 
 def test_no_query_exceeds_its_plan_budget(tmp_path):
     """Recomputed in a fresh session, as the tool measures it, so no
-    cache or setting left by an earlier test can change a count."""
+    cache or setting left by an earlier test can change a count. A query
+    that differs from its oracle at sf0.01 fails the run by name."""
     out = tmp_path / "plan_budget.json"
     subprocess.run(
         [
@@ -51,3 +58,41 @@ def test_budget_check_names_an_injected_exchange(spark, sf_dir, monkeypatch):
     rises, _ = budget_diff(before, measure(spark, sf_dir, [name]))
     n = before[name]["exchanges"]
     assert f"{name}: exchanges {n} -> {n + 1}" in rises
+
+
+@pytest.mark.parametrize("fault", ["drop_row", "alter_value"])
+def test_oracle_gate_names_an_injected_wrong_result(
+    spark, sf_dir, monkeypatch, fault
+):
+    """The measurement refuses a query whose rows differ from its oracle,
+    and names it: one row dropped, or one value changed."""
+    from pyspark.sql import functions as F
+
+    name = "core_join_topk"
+    query = QUERIES[name]
+
+    def wrong(s, d):
+        df = query(s, d)
+        if fault == "drop_row":
+            return df.exceptAll(df.limit(1))
+        return df.withColumn("o_orderkey", F.col("o_orderkey") + 1)
+
+    monkeypatch.setitem(QUERIES, name, wrong)
+    with pytest.raises(AssertionError, match=f"^{name} differs from its oracle"):
+        measure(spark, sf_dir, [name])
+
+
+def test_parity_doc_not_stale():
+    """PARITY.md's registry roll-call is generated by tools/plan_budget.py:
+    it must state the current registry size, so adding or removing a
+    query without rerunning the tool fails instead of shipping a stale
+    doc."""
+    with open(os.path.join(ROOT, "PARITY.md")) as f:
+        text = f.read()
+    m = re.search(r"(\d+) registered queries, (\d+) with DuckDB", text)
+    assert m, "PARITY.md generated registry block missing"
+    assert int(m.group(1)) == len(QUERIES), (
+        f"PARITY.md says {m.group(1)} queries, registry has "
+        f"{len(QUERIES)} — rerun tools/plan_budget.py"
+    )
+    assert int(m.group(2)) == len(ORACLES)

@@ -23,6 +23,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR
 from trialstreamer_spark.io import load
 from trialstreamer_spark.operators import dedup, similarity
 from trialstreamer_spark.plans.registry import QUERIES
@@ -146,7 +147,7 @@ def test_no_cartesian_anywhere():
     from trialstreamer_spark.session import get_spark
 
     spark = get_spark("plan-hygiene")
-    sf_dir = "/root/testdata/sf0.001"
+    sf_dir = SF_DIR
     for name, fn in sorted(QUERIES.items()):
         try:
             p = plan_of(fn(spark, sf_dir))
@@ -205,7 +206,6 @@ def test_sf_dim_leg_count_is_keyed_by_its_source(spark, tmp_path):
     count, although their unwarmed plan strings are identical."""
     import pyarrow.parquet as pq
 
-    from tests.conftest import SF_DIR
     from trialstreamer_spark import util
     from trialstreamer_spark.plans.relational import _sf_dim
 

@@ -9,20 +9,15 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR
 from trialstreamer_spark import sidecars
 from trialstreamer_spark.api import engine
 from trialstreamer_spark.plans import postings as P
 
-FIXTURE_DIR = "/tmp/ts_fixtures"
-
 
 @pytest.fixture(scope="module")
-def tables(spark):
-    from fixtures.generate import generate
-
-    if not os.path.exists(os.path.join(FIXTURE_DIR, "pubmed.parquet")):
-        generate(FIXTURE_DIR)
-    return engine.Tables(spark, FIXTURE_DIR)
+def tables(spark, fixture_dir):
+    return engine.Tables(spark, fixture_dir)
 
 
 def _expanded(tables, terms):
@@ -215,7 +210,7 @@ def test_doc_token_postings_prunes_shards(spark, monkeypatch, tmp_path):
     from trialstreamer_spark.operators import retrieval as R
 
     monkeypatch.setenv("SPARK_GRAFT_SIDECAR_DIR", str(tmp_path))
-    sf = "/root/testdata/sf0.001"
+    sf = SF_DIR
     from trialstreamer_spark.plans.all_queries import QUERIES
 
     q = QUERIES["postings_term_search"](spark, sf)

@@ -15,36 +15,30 @@ from tests.oracle_util import run_oracle
 from trialstreamer_spark.api import query_ast
 from trialstreamer_spark.sources import files
 
-FIXTURE_DIR = "/tmp/ts_fixtures"
-
 
 @pytest.fixture(scope="module")
-def ann(spark):
-    from fixtures.generate import generate
-
-    if not os.path.exists(os.path.join(FIXTURE_DIR, "pubmed.parquet")):
-        generate(FIXTURE_DIR)
+def ann(spark, fixture_dir):
     return spark.read.parquet(
-        os.path.join(FIXTURE_DIR, "pubmed_annotations.parquet")
+        os.path.join(fixture_dir, "pubmed_annotations.parquet")
     )
 
 
-def _terms(n=4):
+def _terms(fixture_dir):
     rows = run_oracle(
         """
         SELECT DISTINCT m.mesh_term AS t
         FROM pubmed_annotations, unnest(population_mesh) AS u(m)
         ORDER BY t LIMIT 4
         """,
-        FIXTURE_DIR,
+        fixture_dir,
     )
     return rows["t"].tolist()
 
 
-def _oracle_pmids(where: str) -> set:
+def _oracle_pmids(fixture_dir, where: str) -> set:
     return set(
         run_oracle(
-            f"SELECT pmid FROM pubmed_annotations WHERE {where}", FIXTURE_DIR
+            f"SELECT pmid FROM pubmed_annotations WHERE {where}", fixture_dir
         )["pmid"]
     )
 
@@ -55,39 +49,43 @@ def _has(field, term):
     )
 
 
-def test_leaf_and_or_and_nested(spark, ann):
-    a, b, c, d = _terms()
+def test_leaf_and_or_and_nested(spark, ann, fixture_dir):
+    a, b, c, d = _terms(fixture_dir)
     # leaf
     got = {r.pmid for r in ann.filter(
         query_ast.compile_predicate(a, "population")).select("pmid").collect()}
-    assert got == _oracle_pmids(_has("population", a))
+    assert got == _oracle_pmids(fixture_dir, _has("population", a))
     # OR group
     got = {r.pmid for r in ann.filter(
         query_ast.compile_predicate(["OR", a, b], "population")
     ).select("pmid").collect()}
-    assert got == _oracle_pmids(f"{_has('population', a)} OR {_has('population', b)}")
+    assert got == _oracle_pmids(
+        fixture_dir, f"{_has('population', a)} OR {_has('population', b)}"
+    )
     assert len(got) > 0
     # nested: a AND (b OR (c AND d)) — implicit AND at top level
     ast = [a, ["OR", b, ["AND", c, d]]]
     got = {r.pmid for r in ann.filter(
         query_ast.compile_predicate(ast, "population")).select("pmid").collect()}
     want = _oracle_pmids(
+        fixture_dir,
         f"{_has('population', a)} AND ({_has('population', b)} OR "
         f"({_has('population', c)} AND {_has('population', d)}))"
     )
     assert got == want  # may legitimately be empty for this fixture combo
 
 
-def test_cui_match_key(spark, ann):
+def test_cui_match_key(spark, ann, fixture_dir):
     cui = run_oracle(
         "SELECT population_mesh[1].cui AS c FROM pubmed_annotations "
         "WHERE len(population_mesh) > 0 LIMIT 1",
-        FIXTURE_DIR,
+        fixture_dir,
     )["c"][0]
     got = {r.pmid for r in ann.filter(
         query_ast.compile_predicate(cui, "population", match_key="cui")
     ).select("pmid").collect()}
     assert got == _oracle_pmids(
+        fixture_dir,
         f"len(list_filter(population_mesh, x -> x.cui = '{cui}')) > 0"
     )
 
@@ -108,11 +106,11 @@ def test_rewrite_passes():
     ]
 
 
-def test_pico_query_joins(spark, ann):
-    a = _terms()[0]
-    pm = spark.read.parquet(os.path.join(FIXTURE_DIR, "pubmed.parquet"))
+def test_pico_query_joins(spark, ann, fixture_dir):
+    a = _terms(fixture_dir)[0]
+    pm = spark.read.parquet(os.path.join(fixture_dir, "pubmed.parquet"))
     rl = spark.read.parquet(
-        os.path.join(FIXTURE_DIR, "registry_links.parquet")
+        os.path.join(fixture_dir, "registry_links.parquet")
     )
     out = query_ast.pico_query(ann, p=a, registry_links=rl, pubmed=pm)
     got = {(r.pmid, r.regid) for r in out.select("pmid", "regid").collect()}
@@ -125,7 +123,7 @@ def test_pico_query_joins(spark, ann):
         WHERE {_has('population', a).replace('population_mesh',
                                              'pa.population_mesh')}
         """,
-        FIXTURE_DIR,
+        fixture_dir,
     )
     assert got == {(r.pmid, r.regid) for r in oracle.itertuples(index=False)}
 

@@ -29,16 +29,9 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR
 from trialstreamer_spark import sidecars
 from trialstreamer_spark.plans.all_queries import QUERIES
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def sidecar_dir(monkeypatch, tmp_path):
-    monkeypatch.setenv("SPARK_GRAFT_SIDECAR_DIR", str(tmp_path))
-    yield str(tmp_path)
 
 
 def test_disk_sidecar_builds_once_and_detects_staleness(
@@ -47,7 +40,7 @@ def test_disk_sidecar_builds_once_and_detects_staleness(
     corpus = str(tmp_path / "corpus")
     os.makedirs(corpus)
     shutil.copy(
-        os.path.join(SF, "documents.parquet"),
+        os.path.join(SF_DIR, "documents.parquet"),
         os.path.join(corpus, "documents.parquet"),
     )
     os.chmod(os.path.join(corpus, "documents.parquet"), 0o644)
@@ -76,19 +69,19 @@ def test_restart_serves_minhash_lsh_from_disk(spark, sidecar_dir, monkeypatch):
     from trialstreamer_spark import util
     from trialstreamer_spark.operators import dedup
 
-    first = QUERIES["dedup_minhash_lsh"](spark, SF).collect()
-    sig_dir = sidecars.sidecar_path(SF, "minhash_sigs_doc_id_text")
+    first = QUERIES["dedup_minhash_lsh"](spark, SF_DIR).collect()
+    sig_dir = sidecars.sidecar_path(SF_DIR, "minhash_sigs_doc_id_text")
     assert os.path.exists(os.path.join(sig_dir, "_current"))
     # "restart": fresh SparkSession + evict every in-memory sidecar the
     # first run registered (the one cache holds the dedup
     # postings/signature entries too)
     s2 = spark.newSession()
-    util.evict_caches(SF)
+    util.evict_caches(SF_DIR)
     # only THIS corpus's entries must be gone — other corpora cached by
     # earlier tests in the session are intentionally untouched
     assert not [
         k for k in util._PLAN_CACHE
-        if "minhash_sigs_doc_id_text" in k and SF in str(k)
+        if "minhash_sigs_doc_id_text" in k and SF_DIR in str(k)
     ]
 
     def boom(*a, **k):
@@ -97,7 +90,7 @@ def test_restart_serves_minhash_lsh_from_disk(spark, sidecar_dir, monkeypatch):
         )
 
     monkeypatch.setattr(dedup, "shingle_postings", boom)
-    second = QUERIES["dedup_minhash_lsh"](s2, SF).collect()
+    second = QUERIES["dedup_minhash_lsh"](s2, SF_DIR).collect()
     assert sorted(map(tuple, first)) == sorted(map(tuple, second))
 
 
@@ -109,16 +102,16 @@ def test_simhash_table_is_disk_backed(spark, sidecar_dir):
     Aggregate over exploded tokens), with identical rows."""
     from trialstreamer_spark import util
 
-    first = QUERIES["dedup_simhash"](spark, SF).collect()
-    sdir = sidecars.sidecar_path(SF, "simhash_doc_id_text_16")
+    first = QUERIES["dedup_simhash"](spark, SF_DIR).collect()
+    sdir = sidecars.sidecar_path(SF_DIR, "simhash_doc_id_text_16")
     assert os.path.exists(os.path.join(sdir, "_current"))
     s2 = spark.newSession()
-    util.evict_caches(SF)
+    util.evict_caches(SF_DIR)
     assert not [
         k for k in util._PLAN_CACHE
-        if "simhash_doc_id_text_16" in k and SF in str(k)
+        if "simhash_doc_id_text_16" in k and SF_DIR in str(k)
     ]
-    df = QUERIES["dedup_simhash"](s2, SF)
+    df = QUERIES["dedup_simhash"](s2, SF_DIR)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     # served from the committed (doc_id, simhash) scan: no tokenize
     # explode (Generate) and no bit-sum Aggregate anywhere in the plan
@@ -132,21 +125,21 @@ def test_simhash_table_is_disk_backed(spark, sidecar_dir):
 def test_cc_labels_and_phash_bands_are_disk_backed(spark, sidecar_dir):
     from trialstreamer_spark.operators.dedup import cc_labels
 
-    labels = cc_labels(spark, SF).collect()
+    labels = cc_labels(spark, SF_DIR).collect()
     assert os.path.exists(
-        os.path.join(sidecars.sidecar_path(SF, "cc_labels"), "_current")
+        os.path.join(sidecars.sidecar_path(SF_DIR, "cc_labels"), "_current")
     )
-    QUERIES["multimodal_phash_dedup"](spark, SF).collect()
+    QUERIES["multimodal_phash_dedup"](spark, SF_DIR).collect()
     assert os.path.exists(
         os.path.join(
-            sidecars.sidecar_path(SF, "media_phash_bands"), "_current"
+            sidecars.sidecar_path(SF_DIR, "media_phash_bands"), "_current"
         )
     )
     # committed labels equal the in-session computation
     from trialstreamer_spark.operators.upsert import ParquetTable
 
     stored = ParquetTable(
-        spark, sidecars.sidecar_path(SF, "cc_labels")
+        spark, sidecars.sidecar_path(SF_DIR, "cc_labels")
     ).read().collect()
     assert sorted(map(tuple, stored)) == sorted(map(tuple, labels))
 
@@ -159,15 +152,15 @@ def test_restart_serves_promoted_finals_from_disk(spark, sidecar_dir, monkeypatc
     from trialstreamer_spark import util
     from trialstreamer_spark.operators import quality, similarity
 
-    first_dsir = QUERIES["dsir_importance_weights"](spark, SF).collect()
-    first_knn = QUERIES["knn_graph_topk"](spark, SF).collect()
+    first_dsir = QUERIES["dsir_importance_weights"](spark, SF_DIR).collect()
+    first_knn = QUERIES["knn_graph_topk"](spark, SF_DIR).collect()
     for name in ("dsir_doc_scores", "knn_edges"):
         assert os.path.exists(
-            os.path.join(sidecars.sidecar_path(SF, name), "_current")
+            os.path.join(sidecars.sidecar_path(SF_DIR, name), "_current")
         ), name
 
     s2 = spark.newSession()
-    util.evict_caches(SF)
+    util.evict_caches(SF_DIR)
 
     def boom(what):
         def _fail(*a, **k):
@@ -177,9 +170,9 @@ def test_restart_serves_promoted_finals_from_disk(spark, sidecar_dir, monkeypatc
 
     monkeypatch.setattr(similarity, "lsh_candidate_pairs", boom("lsh pairs"))
     monkeypatch.setattr(quality, "_gram_counts", boom("gram counts"))
-    assert sorted(map(tuple, QUERIES["dsir_importance_weights"](s2, SF).collect())) \
+    assert sorted(map(tuple, QUERIES["dsir_importance_weights"](s2, SF_DIR).collect())) \
         == sorted(map(tuple, first_dsir))
-    assert sorted(map(tuple, QUERIES["knn_graph_topk"](s2, SF).collect())) \
+    assert sorted(map(tuple, QUERIES["knn_graph_topk"](s2, SF_DIR).collect())) \
         == sorted(map(tuple, first_knn))
 
 
@@ -197,7 +190,7 @@ def test_restart_rebuilds_nothing_current(spark, tmp_path, monkeypatch):
     os.makedirs(corpus)
     for t in TABLES:
         shutil.copyfile(
-            os.path.join(SF, f"{t}.parquet"),
+            os.path.join(SF_DIR, f"{t}.parquet"),
             os.path.join(corpus, f"{t}.parquet"),
         )
     catalog, buckets = tmp_path / "sc", tmp_path / "bkt"
@@ -264,7 +257,7 @@ def parity_builds(spark, tmp_path_factory):
         mp.setattr(parity, "_TMPFS", str(shm), raising=False)
         mp.setattr(tempfile, "tempdir", str(tmp))
         for name in PARITY:
-            QUERIES[name](spark, SF).collect()
+            QUERIES[name](spark, SF_DIR).collect()
             left[name] = (
                 sorted(os.listdir(shm)) + sorted(os.listdir(tmp)),
                 [
@@ -305,8 +298,8 @@ def test_restart_serves_parity_replays_from_disk(
 
     catalog, _left = parity_builds
     monkeypatch.setenv("SPARK_GRAFT_SIDECAR_DIR", catalog)
-    util.evict_caches(SF)
-    assert not [k for k in util._PLAN_CACHE if util._key_references(k, SF)]
+    util.evict_caches(SF_DIR)
+    assert not [k for k in util._PLAN_CACHE if util._key_references(k, SF_DIR)]
 
     def no_stream(*a, **k):
         raise AssertionError("a parity query started a stream after restart")
@@ -314,4 +307,4 @@ def test_restart_serves_parity_replays_from_disk(
     monkeypatch.setattr(DataStreamWriter, "start", no_stream)
     s2 = spark.newSession()
     for name in PARITY:
-        assert_matches(QUERIES[name](s2, SF), ORACLES[name], SF)
+        assert_matches(QUERIES[name](s2, SF_DIR), ORACLES[name], SF_DIR)

@@ -14,8 +14,6 @@ from pyspark.sql import functions as F
 
 from trialstreamer_spark.api import engine
 
-from tests.test_engine import FIXTURE_DIR
-
 FEED = {
     "rels": [
         {
@@ -44,18 +42,14 @@ FEED = {
 
 
 @pytest.fixture()
-def hybrid_warehouse(spark, tmp_path):
+def hybrid_warehouse(spark, tmp_path, fixture_dir):
     """Fixture tables (symlinked) + room for update-produced tables, so
     engine queries that span both can run against one root."""
-    from fixtures.generate import generate
-
-    if not os.path.exists(os.path.join(FIXTURE_DIR, "pubmed.parquet")):
-        generate(FIXTURE_DIR)
     wh = tmp_path / "wh"
     wh.mkdir()
-    for fn in os.listdir(FIXTURE_DIR):
+    for fn in os.listdir(fixture_dir):
         if fn.endswith(".parquet") and not fn.startswith("medrxiv"):
-            os.symlink(os.path.join(FIXTURE_DIR, fn), str(wh / fn))
+            os.symlink(os.path.join(fixture_dir, fn), str(wh / fn))
     return str(wh)
 
 

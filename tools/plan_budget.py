@@ -15,6 +15,11 @@ prepare hook (``sidecars.prepare_hooks``) has run:
   with the DataFrame's construction inside the measured call, because
   some queries run jobs while they build. The second of two calls.
 
+The first of those two calls is the sf0.01 oracle gate: its rows are
+compared with the query's DuckDB oracle (``tests/oracle_util``), and a
+mismatch fails the measurement with the query's name, so no budget is
+written from wrong results.
+
 tests/test_plan_budget.py recomputes the budget and fails when any count
 rises. After an intended plan change, rewrite it:
 
@@ -33,6 +38,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from tests.conftest import SF_DIR_MED, jobs_during  # noqa: E402
+from tests.oracle_util import assert_matches  # noqa: E402
 from tools.job_count import run_preps  # noqa: E402
 from trialstreamer_spark.plans.all_queries import ORACLES, QUERIES  # noqa: E402
 from trialstreamer_spark.session import get_spark  # noqa: E402
@@ -76,10 +82,20 @@ def plan_counts(plan) -> dict[str, int]:
 
 
 def measure(spark, sf_dir: str, names) -> dict[str, dict[str, int]]:
-    """The budget entry of each named query, on the session as it is."""
+    """The budget entry of each named query, on the session as it is.
+    The warm-up run of each query with an oracle is its oracle check."""
     budget = {}
     for name in names:
-        QUERIES[name](spark, sf_dir).count()
+        df = QUERIES[name](spark, sf_dir)
+        if name in ORACLES:
+            try:
+                assert_matches(df, ORACLES[name], sf_dir)
+            except AssertionError as exc:
+                raise AssertionError(
+                    f"{name} differs from its oracle at {sf_dir}: {exc}"
+                ) from exc
+        else:
+            df.count()
         built = []
 
         def build_and_count():

@@ -30,8 +30,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Minimum rows per cached partition. The corpus parquet is written with
 # ~1M-row row groups, which Spark cannot split: at sf0.1 EVERY table scans
 # as ONE partition and at sf1 lineitem lands 6M rows in 6 of 28 splits

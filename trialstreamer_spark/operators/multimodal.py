@@ -30,11 +30,6 @@ from pyspark.sql import functions as F
 
 from trialstreamer_spark.plans.registry import query
 
-MEDIA_SCHEMA = (
-    "media_id long, modality string, content binary, "
-    "meta struct<width:int, height:int, sample_rate:int, duration_ms:int, codec:string>"
-)
-
 FEATURE_SCHEMA = "media_id long, modality string, n_bytes int, feature array<float>"
 
 

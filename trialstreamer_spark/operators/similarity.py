@@ -171,12 +171,6 @@ def scores_vs_query_udf(qvec: np.ndarray):
     return F.pandas_udf(scores, _SCORES_TYPE)
 
 
-def cosine_from_fp(dot: Column, nsq_a: Column, nsq_b: Column) -> Column:
-    """cosine = dot / sqrt(nsq_a * nsq_b) — one double division + sqrt on
-    exact int64 fixed-point components."""
-    return dot / F.sqrt(nsq_a.cast("double") * nsq_b.cast("double"))
-
-
 # Column-expression forms (interpreted higher-order functions): one
 # norm per corpus row (mips_aug_cells, the norm-outlier table) or a tiny
 # probe. Pairwise hot paths use the Arrow UDFs above.

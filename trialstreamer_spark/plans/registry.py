@@ -2,8 +2,10 @@
 
 Every operator from SURVEY.md §2 that is SQL-expressible registers here with
 both a DataFrame-plan callable ``(spark, sf_dir) -> DataFrame`` and the
-ANSI-SQL string a DuckDB oracle runs on the same parquet tables. The driver
-hash-compares the two at sf0.01 (CORRECTNESS_r{N}.json).
+ANSI-SQL string a DuckDB oracle runs on the same parquet tables. The tests
+compare the two for every pair once per scale factor: at sf0.001
+(tests/test_relational_oracle.py) and at sf0.01 (the plan-budget pass,
+tools/plan_budget.py).
 
 Conventions that make the hash comparison robust (SURVEY.md §7 hard parts
 4-5):

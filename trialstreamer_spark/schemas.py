@@ -213,16 +213,3 @@ AUTOCOMPLETE = _s(
     _f("field", S),
     _f("count", T.LongType()),
 )
-
-FIXTURE_TABLES = {
-    "pubmed": PUBMED,
-    "pubmed_annotations": PUBMED_ANNOTATIONS,
-    "ictrp": ICTRP,
-    "medrxiv_covid19": MEDRXIV_COVID19,
-    "registry_links": REGISTRY_LINKS,
-    "upw": UPW,
-    "pmid_dois": PMID_DOIS,
-    "update_log": UPDATE_LOG,
-    "cui_closure": CUI_CLOSURE,
-    "autocomplete_suggestions": AUTOCOMPLETE,
-}

@@ -621,7 +621,7 @@ def upsert_sink_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the cached copy keeps the final order, so a call is one cached
     # scan (a cold parquet read mid-bench measured 3.6x slower than in
-    # isolation: BENCH_r08 0.537 s vs 0.148 s)
+    # isolation: 0.537 s vs 0.148 s, BENCH_r08 in git history)
     return _replay(
         spark,
         sf_dir,
