@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import json
 import os
+import subprocess
 import sys
 
 import pytest
@@ -29,6 +31,31 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def sf_dir_med() -> str:
     return SF_DIR_MED
+
+
+@pytest.fixture(scope="session")
+def sf01_pass(tmp_path_factory) -> dict:
+    """The plan-budget pass, run once per session in a fresh process as
+    ``tools/plan_budget.py`` runs it: every registered query at sf0.01,
+    its warm-up rows compared with its oracle, then its plan counted.
+    ``{"budget": {name: counts}, "wrong": {name: message}}``; a query in
+    ``wrong`` was not counted."""
+    out = tmp_path_factory.mktemp("sf01_pass") / "pass.json"
+    subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import json, sys; from tools.plan_budget import measure_budget; "
+            "budget, wrong = measure_budget(); "
+            "json.dump({'budget': budget, 'wrong': wrong}, open(sys.argv[1], 'w'))",
+            str(out),
+        ],
+        cwd=ROOT,
+        check=True,
+        timeout=1800,
+    )
+    with open(out) as f:
+        return json.load(f)
 
 
 @pytest.fixture(scope="session")

@@ -58,3 +58,34 @@ def assert_matches(spark_df, oracle_sql: str, sf_dir: str, float_tol: float = 0.
                 f"{c}: first mismatch at {mismatch.idxmax()}: "
                 f"{g[mismatch].head(3).tolist()} vs {w[mismatch].head(3).tolist()}"
             )
+
+
+# (query, sf_dir, sidecar dir, bucket dir) -> None when the query matched
+# its oracle, else the failure's message.
+_OUTCOMES: dict[tuple, str | None] = {}
+
+
+def assert_registered_matches(spark, name: str, sf_dir: str) -> None:
+    """Compare registered query ``name`` with its DuckDB oracle at
+    ``sf_dir``, once per test session for each sidecar and bucket
+    catalog: a later call on the same query, data and catalog reports
+    the first call's outcome instead of running the compare again. So
+    test_relational_oracle and a family test that names the same query
+    share one check."""
+    from trialstreamer_spark.plans.all_queries import ORACLES, QUERIES
+
+    key = (
+        name,
+        sf_dir,
+        os.environ.get("SPARK_GRAFT_SIDECAR_DIR"),
+        os.environ.get("SPARK_GRAFT_BUCKET_DIR"),
+    )
+    if key not in _OUTCOMES:
+        assert name in ORACLES, f"{name} not registered with an oracle"
+        try:
+            assert_matches(QUERIES[name](spark, sf_dir), ORACLES[name], sf_dir)
+        except Exception as exc:
+            _OUTCOMES[key] = f"{type(exc).__name__}: {exc}"
+            raise
+        _OUTCOMES[key] = None
+    assert _OUTCOMES[key] is None, f"{name} differs from its oracle: {_OUTCOMES[key]}"

@@ -338,32 +338,3 @@ def test_evict_caches_releases_every_kind_of_entry(spark, tmp_path, monkeypatch)
             "DROP TABLE IF EXISTS "
             + io._bucket_table_name(corpus, "orders_by_orderkey")
         )
-
-
-def test_version_bump_evicts_bucket_and_pair_caches(spark, monkeypatch, tmp_path):
-    """The persisted bucket projections and the candidate-pair table
-    are registered with the cache lifecycle: a corpus version bump
-    drops and unpersists both."""
-    from trialstreamer_spark import io
-    from trialstreamer_spark.operators import dedup
-
-    monkeypatch.setenv("SPARK_GRAFT_BUCKET_DIR", str(tmp_path / "bkt"))
-    monkeypatch.setenv("SPARK_GRAFT_SIDECAR_DIR", str(tmp_path / "sc"))
-    io.prepare_buckets(spark, SF_DIR, variants=("orders_by_orderkey",))
-
-    def entries(tag):
-        return [k for k in util._PLAN_CACHE if tag in k and SF_DIR in str(k)]
-
-    assert io.bucketed_table(spark, SF_DIR, "orders_by_orderkey") is not None
-    pairs = dedup.minhash_candidates(spark, SF_DIR)
-    assert entries("minhash_pairs_doc_id_text")
-
-    util.evict_caches(SF_DIR)
-    # the layout is no longer served: queries fall back to the parquet
-    # scan until prepare_buckets runs again
-    assert io.bucketed_table(spark, SF_DIR, "orders_by_orderkey") is None
-    assert not entries("minhash_pairs_doc_id_text")
-    assert not pairs.storageLevel.useMemory
-    spark.sql(
-        f"DROP TABLE IF EXISTS {io._bucket_table_name(SF_DIR, 'orders_by_orderkey')}"
-    )

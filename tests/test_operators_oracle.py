@@ -3,18 +3,14 @@ plus semantic sanity checks that don't depend on the oracle."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
-import trialstreamer_spark.operators.dedup as dedup
-import trialstreamer_spark.operators.similarity  # noqa: F401
-import trialstreamer_spark.operators.textstats  # noqa: F401
-import trialstreamer_spark.plans.relational  # noqa: F401  (registry fill)
+from tests.conftest import write_documents
+from tests.oracle_util import assert_registered_matches
 from trialstreamer_spark.io import load
-from trialstreamer_spark.plans.registry import ORACLES, QUERIES
+from trialstreamer_spark.operators import dedup
+from trialstreamer_spark.plans.all_queries import QUERIES
 
-from tests.oracle_util import assert_matches
 
 OPERATOR_QUERIES = [
     "text_quality_stats",
@@ -44,8 +40,7 @@ OPERATOR_QUERIES = [
 
 @pytest.mark.parametrize("name", OPERATOR_QUERIES)
 def test_operator_matches_oracle(spark, sf_dir, name):
-    assert name in ORACLES, f"{name} not registered with an oracle"
-    assert_matches(QUERIES[name](spark, sf_dir), ORACLES[name], sf_dir)
+    assert_registered_matches(spark, name, sf_dir)
 
 
 def test_jaccard_df_cap_bounds_hot_shingles(spark, tmp_path, monkeypatch):
@@ -57,10 +52,9 @@ def test_jaccard_df_cap_bounds_hot_shingles(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_SIDECAR_DIR", str(tmp_path / "sc"))
     corpus = str(tmp_path / "corpus")
     n = 200
-    spark.createDataFrame(
-        [(i, f"alpha beta gamma u{i} v{i} w{i}") for i in range(n)],
-        "doc_id long, text string",
-    ).coalesce(1).write.parquet(os.path.join(corpus, "documents.parquet"))
+    write_documents(
+        corpus, [(i, f"alpha beta gamma u{i} v{i} w{i}") for i in range(n)]
+    )
     uncapped = dedup.jaccard_pairs(spark, corpus).count()
     assert uncapped == n * (n - 1) // 2  # every pair shares 'alpha beta gamma'
     capped = dedup.jaccard_pairs(spark, corpus, df_cap=5).count()

@@ -3,20 +3,19 @@ operators vs DuckDB oracle (sf0.001), plus handcrafted semantic checks."""
 
 from __future__ import annotations
 
-import os
+import datetime as dt
 
 import pytest
-
-import trialstreamer_spark.operators.clustering  # noqa: F401
-import trialstreamer_spark.operators.dedup as dedup
-import trialstreamer_spark.operators.quality as quality
-import trialstreamer_spark.operators.retrieval as retrieval
-import trialstreamer_spark.operators.temporal as temporal  # noqa: F401
-from trialstreamer_spark.plans.registry import ORACLES, QUERIES
-
 from pyspark.sql import functions as F
 
-from tests.oracle_util import assert_matches
+import trialstreamer_spark.operators.temporal as temporal
+from tests.conftest import write_documents
+from tests.oracle_util import assert_registered_matches
+from trialstreamer_spark.io import load
+from trialstreamer_spark.operators import dedup, quality, retrieval
+from trialstreamer_spark.operators.clustering import K_CLUSTERS
+from trialstreamer_spark.plans.all_queries import QUERIES
+
 
 EXTRA_QUERIES = [
     "asof_join_last_click",
@@ -33,15 +32,12 @@ EXTRA_QUERIES = [
 
 @pytest.mark.parametrize("name", EXTRA_QUERIES)
 def test_extra_matches_oracle(spark, sf_dir, name):
-    assert name in ORACLES, f"{name} not registered with an oracle"
-    assert_matches(QUERIES[name](spark, sf_dir), ORACLES[name], sf_dir)
+    assert_registered_matches(spark, name, sf_dir)
 
 
 def test_asof_join_semantics(spark):
     """A right-side row strictly after the probe must NOT be attributed;
     the most recent at-or-before one must."""
-    import datetime as dt
-
     rows = [
         # user 1: click@10, error@20 (-> 10), click@30, error@25 (-> 10)
         (1, 1, dt.datetime(2024, 1, 1, 0, 0, 10), "click"),
@@ -112,8 +108,6 @@ def test_repetition_stats_handcrafted(spark):
 def test_value_band_boundaries(spark, sf_dir):
     """Band edges are [lo, hi): value=10.0 must land in b1, not b0, and
     every event lands in exactly one band."""
-    from trialstreamer_spark.io import load
-
     out = QUERIES["value_band_join"](spark, sf_dir)
     total = out.agg(F.sum("n_events")).collect()[0][0]
     assert total == load(spark, sf_dir, "events").count()
@@ -130,15 +124,11 @@ def test_sample_stratified_is_pure(spark, sf_dir):
 def test_bm25_tf_monotone(spark, tmp_path):
     """With equal document length, more query-term occurrences ⇒ strictly
     higher score; a doc without any term is absent."""
-    corpus = str(tmp_path / "corpus")
-    spark.createDataFrame(
-        [
-            (1, "table x y z q w"),
-            (2, "table table y z q w"),
-            (3, "u v w x y z"),
-        ],
-        "doc_id long, text string",
-    ).coalesce(1).write.parquet(os.path.join(corpus, "documents.parquet"))
+    corpus = str(tmp_path)
+    write_documents(
+        corpus,
+        [(1, "table x y z q w"), (2, "table table y z q w"), (3, "u v w x y z")],
+    )
     got = {
         r.doc_id: r.score_fp
         for r in retrieval.bm25_scores(spark, corpus, ("table",)).collect()
@@ -150,8 +140,6 @@ def test_bm25_tf_monotone(spark, tmp_path):
 def test_kmeans_seed_vectors_self_assign(spark, sf_dir):
     """A seed vector's nearest centroid is itself, at exactly distance 0
     (fp(a,a) - 2·fp(a,a) + fp(a,a) cancels in exact int64 arithmetic)."""
-    from trialstreamer_spark.operators.clustering import K_CLUSTERS
-
     rows = (
         QUERIES["kmeans_assign"](spark, sf_dir)
         .filter(F.col("vec_id") < K_CLUSTERS)
@@ -167,16 +155,18 @@ def test_doc_chunks_windows(spark):
     chunk1 = tokens 25..40 (16 tokens, 8 overlapping chunk0)."""
     text = " ".join(f"w{i}" for i in range(1, 41))
     docs = spark.createDataFrame([(7, text)], "doc_id long, text string")
-    from trialstreamer_spark.operators import quality as q
-
     # the query function reads from parquet; replay the column logic on a
     # handcrafted one-doc frame
     toks = docs.select(
         "doc_id",
         F.filter(F.split("text", r"\s+"), lambda t: t != "").alias("t"),
     )
-    n_chunks_m1 = F.floor((F.size("t") - 1) / q.CHUNK_STRIDE).cast("long")
-    chunk = F.slice(F.col("t"), F.col("chunk_idx") * q.CHUNK_STRIDE + 1, q.CHUNK_SIZE)
+    n_chunks_m1 = F.floor((F.size("t") - 1) / quality.CHUNK_STRIDE).cast("long")
+    chunk = F.slice(
+        F.col("t"),
+        F.col("chunk_idx") * quality.CHUNK_STRIDE + 1,
+        quality.CHUNK_SIZE,
+    )
     got = (
         toks.select(
             "doc_id",

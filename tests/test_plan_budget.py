@@ -1,22 +1,18 @@
 """The plan budget (plan_budget.json, written by tools/plan_budget.py):
 no registered query gains an exchange, scan, join, Python-UDF node or
-Spark job unless the budget is rewritten on purpose. The same pass is
-the sf0.01 oracle gate: every query with an oracle is compared with it
-on the pass's warm-up run."""
+Spark job unless the budget is rewritten on purpose. The same pass
+(``sf01_pass``) is the sf0.01 oracle gate: every query with an oracle
+is compared with it on the pass's warm-up run, and test_sf01_sweep
+reports each query's outcome."""
 
 from __future__ import annotations
 
 import json
-import os
-import re
-import subprocess
-import sys
 
 import pytest
 
-from tests.conftest import ROOT
 from tools.plan_budget import BUDGET, budget_diff, measure
-from trialstreamer_spark.plans.all_queries import ORACLES, QUERIES
+from trialstreamer_spark.plans.all_queries import QUERIES
 
 
 def test_budget_has_one_entry_per_registered_query():
@@ -24,25 +20,16 @@ def test_budget_has_one_entry_per_registered_query():
         assert sorted(json.load(f)) == sorted(QUERIES)
 
 
-def test_no_query_exceeds_its_plan_budget(tmp_path):
+def test_no_query_exceeds_its_plan_budget(sf01_pass):
     """Recomputed in a fresh session, as the tool measures it, so no
-    cache or setting left by an earlier test can change a count. A query
-    that differs from its oracle at sf0.01 fails the run by name."""
-    out = tmp_path / "plan_budget.json"
-    subprocess.run(
-        [
-            sys.executable,
-            "-c",
-            "import sys; from tools.plan_budget import measure_budget, write_budget; "
-            "write_budget(measure_budget(), sys.argv[1])",
-            str(out),
-        ],
-        cwd=ROOT,
-        check=True,
-        timeout=1800,
-    )
-    with open(BUDGET) as f, open(out) as g:
-        rises, falls = budget_diff(json.load(f), json.load(g))
+    cache or setting left by an earlier test can change a count. The
+    same pass is the sf0.01 oracle gate (test_sf01_sweep); a query that
+    differs from its oracle there is not counted, so it fails by name
+    here too."""
+    measured, wrong = sf01_pass["budget"], sf01_pass["wrong"]
+    assert sorted(measured) == sorted(set(QUERIES) - set(wrong))
+    with open(BUDGET) as f:
+        rises, falls = budget_diff(json.load(f), measured)
     print("\n".join(["plan budget changes:", *rises, *falls]))
     assert not rises, (
         "counts above plan_budget.json (rerun tools/plan_budget.py if "
@@ -80,19 +67,3 @@ def test_oracle_gate_names_an_injected_wrong_result(
     monkeypatch.setitem(QUERIES, name, wrong)
     with pytest.raises(AssertionError, match=f"^{name} differs from its oracle"):
         measure(spark, sf_dir, [name])
-
-
-def test_parity_doc_not_stale():
-    """PARITY.md's registry roll-call is generated by tools/plan_budget.py:
-    it must state the current registry size, so adding or removing a
-    query without rerunning the tool fails instead of shipping a stale
-    doc."""
-    with open(os.path.join(ROOT, "PARITY.md")) as f:
-        text = f.read()
-    m = re.search(r"(\d+) registered queries, (\d+) with DuckDB", text)
-    assert m, "PARITY.md generated registry block missing"
-    assert int(m.group(1)) == len(QUERIES), (
-        f"PARITY.md says {m.group(1)} queries, registry has "
-        f"{len(QUERIES)} — rerun tools/plan_budget.py"
-    )
-    assert int(m.group(2)) == len(ORACLES)

@@ -1,43 +1,22 @@
 """The sf0.001 oracle gate: every registered (query, oracle) pair must
 match its DuckDB oracle, exact values with zero float tolerance, since
 plans round their float outputs. The sf0.01 gate is the plan-budget
-pass (``tools/plan_budget.measure``, run by test_plan_budget)."""
+pass (``tools/plan_budget.measure``), reported per query by
+test_sf01_sweep."""
 
 from __future__ import annotations
 
 import pytest
 
-import trialstreamer_spark.plans.all_queries  # noqa: F401  (full registry fill)
-from trialstreamer_spark.plans.registry import ORACLES, QUERIES
-
-from tests.oracle_util import assert_matches
-
-# Registered queries allowed to have no DuckDB oracle, each with its
-# reason. Empty: every current query ships an oracle. A query that SQL
-# cannot express must be listed here to pass the ratchet below, so
-# oracle coverage can only shrink loudly.
-ORACLE_EXEMPT: dict[str, str] = {}
+from tests.oracle_util import assert_registered_matches
+from trialstreamer_spark.plans.all_queries import ORACLES, QUERIES
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, sf_dir, name):
-    df = QUERIES[name](spark, sf_dir)
-    assert_matches(df, ORACLES[name], sf_dir)
+    assert_registered_matches(spark, name, sf_dir)
 
 
 def test_every_query_has_callable():
     for name, fn in QUERIES.items():
         assert callable(fn), name
-
-
-def test_every_query_has_an_oracle_or_an_exemption():
-    """Both oracle gates take their query list from the registry, so a
-    query escapes them only by having no oracle: that needs an
-    ORACLE_EXEMPT reason, and every exemption must name a registered
-    query."""
-    uncovered = sorted(
-        n for n in QUERIES if n not in ORACLES and n not in ORACLE_EXEMPT
-    )
-    assert not uncovered, f"queries with no oracle and no exemption: {uncovered}"
-    stale = sorted(n for n in ORACLE_EXEMPT if n not in QUERIES)
-    assert not stale, f"ORACLE_EXEMPT entries no longer registered: {stale}"

@@ -9,31 +9,31 @@ tests pin the intended boundary behavior independently of any SQL."""
 
 from __future__ import annotations
 
-import pytest
+import math
+import os
+import re
 
-from trialstreamer_spark.io import load
-from trialstreamer_spark.plans.all_queries import QUERIES
+import pandas as pd
+from pyspark.sql import functions as F
+
+from tests.conftest import ROOT
+from trialstreamer_spark.io import load, load_meta
+from trialstreamer_spark.operators import similarity
+from trialstreamer_spark.plans.all_queries import ORACLES, QUERIES
 
 
-@pytest.fixture(scope="module")
-def sf_dir():
-    return "/root/testdata/sf0.01"
-
-
-def test_whale_threshold_is_top_percentile_not_global_min(spark, sf_dir):
-    row = QUERIES["whale_revenue_share"](spark, sf_dir).collect()[0]
+def test_whale_threshold_is_top_percentile_not_global_min(spark, sf_dir_med):
+    row = QUERIES["whale_revenue_share"](spark, sf_dir_med).collect()[0]
     n = row["n_customers"]
     # the whale set is the smallest at-or-above-threshold population
     # reaching 1% — tiny, never everyone (the old MIN-side bug made
     # n_whales == n_customers and whale_share_fp == 1000000 exactly)
     assert 0 < row["n_whales"] < n
     # ties at the threshold revenue can overshoot the 1% count by up to
-    # (count at threshold_cents - 1) rows (r10 ADVICE: a fixed +1 bound
-    # is fragile on fixtures with repeated per-customer totals), so
+    # (count at threshold_cents - 1) rows (a fixed +1 bound is
+    # fragile on fixtures with repeated per-customer totals), so
     # bound the overshoot by the actual tie count at the threshold
-    from pyspark.sql import functions as F
-
-    o = load(spark, sf_dir, "orders")
+    o = load(spark, sf_dir_med, "orders")
     cr = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev")
     )
@@ -48,13 +48,11 @@ def test_whale_threshold_is_top_percentile_not_global_min(spark, sf_dir):
     assert row["threshold_cents"] > floor_cents
 
 
-def test_whale_counts_match_direct_recount(spark, sf_dir):
+def test_whale_counts_match_direct_recount(spark, sf_dir_med):
     """n_whales/whale share recomputed directly from the per-customer
     rollup at the reported threshold must equal the query's output."""
-    from pyspark.sql import functions as F
-
-    row = QUERIES["whale_revenue_share"](spark, sf_dir).collect()[0]
-    o = load(spark, sf_dir, "orders")
+    row = QUERIES["whale_revenue_share"](spark, sf_dir_med).collect()[0]
+    o = load(spark, sf_dir_med, "orders")
     cr = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev")
     )
@@ -69,20 +67,18 @@ def test_whale_counts_match_direct_recount(spark, sf_dir):
     assert got[3] == row["n_customers"]
 
 
-def test_repeat_rate_matches_naive_self_join(spark, sf_dir):
+def test_repeat_rate_matches_naive_self_join(spark, sf_dir_med):
     """The collect_set rewrite must agree row-for-row with the naive
     distinct + self-join formulation it replaced."""
-    from pyspark.sql import functions as F
-
     got = {
         (r["nation"], r["yr"]): (r["n_active"], r["n_retained"])
-        for r in QUERIES["customer_repeat_rate_yoy"](spark, sf_dir).collect()
+        for r in QUERIES["customer_repeat_rate_yoy"](spark, sf_dir_med).collect()
     }
-    o = load(spark, sf_dir, "orders").select(
+    o = load(spark, sf_dir_med, "orders").select(
         "o_custkey", F.year("o_orderdate").cast("long").alias("yr")
     )
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = load(spark, sf_dir, "nation")
+    c = load(spark, sf_dir_med, "customer").select("c_custkey", "c_nationkey")
+    n = load(spark, sf_dir_med, "nation")
     cy = (
         o.join(c, o.o_custkey == c.c_custkey)
         .select("c_nationkey", "yr", "o_custkey")
@@ -116,20 +112,14 @@ def test_repeat_rate_matches_naive_self_join(spark, sf_dir):
 
 
 def test_parity_doc_not_stale():
-    """PARITY.md's registry roll-call is generated; the r9 verdict caught
-    it regenerated two commits behind HEAD. This pins the cheap
-    invariant: the roll-call must state the CURRENT registry size, so
-    adding/removing a query without re-running tools/plan_budget.py
-    fails CI instead of shipping a stale doc."""
-    import os
-    import re
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    text = open(os.path.join(repo, "PARITY.md")).read()
+    """PARITY.md's registry roll-call is generated by tools/plan_budget.py:
+    it must state the current registry size, so adding or removing a
+    query without rerunning the tool fails instead of shipping a stale
+    doc."""
+    with open(os.path.join(ROOT, "PARITY.md")) as f:
+        text = f.read()
     m = re.search(r"(\d+) registered queries, (\d+) with DuckDB", text)
     assert m, "PARITY.md generated registry block missing"
-    from trialstreamer_spark.plans.all_queries import ORACLES, QUERIES
-
     assert int(m.group(1)) == len(QUERIES), (
         f"PARITY.md says {m.group(1)} queries, registry has "
         f"{len(QUERIES)} — rerun tools/plan_budget.py"
@@ -137,32 +127,26 @@ def test_parity_doc_not_stale():
     assert int(m.group(2)) == len(ORACLES)
 
 
-def test_crosslingual_pairs_are_cross_language_and_normalized(spark, sf_dir):
+def test_crosslingual_pairs_are_cross_language_and_normalized(spark, sf_dir_med):
     """L170: every reported language pair is unordered (lo < hi — a
     same-language pair can never appear), counts match a brute-force
     recount over the SAME LSH candidate set, and max_cosine clears the
     mining threshold."""
-    from pyspark.sql import functions as F
-
-    from trialstreamer_spark.io import load, load_meta
-    from trialstreamer_spark.operators.similarity import (
-        XLING_TAU,
-        lsh_candidate_pairs,
-    )
-
-    rows = QUERIES["crosslingual_pair_mining"](spark, sf_dir).collect()
+    rows = QUERIES["crosslingual_pair_mining"](spark, sf_dir_med).collect()
     assert rows, "synthetic corpus should yield cross-lingual candidates"
     for r in rows:
         assert r["lang_lo"] < r["lang_hi"]
-        assert r["max_cosine"] >= XLING_TAU
+        assert r["max_cosine"] >= similarity.XLING_TAU
         assert r["n_pairs"] >= 1
     # brute recount: same buckets, langs joined back by id instead of
     # carried through the bucket join
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    d = load_meta(spark, sf_dir, "documents").select(
+    e = load(spark, sf_dir_med, "embeddings").select("vec_id", "embedding")
+    d = load_meta(spark, sf_dir_med, "documents").select(
         F.col("doc_id").alias("vec_id"), "lang"
     )
-    pairs = lsh_candidate_pairs(e).filter(F.col("cosine") >= XLING_TAU)
+    pairs = similarity.lsh_candidate_pairs(e).filter(
+        F.col("cosine") >= similarity.XLING_TAU
+    )
     la = d.select(F.col("vec_id").alias("vec_a"), F.col("lang").alias("la"))
     lb = d.select(F.col("vec_id").alias("vec_b"), F.col("lang").alias("lb"))
     ref = {
@@ -182,32 +166,20 @@ def test_crosslingual_pairs_are_cross_language_and_normalized(spark, sf_dir):
     assert {(r["lang_lo"], r["lang_hi"]): r["n_pairs"] for r in rows} == ref
 
 
-def test_xling_margin_matches_pandas_recount(spark):
+def test_xling_margin_matches_pandas_recount(spark, sf_dir):
     """L171: margins recomputed in pandas from the raw candidate pool
     (same buckets, same fixed-point floors) must reproduce the query's
     top-20 exactly — including the hub normalization."""
-    import math
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from trialstreamer_spark.io import load, load_meta
-    from trialstreamer_spark.operators.similarity import (
-        XLING_MARGIN_K,
-        lsh_candidate_pairs,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    got = QUERIES["xling_margin_topk"](spark, sf).toPandas()
+    got = QUERIES["xling_margin_topk"](spark, sf_dir).toPandas()
     assert len(got) == 20
     assert (got["lang_a"] != got["lang_b"]).all()
 
-    e = load(spark, sf, "embeddings").select("vec_id", "embedding")
-    d = load_meta(spark, sf, "documents").select(
+    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    d = load_meta(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "lang"
     )
     p = (
-        lsh_candidate_pairs(e.join(d, "vec_id"), carry=("lang",))
+        similarity.lsh_candidate_pairs(e.join(d, "vec_id"), carry=("lang",))
         .filter(F.col("lang_a") != F.col("lang_b"))
         .toPandas()
     )
@@ -225,7 +197,7 @@ def test_xling_margin_matches_pandas_recount(spark):
     knn = (
         directed.sort_values(["cos_fp", "nb"], ascending=[False, True])
         .groupby(["id", "olang"])
-        .head(XLING_MARGIN_K)
+        .head(similarity.XLING_MARGIN_K)
         .groupby(["id", "olang"])["cos_fp"]
         .agg(lambda s: int(sum(s)) // len(s))
         .to_dict()

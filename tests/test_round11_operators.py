@@ -15,31 +15,52 @@ pair cannot hide here).
 from __future__ import annotations
 
 import hashlib
+import os
 import re
 
 import numpy as np
 import pandas as pd
 
+from tests.conftest import write_documents
 from trialstreamer_spark.plans.all_queries import QUERIES
 
-SF_DIR = "/root/testdata/sf0.001"
+
+def _rerank_cosines(sf_dir: str):
+    """(ids, stage-1 cosine, exact cosine) of every vector against vector
+    0, recomputed in numpy with the rerank's fixed-point floors: stage 1
+    reads the first 16 dimensions, the exact rerank all of them."""
+    emb = pd.read_parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    q = np.asarray(
+        emb.loc[emb["vec_id"] == 0, "embedding"].iloc[0], dtype=np.float64
+    )
+    rest = emb[emb["vec_id"] != 0]
+    m = np.stack(rest["embedding"].to_numpy()).astype(np.float64)
+    ids = rest["vec_id"].to_numpy().astype(np.int64)
+    scale = 10_000_000.0
+    tq = np.floor(m * q[None, :] * scale).astype(np.int64)
+    ts = np.floor(m * m * scale).astype(np.int64)
+    qn_lo = np.floor(q[:16] * q[:16] * scale).astype(np.int64).sum()
+    qn_hi = np.floor(q * q * scale).astype(np.int64).sum()
+    c_lo = tq[:, :16].sum(axis=1) / np.sqrt(
+        ts[:, :16].sum(axis=1).astype(np.float64) * float(qn_lo)
+    )
+    c_hi = tq.sum(axis=1) / np.sqrt(
+        ts.sum(axis=1).astype(np.float64) * float(qn_hi)
+    )
+    return ids, c_lo, c_hi
 
 
-def _docs(rows: list[tuple[int, str]]) -> pd.DataFrame:
+def _docs(rows: list[tuple[int, str, str]]) -> pd.DataFrame:
+    """(doc_id, text, source) rows → full documents schema."""
     return pd.DataFrame(
         {
             "doc_id": pd.Series([r[0] for r in rows], dtype="int64"),
             "text": [r[1] for r in rows],
             "lang": ["en"] * len(rows),
-            "source": ["s1"] * len(rows),
+            "source": [r[2] for r in rows],
             "n_chars": pd.Series([len(r[1]) for r in rows], dtype="int64"),
         }
     )
-
-
-# ---------------------------------------------------------------------------
-# span_corruption_plan — hand-computed noise plans
-# ---------------------------------------------------------------------------
 
 
 def test_span_corruption_plan_first_principles(spark, tmp_path):
@@ -57,7 +78,7 @@ def test_span_corruption_plan_first_principles(spark, tmp_path):
         (5, " ".join("w" for _ in range(640))),
         (6, ""),
     ]
-    _docs(rows).to_parquet(str(tmp_path / "documents.parquet"), index=False)
+    write_documents(str(tmp_path), rows)
     out = (
         QUERIES["span_corruption_plan"](spark, str(tmp_path))
         .toPandas()
@@ -84,28 +105,18 @@ def test_span_corruption_plan_first_principles(spark, tmp_path):
     assert int(out["n_docs"].sum()) == 5
 
 
-# ---------------------------------------------------------------------------
-# training_shard_manifest — independent pandas/hashlib recompute
-# ---------------------------------------------------------------------------
-
-
 def _py_tokens(text: str) -> int:
     return len([t for t in re.split(r"\s+", text) if t != ""])
 
 
-def test_shard_manifest_matches_independent_recompute(spark):
-    import glob
-    import os
-
+def test_shard_manifest_matches_independent_recompute(spark, sf_dir):
     out = (
-        QUERIES["training_shard_manifest"](spark, SF_DIR)
+        QUERIES["training_shard_manifest"](spark, sf_dir)
         .toPandas()
         .set_index("shard")
         .sort_index()
     )
-    docs = pd.read_parquet(
-        glob.glob(os.path.join(SF_DIR, "documents.parquet"))[0]
-    )
+    docs = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))
 
     def shard_of(doc_id: int) -> int:
         h = hashlib.md5(str(int(doc_id)).encode()).hexdigest()
@@ -156,15 +167,13 @@ def test_shard_assignment_is_append_stable(spark, tmp_path):
     # Adding documents must not move any existing doc's shard: the
     # assignment is a pure function of doc_id (the property that makes
     # incremental shard writes safe).
-    base = _docs([(i, f"tok{i} tok{i}") for i in range(1, 21)])
-    base.to_parquet(str(tmp_path / "documents.parquet"), index=False)
+    write_documents(str(tmp_path), [(i, f"tok{i} tok{i}") for i in range(1, 21)])
     first = (
         QUERIES["training_shard_manifest"](spark, str(tmp_path))
         .toPandas()
         .set_index("shard")
     )
-    bigger = _docs([(i, f"tok{i} tok{i}") for i in range(1, 41)])
-    bigger.to_parquet(str(tmp_path / "documents.parquet"), index=False)
+    write_documents(str(tmp_path), [(i, f"tok{i} tok{i}") for i in range(1, 41)])
     second = (
         QUERIES["training_shard_manifest"](spark, str(tmp_path))
         .toPandas()
@@ -176,36 +185,9 @@ def test_shard_assignment_is_append_stable(spark, tmp_path):
     assert int(second["n_docs"].sum()) == 40
 
 
-# ---------------------------------------------------------------------------
-# ann_two_stage_rerank — independent numpy recompute
-# ---------------------------------------------------------------------------
-
-
-def test_two_stage_rerank_matches_numpy(spark):
-    import glob
-    import os
-
-    out = QUERIES["ann_two_stage_rerank"](spark, SF_DIR).toPandas()
-    emb = pd.read_parquet(
-        glob.glob(os.path.join(SF_DIR, "embeddings.parquet"))[0]
-    )
-    q = np.asarray(
-        emb.loc[emb["vec_id"] == 0, "embedding"].iloc[0], dtype=np.float64
-    )
-    rest = emb[emb["vec_id"] != 0]
-    m = np.stack(rest["embedding"].to_numpy()).astype(np.float64)
-    ids = rest["vec_id"].to_numpy().astype(np.int64)
-    scale = 10_000_000.0
-    tq = np.floor(m * q[None, :] * scale).astype(np.int64)
-    ts = np.floor(m * m * scale).astype(np.int64)
-    qn_lo = np.floor(q[:16] * q[:16] * scale).astype(np.int64).sum()
-    qn_hi = np.floor(q * q * scale).astype(np.int64).sum()
-    c_lo = tq[:, :16].sum(axis=1) / np.sqrt(
-        ts[:, :16].sum(axis=1).astype(np.float64) * float(qn_lo)
-    )
-    c_hi = tq.sum(axis=1) / np.sqrt(
-        ts.sum(axis=1).astype(np.float64) * float(qn_hi)
-    )
+def test_two_stage_rerank_matches_numpy(spark, sf_dir):
+    out = QUERIES["ann_two_stage_rerank"](spark, sf_dir).toPandas()
+    ids, c_lo, c_hi = _rerank_cosines(sf_dir)
     pool = np.lexsort((ids, -c_lo))[:100]
     rer = pool[np.lexsort((ids[pool], -c_hi[pool]))][:10]
     exact = np.lexsort((ids, -c_hi))[:10]
@@ -220,11 +202,6 @@ def test_two_stage_rerank_matches_numpy(spark):
     ]
     # the served list is a subset of the stage-1 pool by construction
     assert set(out["neighbor_id"]).issubset(set(ids[pool].tolist()))
-
-
-# ---------------------------------------------------------------------------
-# dedup_novelty_by_arrival — hand-built arrival pattern
-# ---------------------------------------------------------------------------
 
 
 def test_novelty_by_arrival_first_principles(spark, tmp_path):
@@ -245,9 +222,7 @@ def test_novelty_by_arrival_first_principles(spark, tmp_path):
     texts[11] = "gamma"
     texts[18] = "alpha beta"
     texts[19] = "omega"
-    _docs([(i, texts[i]) for i in range(20)]).to_parquet(
-        str(tmp_path / "documents.parquet"), index=False
-    )
+    write_documents(str(tmp_path), [(i, texts[i]) for i in range(20)])
     out = (
         QUERIES["dedup_novelty_by_arrival"](spark, str(tmp_path))
         .toPandas()
@@ -267,11 +242,6 @@ def test_novelty_by_arrival_first_principles(spark, tmp_path):
         assert out.loc[d, "dup_rate_fp"] == 0
 
 
-# ---------------------------------------------------------------------------
-# dedup_cross_shard_pairs — hand-built dup groups with known shards
-# ---------------------------------------------------------------------------
-
-
 def test_cross_shard_pairs_first_principles(spark, tmp_path):
     # Build a dup group of 4 copies and one of 2 copies; recompute the
     # within/cross split from the REAL md5 shard assignment in python.
@@ -283,7 +253,7 @@ def test_cross_shard_pairs_first_principles(spark, tmp_path):
         + [(i, "beta") for i in group_b]
         + [(i, f"unique {i}") for i in uniques]
     )
-    _docs(rows).to_parquet(str(tmp_path / "documents.parquet"), index=False)
+    write_documents(str(tmp_path), rows)
 
     def shard_of(doc_id: int) -> int:
         return int(hashlib.md5(str(doc_id).encode()).hexdigest()[:8], 16) % 16
@@ -311,18 +281,11 @@ def test_cross_shard_pairs_first_principles(spark, tmp_path):
 
 
 def test_cross_shard_pairs_no_dups_is_zero(spark, tmp_path):
-    _docs([(i, f"unique {i}") for i in range(5)]).to_parquet(
-        str(tmp_path / "documents.parquet"), index=False
-    )
+    write_documents(str(tmp_path), [(i, f"unique {i}") for i in range(5)])
     r = QUERIES["dedup_cross_shard_pairs"](spark, str(tmp_path)).toPandas().iloc[0]
     assert r["n_dup_groups"] == 0
     assert r["total_pairs"] == 0
     assert r["cross_share_fp"] == 0
-
-
-# ---------------------------------------------------------------------------
-# multimodal_storage_budget — hand-built sizes; metadata-only plan
-# ---------------------------------------------------------------------------
 
 
 def test_storage_budget_first_principles(spark, tmp_path):
@@ -335,7 +298,7 @@ def test_storage_budget_first_principles(spark, tmp_path):
         (1, "d" * 100),    # audio, 100 B
         (2, "e" * 7),      # video, 7 B
     ]
-    _docs(rows).to_parquet(str(tmp_path / "documents.parquet"), index=False)
+    write_documents(str(tmp_path), rows)
     out = (
         QUERIES["multimodal_storage_budget"](spark, str(tmp_path))
         .toPandas()
@@ -351,50 +314,23 @@ def test_storage_budget_first_principles(spark, tmp_path):
     assert int(out["n_items"].sum()) == 5
 
 
-def test_storage_budget_plan_ships_no_bytes_to_python(spark):
+def test_storage_budget_plan_ships_no_bytes_to_python(spark, sf_dir):
     # The prune-before-decode contract: the whole plan is JVM-side —
     # no Python/Arrow evaluation node anywhere (octet_length runs in
     # Catalyst; the binary content never crosses to a worker process).
-    df = QUERIES["multimodal_storage_budget"](spark, SF_DIR)
+    df = QUERIES["multimodal_storage_budget"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert marker not in plan
 
 
-# ---------------------------------------------------------------------------
-# ann_rerank_pool_curve — numpy recompute + cross-query consistency
-# ---------------------------------------------------------------------------
-
-
-def test_rerank_pool_curve_matches_numpy(spark):
-    import glob
-    import os
-
+def test_rerank_pool_curve_matches_numpy(spark, sf_dir):
     out = (
-        QUERIES["ann_rerank_pool_curve"](spark, SF_DIR)
+        QUERIES["ann_rerank_pool_curve"](spark, sf_dir)
         .toPandas()
         .set_index("pool_size")
     )
-    emb = pd.read_parquet(
-        glob.glob(os.path.join(SF_DIR, "embeddings.parquet"))[0]
-    )
-    q = np.asarray(
-        emb.loc[emb["vec_id"] == 0, "embedding"].iloc[0], dtype=np.float64
-    )
-    rest = emb[emb["vec_id"] != 0]
-    m = np.stack(rest["embedding"].to_numpy()).astype(np.float64)
-    ids = rest["vec_id"].to_numpy().astype(np.int64)
-    scale = 10_000_000.0
-    tq = np.floor(m * q[None, :] * scale).astype(np.int64)
-    ts = np.floor(m * m * scale).astype(np.int64)
-    qn_lo = np.floor(q[:16] * q[:16] * scale).astype(np.int64).sum()
-    qn_hi = np.floor(q * q * scale).astype(np.int64).sum()
-    c_lo = tq[:, :16].sum(axis=1) / np.sqrt(
-        ts[:, :16].sum(axis=1).astype(np.float64) * float(qn_lo)
-    )
-    c_hi = tq.sum(axis=1) / np.sqrt(
-        ts.sum(axis=1).astype(np.float64) * float(qn_hi)
-    )
+    ids, c_lo, c_hi = _rerank_cosines(sf_dir)
     order_lo = np.lexsort((ids, -c_lo))
     exact_ids = set(ids[np.lexsort((ids, -c_hi))[:10]].tolist())
     prev = -1
@@ -409,14 +345,14 @@ def test_rerank_pool_curve_matches_numpy(spark):
         prev = n
 
 
-def test_rerank_pool_curve_consistent_with_two_stage(spark):
+def test_rerank_pool_curve_consistent_with_two_stage(spark, sf_dir):
     # The pool=100 curve point counts exactly the flagged rows of
     # ann_two_stage_rerank (same kernel, same semantics, independent
     # plans).
     curve = (
-        QUERIES["ann_rerank_pool_curve"](spark, SF_DIR)
+        QUERIES["ann_rerank_pool_curve"](spark, sf_dir)
         .toPandas()
         .set_index("pool_size")
     )
-    rer = QUERIES["ann_two_stage_rerank"](spark, SF_DIR).toPandas()
+    rer = QUERIES["ann_two_stage_rerank"](spark, sf_dir).toPandas()
     assert int(curve.loc[100, "n_overlap"]) == int(rer["in_exact_topk"].sum())

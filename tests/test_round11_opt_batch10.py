@@ -26,6 +26,7 @@ import hashlib
 
 import pandas as pd
 
+from tests.conftest import write_documents
 from trialstreamer_spark.plans.all_queries import QUERIES
 from trialstreamer_spark.util import evict_caches
 
@@ -34,17 +35,15 @@ def _write(tmp_path, name: str, df: pd.DataFrame) -> None:
     df.to_parquet(str(tmp_path / f"{name}.parquet"), index=False)
 
 
-def _docs(rows: list[tuple[int, object, str]]) -> pd.DataFrame:
+def _docs(rows: list[tuple[int, str, str]]) -> pd.DataFrame:
+    """(doc_id, text, source) rows → full documents schema."""
     return pd.DataFrame(
         {
             "doc_id": pd.Series([r[0] for r in rows], dtype="int64"),
             "text": [r[1] for r in rows],
             "lang": ["en"] * len(rows),
             "source": [r[2] for r in rows],
-            "n_chars": pd.Series(
-                [len(r[1]) if r[1] is not None else 0 for r in rows],
-                dtype="int64",
-            ),
+            "n_chars": pd.Series([len(r[1]) for r in rows], dtype="int64"),
         }
     )
 
@@ -99,7 +98,7 @@ def test_linear_probe_distinct_matches_bruteforce(spark, tmp_path):
         (2, "banana durian", "s"),
         (3, "fig", "s"),
     ]
-    _write(tmp_path, "documents", _docs(docs))
+    write_documents(str(tmp_path), docs)
     evict_caches(str(tmp_path))
     rows = {
         r.lang: r
@@ -128,7 +127,7 @@ def test_doc_prefix_dup_rate_window_census(spark, tmp_path):
         (5, "same exact text", "s1"),  # -> NOT a head dup
         (6, None, "s2"),  # NULL text: out of the census entirely
     ]
-    _write(tmp_path, "documents", _docs(docs))
+    write_documents(str(tmp_path), docs)
     evict_caches(str(tmp_path))
     rows = {
         r.source: r
@@ -151,7 +150,7 @@ def test_containment_direction_emission(spark, tmp_path):
         (3, "p q r s t", "s"),
         (4, "p q r s t", "s"),
     ]
-    _write(tmp_path, "documents", _docs(docs))
+    write_documents(str(tmp_path), docs)
     evict_caches(str(tmp_path))
     rows = QUERIES["containment_pairs_capped"](spark, str(tmp_path)).collect()
     got = [
@@ -172,7 +171,7 @@ def test_vocab_growth_curve_matches_bruteforce(spark, tmp_path):
         (3, "d", "s"),
         (7, "a e f", "s"),
     ]
-    _write(tmp_path, "documents", _docs(docs))
+    write_documents(str(tmp_path), docs)
     evict_caches(str(tmp_path))
     rows = QUERIES["vocab_growth_curve"](spark, str(tmp_path)).collect()
     assert [(r.doc_bucket, r.n_new_types, r.vocab_size) for r in rows] == [

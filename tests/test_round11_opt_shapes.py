@@ -16,37 +16,12 @@ future refactor breaks them:
 
 from __future__ import annotations
 
-import os
-
-import pyarrow as pa
-import pyarrow.parquet as pq
-
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR, write_documents
 from trialstreamer_spark.io import load
 from trialstreamer_spark.plans.all_queries import QUERIES
 from trialstreamer_spark.util import evict_caches
-
-SF = "/root/testdata/sf0.001"
-
-
-def _write_docs(tmp: str, rows: list[tuple[int, str | None, str]]) -> None:
-    os.makedirs(tmp, exist_ok=True)
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-                "text": [r[1] for r in rows],
-                "lang": ["en"] * len(rows),
-                "source": [r[2] for r in rows],
-                "n_chars": pa.array(
-                    [len(r[1]) if r[1] is not None else None for r in rows],
-                    pa.int64(),
-                ),
-            }
-        ),
-        os.path.join(tmp, "documents.parquet"),
-    )
 
 
 def test_degree_histogram_conserves_docs_and_endpoints(spark):
@@ -56,10 +31,10 @@ def test_degree_histogram_conserves_docs_and_endpoints(spark):
     recomputed directly from the shared candidate sidecar."""
     from trialstreamer_spark.operators.dedup import minhash_candidates
 
-    d = load(spark, SF, "documents")
+    d = load(spark, SF_DIR, "documents")
     n_docs = d.count()
-    n_pairs = minhash_candidates(spark, SF).count()
-    rows = QUERIES["dup_graph_degree_histogram"](spark, SF).collect()
+    n_pairs = minhash_candidates(spark, SF_DIR).count()
+    rows = QUERIES["dup_graph_degree_histogram"](spark, SF_DIR).collect()
     assert sum(r.n_docs for r in rows) == n_docs
     assert sum(r.n_endpoints for r in rows) == 2 * n_pairs
     for r in rows:
@@ -67,26 +42,26 @@ def test_degree_histogram_conserves_docs_and_endpoints(spark):
             assert r.n_endpoints == 0
 
 
-def test_degree_histogram_clique_has_no_bucket0(spark):
+def test_degree_histogram_clique_has_no_bucket0(spark, tmp_path):
     """A corpus of EXACT near-dup copies is one clique: every doc has
     degree n-1 > 0, so the derived bucket-0 row must NOT appear (the
     oracle's GROUP BY has no degree-0 group either) — and the single
     bucket must carry all docs. 4 identical docs -> degree 3 ->
     bucket length(bin(3)) = 2."""
-    tmp = "/tmp/degree_clique_fixture"
+    tmp = str(tmp_path)
     same = "alpha beta gamma delta epsilon zeta eta theta"
-    _write_docs(tmp, [(i, same, "s") for i in range(4)])
+    write_documents(tmp, [(i, same, "s") for i in range(4)])
     evict_caches(tmp)
     rows = QUERIES["dup_graph_degree_histogram"](spark, tmp).collect()
     assert [r.degree_bucket for r in rows] == [2]
     assert rows[0].n_docs == 4 and rows[0].n_endpoints == 12
 
 
-def test_rolling_active_users_equals_bruteforce(spark):
+def test_rolling_active_users_equals_bruteforce(spark, sf_dir):
     """Interval stabbing == the definition: for every OBSERVED day d,
     n_active_7d is the count of users with >= 1 event in [d-6d, d],
     recomputed here from raw (user, day) pairs with plain Python."""
-    e = load(spark, SF, "events")
+    e = load(spark, sf_dir, "events")
     pairs = {
         (r.u, r.d)
         for r in e.select(
@@ -102,18 +77,18 @@ def test_rolling_active_users_equals_bruteforce(spark):
         d: len({u for (u, ud) in pairs if d - 6 * DAY <= ud <= d})
         for d in days
     }
-    rows = QUERIES["rolling_active_users"](spark, SF).collect()
+    rows = QUERIES["rolling_active_users"](spark, sf_dir).collect()
     got = {r.window_end_us: r.n_active_7d for r in rows}
     assert got == expect
 
 
-def test_source_scorecard_counts_cross_source_dups(spark):
+def test_source_scorecard_counts_cross_source_dups(spark, tmp_path):
     """The dup census is corpus-GLOBAL: a text duplicated ACROSS two
     sources is a dup doc in both (n_copies rides a fingerprint window,
     not a per-source rollup). s1: dup + unique -> share 500000 of 2;
     s2: its only doc is the cross-source copy -> share 1000000."""
-    tmp = "/tmp/scorecard_xsource_fixture"
-    _write_docs(
+    tmp = str(tmp_path)
+    write_documents(
         tmp,
         [
             (1, "shared text body", "s1"),
@@ -131,14 +106,14 @@ def test_source_scorecard_counts_cross_source_dups(spark):
     assert rows["s2"].mean_words == 3
 
 
-def test_source_scorecard_drops_null_text(spark):
+def test_source_scorecard_drops_null_text(spark, tmp_path):
     """NULL-text docs are OUT of the scorecard entirely: the oracle's
     inner self-join on fp = md5(text) never matches a NULL fp, so the
     one-pass rewrite must not count them toward n_docs, the mean_words
-    denominator, or (with two NULLs) the dup share (r11 ADVICE — the
+    denominator, or (with two NULLs) the dup share (the
     fp window otherwise keeps NULL as a regular group)."""
-    tmp = "/tmp/scorecard_nulltext_fixture"
-    _write_docs(
+    tmp = str(tmp_path)
+    write_documents(
         tmp,
         [
             (1, "real body here", "s1"),

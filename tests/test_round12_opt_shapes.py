@@ -6,9 +6,9 @@ the SHAPE."""
 
 from __future__ import annotations
 
-from trialstreamer_spark.plans.registry import QUERIES
+import re
 
-import trialstreamer_spark.plans.all_queries  # noqa: F401  (registry fill)
+from trialstreamer_spark.plans.all_queries import QUERIES
 
 
 def plan_of(df) -> str:
@@ -24,14 +24,15 @@ def test_jaccard_calibration_intersects_postings_not_arrays(spark, sf_dir):
     re-joined per candidate pair and folded back through the tagged
     union — no per-doc shingle array is assembled or carried through the
     pair joins, so no row's payload grows with document length."""
-    p = optimized_of(QUERIES["dup_pair_jaccard_calibration"](spark, sf_dir))
+    df = QUERIES["dup_pair_jaccard_calibration"](spark, sf_dir)
+    p = df._jdf.queryExecution().optimizedPlan().toString()
     assert "array_intersect" not in p
     assert "collect_list" not in p
     assert "Union" in p  # the est/exact tagged-union fold
 
 
 def test_ann_recall_windows_carry_only_row_number(spark, sf_dir):
-    """r12: the fused recall rank pass computes ONLY row_number (the
+    """The fused recall rank pass computes ONLY row_number (the
     in-cell running sums are implied for global top-k rows), and the
     rank filter group-limits per task before the exchange."""
     for q in (
@@ -39,7 +40,7 @@ def test_ann_recall_windows_carry_only_row_number(spark, sf_dir):
         "ann_nprobe_recall_curve",
         "mips_nprobe_recall_curve",
     ):
-        p = plan_of(QUERIES[q](spark, sf_dir))
+        p = QUERIES[q](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         assert "WindowGroupLimit" in p, q
         # exactly one window expression: the row_number rank — no
         # sum(...) windowspecdefinition remains
@@ -51,10 +52,9 @@ def test_ann_recall_windows_carry_only_row_number(spark, sf_dir):
 
 
 def test_weekly_drift_global_leg_reuses_week_rollup(spark, sf_dir):
-    """r12: the global CDF consumes the (week, v_c) rollup directly
+    """The global CDF consumes the (week, v_c) rollup directly
     under a tie-inclusive RANGE frame — no pre-merge aggregate keyed on
     v_c alone remains in the optimized plan."""
-    import re
-
-    p = optimized_of(QUERIES["weekly_value_quantile_drift"](spark, sf_dir))
+    df = QUERIES["weekly_value_quantile_drift"](spark, sf_dir)
+    p = df._jdf.queryExecution().optimizedPlan().toString()
     assert not re.search(r"Aggregate \[v_c#\d+L?\], \[v_c", p)

@@ -4,14 +4,13 @@ oracle comparisons (which pin one corpus) with structural guarantees."""
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
-import trialstreamer_spark.operators.dedup  # noqa: F401
-import trialstreamer_spark.operators.similarity  # noqa: F401
-import trialstreamer_spark.operators.textstats  # noqa: F401
-import trialstreamer_spark.plans.relational  # noqa: F401
 from trialstreamer_spark.io import load
-from trialstreamer_spark.plans.registry import QUERIES
+from trialstreamer_spark.operators import packing, quality, textstats
+from trialstreamer_spark.plans.all_queries import QUERIES
 
 
 def test_cms_estimate_is_one_sided(spark, sf_dir):
@@ -84,7 +83,7 @@ def test_band_tuning_is_lazy_and_plans_full_pipeline(spark, sf_dir):
     """The tuning query must stay LAZY: constructing it must not execute
     the dedup pipelines (the eager .head()+inline_rows regression), so
     its plan must contain the real tagged UNION of the candidate and
-    truth arms (r11 — previously a full-outer join) feeding the per-pair
+    truth arms (not a full-outer join) feeding the per-pair
     membership rollup, rather than a literal row."""
     df = QUERIES["minhash_band_tuning"](spark, sf_dir)
     p = df._jdf.queryExecution().optimizedPlan().toString()
@@ -103,31 +102,22 @@ def test_funnel_always_emits_three_stages(spark, sf_dir):
     assert [r["stage_idx"] for r in df.collect()] == [1, 2, 3]
 
 
-# --- round-4 continuation: packing / mixture / hard negatives / winnowing ---
-
-import trialstreamer_spark.operators.packing  # noqa: F401,E402
-import trialstreamer_spark.operators.quality  # noqa: F401,E402
-
-
 def test_sequence_packing_conserves_tokens_and_chunks(spark, sf_dir):
     """Shard rollups must conserve the corpus token count, and chunk/
     span counts obey the packing arithmetic for any corpus."""
-    from trialstreamer_spark.operators.packing import CTX, N_SHARDS
-    from trialstreamer_spark.operators.textstats import tokens_col
-
     d = load(spark, sf_dir, "documents")
     total = (
         d.where(F.col("text").isNotNull())
-        .select(F.size(tokens_col(F.col("text"))).alias("n"))
+        .select(F.size(textstats.tokens_col(F.col("text"))).alias("n"))
         .where(F.col("n") >= 1)
         .agg(F.sum("n"))
         .collect()[0][0]
     )
     rows = QUERIES["sequence_packing"](spark, sf_dir).collect()
-    assert len(rows) <= N_SHARDS
+    assert len(rows) <= packing.N_SHARDS
     assert sum(r["total_tokens"] for r in rows) == total
     for r in rows:
-        assert r["n_chunks"] == -(-r["total_tokens"] // CTX)
+        assert r["n_chunks"] == -(-r["total_tokens"] // packing.CTX)
         # a doc can only span a boundary if there IS more than one chunk
         assert 0 <= r["n_span_docs"] <= max(r["n_chunks"] - 1, 0) or (
             r["n_span_docs"] <= r["n_docs"]
@@ -138,8 +128,6 @@ def test_sequence_packing_conserves_tokens_and_chunks(spark, sf_dir):
 def test_mixture_weights_sum_to_one_and_dampen(spark, sf_dir):
     """Weights are a distribution, and sqrt dampening moves every source
     TOWARD the uniform weight relative to its raw share."""
-    import math
-
     rows = QUERIES["mixture_weights"](spark, sf_dir).collect()
     assert abs(sum(r["samp_weight"] for r in rows) - 1.0) < 1e-9
     assert abs(sum(r["token_share"] for r in rows) - 1.0) < 1e-9
@@ -183,14 +171,12 @@ def test_hard_negatives_exclude_query_label(spark, sf_dir):
 def test_winnowing_density_bounds(spark, sf_dir):
     """Fingerprints per doc: at least one per run of w windows (the
     winnowing coverage guarantee) and never more than one per window."""
-    from trialstreamer_spark.operators.quality import WINNOW_W
-
     rows = QUERIES["winnowing_stats"](spark, sf_dir).collect()
     assert rows, "fixture corpus must contain winnowable docs"
     for r in rows:
-        assert r["n_windows"] == r["n_grams"] - (WINNOW_W - 1)
+        assert r["n_windows"] == r["n_grams"] - (quality.WINNOW_W - 1)
         assert 1 <= r["n_fingerprints"] <= r["n_windows"]
         # every block of w consecutive windows selects >= 1 distinct
         # fingerprint => density >= 1/(2w) is a loose structural floor;
         # the tight guarantee is >= n_windows/w selections overall
-        assert r["n_fingerprints"] >= -(-r["n_windows"] // (2 * WINNOW_W))
+        assert r["n_fingerprints"] >= -(-r["n_windows"] // (2 * quality.WINNOW_W))

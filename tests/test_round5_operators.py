@@ -4,8 +4,13 @@ cross-operator and accounting properties a hash compare can't see)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import os
+from collections import defaultdict
 
+from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+
+from trialstreamer_spark import sidecars
 from trialstreamer_spark.io import load
 from trialstreamer_spark.plans.all_queries import QUERIES
 
@@ -231,12 +236,6 @@ def test_upsert_sink_parity_reuses_completed_replay(spark, sf_dir, monkeypatch):
     """Second call serves from the committed replay sidecar without
     re-running the stream or re-committing the table, and agrees
     row-for-row."""
-    import os
-
-    from pyspark.sql.streaming import DataStreamWriter
-
-    from trialstreamer_spark import sidecars
-
     first = QUERIES["upsert_sink_stream_parity"](spark, sf_dir).collect()
     # the upsert sink rides the SAME replay sidecar lifecycle as every
     # memory-sink parity query (one mechanism owns all stream sinks)
@@ -272,8 +271,6 @@ def test_lang_confusion_matrix_partitions_corpus(spark, sf_dir):
     assert rows
     n_docs = load(spark, sf_dir, "documents").count()
     assert sum(r.n for r in rows) == n_docs
-    from collections import defaultdict
-
     per_lang = defaultdict(int)
     for r in rows:
         per_lang[r.lang] += r.frac_fp

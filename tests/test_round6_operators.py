@@ -8,24 +8,27 @@ import itertools
 
 from pyspark.sql import functions as F
 
+from tests.conftest import write_documents
 from trialstreamer_spark.io import load
+from trialstreamer_spark.operators import dedup, quality
 from trialstreamer_spark.plans.all_queries import QUERIES
+from trialstreamer_spark.util import evict_caches
 
 
 def test_keep_best_quality_partitions_the_corpus(spark, sf_dir):
     """One kept doc per cluster; kept docs' cluster sizes sum to the
     corpus; the kept doc is the longest member (doc_id tiebreak)."""
-    from trialstreamer_spark.operators.dedup import cc_labels
-    from trialstreamer_spark.operators.quality import quality_signals
-
     kept = QUERIES["dedup_keep_best_quality"](spark, sf_dir).collect()
     n_docs = load(spark, sf_dir, "documents").count()
     assert len({r.component for r in kept}) == len(kept)
     assert sum(r.cluster_size for r in kept) == n_docs
     # independent argmax re-derivation over the raw sidecars
     members = (
-        cc_labels(spark, sf_dir)
-        .join(quality_signals(spark, sf_dir).select("doc_id", "n_words"), "doc_id")
+        dedup.cc_labels(spark, sf_dir)
+        .join(
+            quality.quality_signals(spark, sf_dir).select("doc_id", "n_words"),
+            "doc_id",
+        )
         .collect()
     )
     best: dict[int, tuple[int, int]] = {}
@@ -41,12 +44,12 @@ def test_keep_best_quality_partitions_the_corpus(spark, sf_dir):
 def test_keep_best_quality_never_loses_content_vs_min_id(spark, sf_dir):
     """The policy's reason to exist: kept docs are at least as long as
     the min-id canonical choice for every cluster."""
-    from trialstreamer_spark.operators.dedup import cc_labels
-    from trialstreamer_spark.operators.quality import quality_signals
-
     j = (
-        cc_labels(spark, sf_dir)
-        .join(quality_signals(spark, sf_dir).select("doc_id", "n_words"), "doc_id")
+        dedup.cc_labels(spark, sf_dir)
+        .join(
+            quality.quality_signals(spark, sf_dir).select("doc_id", "n_words"),
+            "doc_id",
+        )
         .collect()
     )
     min_id_words = {}
@@ -73,31 +76,20 @@ def test_token_tv_distance_bounds_and_coverage(spark, sf_dir):
         assert r.tv == r.tv_num / (2.0 * r.n_a * r.n_b)
 
 
-def test_token_tv_distance_zero_iff_identical_distribution(spark, sf_dir):
+def test_token_tv_distance_zero_iff_identical_distribution(spark, tmp_path):
     """Exactness check against a hand-built corpus: an identical
     distribution pair gives tv_num = 0; disjoint vocabularies give
     tv = 1 exactly (the metric's extremes, unreachable by floats-only
     implementations)."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from trialstreamer_spark.util import evict_caches
-
-    tmp = "/tmp/tv_fixture"
-    os.makedirs(tmp, exist_ok=True)
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([0, 1, 2, 3], pa.int64()),
-                "text": ["a b b", "b a b", "x y", "y x x y"],
-                "lang": ["en"] * 4,
-                "source": ["s1", "s2", "s3", "s3"],
-                "n_chars": pa.array([5, 5, 3, 7], pa.int64()),
-            }
-        ),
-        os.path.join(tmp, "documents.parquet"),
+    tmp = str(tmp_path)
+    write_documents(
+        tmp,
+        [
+            (0, "a b b", "s1"),
+            (1, "b a b", "s2"),
+            (2, "x y", "s3"),
+            (3, "y x x y", "s3"),
+        ],
     )
     evict_caches(tmp)
     out = {

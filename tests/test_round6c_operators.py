@@ -15,18 +15,9 @@ from __future__ import annotations
 
 import os
 
-import pytest
-
-from trialstreamer_spark import sidecars
+from tests.conftest import SF_DIR
+from trialstreamer_spark import sidecars, util
 from trialstreamer_spark.plans.all_queries import QUERIES
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def sidecar_dir(monkeypatch, tmp_path):
-    monkeypatch.setenv("SPARK_GRAFT_SIDECAR_DIR", str(tmp_path))
-    yield str(tmp_path)
 
 
 def test_pair_consumers_skip_rebanding(spark, sidecar_dir):
@@ -34,14 +25,14 @@ def test_pair_consumers_skip_rebanding(spark, sidecar_dir):
     committed to the disk catalog and later consumers' plans read the
     persisted relation — no Generate (shingle explode) and no md5
     banding anywhere in the query-time plan."""
-    QUERIES["triangle_count_dup_graph"](spark, SF).collect()
+    QUERIES["triangle_count_dup_graph"](spark, SF_DIR).collect()
     assert os.path.exists(
         os.path.join(
-            sidecars.sidecar_path(SF, "minhash_pairs_doc_id_text"),
+            sidecars.sidecar_path(SF_DIR, "minhash_pairs_doc_id_text"),
             "_current",
         )
     )
-    df = QUERIES["dup_graph_degree_histogram"](spark, SF)
+    df = QUERIES["dup_graph_degree_histogram"](spark, SF_DIR)
     df.count()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan, plan
@@ -56,45 +47,33 @@ def test_pair_sidecar_survives_restart(spark, sidecar_dir, monkeypatch):
     from trialstreamer_spark import util
     from trialstreamer_spark.operators import dedup
 
-    first = QUERIES["triangle_count_dup_graph"](spark, SF).collect()
+    first = QUERIES["triangle_count_dup_graph"](spark, SF_DIR).collect()
 
     s2 = spark.newSession()
-    util.evict_caches(SF)
+    util.evict_caches(SF_DIR)
     assert not [
         k for k in util._PLAN_CACHE
-        if "minhash_pairs_doc_id_text" in k and SF in str(k)
+        if "minhash_pairs_doc_id_text" in k and SF_DIR in str(k)
     ]
 
     def boom(*a, **k):
         raise AssertionError("re-banding: banded_keys ran after restart")
 
     monkeypatch.setattr(dedup, "banded_keys", boom)
-    second = QUERIES["triangle_count_dup_graph"](s2, SF).collect()
+    second = QUERIES["triangle_count_dup_graph"](s2, SF_DIR).collect()
     assert sorted(map(tuple, first)) == sorted(map(tuple, second))
 
 
 def test_split_leakage_never_reads_text(spark, sidecar_dir):
     """The leakage audit is hash arithmetic over cc_labels — document
     text must not appear in any scan the query plan performs."""
-    df = QUERIES["split_leakage_audit"](spark, SF)
+    df = QUERIES["split_leakage_audit"](spark, SF_DIR)
     df.count()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "text:string" not in plan, plan
 
 
 class TestShipLatencyLayout:
-    @pytest.fixture()
-    def bucketed_sf(self, spark, monkeypatch, tmp_path):
-        from trialstreamer_spark import io
-
-        monkeypatch.setenv("SPARK_GRAFT_BUCKET_DIR", str(tmp_path))
-        io.prepare_buckets(spark, SF)
-        yield SF
-        for variant in io.BUCKET_SPECS:
-            spark.sql(
-                f"DROP TABLE IF EXISTS {io._bucket_table_name(SF, variant)}"
-            )
-
     def test_ship_latency_colocated(self, spark, bucketed_sf):
         """The lineitem ⋈ orders join rides the orderkey buckets: both
         sides expose HashPartitioning(orderkey, 16) (at fixture scale
@@ -121,30 +100,29 @@ class TestShipLatencyLayout:
 
 
 def test_version_bump_evicts_bucket_and_pair_caches(spark, monkeypatch, tmp_path):
-    """The two round-6c in-memory layers — the persisted bucket
-    projections and the candidate-pair table — are registered with the
-    cache lifecycle: a corpus version bump drops and unpersists both
-    (the test_cache_lifecycle contract extended to the new caches)."""
-    from trialstreamer_spark import io, util
+    """The persisted bucket projections and the candidate-pair table
+    are registered with the cache lifecycle: a corpus version bump
+    drops and unpersists both."""
+    from trialstreamer_spark import io
     from trialstreamer_spark.operators import dedup
 
     monkeypatch.setenv("SPARK_GRAFT_BUCKET_DIR", str(tmp_path / "bkt"))
     monkeypatch.setenv("SPARK_GRAFT_SIDECAR_DIR", str(tmp_path / "sc"))
-    io.prepare_buckets(spark, SF, variants=("orders_by_orderkey",))
+    io.prepare_buckets(spark, SF_DIR, variants=("orders_by_orderkey",))
 
     def entries(tag):
-        return [k for k in util._PLAN_CACHE if tag in k and SF in str(k)]
+        return [k for k in util._PLAN_CACHE if tag in k and SF_DIR in str(k)]
 
-    assert io.bucketed_table(spark, SF, "orders_by_orderkey") is not None
-    pairs = dedup.minhash_candidates(spark, SF)
+    assert io.bucketed_table(spark, SF_DIR, "orders_by_orderkey") is not None
+    pairs = dedup.minhash_candidates(spark, SF_DIR)
     assert entries("minhash_pairs_doc_id_text")
 
-    util.evict_caches(SF)
+    util.evict_caches(SF_DIR)
     # the layout is no longer served: queries fall back to the parquet
     # scan until prepare_buckets runs again
-    assert io.bucketed_table(spark, SF, "orders_by_orderkey") is None
+    assert io.bucketed_table(spark, SF_DIR, "orders_by_orderkey") is None
     assert not entries("minhash_pairs_doc_id_text")
     assert not pairs.storageLevel.useMemory
     spark.sql(
-        f"DROP TABLE IF EXISTS {io._bucket_table_name(SF, 'orders_by_orderkey')}"
+        f"DROP TABLE IF EXISTS {io._bucket_table_name(SF_DIR, 'orders_by_orderkey')}"
     )

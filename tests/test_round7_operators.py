@@ -19,57 +19,46 @@ import os
 
 import pytest
 
-from tests.oracle_util import assert_matches
-from trialstreamer_spark.plans.all_queries import ORACLES, QUERIES
-
-SF = "/root/testdata/sf0.001"
+import trialstreamer_spark.operators.temporal as temporal
+from tests.oracle_util import assert_registered_matches
+from trialstreamer_spark import sidecars
+from trialstreamer_spark.plans.all_queries import QUERIES
 
 
 @pytest.mark.parametrize(
     "name",
     ["event_burst_runs", "bigram_lm_score", "session_window_stream_parity"],
 )
-def test_round7_queries_match_oracle(spark, name):
-    assert_matches(QUERIES[name](spark, SF), ORACLES[name], SF)
+def test_round7_queries_match_oracle(spark, sf_dir, name):
+    assert_registered_matches(spark, name, sf_dir)
 
 
-def test_minute_census_committed_and_reused(spark, monkeypatch, tmp_path):
+def test_minute_census_committed_and_reused(spark, sf_dir, sidecar_dir):
     """prepare_temporal commits both censuses to the sidecar catalog;
     a second build call returns the SAME cached frame (no rebuild)."""
-    monkeypatch.setenv("SPARK_GRAFT_SIDECAR_DIR", str(tmp_path))
-    from trialstreamer_spark import sidecars
-    from trialstreamer_spark.operators.temporal import (
-        minute_census,
-        prepare_temporal,
-        user_day_pairs,
-    )
-
-    prepare_temporal(spark, SF)
+    temporal.prepare_temporal(spark, sf_dir)
     for name in ("minute_census_v2", "user_day_pairs"):
         assert os.path.exists(
-            os.path.join(sidecars.sidecar_path(SF, name), "_current")
+            os.path.join(sidecars.sidecar_path(sf_dir, name), "_current")
         ), name
-    assert minute_census(spark, SF) is minute_census(spark, SF)
-    assert user_day_pairs(spark, SF) is user_day_pairs(spark, SF)
+    for build in (temporal.minute_census, temporal.user_day_pairs):
+        assert build(spark, sf_dir) is build(spark, sf_dir)
 
 
-def test_burst_runs_consistent_with_anomaly_counts(spark):
+def test_burst_runs_consistent_with_anomaly_counts(spark, sf_dir_med):
     """The island decomposition must CONSERVE the burst-minute census:
     per type, sum(run lengths) == event_rate_anomaly's n_burst_minutes,
     and the longest run is between total/n_runs and the total. Runs at
     sf0.01: the sf0.001 corpus is too uniform to produce any 3-sigma
     burst minute (both queries return empty there — the oracle equality
     still holds but conserves nothing)."""
-    sf = "/root/testdata/sf0.01"
-    if not os.path.isdir(sf):
-        pytest.skip("sf0.01 corpus not present")
     runs = {
         r["event_type"]: r
-        for r in QUERIES["event_burst_runs"](spark, sf).collect()
+        for r in QUERIES["event_burst_runs"](spark, sf_dir_med).collect()
     }
     anomaly = {
         r["event_type"]: r
-        for r in QUERIES["event_rate_anomaly"](spark, sf).collect()
+        for r in QUERIES["event_rate_anomaly"](spark, sf_dir_med).collect()
     }
     assert runs  # the sf0.01 corpus has bursty minutes
     for et, r in runs.items():
@@ -79,7 +68,7 @@ def test_burst_runs_consistent_with_anomaly_counts(spark):
         assert r["longest_run"] <= r["total_burst_minutes"]
 
 
-def test_session_window_is_full_sessionization_superset(spark):
+def test_session_window_is_full_sessionization_superset(spark, sf_dir):
     """Complete-mode native session windows emit EVERY session; the
     custom sessionizer's in-batch parity excludes each user's final
     session. Native must therefore carry at least as many rows, and
@@ -87,8 +76,8 @@ def test_session_window_is_full_sessionization_superset(spark):
     with the same event count — the boundary-rule difference (>= vs >)
     can only SPLIT native sessions, and the fixture corpus has no
     exact-gap boundary collisions inside closed sessions."""
-    native = QUERIES["session_window_stream_parity"](spark, SF).collect()
-    custom = QUERIES["sessionize_stream_parity"](spark, SF).collect()
+    native = QUERIES["session_window_stream_parity"](spark, sf_dir).collect()
+    custom = QUERIES["sessionize_stream_parity"](spark, sf_dir).collect()
     assert len(native) >= len(custom)
     native_by_key = {
         (r["user_id"], r["session_start_us"]): r["n_events"] for r in native
@@ -103,10 +92,10 @@ def test_session_window_is_full_sessionization_superset(spark):
     assert matched >= int(0.9 * len(custom)), (matched, len(custom))
 
 
-def test_bigram_lm_score_bounds(spark):
+def test_bigram_lm_score_bounds(spark, sf_dir):
     """Fixed-point sanity: every per-source mean transition probability
     sits in (0, 1e6], and n_low <= n_docs."""
-    rows = QUERIES["bigram_lm_score"](spark, SF).collect()
+    rows = QUERIES["bigram_lm_score"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert 0 < r["mean_score_fp"] <= 1_000_000

@@ -21,10 +21,11 @@ import itertools
 import pytest
 from pyspark.sql import functions as F
 
-from tests.oracle_util import assert_matches
-from trialstreamer_spark.plans.all_queries import ORACLES, QUERIES
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import write_documents
+from tests.oracle_util import assert_registered_matches
+from trialstreamer_spark.io import load
+from trialstreamer_spark.operators import quality
+from trialstreamer_spark.plans.all_queries import QUERIES
 
 
 @pytest.mark.parametrize(
@@ -39,18 +40,15 @@ SF = "/root/testdata/sf0.001"
         "mips_topk",
     ],
 )
-def test_round8_queries_match_oracle(spark, name):
-    assert_matches(QUERIES[name](spark, SF), ORACLES[name], SF)
+def test_round8_queries_match_oracle(spark, sf_dir, name):
+    assert_registered_matches(spark, name, sf_dir)
 
 
-def test_checksum_is_partition_and_order_independent(spark):
+def test_checksum_is_partition_and_order_independent(spark, sf_dir):
     """The checksum must not depend on how the table is laid out —
     that's the property that makes it comparable across engines and
     cluster shapes."""
-    from trialstreamer_spark.io import load
-    from trialstreamer_spark.operators.quality import CHECKSUM_MODULUS
-
-    d = load(spark, SF, "documents")
+    d = load(spark, sf_dir, "documents")
     h = F.md5(F.concat_ws("\x1f", "doc_id", "lang", "text"))
     v = F.conv(F.substring(h, 1, 12), 16, 10).cast("decimal(38,0)")
 
@@ -59,7 +57,9 @@ def test_checksum_is_partition_and_order_independent(spark):
             df.select("source", v.alias("v"))
             .groupBy("source")
             .agg(
-                F.expr(f"CAST(SUM(v) % {CHECKSUM_MODULUS} AS BIGINT)").alias("c")
+                F.expr(
+                    f"CAST(SUM(v) % {quality.CHECKSUM_MODULUS} AS BIGINT)"
+                ).alias("c")
             )
             .collect()
         )
@@ -110,14 +110,8 @@ def test_prefix_filter_is_lossless_with_hot_boilerplate(spark, tmp_path):
         "unrelated words entirely different here now",
     ]
     docs = {i: f"{b} {boiler}" for i, b in enumerate(bodies)}
-    sf_dir = str(tmp_path / "sfX")
-    import os
-
-    os.makedirs(sf_dir)
-    spark.createDataFrame(
-        [(i, t, "en", "srcA", len(t)) for i, t in docs.items()],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.parquet(os.path.join(sf_dir, "documents.parquet"))
+    sf_dir = str(tmp_path)
+    write_documents(sf_dir, list(docs.items()), source="srcA")
 
     got = {
         (r["doc_a"], r["doc_b"]): r["n_common"]
@@ -132,7 +126,6 @@ def test_prefix_filter_matches_brute_force_on_random_corpora(spark, tmp_path):
     """Seeded random corpora with planted near-dups at varying overlap
     levels around the t=0.5 boundary — the count-bound must keep every
     J >= 0.5 pair and the verify must reject everything below."""
-    import os
     import random
 
     rng = random.Random(8)
@@ -150,12 +143,8 @@ def test_prefix_filter_matches_brute_force_on_random_corpora(spark, tmp_path):
                 var[rng.randrange(len(var))] = rng.choice(vocab)
             docs[did] = " ".join(var)
             did += 1
-    sf_dir = str(tmp_path / "sfR")
-    os.makedirs(sf_dir)
-    spark.createDataFrame(
-        [(i, t, "en", "srcA", len(t)) for i, t in docs.items()],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.parquet(os.path.join(sf_dir, "documents.parquet"))
+    sf_dir = str(tmp_path)
+    write_documents(sf_dir, list(docs.items()), source="srcA")
 
     got = {
         (r["doc_a"], r["doc_b"]): r["n_common"]

@@ -5,30 +5,24 @@ the existing coarse quantizer (VERDICT r8 #8)."""
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from trialstreamer_spark.io import load
 from trialstreamer_spark.operators import similarity
 from trialstreamer_spark.plans.all_queries import QUERIES
 
 
-@pytest.fixture(scope="module")
-def sf_dir():
-    return "/root/testdata/sf0.01"
-
-
 def test_mips_ivf_results_come_from_probed_cells_and_rank_exactly(
-    spark, sf_dir
+    spark, sf_dir_med
 ):
     """Every returned neighbor belongs to one of the 2 probed cells, and
     within that candidate set the ranking equals the exact brute-force
     MIPS order (the index prunes, the rerank is exact)."""
-    e = load(spark, sf_dir, "embeddings")
-    cents = similarity.ivf_centroids(spark, sf_dir)
-    _m2, caugs = similarity.mips_aug_cells(spark, sf_dir)
-    qv = similarity._query_vector(spark, sf_dir, 0)
+    e = load(spark, sf_dir_med, "embeddings")
+    cents = similarity.ivf_centroids(spark, sf_dir_med)
+    _m2, caugs = similarity.mips_aug_cells(spark, sf_dir_med)
+    qv = similarity._query_vector(spark, sf_dir_med, 0)
     cells = set(similarity.mips_probe_cells(cents, caugs, qv, nprobe=2))
-    got = QUERIES["mips_ivf_topk"](spark, sf_dir).collect()
+    got = QUERIES["mips_ivf_topk"](spark, sf_dir_med).collect()
     assert len(got) == 10
     assert {r.label for r in got} <= cells
     # exact rerank: recompute the fixed-point dot per member offline
@@ -66,13 +60,13 @@ def test_mips_probe_demotes_short_vector_cells():
 
 
 def test_mips_recall_curve_is_monotone_and_reaches_exact_at_full_probe(
-    spark, sf_dir
+    spark, sf_dir_med
 ):
     """Recall@10 non-decreasing in nprobe per query (nested candidate
     sets), and probing EVERY cell must reproduce the exact baseline
     (recall 1.0) — asserted via mips_probe_cells over all 10 cells
     against mips_topk."""
-    rows = QUERIES["mips_nprobe_recall_curve"](spark, sf_dir).collect()
+    rows = QUERIES["mips_nprobe_recall_curve"](spark, sf_dir_med).collect()
     by_q: dict = {}
     for r in rows:
         by_q.setdefault(r.query_id, {})[r.nprobe] = r.n_overlap
@@ -80,14 +74,14 @@ def test_mips_recall_curve_is_monotone_and_reaches_exact_at_full_probe(
     for _q, v in by_q.items():
         assert v[1] <= v[2] <= v[3] <= 10
 
-    e = load(spark, sf_dir, "embeddings")
-    cents = similarity.ivf_centroids(spark, sf_dir)
-    _m2, caugs = similarity.mips_aug_cells(spark, sf_dir)
-    qv = similarity._query_vector(spark, sf_dir, 0)
+    e = load(spark, sf_dir_med, "embeddings")
+    cents = similarity.ivf_centroids(spark, sf_dir_med)
+    _m2, caugs = similarity.mips_aug_cells(spark, sf_dir_med)
+    qv = similarity._query_vector(spark, sf_dir_med, 0)
     all_cells = similarity.mips_probe_cells(cents, caugs, qv, nprobe=len(cents))
     assert sorted(all_cells) == sorted(lbl for lbl, _ in cents)
     exact = [
-        r.neighbor_id for r in QUERIES["mips_topk"](spark, sf_dir).collect()
+        r.neighbor_id for r in QUERIES["mips_topk"](spark, sf_dir_med).collect()
     ]
     scored = (
         e.filter(e.label.isin(all_cells) & (e.vec_id != 0))
@@ -103,13 +97,13 @@ def test_mips_recall_curve_is_monotone_and_reaches_exact_at_full_probe(
     assert [vid for _neg, vid in full] == exact
 
 
-def test_rrf_fusion_combines_arm_ranks_exactly(spark, sf_dir):
+def test_rrf_fusion_combines_arm_ranks_exactly(spark, sf_dir_med):
     """RRF invariants: every fused score equals the integer sum of its
     arms' 1e6 DIV (60+rank) contributions recomputed from the emitted
     ranks; a doc retrieved by BOTH arms must outscore any doc whose
     single-arm rank equals either of its ranks; -1 marks absence and
     contributes 0."""
-    rows = QUERIES["rrf_fusion_topk"](spark, sf_dir).collect()
+    rows = QUERIES["rrf_fusion_topk"](spark, sf_dir_med).collect()
     assert 0 < len(rows) <= 10
 
     def contrib(rank: int) -> int:

@@ -1,89 +1,42 @@
-"""sf0.01 insurance sweep for queries the external driver has never
-sampled (marked ``sf01``).
+"""The sf0.01 oracle gate, reported one test per registered query.
 
-The driver hash-checks a SAMPLE of the registered queries per round at
-sf0.01; every query is oracle-checked at sf0.001 by
-test_relational_oracle every run, but a scale-dependent divergence
-(hash drift that only appears with more rows — the NTZ class of bug)
-would hide in the never-sampled set. This sweep closes that asymmetry:
-it re-runs the driver-style DuckDB compare at sf0.01 for exactly the
-queries with no green driver row in any CORRECTNESS_r*.json, so the
-union of (driver rows ∪ this sweep) covers the whole registry at
-sf0.01 every round. The set shrinks automatically as the driver samples
-more queries."""
+The compares run once, inside the plan-budget pass: ``sf01_pass`` runs
+``tools/plan_budget.measure_budget`` in a fresh session, which checks
+the rows of each query's warm-up run at sf0.01 against its DuckDB
+oracle before it counts the plan. Each test here reads its query's
+outcome from that pass; test_plan_budget checks the same pass's plan
+counts. (The test name dates from when the sweep covered only queries
+an external harness had never sampled; it now covers the registry.)"""
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-
 import pytest
 
-from tests.oracle_util import assert_matches
 from trialstreamer_spark.plans.all_queries import ORACLES, QUERIES
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF01 = "/root/testdata/sf0.01"
+
+@pytest.mark.parametrize("name", sorted(ORACLES))
+def test_sf01_never_sampled_sweep(sf01_pass, name):
+    wrong = sf01_pass["wrong"]
+    assert name not in wrong, wrong.get(name)
+    assert name in sf01_pass["budget"], f"{name} was not measured"
 
 
-def _never_driver_green() -> list[str]:
-    seen: set[str] = set()
-    for f in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        try:
-            rows = json.load(open(f))
-        except Exception:
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, r in rows.items():
-            if isinstance(r, dict) and r.get("hash_match"):
-                seen.add(name)
-    return sorted(n for n in QUERIES if n not in seen and n in ORACLES)
-
-
-@pytest.mark.sf01
-@pytest.mark.parametrize("name", _never_driver_green() or ["__none__"])
-def test_sf01_never_sampled_sweep(spark, name):
-    if name == "__none__":
-        pytest.skip("every registered query has a green driver row")
-    if not os.path.isdir(SF01):
-        pytest.skip("sf0.01 corpus not present")
-    assert_matches(QUERIES[name](spark, SF01), ORACLES[name], SF01)
-
-
-# Registered queries allowed to skip the DuckDB hash gate entirely.
-# Deliberately empty: every current query ships an oracle. A genuinely
-# non-SQL-expressible op added later must be listed HERE (with a reason)
-# to pass the ratchet below, so coverage can only shrink loudly.
+# Registered queries allowed to have no DuckDB oracle, each with its
+# reason. Empty: every current query ships an oracle. A query that SQL
+# cannot express must be listed here to pass the ratchet below, so
+# oracle coverage can only shrink loudly.
 ORACLE_EXEMPT: dict[str, str] = {}
 
 
 def test_driver_coverage_union_is_total():
-    """Coverage ratchet (VERDICT r6 #8): every registered query must be
-    hash-checked by SOMETHING — a green driver row in any
-    CORRECTNESS_r*.json or membership in this file's sf0.01 sweep set.
-    Because the sweep set is defined as (registered ∧ has-oracle ∧
-    never-driver-green), the only way a query escapes both is having no
-    oracle; this tripwire makes that a loud CI failure instead of a
-    silent blind spot."""
-    sweep = set(_never_driver_green())
-    green: set[str] = set()
-    for f in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        try:
-            rows = json.load(open(f))
-        except Exception:
-            continue
-        if isinstance(rows, dict):
-            green |= {
-                n for n, r in rows.items()
-                if isinstance(r, dict) and r.get("hash_match")
-            }
+    """Both oracle gates take their query list from the registry, so a
+    query escapes them only by having no oracle: that needs an
+    ORACLE_EXEMPT reason, and every exemption must name a registered
+    query."""
     uncovered = sorted(
-        n for n in QUERIES
-        if n not in green and n not in sweep and n not in ORACLE_EXEMPT
+        n for n in QUERIES if n not in ORACLES and n not in ORACLE_EXEMPT
     )
-    assert not uncovered, f"queries with no hash gate anywhere: {uncovered}"
-    # and the exemption list can't rot: every entry must still exist
+    assert not uncovered, f"queries with no oracle and no exemption: {uncovered}"
     stale = sorted(n for n in ORACLE_EXEMPT if n not in QUERIES)
     assert not stale, f"ORACLE_EXEMPT entries no longer registered: {stale}"

@@ -207,6 +207,16 @@ def test_running_totals_stream_accumulates_across_batches(spark, tmp_path):
     assert by_user[2] == [(1, 1, 500), (1, 2, 500), (1, 3, 1500)]
 
 
+def test_stream_batch_parity_queries_match_oracle(spark, sf_dir):
+    """The driver-facing parity queries (streaming operators run to
+    completion over a single-batch replay) must hash-match their DuckDB
+    batch oracles — the §2.9 batch-equivalence gate, locally."""
+    from tests.oracle_util import assert_registered_matches
+
+    for name in ("sessionize_stream_parity", "running_totals_stream_parity"):
+        assert_registered_matches(spark, name, sf_dir)
+
+
 def test_parity_replays_run_the_production_operators(
     spark, sf_dir, tmp_path, monkeypatch
 ):

@@ -8,7 +8,6 @@ import os
 import shutil
 
 import pytest
-from pyspark.sql import functions as F
 
 from tests.conftest import jobs_during
 from trialstreamer_spark import update
@@ -168,30 +167,3 @@ def test_cli_arg_validation():
         update.main(["--source", "pubmed", "--warehouse", "/tmp/x"])
     with pytest.raises(SystemExit):
         update.main(["--source", "bogus", "--warehouse", "/tmp/x"])
-
-
-def test_diff_drives_incremental_annotation(spark, tmp_path):
-    """ParquetTable.diff -> incremental re-annotation: only changed/new
-    keys flow through the (stub) annotator - the incremental-reprocessing
-    loop a 100 TB corpus runs nightly."""
-    t = ParquetTable(spark, str(tmp_path / "corp"))
-    t.merge(
-        spark.range(0, 20).select(
-            F.col("id").alias("pmid"), F.lit("x").alias("body")
-        ),
-        key="pmid",
-    )
-    v1 = t.current_version()
-    t.merge(
-        spark.range(15, 25).select(
-            F.col("id").alias("pmid"), F.lit("y").alias("body")
-        ),
-        key="pmid",
-    )
-    v2 = t.current_version()
-    changed = t.diff(v1, v2, key="pmid").where(F.col("change") != "delete")
-    # re-process ONLY the changed keys: anti-join semantics mirror
-    # incremental_annotate's skiplist, driven by the CDF rows
-    todo = t.read().join(changed.select("pmid"), "pmid", "inner")
-    assert todo.count() == 10  # 5 updates + 5 inserts, not the full 25
-    assert {r.pmid for r in todo.select("pmid").collect()} == set(range(15, 25))

@@ -83,17 +83,29 @@ def plan_counts(plan) -> dict[str, int]:
 
 def measure(spark, sf_dir: str, names) -> dict[str, dict[str, int]]:
     """The budget entry of each named query, on the session as it is.
-    The warm-up run of each query with an oracle is its oracle check."""
-    budget = {}
+    The warm-up run of each query with an oracle is its oracle check;
+    any query that differs fails the call, by name."""
+    budget, wrong = measure_each(spark, sf_dir, names)
+    if wrong:
+        raise AssertionError("\n".join(wrong[n] for n in sorted(wrong)))
+    return budget
+
+
+def measure_each(
+    spark, sf_dir: str, names
+) -> tuple[dict[str, dict[str, int]], dict[str, str]]:
+    """(budget entries, mismatches): as ``measure``, but a query whose
+    warm-up rows differ from its oracle is reported in ``mismatches``
+    (name -> message) instead of measured, and the rest go on."""
+    budget, wrong = {}, {}
     for name in names:
         df = QUERIES[name](spark, sf_dir)
         if name in ORACLES:
             try:
                 assert_matches(df, ORACLES[name], sf_dir)
             except AssertionError as exc:
-                raise AssertionError(
-                    f"{name} differs from its oracle at {sf_dir}: {exc}"
-                ) from exc
+                wrong[name] = f"{name} differs from its oracle at {sf_dir}: {exc}"
+                continue
         else:
             df.count()
         built = []
@@ -105,15 +117,16 @@ def measure(spark, sf_dir: str, names) -> dict[str, dict[str, int]]:
         jobs = jobs_during(spark, build_and_count)
         plan = built[0]._jdf.queryExecution().executedPlan()
         budget[name] = {**plan_counts(plan), "jobs": jobs}
-    return budget
+    return budget, wrong
 
 
-def measure_budget() -> dict[str, dict[str, int]]:
-    """Every registered query's entry, from a fresh session at sf0.01."""
+def measure_budget() -> tuple[dict[str, dict[str, int]], dict[str, str]]:
+    """Every registered query's entry, and its mismatches, from a fresh
+    session at sf0.01 (``measure_each``)."""
     spark = get_spark("plan-budget")
     spark.sparkContext.setLogLevel("ERROR")
     run_preps(spark, SF_DIR_MED)
-    return measure(spark, SF_DIR_MED, sorted(QUERIES))
+    return measure_each(spark, SF_DIR_MED, sorted(QUERIES))
 
 
 def write_budget(budget: dict, path: str) -> None:
@@ -165,7 +178,13 @@ def registry_roll_call() -> str:
 
 
 def main() -> None:
-    write_budget(measure_budget(), BUDGET)
+    budget, wrong = measure_budget()
+    if wrong:
+        raise SystemExit(
+            "no budget written; these queries differ from their oracles:\n"
+            + "\n".join(wrong[n] for n in sorted(wrong))
+        )
+    write_budget(budget, BUDGET)
     print(f"{BUDGET} written")
     n = len(QUERIES)
     _rewrite("README.md", lambda t: re.sub(r"\(\d+ queries", f"({n} queries", t))
